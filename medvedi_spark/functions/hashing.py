@@ -33,17 +33,11 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
 
 SIMHASH_BITS = 32
 
-# Expr-path construction (round 11, guide §1.2 step 2 / §5): the composed
-# builders below cost ~1 100 (minhash_agg_cols) and ~3 900 (simhash_col)
-# py4j round-trips per CALL — 0.5-1.5 s of pure driver chatter measured
-# in CONSTR_PROFILE_r11.json, paid by every d3/d4/d17/st10/st17 plan
-# build at any scale. With the flag on, each column parses as ONE
-# ``F.expr`` SQL string; the analyzed expressions are identical by
-# construction (pinned in tests/test_round11_expr_kernels.py, same
-# invariant as the r10 llm._EXPR_KERNELS kernels). The flag is this
-# module's A/B hook; production default is the expr path.
-_EXPR_KERNELS = True
-
+# Each Spark column below parses as ONE ``F.expr`` SQL string, i.e. one
+# py4j round-trip. Composed through the functions API, the same trees
+# cost ~1 100 (minhash_agg_cols) and ~3 900 (simhash_col) round-trips
+# per call — 0.5-1.5 s of pure driver chatter (CONSTR_PROFILE_r11.json),
+# paid by every d3/d4/d17/st10/st17 plan build at any scale.
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
 
@@ -63,14 +57,9 @@ def sql_token_hash(expr: str) -> str:
 
 def minhash_agg_cols(hash_col: str = "h") -> list[Column]:
     """16 MIN aggregate columns m0..m15 over the token-hash column."""
-    if _EXPR_KERNELS:
-        h = _ident(hash_col)
-        return [
-            F.expr(f"min(({a} * {h} + {b}) % {MINHASH_PRIME})").alias(f"m{i}")
-            for i, (a, b) in enumerate(MINHASH_COEFFS)
-        ]
+    h = _ident(hash_col)
     return [
-        F.min((F.lit(a) * F.col(hash_col) + F.lit(b)) % MINHASH_PRIME).alias(f"m{i}")
+        F.expr(f"min(({a} * {h} + {b}) % {MINHASH_PRIME})").alias(f"m{i}")
         for i, (a, b) in enumerate(MINHASH_COEFFS)
     ]
 
@@ -89,20 +78,13 @@ def simhash_col(hash_col: str = "h") -> Column:
     simhash bit j = 1 iff s_j > 0. One pass, 32 conditional sums, all
     JVM-side codegen — no UDF, no explode.
     """
-    if _EXPR_KERNELS:
-        h = _ident(hash_col)
-        parts = [
-            f"case when sum(case when (shiftright({h}, {j}) & 1) = 1 then 1 else -1 end) > 0 "
-            f"then {1 << j} else 0 end"
-            for j in range(SIMHASH_BITS)
-        ]
-        return F.expr("cast(0 as bigint) + " + " + ".join(parts))
-    acc = F.lit(0).cast("bigint")
-    for j in range(SIMHASH_BITS):
-        bit = F.shiftright(F.col(hash_col), j).bitwiseAND(F.lit(1))
-        s_j = F.sum(F.when(bit == 1, F.lit(1)).otherwise(F.lit(-1)))
-        acc = acc + F.when(s_j > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return acc
+    h = _ident(hash_col)
+    parts = [
+        f"case when sum(case when (shiftright({h}, {j}) & 1) = 1 then 1 else -1 end) > 0 "
+        f"then {1 << j} else 0 end"
+        for j in range(SIMHASH_BITS)
+    ]
+    return F.expr("cast(0 as bigint) + " + " + ".join(parts))
 
 
 def sql_simhash(hash_expr: str = "h") -> str:

@@ -35,24 +35,14 @@ from medvedi_spark.operators._persist import (  # noqa: F401  (re-export)
 
 # --------------------------------------------------------------------------
 # Vector-distance kernels (dot_dec/dot_double here; sqdist_dec/
-# sqdist_double further down). Two construction paths per kernel, SAME
-# analyzed expression (plan-equality pinned in
-# tests/test_round10_expr_kernels.py):
-#
-# - str/str args (a column name or any SQL fragment, e.g. a slice) take
-#   the ``F.expr`` path: the whole HOF chain parses JVM-side in ONE py4j
-#   round-trip. Motivation (round 10, guide §1.2 step 2 / §5): cProfile
-#   of a serve-plan construction measured 8 000 py4j round-trips ≈ 3.3 s
-#   of a 4.2 s call, ~57 ms per composed sqdist_dec — pure driver-side
-#   expression-building chatter, paid per operator call at ANY scale;
-#   the expr path builds the identical tree 115× faster.
-# - Column args keep the functions-API composition (the general form).
-#
-# ``_EXPR_KERNELS`` is the A/B hook (tools/run_r10_expr_ab.py);
-# production default is the expr path.
+# sqdist_double further down) and the other expression kernels in this
+# module take str arguments and build their whole HOF chain as ONE
+# ``F.expr`` SQL string, which parses JVM-side in one py4j round-trip.
+# Composing the same tree through the functions API costs one round-trip
+# per call: cProfile of a serve-plan construction measured 8 000 of them
+# ≈ 3.3 s of a 4.2 s call (~57 ms per sqdist_dec), pure driver-side
+# chatter paid per operator call at ANY scale.
 # --------------------------------------------------------------------------
-
-_EXPR_KERNELS = True
 
 # str kernel args are SQL FRAGMENTS (slices, lambda vars, dotted paths —
 # anything that parses as an expression). Plain identifiers get
@@ -69,49 +59,40 @@ def _sql_double(v: float) -> str:
     """SQL double literal with exact round-trip: repr() is the shortest
     string that parses back to the same IEEE double (Java's parseDouble
     is correctly rounded like Python's), and the D suffix keeps the SQL
-    type double (a bare ``255.0`` would parse as DECIMAL). Callers guard
-    non-finite values (no SQL literal form) behind the composed path."""
+    type double (a bare ``255.0`` would parse as DECIMAL). None and
+    non-finite values have no SQL literal form and raise ValueError."""
+    if v is None or not math.isfinite(float(v)):
+        raise ValueError(f"no SQL double literal for {v!r}: model-state values must be finite")
     return repr(float(v)) + "D"
 
 
 def _sql_double_array(vals) -> str:
-    """``array(...)`` SQL literal of doubles — parses to the same
-    CreateArray-of-literals the composed ``F.lit(list)`` builds."""
+    """``array(...)`` SQL literal of doubles (a CreateArray of literals)."""
     return "array(" + ", ".join(_sql_double(v) for v in vals) + ")"
 
 
-def dot_dec(a: Column | str, b: Column | str) -> Column:
+def dot_dec(a: str, b: str) -> Column:
     """Exact-decimal dot product of two double arrays (order-free sum,
-    engine-independent bits — see queries/_det.py). str args are SQL
-    fragments (plain column names are backtick-quoted) and take the
-    one-round-trip expr path (see the kernel note above)."""
-    if _EXPR_KERNELS and isinstance(a, str) and isinstance(b, str):
-        a, b = _sql_ident(a), _sql_ident(b)
-        return F.expr(
-            f"cast(cast(aggregate(zip_with({a}, {b}, (x, y) -> "
-            f"cast(cast(x as double) * cast(y as double) as {DEC})), "
-            f"cast(0 as {DEC}), (acc, x) -> cast((acc + x) as {DEC})) as string) as double)"
-        )
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    prods = F.zip_with(a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(DEC))
-    return F.aggregate(prods, F.lit(0).cast(DEC), lambda acc, x: (acc + x).cast(DEC)).cast("string").cast("double")
+    engine-independent bits — see queries/_det.py). Args are SQL
+    fragments (plain column names are backtick-quoted; see the kernel
+    note above)."""
+    a, b = _sql_ident(a), _sql_ident(b)
+    return F.expr(
+        f"cast(cast(aggregate(zip_with({a}, {b}, (x, y) -> "
+        f"cast(cast(x as double) * cast(y as double) as {DEC})), "
+        f"cast(0 as {DEC}), (acc, x) -> cast((acc + x) as {DEC})) as string) as double)"
+    )
 
 
-def dot_double(a: Column | str, b: Column | str) -> Column:
+def dot_double(a: str, b: str) -> Column:
     """Plain double dot product — fast pre-filter only (order-dependent
-    last bits, so never emitted in results). str args take the
-    one-round-trip expr path (see the kernel note above sqdist_dec)."""
-    if _EXPR_KERNELS and isinstance(a, str) and isinstance(b, str):
-        a, b = _sql_ident(a), _sql_ident(b)
-        return F.expr(
-            f"aggregate(zip_with({a}, {b}, (x, y) -> "
-            f"cast(x as double) * cast(y as double)), 0.0D, (acc, x) -> acc + x)"
-        )
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+    last bits, so never emitted in results). Args are SQL fragments, as
+    for :func:`dot_dec`."""
+    a, b = _sql_ident(a), _sql_ident(b)
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        f"cast(x as double) * cast(y as double)), 0.0D, (acc, x) -> acc + x)"
+    )
 
 
 # -- dedup ------------------------------------------------------------------
@@ -719,27 +700,15 @@ def _band_structs() -> Column:
     """Two-min band (band_idx, band_val) struct array over signature
     columns m0..m15 — shared by :func:`minhash_band_index` and
     ``dedup_index.bands_of_sigs`` so band assembly can never drift.
-    Expr-path construction (one py4j round-trip; the r10/r11 expr-kernel
-    ruling — analyzed expression identical to the composed loop, pinned
-    in tests/test_round11_expr_kernels.py)."""
+    One ``F.expr`` string (see the kernel note above dot_dec)."""
     from medvedi_spark.functions.hashing import MINHASH_COEFFS
 
     n_bands = len(MINHASH_COEFFS) // 2
-    if _EXPR_KERNELS:
-        return F.expr(
-            "array(" + ", ".join(
-                f"struct({i} as band_idx, concat_ws(',', m{2 * i}, m{2 * i + 1}) as band_val)"
-                for i in range(n_bands)
-            ) + ")"
-        )
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band_idx"),
-                F.concat_ws(",", F.col(f"m{2 * i}"), F.col(f"m{2 * i + 1}")).alias("band_val"),
-            )
+    return F.expr(
+        "array(" + ", ".join(
+            f"struct({i} as band_idx, concat_ws(',', m{2 * i}, m{2 * i + 1}) as band_val)"
             for i in range(n_bands)
-        ]
+        ) + ")"
     )
 
 
@@ -805,8 +774,7 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str, max_hamming: int = 
 
 
 # pointer jumps per label-propagation round in connected_components'
-# large-graph path (the A/B hook for CC_CHAIN_AB_r11.json; 1 = the
-# pre-r11 single path-halving jump)
+# large-graph path (2 vs the single path-halving jump: CC_CHAIN_AB_r11.json)
 _CC_JUMPS = 2
 
 
@@ -1754,44 +1722,23 @@ def _sqdist_dec_sql(a: str, b: str) -> str:
     )
 
 
-def sqdist_dec(a: Column | str, b: Column | str) -> Column:
+def sqdist_dec(a: str, b: str) -> Column:
     """Exact-decimal squared-L2 distance of two double arrays (order-free
-    fold, engine-independent bits — same policy as dot_dec). str args
-    are SQL fragments (column names included) and take the one-round-trip
-    expr path; Column args compose via the functions API — both build
-    the identical analyzed expression."""
-    if _EXPR_KERNELS and isinstance(a, str) and isinstance(b, str):
-        return F.expr(_sqdist_dec_sql(_sql_ident(a), _sql_ident(b)))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    diffs = F.zip_with(
-        a, b,
-        lambda x, y: ((x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))).cast(DEC),
-    )
-    return (
-        F.aggregate(diffs, F.lit(0).cast(DEC), lambda acc, x: (acc + x).cast(DEC))
-        .cast("string").cast("double")
-    )
+    fold, engine-independent bits — same policy as dot_dec). Args are SQL
+    fragments (column names included), as for :func:`dot_dec`."""
+    return F.expr(_sqdist_dec_sql(_sql_ident(a), _sql_ident(b)))
 
 
-def sqdist_double(a: Column | str, b: Column | str) -> Column:
+def sqdist_double(a: str, b: str) -> Column:
     """Plain double squared-L2 — fast pre-filter only (order-dependent
     last bits, so never emitted in results; pairs with _refine_topk).
-    Same str-SQL / Column dual construction as :func:`sqdist_dec`."""
-    if _EXPR_KERNELS and isinstance(a, str) and isinstance(b, str):
-        a, b = _sql_ident(a), _sql_ident(b)
-        return F.expr(
-            f"aggregate(zip_with({a}, {b}, (x, y) -> "
-            f"(cast(x as double) - cast(y as double)) * (cast(x as double) - cast(y as double))), "
-            f"0.0D, (acc, x) -> acc + x)"
-        )
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    diffs = F.zip_with(
-        a, b,
-        lambda x, y: (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double")),
+    Args are SQL fragments, as for :func:`sqdist_dec`."""
+    a, b = _sql_ident(a), _sql_ident(b)
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        f"(cast(x as double) - cast(y as double)) * (cast(x as double) - cast(y as double))), "
+        f"0.0D, (acc, x) -> acc + x)"
     )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def kmeans_assign(
@@ -1825,33 +1772,17 @@ def _argmin_cell(vec_col: str, cents) -> Column:
     (``cent_id``/``c_emb``): min over (d2, cent_id) structs — the same
     ranking :func:`_coarse_route`'s window uses, expressed without a
     window so it is streaming-legal (st13's map-side routing against
-    frozen quantizer state). Expr-path construction: ONE py4j
-    round-trip vs ~4 700 composed (CONSTR_PROFILE_r11.json ≈0.8 s per
-    plan build); both branches build the identical analyzed expression
-    (tests/test_round11_expr_kernels.py)."""
-    if _EXPR_KERNELS and all(
-        math.isfinite(float(x)) for r in cents for x in r["c_emb"]
-    ):
-        v = _sql_ident(vec_col)
-        structs = ", ".join(
-            f"struct({_sqdist_dec_sql(v, _sql_double_array(r['c_emb']))} as d2, "
-            f"cast({int(r['cent_id'])} as bigint) as cell)"
-            for r in cents
-        )
-        return F.expr(f"array_min(array({structs})).cell")
-    return F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    sqdist_dec(
-                        F.col(vec_col), F.lit([float(x) for x in r["c_emb"]])
-                    ).alias("d2"),
-                    F.lit(int(r["cent_id"])).cast("long").alias("cell"),
-                )
-                for r in cents
-            ]
-        )
-    )["cell"]
+    frozen quantizer state). One ``F.expr`` string: one py4j round-trip
+    where the functions API took ~4 700 (≈0.8 s per plan build,
+    CONSTR_PROFILE_r11.json). A None or non-finite centroid coordinate
+    raises ValueError (see :func:`_sql_double`)."""
+    v = _sql_ident(vec_col)
+    structs = ", ".join(
+        f"struct({_sqdist_dec_sql(v, _sql_double_array(r['c_emb']))} as d2, "
+        f"cast({int(r['cent_id'])} as bigint) as cell)"
+        for r in cents
+    )
+    return F.expr(f"array_min(array({structs})).cell")
 
 
 def sq8_minmax(emb: DataFrame, vec_col: str) -> DataFrame:
@@ -1873,7 +1804,7 @@ def sq8_minmax(emb: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
-def _sq8_code(vec: Column | str, vmin, vmax) -> Column:
+def _sq8_code(vec: str, vmin, vmax) -> Column:
     """Affine int8 codes: round((x − vmin) · 255 / (vmax − vmin)), a
     fixed IEEE-double op sequence both engines execute identically;
     ``round`` is half-away-from-zero in Spark and DuckDB alike, and the
@@ -1882,41 +1813,19 @@ def _sq8_code(vec: Column | str, vmin, vmax) -> Column:
     on the corpus itself, so values never leave [vmin, vmax] and no
     clamp is needed.
 
-    ``vmin``/``vmax`` are the positional range VALUE lists (or prebuilt
-    array Columns). A str ``vec`` with value lists takes the
-    one-round-trip expr path (~30 py4j round-trips vs ~800-1 100
-    composed per encode projection, CONSTR_PROFILE_r11.json); both
-    branches build the identical analyzed expression
-    (tests/test_round11_expr_kernels.py)."""
-    have_vals = isinstance(vmin, (list, tuple)) and isinstance(vmax, (list, tuple))
-    if (
-        _EXPR_KERNELS
-        and have_vals
-        and isinstance(vec, str)
-        and all(v is not None and math.isfinite(float(v)) for v in (*vmin, *vmax))
-    ):
-        v = _sql_ident(vec)
-        mn, mx = _sql_double_array(vmin), _sql_double_array(vmax)
-        return F.expr(
-            f"transform({v}, (x, i) -> "
-            f"case when element_at({mx}, i + 1) > element_at({mn}, i + 1) "
-            f"then cast(round((cast(x as double) - element_at({mn}, i + 1)) * 255.0D "
-            f"/ (element_at({mx}, i + 1) - element_at({mn}, i + 1))) as int) "
-            f"else 0 end)"
-        )
-    vmin_lit = F.lit(list(vmin)) if have_vals else vmin
-    vmax_lit = F.lit(list(vmax)) if have_vals else vmax
-    vec = F.col(vec) if isinstance(vec, str) else vec
-    return F.transform(
-        vec,
-        lambda x, i: F.when(
-            F.element_at(vmax_lit, i + 1) > F.element_at(vmin_lit, i + 1),
-            F.round(
-                (x.cast("double") - F.element_at(vmin_lit, i + 1))
-                * F.lit(255.0)
-                / (F.element_at(vmax_lit, i + 1) - F.element_at(vmin_lit, i + 1))
-            ).cast("int"),
-        ).otherwise(F.lit(0)),
+    ``vmin``/``vmax`` are the positional range VALUE lists, rendered as
+    array literals in one ``F.expr`` string (~30 py4j round-trips where
+    the functions API took ~800-1 100 per encode projection,
+    CONSTR_PROFILE_r11.json). A None or non-finite range value raises
+    ValueError (see :func:`_sql_double`)."""
+    v = _sql_ident(vec)
+    mn, mx = _sql_double_array(vmin), _sql_double_array(vmax)
+    return F.expr(
+        f"transform({v}, (x, i) -> "
+        f"case when element_at({mx}, i + 1) > element_at({mn}, i + 1) "
+        f"then cast(round((cast(x as double) - element_at({mn}, i + 1)) * 255.0D "
+        f"/ (element_at({mx}, i + 1) - element_at({mn}, i + 1))) as int) "
+        f"else 0 end)"
     )
 
 
@@ -1998,11 +1907,9 @@ def _sq8_train(emb: DataFrame, vec_col: str):
 
 def _sq8_range_literals(stats):
     """Positional vmin/vmax range VALUES from validated stats rows —
-    plain lists; :func:`_sq8_code` renders them as the array literals
-    on whichever construction path it takes. A dimension that is null
-    in every vector yields None (min/max of all-null), preserved here
-    so the composed branch builds the same null-element array literal
-    the pre-r11 code did (null codes for that dim, not a crash)."""
+    plain lists; :func:`_sq8_code` renders them as array literals. A
+    dimension that is null in every vector yields None (min/max of
+    all-null), which :func:`_sq8_code` rejects with a ValueError."""
     return (
         [None if r["vmin"] is None else float(r["vmin"]) for r in stats],
         [None if r["vmax"] is None else float(r["vmax"]) for r in stats],
@@ -2031,17 +1938,10 @@ def _sq8_fit_encode(emb, id_col, vec_col, probe):
 def _sq8_d2() -> Column:
     """Integer squared-L2 over SQ8 code arrays ``codes``/``qcodes`` —
     every term ≤ 255², the sum far inside int64, bit-exact anywhere.
-    Expr-path construction (one py4j round-trip; see the kernel note
-    above dot_dec)."""
-    if _EXPR_KERNELS:
-        return F.expr(
-            "aggregate(zip_with(codes, qcodes, (a, b) -> cast((a - b) * (a - b) as long)), "
-            "cast(0 as long), (acc, x) -> acc + x)"
-        )
-    return F.aggregate(
-        F.zip_with("codes", "qcodes", lambda a, b: ((a - b) * (a - b)).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    One ``F.expr`` string (see the kernel note above dot_dec)."""
+    return F.expr(
+        "aggregate(zip_with(codes, qcodes, (a, b) -> cast((a - b) * (a - b) as long)), "
+        "cast(0 as long), (acc, x) -> acc + x)"
     )
 
 
@@ -2479,25 +2379,15 @@ def pq_encode(
     c = centroids.select(F.col(cent_id_col).alias("cent_id"), F.col(cent_vec_col).alias("c_emb"))
     if dense:
         c = c.withColumn("cidx", F.row_number().over(Window.partitionBy(F.lit(0)).orderBy("cent_id")) - 1)
-    n_dim_col = F.size(F.col("embedding"))
     cand = e.crossJoin(F.broadcast(c))
     aggs = []
+    w_sql = f"cast((size(embedding) / {n_subspaces}) as int)"
     for s in range(n_subspaces):
-        if _EXPR_KERNELS:
-            # str-SQL slice fragments → the kernel's one-round-trip expr
-            # path (same analyzed expression; see the note above dot_dec)
-            w_sql = f"cast((size(embedding) / {n_subspaces}) as int)"
-            start_sql = f"(({w_sql} * {s}) + 1)"
-            d2 = sqdist_dec(
-                f"slice(embedding, {start_sql}, {w_sql})",
-                f"slice(c_emb, {start_sql}, {w_sql})",
-            )
-        else:
-            start = (n_dim_col / n_subspaces).cast("int") * s + 1
-            width = (n_dim_col / n_subspaces).cast("int")
-            d2 = sqdist_dec(
-                F.slice(F.col("embedding"), start, width), F.slice(F.col("c_emb"), start, width)
-            )
+        start_sql = f"(({w_sql} * {s}) + 1)"
+        d2 = sqdist_dec(
+            f"slice(embedding, {start_sql}, {w_sql})",
+            f"slice(c_emb, {start_sql}, {w_sql})",
+        )
         cand = cand.withColumn(f"__d{s}__", d2)
         aggs.append(
             F.min_by("cidx" if dense else "cent_id", F.struct(F.col(f"__d{s}__"), F.col("cent_id"))).alias(
@@ -2533,65 +2423,34 @@ def _pq_lut(
         # extra job at build time (round-5 code-review catch).
         n_codes = c.count()
     lut = queries.crossJoin(F.broadcast(c))
-    if _EXPR_KERNELS:
-        # One-round-trip expr construction of the whole per-subspace
-        # struct array, LUT fold, and scoring chain (the kernel note
-        # above dot_dec: the composed form of THIS function alone was
-        # 2.86 s of py4j chatter per serve-plan construction). Same
-        # analyzed expressions as the composed branch below —
-        # plan-equality pinned in tests/test_round10_expr_kernels.py.
-        w_sql = f"cast((size(q_emb) / {n_subspaces}) as int)"
-        structs = []
-        for s in range(n_subspaces):
-            start = f"(({w_sql} * {s}) + 1)"
-            d2_sql = _sqdist_dec_sql(
-                f"slice(q_emb, {start}, {w_sql})", f"slice(c_emb, {start}, {w_sql})"
-            )
-            structs.append(f"struct({s} as s, {d2_sql} as d2)")
-        sd = F.explode(F.expr(f"array({', '.join(structs)})"))
-        lut = lut.select(*key_cols, "cidx", sd.alias("sd")).select(
-            *key_cols, "cidx", F.col("sd.s").alias("s"), F.col("sd.d2").alias("d2")
-        )
-        lut_arr = lut.groupBy(*key_cols).agg(
-            F.expr(
-                f"transform(array_sort(collect_list(struct(s * {n_codes} + cidx as p, d2 as v))), "
-                f"x -> x.v)"
-            ).alias("lut")
-        )
-        chain = f"cast(element_at(lut, {0 * n_codes} + code0 + 1) as {DEC})"
-        for s in range(1, n_subspaces):
-            term = f"cast(element_at(lut, {s * n_codes} + code{s} + 1) as {DEC})"
-            chain = f"cast(({chain} + {term}) as {DEC})"
-        return lut_arr, F.expr(chain)
-    n_dim_col = F.size(F.col("q_emb"))
-    lut_rows = []
-    width = (n_dim_col / n_subspaces).cast("int")
+    # One ``F.expr`` string each for the per-subspace struct array, the
+    # LUT fold and the scoring chain (see the kernel note above dot_dec:
+    # composed through the functions API, this function alone was 2.86 s
+    # of py4j chatter per serve-plan construction).
+    w_sql = f"cast((size(q_emb) / {n_subspaces}) as int)"
+    structs = []
     for s in range(n_subspaces):
-        start = width * s + 1
-        d2 = sqdist_dec(
-            F.slice(F.col("q_emb"), start, width), F.slice(F.col("c_emb"), start, width)
+        start = f"(({w_sql} * {s}) + 1)"
+        d2_sql = _sqdist_dec_sql(
+            f"slice(q_emb, {start}, {w_sql})", f"slice(c_emb, {start}, {w_sql})"
         )
-        lut_rows.append(F.struct(F.lit(s).alias("s"), d2.alias("d2")))
-    lut = lut.select(
-        *key_cols, "cidx", F.explode(F.array(*lut_rows)).alias("sd")
-    ).select(*key_cols, "cidx", F.col("sd.s").alias("s"), F.col("sd.d2").alias("d2"))
+        structs.append(f"struct({s} as s, {d2_sql} as d2)")
+    sd = F.explode(F.expr(f"array({', '.join(structs)})"))
+    lut = lut.select(*key_cols, "cidx", sd.alias("sd")).select(
+        *key_cols, "cidx", F.col("sd.s").alias("s"), F.col("sd.d2").alias("d2")
+    )
     # one flat array per key group, position = s * n_codes + cidx
     lut_arr = lut.groupBy(*key_cols).agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct((F.col("s") * n_codes + F.col("cidx")).alias("p"), F.col("d2").alias("v")))
-            ),
-            lambda x: x["v"],
+        F.expr(
+            f"transform(array_sort(collect_list(struct(s * {n_codes} + cidx as p, d2 as v))), "
+            f"x -> x.v)"
         ).alias("lut")
     )
-    d2_terms = [
-        F.element_at(F.col("lut"), F.lit(s * n_codes) + F.col(f"code{s}") + 1).cast(DEC)
-        for s in range(n_subspaces)
-    ]
-    d2_approx = d2_terms[0]
-    for t in d2_terms[1:]:
-        d2_approx = (d2_approx + t).cast(DEC)
-    return lut_arr, d2_approx
+    chain = f"cast(element_at(lut, {0 * n_codes} + code0 + 1) as {DEC})"
+    for s in range(1, n_subspaces):
+        term = f"cast(element_at(lut, {s * n_codes} + code{s} + 1) as {DEC})"
+        chain = f"cast(({chain} + {term}) as {DEC})"
+    return lut_arr, F.expr(chain)
 
 
 def pq_adc_topk(

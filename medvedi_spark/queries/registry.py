@@ -34,361 +34,12 @@ __all__ = ["QUERIES", "Query", "register", "queries", "oracle_sql"]
 # check_oracle, they just don't spend gate budget.
 GATE_WINDOW = 50
 
-# Round-5 gate rotation (VERDICT r4 directive #1). Rotation history:
-# r1-r3 drove one 50-query window (all green, CORRECTNESS_r03.json);
-# GATE_ROTATION_R4 drove the 50 that until then had only local evidence
-# (all green, CORRECTNESS_r04.json). R5 completes full-coverage — after
-# this round EVERY registered query has had a driver-green row — and
-# re-proves everything whose code changed this round:
-# - the 5 queries with no driver row yet (the r4 rotation comment's
-#   planned set): st10, c18, d12, m7, c10;
-# - the 16 new r5 queries (IVFADC family s6/s7/s8, st11/st12,
-#   q39/q40/q41/q42, c19/c20, p10, t11, d13, d14/d15) — first driver
-#   proof for each (q9/q16/q20/q27 ceded their re-verification slots to
-#   q42/d13/d14/d15 — all r1-r3 driver-green and unchanged);
-# - the 7 whose plans changed in r5: d2/d7 (tracked gram persist),
-#   d11 (anchor persist), p8/p9 (bpe max_vocab default), s5 (LUT
-#   refactor shared with s6), q17 (as-of module's persist change);
-# - the 3 r4-excluded extras whose driver rows date to r1-r3: q7, q15,
-#   q30;
-# - 19 fill slots re-verifying the stalest r1-r3 evidence (c7,
-#   d3-d6, s1/s2, the q relational long tail, t1 for the t family;
-#   c1-c6/d1/q5 ceded their slots to the new queries — all r1-r3-green,
-#   and every family stays in-window). Late addition: s9 (SQ8 top-k,
-#   new in the r5 close) took t1_langid's fill slot — t1 is
-#   r3-driver-green and kernel-adjacent to the still-gated t family.
-# Membership here OVERRIDES the per-registration ``gate=`` flag, which
-# records only the round-1 layout.
-GATE_ROTATION_R5 = frozenset(
-    {
-        # never driver-proven before r5
-        "st10_stream_lsh_dedup", "c18_bucketed_join", "d12_gram_containment",
-        "m7_image_ahash_neardup", "c10_concat_fill_defaults",
-        # new in r5
-        "s6_ivfadc_topk", "st11_watermarked_dedup", "s7_ivfadc_rerank",
-        "q39_percentile_disc", "s8_ivfadc_residual", "st12_stream_outer_join",
-        "c19_partition_pruned_scan", "q40_salted_skew_join",
-        "p10_export_jsonl", "t11_rake_keywords", "q41_range_frame_window",
-        "c20_schema_evolution", "q42_grouping_sets",
-        "d13_repeated_block_removal", "d14_bloom_decontaminate",
-        "d15_cross_source_overlap",
-        # code changed in r5 — re-prove through the driver
-        "d2_token_jaccard", "d7_ngram_jaccard", "d11_duplicate_spans",
-        "p8_bpe_merges", "p9_bpe_segment", "s5_pq_adc_topk", "q17_asof_join",
-        # r4-excluded extras (driver rows from r1-r3 only)
-        "q7_duplicated_pairs", "q15_cube", "q30_shipmode_priority",
-        # stalest r1-r3 evidence
-        "c7_grouped_map",
-        "d3_minhash_lsh", "d4_simhash",
-        "d5_embedding_neardup", "d6_dedup_clusters",
-        "s1_cosine_topk", "s2_ann_ivf",
-        "q1_pricing_summary", "q3_revenue_by_nation",
-        "q6_dedup_keep_first", "q8_semi_anti_membership",
-        "q10_explode_tokens", "q11_fillna_isnull_json",
-        "q12_sort_nulls_topk", "q13_window_funcs",
-        "q18_pivot", "q19_sessionize",
-        "q21_range_join",
-        "s9_sq8_topk",
-    }
-)
-# Round-6 gate rotation. R5 completed full driver coverage except
-# s10_ivf_sq8_topk (registered after the r5 window froze — judge-verified
-# locally, VERDICT r5 directive #1 gates it now). R6 gates:
-# - the only query with no driver row: s10; plus the round-6 additions
-#   s11/s12 (ANN index lifecycle, VERDICT directive #7) and st13
-#   (streaming index ingest);
-# - the queries whose code/oracle changed this round: d14 (Bloom
-#   auto-sizing, oracle gained the msize CTE), d15 (adaptive overlap
-#   router), s9 (sq8_minmax gained the raggedness-probe count column),
-#   d2 (PPJoin length filter in the prefix-filter candidate join —
-#   lossless prune, unit-tested vs brute force; takes c12's fill slot,
-#   r4-driver-green and code-unchanged);
-# - st11 as the SHOWCASED streaming-dedup exemplar (directive #3 — st3's
-#   unbounded-state global distinct is demoted to a documented extra);
-# - the five mid-round-6 additions, never driver-proven: d16 (end-to-end
-#   fuzzy dedup), s13 (JL projection ANN), t12 (bigram-LM scoring), st14
-#   (streaming Bloom decontamination), and t13 (readability) — they take
-#   the c13-c17 compat/format fill slots (all five r4-driver-green and
-#   code-unchanged), so EVERY registered query holds or gains a driver
-#   row;
-# - 28 fills re-verifying the stalest (r3) driver evidence: the c1-c6
-#   compat surface, d1, m1-m3, the q relational tail, the st1-st7
-#   streaming suite minus st3, t1-t4;
-# - 8 fills from the r4-stale set (c8-c11 joins/compat, d8-d10, m4-m5).
-# Membership here OVERRIDES per-registration ``gate=`` flags.
-GATE_ROTATION_R6 = frozenset(
-    {
-        # never driver-proven / new in r6
-        "s10_ivf_sq8_topk", "s11_ivf_sq8_index", "s12_ivfadc_index",
-        "st13_stream_index_ingest",
-        "d16_fuzzy_dedup_corpus", "s13_jl_projection_topk",
-        "t12_bigram_surprisal", "st14_stream_decontaminate",
-        "t13_readability",
-        # code or oracle changed in r6 — re-prove through the driver
-        "d14_bloom_decontaminate", "d15_cross_source_overlap", "s9_sq8_topk",
-        "d2_token_jaccard",
-        # directive #3: the bounded-state dedup is the gated exemplar
-        "st11_watermarked_dedup",
-        # stalest (r3) driver evidence
-        "c1_arrow_roundtrip", "c2_iloc_slice", "c3_sort_index_rank",
-        "c4_index_diff", "c5_duplicated_mask", "c6_index_accessors",
-        "d1_exact_dedup",
-        "m1_multimodal_meta", "m2_media_pipeline", "m3_audio_pipeline",
-        "q4_project_cast_rename", "q5_distinct_segments", "q9_concat_union",
-        "q16_setops", "q20_nonemin_nonemax", "q26_approx_sketches",
-        "q27_sql_shipping_priority", "q31_grouping_multi",
-        "st1_tumbling_window", "st2_session_window", "st4_sliding_window",
-        "st5_watermark_append", "st6_stateful_counter",
-        "st7_stream_stream_join",
-        "t1_langid", "t2_quality_score", "t3_token_stats", "t4_fingerprint",
-        # r4-stale fills
-        "c8_join_fill_defaults", "c9_join_last_wins",
-        "c11_mdf_dedup_pipeline",
-        "d8_edit_distance", "d9_decontamination", "d10_semantic_dedup",
-        "m4_image_ahash_dedup", "m5_audio_fingerprint_dedup",
-    }
-)
-
-# Round-7 gate rotation (VERDICT r6 directive #3). R7 gates:
-# - the queries whose code or oracle changed this round: st13 (long-form
-#   gated output — the r6 red row's re-proof), t12 (size-routed context
-#   broadcast), the trained-PQ family s5/s6/s7/s8/s12 (per-subspace
-#   Lloyd codebooks, new oracle CTE chains);
-# - the new query: d17 (incremental fuzzy dedup against the persisted
-#   signature index);
-# - the full streaming family st1-st12/st14 (minus the demoted st3):
-#   the drain plumbing changed this round (cached stream-source schema,
-#   measured state-partition default), so every consumer re-proves;
-# - the stalest (r4) driver evidence: the c12-c17 compat/format set and
-#   the q32-q38 relational tail;
-# - the stalest r5 evidence: q39-q42, c19/c20, p10, t11, plus 9 fills
-#   from the next-stalest r5 set (p8/p9 BPE, q17 as-of, d13, m7, c10,
-#   c18, d12, q7);
-# - the three late-round-7 additions: t14 (Gopher quality rules), s14
-#   (binary Hamming ANN), p11 (split leakage audit) take the q7/c10/d12
-#   fill slots (all r5-driver-green and code-unchanged, evidence still
-#   ≤ 2 rounds old after ceding). d18 (ExactSubstr removal), st15
-#   (streaming quality gate) and st16 (streaming span flagging)
-#   registered after the window froze — local oracle + unit evidence
-#   only (the s10-in-r5 precedent); they take priority slots in the r8
-#   rotation.
-# Every family keeps evidence ≤ 3 rounds old. Membership OVERRIDES the
-# per-registration ``gate=`` flag.
-GATE_ROTATION_R7 = frozenset(
-    {
-        # code/oracle changed in r7 — re-prove through the driver
-        "st13_stream_index_ingest", "t12_bigram_surprisal",
-        "s5_pq_adc_topk", "s6_ivfadc_topk", "s7_ivfadc_rerank",
-        "s8_ivfadc_residual", "s12_ivfadc_index",
-        # new in r7
-        "d17_fuzzy_dedup_ingest",
-        # streaming family re-proof (shared drain plumbing changed)
-        "st1_tumbling_window", "st2_session_window", "st4_sliding_window",
-        "st5_watermark_append", "st6_stateful_counter",
-        "st7_stream_stream_join", "st8_stream_static_join",
-        "st9_stream_ingest", "st10_stream_lsh_dedup",
-        "st11_watermarked_dedup", "st12_stream_outer_join",
-        "st14_stream_decontaminate",
-        # stalest (r4) driver evidence
-        "c12_mdf_explode", "c13_mdf_fillna_astype",
-        "c14_csv_roundtrip", "c15_json_roundtrip", "c16_orc_roundtrip",
-        "c17_upsert_merge",
-        "q32_array_roundtrip", "q33_datetime_surface", "q34_string_surface",
-        "q36_unpivot_metrics", "q37_ranking_windows", "q38_multires_rollup",
-        "q15_cube",
-        # stalest r5 evidence
-        "q39_percentile_disc", "q40_salted_skew_join",
-        "q41_range_frame_window", "q42_grouping_sets",
-        "c19_partition_pruned_scan", "c20_schema_evolution",
-        "p10_export_jsonl", "t11_rake_keywords",
-        # next-stalest r5 fills
-        "p8_bpe_merges", "p9_bpe_segment", "q17_asof_join",
-        "d13_repeated_block_removal", "m7_image_ahash_neardup",
-        "c18_bucketed_join",
-        # late-r7 additions (q7/c10/d12 ceded their fill slots — all
-        # r5-driver-green, code-unchanged)
-        "t14_gopher_rules", "s14_hamming_topk", "p11_split_leakage",
-    }
-)
-
-# Round-8 gate rotation (VERDICT r7 directive #3). R8 gates:
-# - the three r7 post-window additions in their promised priority slots:
-#   d18 (ExactSubstr removal), st15 (streaming quality gate), st16
-#   (streaming span flagging, kernel rebuilt this round) — first driver
-#   proof for all three → cumulative driver coverage 141/141 (+ st17);
-# - the new query: st17 (streaming dedup-on-ingest served from the
-#   persisted d17 index — directive #7);
-# - every query whose code or oracle changed in r8: t7/t8 (vocabulary
-#   broadcast routed — directive #4), t12 (router extracted to the
-#   shared _vocab_routed helper), t14 (+ st15) ([A-Za-z] alphabetic
-#   rule, ADVICE), d14/st14 (bloom_flag explode-as-filter + split-string
-#   bitmap literal), s14 (probe-side broadcast size-routed, ADVICE),
-#   st10 (stream kernel extracted to _stream_minhash_candidates, shared
-#   with st17), d11 (100×-curve work — directive #6);
-# - the stalest (r4) driver evidence: the p1-p7 pipeline family, the
-#   q14/q22-q25/q28/q29/q2 relational tail, s3/s4, t5/t6/t9/t10, m6;
-# - r5-stale fills: the d-family (d3-d7, d12), s1/s2, c7/c10, and the
-#   q1/q3/q6/q7/q8 tail.
-# Left for r9 (next-stalest): q10-q13, q18/q19/q21/q30 (r5), the r6 set.
-# Every family keeps evidence ≤ 3 rounds old. Membership OVERRIDES the
-# per-registration ``gate=`` flag.
-GATE_ROTATION_R8 = frozenset(
-    {
-        # r7 post-window additions — priority slots (first driver proof)
-        "d18_exact_substring_removal", "st15_stream_quality_gate",
-        "st16_stream_span_flag",
-        # new in r8
-        "st17_stream_dedup_ingest",
-        # code/oracle changed in r8 — re-prove through the driver
-        "t7_tfidf_topterms", "t8_collocations", "t12_bigram_surprisal",
-        "t14_gopher_rules", "d14_bloom_decontaminate",
-        "st14_stream_decontaminate", "s14_hamming_topk",
-        "st10_stream_lsh_dedup", "d11_duplicate_spans",
-        # stalest (r4) driver evidence
-        "m6_video_scene_cuts",
-        "p1_corpus_clean", "p2_stratified_sample", "p3_pack_sequences",
-        "p4_training_pipeline", "p5_shard_shuffle", "p6_chunk_overlap",
-        "p7_domain_mixing",
-        "q2_top_orders", "q14_rollup", "q22_exists_semijoin",
-        "q23_custdist", "q24_grouping_sets", "q25_above_brand_avg",
-        "q28_local_supplier_volume", "q29_returned_items",
-        "s3_kmeans_assign", "s4_pq_encode",
-        "t5_winnow_fingerprint", "t6_repetition", "t9_pii_redaction",
-        "t10_boilerplate_filter",
-        # r5-stale fills
-        "d3_minhash_lsh", "d4_simhash", "d5_embedding_neardup",
-        "d6_dedup_clusters", "d7_ngram_jaccard", "d12_gram_containment",
-        "s1_cosine_topk", "s2_ann_ivf",
-        "c7_grouped_map", "c10_concat_fill_defaults",
-        "q1_pricing_summary", "q3_revenue_by_nation", "q6_dedup_keep_first",
-        "q7_duplicated_pairs", "q8_semi_anti_membership",
-    }
-)
-
-# Round-9 gate rotation (VERDICT r8 directive #3). R9 gates:
-# - the new query in its priority slot: s15 (loaded-index + exact
-#   rerank — the production ANN serving composition, directive #2);
-# - the stalest evidence in the ledger: st3_stream_dedup (last green
-#   r3 — demoted extra, still rotates) and the r5-stale relational
-#   tail q10-q13, q18, q19, q21, q30;
-# - every query whose code or oracle changed in r9: d14/st14/st16
-#   (blocked-Bloom bitmap layout — directive #4 — with new oracle
-#   position CTEs), s14 (broadcast guard scaled by block fan-out,
-#   ADVICE), s12 (ivfadc_query refactored through _ivfadc_scored for
-#   the s15 composition), d7 (the shared _jaccard_adaptive router
-#   gained the fat-posting arm late in r9 — d2 was already in; d7 takes
-#   m5's fill slot, m5 r6-driver-green and code-unchanged, m-family
-#   stays in-window via m1-m4);
-# - 35 fills re-verifying the entire r6-stale set except three ceded
-#   slots (c11/q27/d10 — all r6-driver-green, code-unchanged, families
-#   in-window via c1-c9, q30, d15/d16): the c1-c6/c8/c9 compat
-#   surface, d1/d2/d8/d9/d15/d16, m1-m5, q4/q5/q9/q16/q20/q26/q31,
-#   s9/s10/s11/s13, t1-t4/t13.
-# After this round no query's newest driver-green is older than r6.
-# Membership OVERRIDES the per-registration ``gate=`` flag.
-GATE_ROTATION_R9 = frozenset(
-    {
-        # new in r9 — priority slot (first driver proof)
-        "s15_ivfadc_index_rerank",
-        # stalest driver evidence (r3 / r5)
-        "st3_stream_dedup",
-        "q10_explode_tokens", "q11_fillna_isnull_json",
-        "q12_sort_nulls_topk", "q13_window_funcs",
-        "q18_pivot", "q19_sessionize", "q21_range_join",
-        "q30_shipmode_priority",
-        # code/oracle changed in r9 — re-prove through the driver
-        "d14_bloom_decontaminate", "st14_stream_decontaminate",
-        "st16_stream_span_flag", "s14_hamming_topk", "s12_ivfadc_index",
-        # r6-stale fills
-        "c1_arrow_roundtrip", "c2_iloc_slice", "c3_sort_index_rank",
-        "c4_index_diff", "c5_duplicated_mask", "c6_index_accessors",
-        "c8_join_fill_defaults", "c9_join_last_wins",
-        "d1_exact_dedup", "d2_token_jaccard", "d8_edit_distance",
-        "d9_decontamination", "d15_cross_source_overlap",
-        "d16_fuzzy_dedup_corpus",
-        "m1_multimodal_meta", "m2_media_pipeline", "m3_audio_pipeline",
-        "m4_image_ahash_dedup", "d7_ngram_jaccard",
-        "q4_project_cast_rename", "q5_distinct_segments", "q9_concat_union",
-        "q16_setops", "q20_nonemin_nonemax", "q26_approx_sketches",
-        "q31_grouping_multi",
-        "s9_sq8_topk", "s10_ivf_sq8_topk", "s11_ivf_sq8_index",
-        "s13_jl_projection_topk",
-        "t1_langid", "t2_quality_score", "t3_token_stats", "t4_fingerprint",
-        "t13_readability",
-    }
-)
-
-# Round-10 gate rotation (VERDICT r9 directive #1). R10 gates:
-# - st18 in its promised priority slot (the one query with no driver
-#   row — closes cumulative coverage at 145/145) and s16 (NEW: batched
-#   serving against one loaded index, directive #6);
-# - every query whose code or oracle changed in r10: the Jaccard
-#   prefix-tier AQE-coalescing pin (directive #2) reaches d2/d6/d7 via
-#   the shared router; the Bloom broadcast-bits provider + 2^28 cap with
-#   lockstep oracle msize CTEs (directive #3) reaches d14/st14 (word
-#   filter) and st16/st17/st18 (span filter); the ANN serve routing
-#   size-guard (directive #4) reaches s11/s12/s15;
-# - the verdict-named stale set d3/d4/d5/q6/q7 (d6 already in via the
-#   router change) and the r6-stale quartet c11/d10/m5/q27;
-# - 29 fills from the r7-stale set, ceding 15 slots with families still
-#   in-window: c12/c13 (mdf surface via c11), m7 (m-family via m5), p9
-#   (BPE via p8), p10 (p-family via p8/p11), q15/q36/q38 (agg-shape
-#   family via q41/q42), q37/q39 (window family via q41), s5/s8 (ADC
-#   family via s6/s7), st1/st4 (stream-window family via st2), st8
-#   (stream-static join exercised harder by in-gate st14/st16/st18).
-# After this round no query's newest driver-green is older than r7.
-# Membership OVERRIDES the per-registration ``gate=`` flag.
-GATE_ROTATION_R10 = frozenset(
-    {
-        # priority slots
-        "st18_stream_substring_removal", "s16_ivfadc_batched_serve",
-        # code/oracle changed in r10 — re-prove through the driver
-        "d2_token_jaccard", "d6_dedup_clusters", "d7_ngram_jaccard",
-        "d14_bloom_decontaminate", "st14_stream_decontaminate",
-        "st16_stream_span_flag", "st17_stream_dedup_ingest",
-        "s11_ivf_sq8_index", "s12_ivfadc_index", "s15_ivfadc_index_rerank",
-        # verdict-named stale + r6-stale
-        "d3_minhash_lsh", "d4_simhash", "d5_embedding_neardup",
-        "q6_dedup_keep_first", "q7_duplicated_pairs",
-        "c11_mdf_dedup_pipeline", "d10_semantic_dedup",
-        "m5_audio_fingerprint_dedup", "q27_sql_shipping_priority",
-        # r7-stale fills
-        "c14_csv_roundtrip", "c15_json_roundtrip", "c16_orc_roundtrip",
-        "c17_upsert_merge", "c18_bucketed_join", "c19_partition_pruned_scan",
-        "c20_schema_evolution",
-        "d13_repeated_block_removal", "d17_fuzzy_dedup_ingest",
-        "p8_bpe_merges", "p11_split_leakage",
-        "q17_asof_join", "q32_array_roundtrip", "q33_datetime_surface",
-        "q34_string_surface", "q40_salted_skew_join",
-        "q41_range_frame_window", "q42_grouping_sets",
-        "s6_ivfadc_topk", "s7_ivfadc_rerank",
-        "st2_session_window", "st5_watermark_append", "st6_stateful_counter",
-        "st7_stream_stream_join", "st9_stream_ingest",
-        "st11_watermarked_dedup", "st12_stream_outer_join",
-        "st13_stream_index_ingest",
-        "t11_rake_keywords",
-    }
-)
-
-# Round-11 gate rotation (VERDICT r10 directive #3), committed at round
-# END so — unlike r10's early freeze — it covers exactly what the round
-# touched. R11 gates:
-# - the verdict-named r10-touched-but-ungated set (d12, s13, st10,
-#   s1/s2/s3, s5, s8/s9/s10, c18);
-# - every query whose code changed in r11: the expr-path kernel
-#   construction (hashing minhash/simhash, _sq8_code, _argmin_cell,
-#   _st10_row_minhash_bands, _band_structs) reaches d3/d4/d6/d16/d17/
-#   c11/st13/st17/s11 (+ the directive's s9/s10/st10); the kernel
-#   str-arg identifier quoting reaches the remaining sqdist/dot users
-#   d5/d10/s6/s7/s12/s15/s16; m7's shared-hash persist; t11's windowed
-#   single-pass restructure; the CC two-jump rounds reach d6/d16/d17/
-#   c11/st17 (large-graph path; bench scale takes the one-job
-#   contraction);
-# - the full r7-stale set (c12/c13/p9/p10/q15/q36/q37/q38/q39/st1/st4/
-#   st8 — after this round no query's newest driver-green is older than
-#   r8) and r8-stale family fills (c7/c10/d11/d18/p1/q1/q28/t5/t12).
-# Membership OVERRIDES the per-registration ``gate=`` flag.
-GATE_ROTATION_R11 = frozenset(
+# The gate rotation: the queries the driver's window checks this round.
+# Each operator family keeps a member, and queries whose code changed
+# are re-proven through the driver. Membership OVERRIDES the
+# per-registration ``gate=`` flag, which records only the round-1 layout.
+# Earlier rotations live in git history and in CORRECTNESS_rNN.json.
+GATE_ROTATION = frozenset(
     {
         # verdict-directed: r10-touched-but-ungated
         "d12_gram_containment", "s13_jl_projection_topk",
@@ -418,9 +69,6 @@ GATE_ROTATION_R11 = frozenset(
         "t12_bigram_surprisal",
     }
 )
-
-# The active rotation (tests reference this alias, not the round name).
-GATE_ROTATION = GATE_ROTATION_R11
 
 
 @dataclass

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from medvedi_spark.queries._det import DEC
@@ -492,65 +492,33 @@ def st9_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ST10_THRESH = 0.8
 
 
-def _st10_row_minhash_bands(harr):
-    """(band_idx, band_val) structs from a token-hash ARRAY — the
-    row-wise equivalent of `minhash_agg_cols` + d3's band assembly.
-
-    A str ``harr`` takes the one-round-trip expr path (the composed
-    nested-lambda fold below is several hundred py4j round-trips per
-    plan build — the r10/r11 expr-kernel ruling, same analyzed
-    expression both ways, pinned in tests/test_round11_expr_kernels.py);
-    Column args keep the composed construction."""
-    from medvedi_spark.functions.hashing import MINHASH_COEFFS, MINHASH_PRIME
-
-    import medvedi_spark.operators.llm as llm
+def _st10_row_minhash_bands(harr: str) -> Column:
+    """(band_idx, band_val) structs from a token-hash ARRAY column — the
+    row-wise equivalent of `minhash_agg_cols` + d3's band assembly. One
+    ``F.expr`` string (the nested-lambda fold composed through the
+    functions API is several hundred py4j round-trips per plan build;
+    see the kernel note in operators/llm.py)."""
+    from medvedi_spark.functions.hashing import MINHASH_COEFFS, MINHASH_PRIME, _ident
 
     n_bands = len(MINHASH_COEFFS) // 2  # two-min bands, same as minhash_band_index
-    if llm._EXPR_KERNELS and isinstance(harr, str):
-        init_sql = "array(" + ", ".join(
-            [f"cast({MINHASH_PRIME} as bigint)"] * len(MINHASH_COEFFS)
-        ) + ")"
-        aa_sql = "array(" + ", ".join(
-            f"cast({a} as bigint)" for a, _ in MINHASH_COEFFS
-        ) + ")"
-        bb_sql = "array(" + ", ".join(
-            f"cast({b} as bigint)" for _, b in MINHASH_COEFFS
-        ) + ")"
-        return F.expr(
-            f"aggregate({llm._sql_ident(harr)}, {init_sql}, "
-            f"(acc, h) -> transform(acc, (x, i) -> "
-            f"least(x, (element_at({aa_sql}, i + 1) * h + element_at({bb_sql}, i + 1)) "
-            f"% {MINHASH_PRIME})), "
-            f"acc -> transform(sequence(0, {n_bands - 1}), i -> "
-            f"struct(cast(i as int) as band_idx, "
-            f"concat_ws(',', element_at(acc, 2 * i + 1), element_at(acc, 2 * i + 2)) "
-            f"as band_val)))"
-        )
-    init = F.array(*[F.lit(MINHASH_PRIME).cast("bigint")] * len(MINHASH_COEFFS))
-    aa = F.array(*[F.lit(a).cast("bigint") for a, _ in MINHASH_COEFFS])
-    bb = F.array(*[F.lit(b).cast("bigint") for _, b in MINHASH_COEFFS])
-    return F.aggregate(
-        harr,
-        init,
-        lambda acc, h: F.transform(
-            acc,
-            lambda x, i: F.least(
-                x,
-                (F.element_at(aa, i + F.lit(1)) * h + F.element_at(bb, i + F.lit(1)))
-                % F.lit(MINHASH_PRIME),
-            ),
-        ),
-        lambda acc: F.transform(
-            F.sequence(F.lit(0), F.lit(n_bands - 1)),
-            lambda i: F.struct(
-                i.cast("int").alias("band_idx"),
-                F.concat_ws(
-                    ",",
-                    F.element_at(acc, 2 * i + F.lit(1)),
-                    F.element_at(acc, 2 * i + F.lit(2)),
-                ).alias("band_val"),
-            ),
-        ),
+    init_sql = "array(" + ", ".join(
+        [f"cast({MINHASH_PRIME} as bigint)"] * len(MINHASH_COEFFS)
+    ) + ")"
+    aa_sql = "array(" + ", ".join(
+        f"cast({a} as bigint)" for a, _ in MINHASH_COEFFS
+    ) + ")"
+    bb_sql = "array(" + ", ".join(
+        f"cast({b} as bigint)" for _, b in MINHASH_COEFFS
+    ) + ")"
+    return F.expr(
+        f"aggregate({_ident(harr)}, {init_sql}, "
+        f"(acc, h) -> transform(acc, (x, i) -> "
+        f"least(x, (element_at({aa_sql}, i + 1) * h + element_at({bb_sql}, i + 1)) "
+        f"% {MINHASH_PRIME})), "
+        f"acc -> transform(sequence(0, {n_bands - 1}), i -> "
+        f"struct(cast(i as int) as band_idx, "
+        f"concat_ws(',', element_at(acc, 2 * i + 1), element_at(acc, 2 * i + 2)) "
+        f"as band_val)))"
     )
 
 
@@ -853,8 +821,8 @@ def st13_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # map-side cell routing: argmin over the centroid literal via struct
     # ordering on (d2, cent_id) — the same ranking _coarse_route's window
-    # uses, expressed without a window so it is streaming-legal (expr-path
-    # construction in _argmin_cell, one py4j round-trip)
+    # uses, expressed without a window so it is streaming-legal (one F.expr
+    # string in _argmin_cell)
     enc = _read_embeddings_stream(spark, sf_dir).select(
         F.col("vec_id"),
         _argmin_cell("embedding", cents).alias("cell"),

@@ -12,36 +12,6 @@ from medvedi_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "slow: long-running test, skipped by default so the suite fits the "
-        "driver's verify window (VERDICT r10 directive #2a). Run them with "
-        "SPARK_GRAFT_FULL_TESTS=1 or an explicit -m selection.",
-    )
-
-
-def pytest_collection_modifyitems(config, items):
-    """Default-skip @pytest.mark.slow tests.
-
-    The full suite grew past the driver's verify budget (~45 min local,
-    cut at ~87% in VERIFY_r10), which silently un-gated every test. The
-    default run keeps the fast correctness core; the slow plan-dump /
-    lifecycle / torture tests stay opt-in via SPARK_GRAFT_FULL_TESTS=1
-    (used by the round's own full-suite gate) or `-m slow`.
-    """
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
-        return
-    if config.getoption("-m"):
-        return  # explicit marker selection overrides the default skip
-    skip = pytest.mark.skip(
-        reason="slow: skipped by default; SPARK_GRAFT_FULL_TESTS=1 runs the full suite"
-    )
-    for item in items:
-        if "slow" in item.keywords:
-            item.add_marker(skip)
-
-
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("medvedi-spark-tests")

@@ -35,7 +35,6 @@ def _coarse(emb):
     )
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_roundtrip_equals_inline(spark, sf_dir, idx_path):
     """save → load → query emits the exact rows of the inline
     ivf_sq8_topk (the s10/s11 shared-oracle property)."""

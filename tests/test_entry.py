@@ -5,7 +5,6 @@ from __future__ import annotations
 import importlib
 
 import duckdb
-import pytest
 
 entry_mod = importlib.import_module("__spark_entry__")
 
@@ -16,7 +15,6 @@ def test_entry_returns_rows(spark):
     assert len(df.schema.fields) > 0
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_queries_all_run(spark, sf_dir):
     qs = entry_mod.queries()
     assert qs, "no queries registered"
@@ -30,7 +28,6 @@ def test_oracle_sql_keys_subset_of_queries():
     assert set(oracles) <= set(qs)
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_oracle_sql_parses_in_duckdb(sf_dir):
     con = duckdb.connect()
     import os

@@ -117,7 +117,6 @@ def test_concat_with_take_slice(spark):
 # -- sample with weights (tests/test_sample.py; dataframe.py:523-548) -------
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_sample_weights_bias(spark):
     np.random.seed(7)
     df = MDF({"a": [0, 1]}, spark=spark)

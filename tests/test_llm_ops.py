@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
+import medvedi_spark.operators.llm as llm
 from medvedi_spark.catalog import load
+from medvedi_spark.functions.hashing import minhash_agg_cols
 from medvedi_spark.operators.llm import _jaccard_bitset, _jaccard_prefix_filter
 
 
@@ -267,3 +271,53 @@ def test_repeated_block_filter_property_vs_bruteforce(spark):
         assert got == brute(texts)
 
     check()
+
+
+def test_minhash_agg_cols_quotes_reserved_word_column(spark):
+    # a reserved-word column name must parse inside the F.expr string
+    df = spark.createDataFrame([(1, 10), (1, 20)], "doc_id int, `order` bigint")
+    got = df.groupBy("doc_id").agg(*minhash_agg_cols("order")).collect()
+    assert len(got) == 1
+
+
+@pytest.fixture
+def emb_df(spark):
+    return spark.createDataFrame(
+        [
+            (i, [0.125 * i - 1.0, 2.5 * (i % 7), -0.001 * i, 42.0])
+            for i in range(60)
+        ],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def test_argmin_cell_matches_coarse_route_ranking(emb_df):
+    # the in-row argmin must agree with the crossJoin+window ranking
+    cents_df = emb_df.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
+    )
+    cents = cents_df.orderBy("cent_id").collect()
+    inrow = {
+        r["vec_id"]: r["cell"]
+        for r in emb_df.select(
+            "vec_id", llm._argmin_cell("embedding", cents).alias("cell")
+        ).collect()
+    }
+    assign, _ = llm._coarse_route(
+        emb_df.select("vec_id", "embedding"), cents_df, F.lit(False), 1
+    )
+    windowed = {r["vec_id"]: r["cell"] for r in assign.collect()}
+    assert inrow == windowed
+
+
+@pytest.mark.parametrize("bad", [math.nan, None, math.inf])
+@pytest.mark.parametrize("kernel", ["argmin_cell", "sq8_code"])
+def test_non_finite_model_state_is_rejected(kernel, bad):
+    """Centroids and SQ8 ranges are inlined as SQL double literals, which
+    have no form for None/NaN/inf: the kernel must refuse them by value
+    instead of building a plan."""
+    with pytest.raises(ValueError, match=f"literal for {bad!r}:"):
+        if kernel == "argmin_cell":
+            llm._argmin_cell("embedding", [{"cent_id": 0, "c_emb": [1.0, bad, 0.5]}])
+        else:
+            llm._sq8_code("embedding", [0.0, bad], [1.0, 2.0])

@@ -43,7 +43,6 @@ def test_every_batch_query_has_a_budget():
         assert name in budgets, f"{name} lacks a plan budget — run tools/plan_budget.py"
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_plans_stay_within_budget(spark, sf_dir):
     _ensure_loaded()
     snap = _snapshot()

@@ -21,7 +21,6 @@ def qmap():
     return queries()
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_no_python_row_udfs_anywhere(spark, sf_dir, qmap):
     """Row-at-a-time Python UDFs (BatchEvalPython) are banned from every
     batch query — Python crosses the boundary only via Arrow."""

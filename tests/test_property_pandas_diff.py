@@ -15,7 +15,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from medvedi_spark.frame import MDF, concat
-import pytest
 
 SETTINGS = dict(
     max_examples=12,
@@ -29,7 +28,6 @@ vals = st.lists(st.integers(min_value=-5, max_value=5), min_size=1, max_size=8)
 
 @given(k=keys, v=vals)
 @settings(**SETTINGS)
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_sort_values_matches_pandas(spark, k, v):
     n = min(len(k), len(v))
     k, v = k[:n], v[:n]
@@ -59,7 +57,6 @@ def test_duplicated_mask_matches_pandas(spark, k):
 
 @given(a=vals, b=vals)
 @settings(**SETTINGS)
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_concat_matches_pandas(spark, a, b):
     mdf = concat(MDF({"x": a}, spark=spark), MDF({"x": b}, spark=spark), ignore_index=True)
     np.testing.assert_array_equal(mdf["x"], np.concatenate([a, b]))
@@ -78,7 +75,6 @@ def test_groupby_sum_matches_pandas(spark, k, v):
 
 @given(col=vals, hay=st.lists(st.integers(min_value=-5, max_value=5), min_size=0, max_size=6))
 @settings(**SETTINGS)
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_isin_literal_and_join_paths_agree(spark, col, hay, monkeypatch):
     """The IN-list path and the marker-join path are the same function:
     force the join path by dropping the literal cap to 0 and compare
@@ -139,7 +135,6 @@ def test_pack_sequences_matches_reference_next_fit(spark, n, cap):
     tol=st.sampled_from([None, 50]),
 )
 @settings(**SETTINGS)
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_global_asof_matches_pandas_merge_asof(spark, lts, rts, direction, tol):
     """asof_join(by=()) — the range-partitioned carry-in path — must match
     pandas.merge_asof exactly (right timestamps unique so every engine's

@@ -669,7 +669,6 @@ def test_index_name_on_empty_no_columns_raises(spark):
         df.index.name
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_index_monotonic_reference_matrix(spark):
     """ref is_monotonic_* truth table (ties, multilevel, 3-level)."""
     cases_inc = [
@@ -903,7 +902,6 @@ def test_join_empty_sides(spark):
         assert len(out2) == (3 if how == "left" else 0)
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_join_three_frames_value_tables(spark):
     """ref test_join_three_{disjoint,inner,outer,right} — the full value
     matrices, incl. fills and sorted-by-key output."""

@@ -62,7 +62,6 @@ def test_bloom_flag_large_m_literal_and_joinless(spark):
     assert {i for i in range(40) if i % 10 == 0} <= flagged
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_bloom_span_flag_large_m_streaming_legal(spark, sf_dir):
     """The literal attach keeps the st16/st18 plans legal on a
     readStream frame at large m and matching the batch run
@@ -332,13 +331,3 @@ def test_s16_batched_serve_structure(spark, sf_dir):
     assert len(per_q) == _S16_BATCHES * _S5_PROBES
     assert all(sorted(v) == list(range(1, _S5_K + 1)) for v in per_q.values())
 
-
-def test_r10_rotation_priority_slots():
-    """st18 (the one never-driver-gated query) and s16 (new) must hold
-    gate slots in the ROUND-10 rotation — VERDICT r9 directive #1. Pinned
-    against the historical R10 set (not the live alias, which rotates
-    every round by design)."""
-    from medvedi_spark.queries.registry import GATE_ROTATION_R10
-
-    assert "st18_stream_substring_removal" in GATE_ROTATION_R10
-    assert "s16_ivfadc_batched_serve" in GATE_ROTATION_R10

@@ -123,7 +123,6 @@ def test_cross_group_overlap_shapes_agree(spark):
     assert "Join" in joined._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_cross_group_overlap_hot_key_routes_to_self_join(spark):
     """Directive #5's acceptance: 10^4 groups sharing ONE key completes
     through the router without materializing a 5·10^7-struct array in a
@@ -178,7 +177,6 @@ def test_sq8_uniform_still_works(spark):
 # ------------------------------------------------- vectorized PQ dup-id guard
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_pq_vectorized_assert_unique_ids(spark):
     cents = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [1.0, 1.0])], "cent_id bigint, c_emb array<double>"

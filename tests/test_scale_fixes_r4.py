@@ -18,7 +18,6 @@ import re
 from pyspark.sql import functions as F
 
 from medvedi_spark.operators.llm import bpe_learn, duplicate_spans, pq_adc_topk, pq_encode
-import pytest
 
 
 # --------------------------------------------------------------- bpe_learn
@@ -79,7 +78,6 @@ def test_duplicate_spans_no_gram_partitioned_window(spark):
     assert re.search(r"windowspecdefinition\(doc_id", plan)
 
 
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_duplicate_spans_hot_gram_stress(spark):
     """One gram dominating (10^5 anchors of the same k-gram inside one
     doc, shared with a second doc) must still produce the exact maximal

@@ -85,10 +85,9 @@ def test_st10_rowwise_minhash_equals_batch_aggregate(spark):
     )
     rowwise = {
         (r.doc_id, r.bd.band_idx): r.bd.band_val
-        for r in docs.select(
-            "doc_id",
-            F.explode(_st10_row_minhash_bands(F.transform(shing, lambda s: token_hash(s)))).alias("bd"),
-        ).collect()
+        for r in docs.withColumn("harr", F.transform(shing, lambda s: token_hash(s)))
+        .select("doc_id", F.explode(_st10_row_minhash_bands("harr")).alias("bd"))
+        .collect()
     }
     hashed = (
         docs.select("doc_id", F.explode(big).alias("s"))

@@ -5,7 +5,6 @@ decontamination (st14)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from medvedi_spark.catalog import load
 from medvedi_spark.operators import llm as ops
@@ -291,7 +290,6 @@ _corpus = st.lists(_doc, min_size=2, max_size=6)
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-@pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
 def test_fuzzy_dedup_properties(spark, texts):
     """On random small corpora: (a) the smallest doc id always survives,
     (b) exact duplicates collapse to exactly one survivor, (c) survivors

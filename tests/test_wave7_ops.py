@@ -260,7 +260,6 @@ _sigs = st.lists(
 class TestHammingTopkProperty:
     @given(corpus_sigs=_sigs, probe_sigs=_sigs)
     @settings(**_HSETTINGS)
-    @pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
     def test_prefilter_lossless_on_random_codes(self, spark, corpus_sigs, probe_sigs):
         corpus = list(enumerate(corpus_sigs))
         queries = [(100 + i, s) for i, s in enumerate(probe_sigs)]
@@ -295,7 +294,6 @@ _texts = st.lists(
 class TestExactSubstringRemovalProperty:
     @given(texts=_texts)
     @settings(**_HSETTINGS)
-    @pytest.mark.slow  # >=15s: default-skipped so the suite fits the driver verify window (r11)
     def test_matches_python_kept_chars_rebuild(self, spark, texts):
         rows = [(i, t) for i, t in enumerate(texts)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")

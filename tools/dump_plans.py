@@ -39,27 +39,6 @@ def main() -> None:
     from medvedi_spark.session import get_spark
 
     _ensure_loaded()
-    # SPARK_GRAFT_EXPR_KERNELS=0 dumps plans with the pre-r10-change-10
-    # composed kernel construction (the preserved fallback branch) — the
-    # "before" arm for the expr-kernel plan evidence.
-    if os.environ.get("SPARK_GRAFT_EXPR_KERNELS", "1") == "0":
-        import medvedi_spark.functions.hashing as _hashing
-        import medvedi_spark.operators.llm as _llm
-
-        _llm._EXPR_KERNELS = False
-        _hashing._EXPR_KERNELS = False  # the r11 hashing kernels share the ruling
-    # SPARK_GRAFT_NO_OP_PERSIST=1 dumps plans with operator-internal
-    # size-guarded persists bypassed (identity) — the "before" arm for
-    # the r11 m7 shared-hash-table persist evidence.
-    if os.environ.get("SPARK_GRAFT_NO_OP_PERSIST") == "1":
-        import medvedi_spark.operators._persist as _p
-        import medvedi_spark.operators.llm as _llm2
-
-        _p.size_guarded_persist = lambda source, df, cap=None: df
-        # llm bound the helper at import time — patch its alias too, or
-        # llm-internal persists (minhash sigs, gram/anchor/block tables)
-        # would silently keep caching in the "no-persist" arm
-        _llm2._size_guarded_persist = _p.size_guarded_persist
     spark = get_spark("r10-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
