@@ -9,12 +9,15 @@ check ``.explain("formatted")`` for ``PushedFilters`` / ``ReadSchema``).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "TABLES",
     "dataset_fingerprint",
+    "model_state",
     "load",
     "load_all",
     "normalize_event_ts",
@@ -25,8 +28,8 @@ __all__ = [
 
 def dataset_fingerprint(path: str) -> tuple:
     """Content-change fingerprint of a parquet dataset path, for keying
-    session model-state caches (fitted Bloom bitmaps, PQ codebooks,
-    inferred stream schemas).
+    the session model-state cache (:func:`model_state`: fitted Bloom
+    bitmaps, PQ codebooks, inferred stream schemas).
 
     A bare ``os.stat(path)`` is wrong twice (ADVICE r7): a parquet
     DIRECTORY's own ``st_size`` does not reflect the part files inside,
@@ -81,6 +84,28 @@ def dataset_fingerprint(path: str) -> tuple:
                 continue
             parts.append((rel, pst.st_size, pst.st_mtime_ns))
     return (real, tuple(parts))
+
+
+_T = TypeVar("_T")
+
+# Fitted model state of the session (Bloom bitmaps, PQ codebooks,
+# inferred stream schemas). Production fits such a model once per frozen
+# dataset and serves it everywhere, so the queries that share one pay its
+# fit once per process instead of once per call.
+_MODEL_STATE: dict[tuple, object] = {}
+
+
+def model_state(model: str, path: str, params: tuple, fit: Callable[[], _T]) -> _T:
+    """Return the ``model`` fitted on the dataset at ``path`` with
+    ``params``, running ``fit()`` only on a miss. The key holds the model
+    name (two models of one table never collide), the dataset's
+    :func:`dataset_fingerprint` (a regenerated dataset misses) and the
+    fit parameters."""
+    key = (model, dataset_fingerprint(path), params)
+    if key not in _MODEL_STATE:
+        _MODEL_STATE[key] = fit()
+    return _MODEL_STATE[key]
+
 
 TABLES = (
     "region",

@@ -43,6 +43,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from medvedi_spark.operators import _persist
 from medvedi_spark.operators.llm import (
     _coarse_route,
     _pq_lut,
@@ -69,11 +70,6 @@ __all__ = [
     "ivfadc_query",
     "ivfadc_query_rerank",
 ]
-
-
-#: routing-payload broadcast budget — the same ~32 MB discipline every
-#: other size-guarded broadcast in the tree follows
-_ROUTING_BROADCAST_BUDGET = 32 << 20
 
 
 def _read_pinned(spark: SparkSession, path: str, schema_json: str | None) -> DataFrame:
@@ -154,9 +150,7 @@ def _serve_candidates(
     fallback still runs the bounded distinct-cell aggregate — there the
     extra probe-batch-sized routing pass is noise against the
     corpus-scale candidate join it guards."""
-    from medvedi_spark.operators._persist import persist_tracked
-
-    budget_rows = _ROUTING_BROADCAST_BUDGET // max(1, payload_bytes_per_row)
+    budget_rows = _persist.BROADCAST_BUDGET // max(1, payload_bytes_per_row)
     if budget_rows >= 1:
         head = routed.limit(budget_rows + 1).collect()
         if len(head) <= budget_rows:
@@ -172,7 +166,7 @@ def _serve_candidates(
     # batch-proportional reaches the driver); only the codebook-bounded
     # cell set is collected. probe_cells is consumed twice here (the
     # distinct below and the routed join's lineage), so persist it.
-    probe_cells = persist_tracked(probe_cells)
+    probe_cells = _persist.persist_tracked(probe_cells)
     cells = sorted(
         r["cell"] for r in probe_cells.select("cell").distinct().collect()
     )

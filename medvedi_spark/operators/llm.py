@@ -24,9 +24,10 @@ from medvedi_spark.queries._det import DEC
 
 # Tracked operator-lifetime persists (shared with operators.relational);
 # sessions running many queries reclaim blocks with release_persisted().
+# The size budgets are read through the module (_persist.X) at call time.
+from medvedi_spark.operators import _persist
 from medvedi_spark.operators._persist import (  # noqa: F401  (re-export)
     _PERSISTED,
-    PERSIST_INPUT_CAP,
     persist_tracked as _persist_tracked,
     release_persisted,
     size_guarded_persist as _size_guarded_persist,
@@ -121,14 +122,13 @@ def token_jaccard_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.95,
-    bitset_vocab_limit: int = 64,
 ) -> DataFrame:
     """Exact token-set Jaccard self-join with adaptive algorithm selection.
 
     One scalar corpus statistic (vocabulary size — a tiny aggregate job,
     the same kind of runtime statistic AQE replans on) picks the plan:
 
-    - vocab <= ``bitset_vocab_limit`` → bitset path: token sets become
+    - vocab <= ``_BITSET_VOCAB_LIMIT`` (64) → bitset path: token sets become
       int64 masks; only DISTINCT masks compare pairwise, with
       popcount(a&b)/popcount(a|b) in whole-stage codegen. Token blocking
       provably cannot prune on a tiny vocabulary, so this is the only
@@ -144,7 +144,7 @@ def token_jaccard_pairs(
     # array_distinct bounds this family's explosion to ~distinct tokens
     # per doc, and its 100x curve was healthy without it.
     tok = tokenize_distinct(df, id_col, text_col)
-    return _jaccard_adaptive(tok, threshold, bitset_vocab_limit)
+    return _jaccard_adaptive(tok, threshold)
 
 
 def char_ngrams_distinct(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -166,8 +166,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.9,
-    bitset_vocab_limit: int = 64,
-    wide_bitset_vocab_limit: int = 4096,
 ) -> DataFrame:
     """Exact character-n-gram-set Jaccard self-join; same adaptive plan
     family as :func:`token_jaccard_pairs`, with the wide-bitset middle
@@ -175,22 +173,17 @@ def ngram_jaccard_pairs(
     alphabet^n-bounded, usually hundreds-to-thousands)."""
     # not fanned out — same measured rejection as token_jaccard_pairs
     grams = char_ngrams_distinct(df, id_col, text_col, n)
-    return _jaccard_adaptive(grams, threshold, bitset_vocab_limit, wide_bitset_vocab_limit)
+    return _jaccard_adaptive(grams, threshold)
 
 
-def _jaccard_adaptive(
-    tok: DataFrame,
-    threshold: float,
-    bitset_vocab_limit: int = 64,
-    wide_bitset_vocab_limit: int = 4096,
-    dense_fraction: float = 0.25,
-) -> DataFrame:
+def _jaccard_adaptive(tok: DataFrame, threshold: float) -> DataFrame:
     """Plan selection from two scalar corpus statistics (one tiny agg
     job, the same kind of runtime statistic AQE replans on): vocabulary
     size and set density (avg distinct grams per doc / vocab).
 
-    - vocab ≤ 64 → single-long bitset.
-    - vocab ≤ ``wide_bitset_vocab_limit`` AND dense sets → wide bitset
+    - vocab ≤ ``_BITSET_VOCAB_LIMIT`` → single-long bitset.
+    - vocab ≤ ``_WIDE_BITSET_VOCAB_LIMIT`` AND dense sets (avg set ≥
+      ``_DENSE_FRACTION`` of the vocab) → wide bitset
       (array<bigint> masks): when most docs contain a large fraction of
       the vocab, every blocking scheme degenerates (all pairs share a
       gram), so comparing distinct mask vectors at codegen speed is the
@@ -225,7 +218,7 @@ def _jaccard_adaptive(
     ).first()
     n_vocab = stats.n_vocab
     vocab = tok.select("t").distinct()
-    if n_vocab <= bitset_vocab_limit:
+    if n_vocab <= _BITSET_VOCAB_LIMIT:
         if stats.n_docs <= _mask_broadcast_cap(1):
             return _jaccard_bitset(tok, vocab, threshold)
         return _jaccard_bitset_wide_shuffled(tok, vocab, n_vocab, threshold)
@@ -242,15 +235,22 @@ def _jaccard_adaptive(
     # wide compare measured WORSE than prefix, so only the regime the
     # A/B proved routes differently.
     avg_df = stats.n_docs * stats.avg_set / n_vocab if n_vocab else 0.0
-    dense = stats.avg_set >= dense_fraction * n_vocab
+    dense = stats.avg_set >= _DENSE_FRACTION * n_vocab
     fat = n_vocab <= _FAT_POSTING_VOCAB and avg_df >= _FAT_POSTING_DF
-    if n_vocab <= wide_bitset_vocab_limit and (dense or fat):
+    if n_vocab <= _WIDE_BITSET_VOCAB_LIMIT and (dense or fat):
         nwords = (n_vocab + 63) // 64
         if stats.n_docs <= _mask_broadcast_cap(nwords):
             return _jaccard_bitset_wide(tok, vocab, n_vocab, threshold)
         return _jaccard_bitset_wide_shuffled(tok, vocab, n_vocab, threshold)
     return _jaccard_prefix_filter(tok, threshold)
 
+
+# Plan tiers of _jaccard_adaptive: a single-long mask up to 64 grams,
+# wide masks up to 4096 grams (64 longs) when sets are dense, i.e. the
+# mean set holds at least a quarter of the vocabulary.
+_BITSET_VOCAB_LIMIT = 64
+_WIDE_BITSET_VOCAB_LIMIT = 4096
+_DENSE_FRACTION = 0.25
 
 # Fat-posting routing bounds (see _jaccard_adaptive): the wide tier is
 # forced over prefix filtering only where the r9 interleaved A/B proved
@@ -263,11 +263,11 @@ _FAT_POSTING_DF = 64
 
 def _mask_broadcast_cap(nwords: int) -> int:
     """Max distinct-mask rows safely broadcastable for the quadratic
-    compare: ~32 MB budget over the per-row footprint of an
+    compare: the broadcast budget over the per-row footprint of an
     ``array<bigint>`` mask (8 B/word + ~32 B row overhead). Distinct-doc
     count upper-bounds distinct-mask count, so the router can apply this
     cap without an extra mask-build job."""
-    return (32 << 20) // (8 * nwords + 32)
+    return _persist.BROADCAST_BUDGET // (8 * nwords + 32)
 
 
 def _expand_mask_groups(groups: DataFrame, near: DataFrame) -> DataFrame:
@@ -778,12 +778,16 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str, max_hamming: int = 
 _CC_JUMPS = 2
 
 
+# connected_components' single-task ceiling: up to 5 M symmetrized edges
+# the numpy contraction runs in one executor task.
+_SMALL_GRAPH_EDGES = 5_000_000
+
+
 def connected_components(
     edges: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 25,
-    small_graph_edges: int = 5_000_000,
 ) -> DataFrame:
     """Connected components over an undirected edge list.
 
@@ -791,7 +795,7 @@ def connected_components(
     decision once transitive groups collapse to one keeper per cluster.
     Adaptive plan, chosen by the materialized edge count:
 
-    - **small graph** (≤ ``small_graph_edges`` symmetrized edges, the
+    - **small graph** (≤ ``_SMALL_GRAPH_EDGES`` symmetrized edges, the
       common case after LSH pruning — near-dup graphs are sparse
       relative to the corpus): contract in ONE executor task via
       ``mapInPandas`` — vectorized numpy min-propagation with pointer
@@ -830,7 +834,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     n_sym = sym.count()
-    if n_sym <= small_graph_edges:
+    if n_sym <= _SMALL_GRAPH_EDGES:
         node_t = sym.schema["src"].dataType.simpleString()
 
         def _contract(batches):
@@ -1307,36 +1311,25 @@ def bits_array_expr(words: list[int]) -> Column:
     per query build** plus ~0.3 s of re-folding per analysis — the
     dominant term of VERDICT r7 #1's 41 s, hiding OUTSIDE the executor
     timeline. One ``split('w0,w1,…')`` string costs 0.04 s to build and
-    Catalyst constant-folds it to the identical array literal."""
-    return F.expr(
-        "cast(split('" + ",".join(map(str, words)) + "', ',') as array<bigint>)"
-    )
+    Catalyst constant-folds it to the identical array literal.
 
-
-def _bloom_bits_source(df: DataFrame, words: list[int]) -> tuple[DataFrame, Column]:
-    """Attach a Bloom bitmap to ``df`` and return ``(df', bits_col)``.
-
-    Always the constant-folded split-string LITERAL
-    (:func:`bits_array_expr`), at every size up to the 2^28 cap. This
-    round's directive #3 first shipped a broadcast one-row-array join
-    for bitmaps past 2^17 words — and the 150× probe then measured it at
-    570 s where the literal extrapolates to ~90 s: an attribute-bound
-    array column is INLINED into every row's UnsafeRow at the
-    interpreted-HOF boundary (the bloom kernels are CodegenFallback
-    lambdas, so the stage materializes rows; 750k docs × 16 MB of
-    copies = the whole wall). A scalar subquery avoids the join but is
-    illegal inside higher-order functions
+    The bloom kernels attach their bitmap this way at every size up to
+    the 2^28 cap. A broadcast one-row-array join for bitmaps past 2^17
+    words measured 570 s at the 150× probe where the literal
+    extrapolates to ~90 s: an attribute-bound array column is INLINED
+    into every row's UnsafeRow at the interpreted-HOF boundary (the bloom
+    kernels are CodegenFallback lambdas, so the stage materializes rows;
+    750k docs × 16 MB of copies = the whole wall). A scalar subquery
+    avoids the join but is illegal inside higher-order functions
     (UNSUPPORTED_SUBQUERY_EXPRESSION_CATEGORY.HIGHER_ORDER_FUNCTION),
     and materializing it to a column re-creates the same per-row copy.
     A folded Literal is the ONLY attachment whose value is one shared
     instance per task — its cost is fold + closure-serialization of the
     boxed array, ~1 s at 2^17 words and ~7-15 s at 2^21, linear in
-    words, independent of rows (measured matrix in BASELINE r10).
-
-    Kept as a seam (and for the r10 test that pins this decision): the
-    signature still returns a possibly-augmented ``df`` so a future
-    zero-copy attachment can slot in without touching the kernels."""
-    return df, bits_array_expr(words)
+    words, independent of rows (measured matrix in BASELINE r10)."""
+    return F.expr(
+        "cast(split('" + ",".join(map(str, words)) + "', ',') as array<bigint>)"
+    )
 
 
 def _collect_bitmap_words(pos: DataFrame, m_bits: int) -> list[int]:
@@ -1483,9 +1476,9 @@ def bloom_flag(
         .select("doc_id", grams.alias("__g__"))
         .select("doc_id", digests.alias("__dg__"))
     )
-    # bitmap attach (plan literal — see _bloom_bits_source) sits right
+    # bitmap attach (plan literal — see bits_array_expr) sits right
     # before the word fetch, the bits column's only consumer
-    staged, bits = _bloom_bits_source(staged, bitmap_words)
+    bits = bits_array_expr(bitmap_words)
     word_of = F.transform(
         F.col("__dg__"),
         lambda d: F.struct(
@@ -1515,9 +1508,12 @@ def bloom_flag(
     )
 
 
-def cross_group_overlap(
-    df: DataFrame, group_col: str, key_col: str, max_inrow_groups: int = 1024
-) -> DataFrame:
+# cross_group_overlap's in-row ceiling: up to 1024 distinct groups the
+# per-key group set is expanded in-row, past it the self-join runs.
+_MAX_INROW_GROUPS = 1024
+
+
+def cross_group_overlap(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     """Pairwise overlap matrix between groups: for every unordered group
     pair ``(a < b)``, how many distinct ``key_col`` values occur in both.
 
@@ -1531,7 +1527,7 @@ def cross_group_overlap(
     key shared by 10⁴ groups would materialize a 5·10⁷-struct array in
     ONE row. One cheap column-pruned ``count_distinct(group)`` routes:
 
-    - ``≤ max_inrow_groups`` (sources, languages, shards — the common
+    - ``≤ _MAX_INROW_GROUPS`` (sources, languages, shards — the common
       case): ONE aggregate shuffle on the key (``collect_set`` dedupes
       map-side, no separate distinct pass), then in-row expansion of the
       sorted group set into ordered pairs and a matrix-sized aggregate —
@@ -1546,7 +1542,7 @@ def cross_group_overlap(
     registered oracle IS the self-join formulation).
     """
     n_groups = df.select(F.col(group_col)).agg(F.count_distinct(group_col)).collect()[0][0]
-    if n_groups > max_inrow_groups:
+    if n_groups > _MAX_INROW_GROUPS:
         h = df.select(
             F.col(key_col).alias("__k__"), F.col(group_col).alias("__g__")
         ).distinct()
@@ -2892,13 +2888,8 @@ def _fan_out_narrow(df: DataFrame) -> DataFrame:
     real parallelism; above it a genuine corpus is multi-file/
     multi-row-group and the scan's own parallelism is trusted (at
     100 TB this never repartitions)."""
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        target = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # noqa: BLE001 — streaming / detached frame
-        return df
-    if est <= PERSIST_INPUT_CAP:
-        return df.repartition(target)
+    if _persist.under_persist_cap(df):
+        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     return df
 
 
@@ -2998,9 +2989,9 @@ def bloom_span_flag(
         .select("doc_id", digests.alias("__dg__"))
     )
     # bitmap attach: always the constant-folded plan literal (see
-    # _bloom_bits_source — attribute-bound arrays inline per row at the
+    # bits_array_expr — attribute-bound arrays inline per row at the
     # interpreted-HOF boundary)
-    staged, bits = _bloom_bits_source(staged, bitmap_words)
+    bits = bits_array_expr(bitmap_words)
     word_of = F.transform(
         F.col("__dg__"),
         lambda d: F.struct(
@@ -3130,8 +3121,8 @@ def bloom_span_remove(
         .select("doc_id", "__t__", grams.alias("__g__"))
         .select("doc_id", "__t__", digests.alias("__dg__"))
     )
-    # bitmap attach (plan literal — see _bloom_bits_source)
-    staged, bits = _bloom_bits_source(staged, bitmap_words)
+    # bitmap attach (plan literal — see bits_array_expr)
+    bits = bits_array_expr(bitmap_words)
     word_of = F.transform(
         F.col("__dg__"),
         lambda d: F.struct(
@@ -3275,15 +3266,11 @@ def duplicate_span_rows(
     # probe: see BASELINE.md r8). Above the cap (corpus scale, where the
     # verdict can be corpus-proportional) keep the shuffled semi join,
     # whose stragglers AQE's skew-join can split.
-    try:
-        src_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — estimate unavailable → corpus-scale path
-        src_bytes = PERSIST_INPUT_CAP + 1
     cross_side = cross
-    if src_bytes <= PERSIST_INPUT_CAP:
+    if _persist.under_persist_cap(df):
         cross = _persist_tracked(cross)
         n_cross = cross.count()
-        cross_side = F.broadcast(cross) if n_cross <= (32 << 20) // 64 else cross
+        cross_side = F.broadcast(cross) if n_cross <= _persist.BROADCAST_BUDGET // 64 else cross
     hits = anchors.join(cross_side, "gram", "left_semi").select("doc_id", "pos")
     w = Window.partitionBy("doc_id").orderBy("pos")
     return (
@@ -3841,9 +3828,9 @@ def hamming_topk(
     )
     # size-routed broadcast (ADVICE r7): `queries` is caller-supplied, so
     # the probe-block frame is only hinted when Catalyst's FREE input
-    # estimate of the probe side stays in the ~32 MB budget (the
-    # _mask_broadcast_cap / t12-router discipline); a bulk probe workload
-    # falls back to a plain shuffled join instead of blowing the driver.
+    # estimate of the probe side stays in the broadcast budget; a bulk
+    # probe workload falls back to a plain shuffled join instead of
+    # blowing the driver.
     # The payload actually broadcast is `pb` — `queries` AFTER the
     # block explosion (n_blocks rows per probe, each carrying the packed
     # sig + blk + val) — so the raw-probe estimate is scaled by the
@@ -3852,13 +3839,9 @@ def hamming_topk(
     # fan-out factor while the guard passed). The embedding column
     # dominates the raw estimate and is NOT in pb, so fan-out × raw is a
     # safe overestimate of the broadcast bytes.
-    try:
-        probe_bytes = int(
-            queries._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        ) * n_blocks
-    except Exception:  # noqa: BLE001 — estimate unavailable → don't hint
-        probe_bytes = (32 << 20) + 1
-    pb_side = F.broadcast(pb) if probe_bytes <= (32 << 20) else pb
+    probe_bytes = _persist.estimated_bytes(queries)
+    fits = probe_bytes is not None and probe_bytes * n_blocks <= _persist.BROADCAST_BUDGET
+    pb_side = F.broadcast(pb) if fits else pb
     cand = (
         blocks_of(sigs)
         .join(pb_side, ["blk", "val"])

@@ -260,7 +260,6 @@ def c7_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: J1 join kernel driver-gated via q2/q3 joins and "
         "unit-proven by the reference's 13-case join spec; c8 proves the "
         "fill-defaults delta through the oracle harness locally.",
-    gate=False,
 )
 def c8_join_fill_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     left = MDF.from_spark(
@@ -308,7 +307,6 @@ def c8_join_fill_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("compat", "join", "last-wins"),
     doc="Gate duplicate: J1 join kernel driver-gated via q2/q3; c9 proves "
         "the last-wins collision delta through the oracle harness locally.",
-    gate=False,
 )
 def c9_join_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     left = MDF.from_spark(
@@ -353,7 +351,6 @@ def c9_join_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: U1 concat kernel driver-gated via q9; c10 proves "
         "the non-strict fill-defaults delta through the MDF.concat path by "
         "the same oracle harness locally.",
-    gate=False,
 )
 def c10_concat_fill_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.frame import concat
@@ -398,7 +395,6 @@ def c10_concat_fill_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: P5/O1/G6 kernels driver-gated via c2/c3/q6; c11 "
         "proves their composition on the MDF row-order discipline through "
         "the oracle harness locally.",
-    gate=False,
 )
 def c11_mdf_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     mdf = MDF.read_parquet(_tbl(sf_dir, "orders"), spark=spark)
@@ -435,7 +431,6 @@ def c11_mdf_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: U3 explode kernel driver-gated via q10; c12 proves "
         "the MDF.explode path (sibling replication + renumber) through the "
         "oracle harness locally.",
-    gate=False,
 )
 def c12_mdf_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = MDF.read_parquet(_tbl(sf_dir, "documents"), spark=spark)
@@ -472,7 +467,6 @@ def c12_mdf_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("compat", "fillna", "astype"),
     doc="Gate duplicate: P10/P12 kernels driver-gated via q4/q11; c13 "
         "proves the MDF method forms through the oracle harness locally.",
-    gate=False,
 )
 def c13_mdf_fillna_astype(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = MDF.from_spark(
@@ -517,7 +511,6 @@ def _fmt_tmp(sf_dir: str, tag: str) -> str:
     doc="S7 csv read+write proven against the parquet oracle (double text "
         "round-trip included); parquet S4/S5 is driver-gated in-window by "
         "every q*. Proven by the same oracle harness locally.",
-    gate=False,
 )
 def c14_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.sources import readers
@@ -539,7 +532,6 @@ def c14_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("compat", "sources", "json"),
     doc="S7 json-lines read+write proven against the parquet oracle. "
         "Proven by the same oracle harness locally.",
-    gate=False,
 )
 def c15_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.sources import readers
@@ -560,7 +552,6 @@ def c15_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("compat", "sources", "orc"),
     doc="S7 ORC read+write (typed date + double columns) proven against "
         "the parquet oracle. Proven by the same oracle harness locally.",
-    gate=False,
 )
 def c16_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.sources import readers
@@ -613,7 +604,6 @@ def c16_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="CDC MERGE pattern (update/delete/insert batch onto a snapshot); "
         "anti-join + union kernels are driver-gated via q8/q9; proven by "
         "the same oracle harness locally.",
-    gate=False,
 )
 def c17_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.operators.relational import upsert
@@ -693,7 +683,6 @@ def _c18_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         "join AND its groupBy exchange-free. Join/agg semantics are "
         "driver-gated via q3/q1; bucketing itself proven by the same "
         "oracle harness locally plus the zero-exchange plan test.",
-    gate=False,
 )
 def c18_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tli, tod = _c18_tables(spark, sf_dir)
@@ -741,7 +730,6 @@ def _c19_path(spark: SparkSession, sf_dir: str) -> str:
         "semantics are driver-gated across the q-suite; the pruned "
         "layout itself proven by the same oracle harness locally plus "
         "the PartitionFilters plan test.",
-    gate=False,
 )
 def c19_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _c19_path(spark, sf_dir)
@@ -788,7 +776,6 @@ def _c20_path(spark: SparkSession, sf_dir: str) -> str:
         "generations, older rows NULL-filling the added column. Scan/"
         "union semantics driver-gated across the c/q suites; the merged "
         "read proven by the same oracle harness locally.",
-    gate=False,
 )
 def c20_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _c20_path(spark, sf_dir)

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from medvedi_spark.catalog import load
+from medvedi_spark.catalog import load, model_state
 from medvedi_spark.operators import llm as ops
 from medvedi_spark.functions.hashing import (
     minhash_agg_cols,
@@ -537,7 +537,6 @@ def d7_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "editdistance", "llm"),
     doc="Gate duplicate: dedup family driver-gated by d1-d7; d8 adds the "
         "bounded-Levenshtein member, proven by the same oracle harness locally.",
-    gate=False,
 )
 def d8_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.llm.edit_distance_pairs (prefix-blocked, length-banded,
@@ -583,7 +582,6 @@ _D9_N = 4
     doc="Gate duplicate: dedup family driver-gated by d1-d7; d9 adds eval-set "
         "decontamination (n-gram overlap vs a held-out slice), proven by the "
         "same oracle harness locally.",
-    gate=False,
 )
 def d9_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.llm.decontaminate (broadcast eval grams, map-side
@@ -663,32 +661,19 @@ _D14_ORACLE = f"""
     """
 
 
-# Session cache of the fitted Bloom bitmap: d14 and st14 fit the
-# IDENTICAL model artifact (same eval split, same n/k, deterministic
-# auto-sizing), and production fits a decontamination filter ONCE per
-# frozen eval suite and serves it everywhere — the same cost model as
-# the _PQ_CB_CACHE codebooks. Keyed on the dataset's content
-# fingerprint (catalog.dataset_fingerprint: ns-mtimes, per-part-file
-# stats for directories — ADVICE r7) + params so a regenerated corpus
-# invalidates;
-# the cached value is the bitmap words list (bounded model state).
-_BLOOM_CACHE: dict[tuple, tuple[list[int], int]] = {}
-
-
 def _bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
+    """The fitted decontamination bitmap: d14 and st14 fit the IDENTICAL
+    model (same eval split, same n/k, deterministic auto-sizing), so it
+    is fitted once per eval-suite generation (catalog.model_state)."""
     import os
 
-    from medvedi_spark.catalog import dataset_fingerprint
-
-    p = os.path.join(sf_dir, "documents.parquet")
-    key = (dataset_fingerprint(p), _D9_N, _D14_K)
-    if key not in _BLOOM_CACHE:
+    def fit():
         docs = load(spark, sf_dir, "documents")
         eval_df = docs.filter(F.col("doc_id") % 50 == 0)
-        _BLOOM_CACHE[key] = ops.bloom_fit(
-            eval_df, "text", n=_D9_N, m_bits=None, k_hashes=_D14_K
-        )
-    return _BLOOM_CACHE[key]
+        return ops.bloom_fit(eval_df, "text", n=_D9_N, m_bits=None, k_hashes=_D14_K)
+
+    p = os.path.join(sf_dir, "documents.parquet")
+    return model_state("bloom", p, (_D9_N, _D14_K), fit)
 
 
 @register(
@@ -701,8 +686,7 @@ def _bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
         "zero-join map-side projection; no false negatives, deterministic "
         "FP tail replayed exactly by the oracle. The fitted bitmap is "
         "session-cached model state shared with st14 (fit once per "
-        "frozen eval suite — the _PQ_CB_CACHE cost model).",
-    gate=False,
+        "frozen eval suite, like the PQ codebooks).",
 )
 def d14_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.llm.bloom_fit/bloom_flag (bloom_build_bits
@@ -752,7 +736,6 @@ def d14_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "self-join) up to 1024 groups, fp-keyed self-join beyond; the "
         "oracle replays the self-join formulation, proving the two "
         "shapes equivalent.",
-    gate=False,
 )
 def d15_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.llm.cross_group_overlap (single-shuffle overlap
@@ -811,7 +794,6 @@ _S3_K = 8
     doc="Gate duplicate: similarity family driver-gated by s1/s2; s3 adds "
         "the nearest-centroid assignment kernel (k-means E-step), proven by "
         "the same oracle harness locally.",
-    gate=False,
 )
 def s3_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -877,7 +859,6 @@ _S4_CODE_COLS = ",\n           ".join(
     doc="Gate duplicate: similarity family driver-gated by s1/s2; s4 adds "
         "product-quantization encoding, proven by the same oracle harness "
         "locally.",
-    gate=False,
 )
 def s4_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -988,32 +969,26 @@ _PQ_SV = f"""tsv AS (
 
 _PQ_TRAIN_CTES = f"{_PQ_SV},\n    {_pq_train_ctes('tsv', _PQ_K, _PQ_ITER, 't')}"
 
-# Session cache of the trained raw-vector codebook: s5/s6/s7/s12 all use
-# the IDENTICAL model artifact (same corpus, same shape, deterministic
-# training), and production trains a codebook ONCE and serves it
-# everywhere — paying the 3 Lloyd rounds once per session instead of
-# once per registered query is the faithful cost model, not a bench
-# trick. Keyed on the resolved table file's (path, mtime, size) so a
-# regenerated corpus invalidates; the cached value is the plain Python
-# centroid list (model state, k × dim doubles), rebuilt into a local
-# DataFrame per call.
-_PQ_CB_CACHE: dict[tuple, list] = {}
-
-
 def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trained raw-vector codebook: s5/s6/s7/s12 use the IDENTICAL
+    model (same corpus, same shape, deterministic training), and
+    production trains a codebook ONCE and serves it everywhere — paying
+    the Lloyd rounds once per dataset generation (catalog.model_state)
+    is the faithful cost model, not a bench trick. The cached value is
+    the plain centroid list (k × dim doubles), rebuilt into a local
+    DataFrame per call."""
     import os
 
-    from medvedi_spark.catalog import dataset_fingerprint
-
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    key = (dataset_fingerprint(p), _PQ_SUBS, _PQ_K, _PQ_ITER)
-    if key not in _PQ_CB_CACHE:
+    def fit():
         emb = load(spark, sf_dir, "embeddings")
         cent = ops.pq_train(
             emb, "vec_id", "embedding", n_subspaces=_PQ_SUBS, k=_PQ_K, n_iter=_PQ_ITER
         )
-        _PQ_CB_CACHE[key] = [(int(r.cent_id), [float(x) for x in r.c_emb]) for r in cent.collect()]
-    return spark.createDataFrame(_PQ_CB_CACHE[key], "cent_id int, c_emb array<double>")
+        return [(int(r.cent_id), [float(x) for x in r.c_emb]) for r in cent.collect()]
+
+    p = os.path.join(sf_dir, "embeddings.parquet")
+    rows = model_state("pq_codebook", p, (_PQ_SUBS, _PQ_K, _PQ_ITER), fit)
+    return spark.createDataFrame(rows, "cent_id int, c_emb array<double>")
 
 
 @register(
@@ -1059,7 +1034,6 @@ def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ADC search over a TRAINED PQ codebook (deterministic per-subspace "
         "Lloyd, oracle-replayed iterations — the FAISS ProductQuantizer "
         "train+search pair). Recall@10 0.64 at sf0.01 vs 0.32 untrained.",
-    gate=False,
 )
 def s5_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -1307,20 +1281,13 @@ _S8_SV = f"""rsv AS (
     )"""
 
 
-# Same session cache as _trained_codebook, residual domain: s8's
-# codebook is deterministic model state per (table identity, coarse
-# shape, PQ shape) — train once per session, not once per bench run.
-_S8_CB_CACHE: dict[tuple, list] = {}
-
-
 def _trained_residual_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_trained_codebook` in the residual domain: s8's codebook
+    is deterministic model state per (coarse shape, PQ shape), trained
+    once per dataset generation."""
     import os
 
-    from medvedi_spark.catalog import dataset_fingerprint
-
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    key = (dataset_fingerprint(p), _S6_COARSE, _S8_SUBS, _S8_K, _PQ_ITER)
-    if key not in _S8_CB_CACHE:
+    def fit():
         emb = load(spark, sf_dir, "embeddings")
         coarse = emb.filter(F.col("vec_id") < _S6_COARSE).select(
             F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
@@ -1329,8 +1296,11 @@ def _trained_residual_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent = ops.pq_train(
             res, "vec_id", "residual", n_subspaces=_S8_SUBS, k=_S8_K, n_iter=_PQ_ITER
         )
-        _S8_CB_CACHE[key] = [(int(r.cent_id), [float(x) for x in r.c_emb]) for r in cent.collect()]
-    return spark.createDataFrame(_S8_CB_CACHE[key], "cent_id int, c_emb array<double>")
+        return [(int(r.cent_id), [float(x) for x in r.c_emb]) for r in cent.collect()]
+
+    p = os.path.join(sf_dir, "embeddings.parquet")
+    rows = model_state("residual_codebook", p, (_S6_COARSE, _S8_SUBS, _S8_K, _PQ_ITER), fit)
+    return spark.createDataFrame(rows, "cent_id int, c_emb array<double>")
 
 
 @register(
@@ -1458,7 +1428,6 @@ def s8_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         "zero-shuffle projection, INTEGER-exact distances both engines "
         "replay bit-for-bit; the 4x-smaller-scan production codec next "
         "to PQ (compose with IVF routing at scale exactly like s6).",
-    gate=False,
 )
 def s9_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.llm.sq8_topk (sq8_minmax model-state range +
@@ -1528,7 +1497,6 @@ _IVF_SQ8_ORACLE = f"""
         "generation = broadcast hash join on cell) is proven equal to "
         "the flat s9 scan at nprobe=n_cells by a unit test plus its own "
         "check_oracle row.",
-    gate=False,
 )
 def s10_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.llm.ivf_sq8_topk (_coarse_route shared routing +
@@ -1565,7 +1533,6 @@ def s10_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "centroids) → load → query, bit-identical to s10's inline path "
         "(same oracle); the loaded plan has no training stages and "
         "partition-prunes to the probed cells.",
-    gate=False,
 )
 def s11_ivf_sq8_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.ann_index (ivf_sq8_save/load/query: persisted
@@ -1606,7 +1573,6 @@ def s11_ivf_sq8_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "PQ codes + codebooks + meta) → load → query with serve-time LUT, "
         "bit-identical to s6's inline path (same oracle); loaded plan has "
         "no training stages and partition-prunes to the probed cells.",
-    gate=False,
 )
 def s12_ivfadc_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.ann_index (ivfadc_save/load/query: persisted dense
@@ -1664,7 +1630,6 @@ def s12_ivfadc_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "never read. Oracle is s7's SQL verbatim; proven by the local "
         "oracle harness + the lifecycle bit-equality unit test, and "
         "gates the r9 rotation (priority slot).",
-    gate=False,
 )
 def s15_ivfadc_index_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.ann_index.ivfadc_query_rerank (loaded shortlist via
@@ -1724,7 +1689,6 @@ _S16_BATCHES = 3
         "(the claim s15's per-run lifecycle pricing could not "
         "demonstrate). Oracle is s7's SQL with the probe predicate "
         "widened to the batch union and batch_id projected out.",
-    gate=False,
 )
 def s16_ivfadc_batched_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.ann_index.ivfadc_query_rerank — one serve call over
@@ -1825,7 +1789,6 @@ _D10_TAU = 0.3
         "in-window (nearest-centroid via s2's codebook assign, "
         "within-block exact-cosine verify via d5); proven by the same "
         "oracle harness locally.",
-    gate=False,
 )
 def d10_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -1890,7 +1853,6 @@ _D11_K = 20
     doc="Gate duplicate: the anchor-hash + shuffle-on-gram kernel is "
         "driver-gated via d1/t4 and the window merge via q13; proven by "
         "the same oracle harness locally.",
-    gate=False,
 )
 def d11_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -1939,7 +1901,6 @@ _D12_T = 0.8
     doc="Gate duplicate: the token-set join machinery is driver-gated via "
         "d2/d7; d12 adds the asymmetric containment (quotation) detector, "
         "proven by the same oracle harness locally.",
-    gate=False,
 )
 def d12_gram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -2117,7 +2078,6 @@ def d16_fuzzy_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "signed and band-joined against the loaded index, stored internal "
         "pairs reused in the component closure — hash-equal to the "
         "one-shot d16 on the union (same oracle).",
-    gate=False,
 )
 def d17_fuzzy_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.dedup_index (minhash_index_save/load +
@@ -2316,7 +2276,6 @@ _S14_FLIP = 5  # probe = corpus vector with the first 5 dims sign-flipped
         "Probes are sign-perturbed corpus vectors — the near-dup lookup "
         "workload; corpus never shuffles (probe blocks broadcast); the "
         "oracle brute-forces all pairs, proving the prefilter lossless.",
-    gate=False,
 )
 def s14_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.llm.hamming_topk (srp_signature + multi-index block
@@ -2414,7 +2373,6 @@ _P11_VAL_MOD = 10
         "(10% val) + d3's verified MinHash-LSH near-dup pairs; every "
         "pair crossing the split is a leak that inflates eval. Same "
         "band-keyed scale shape as d3 plus map-side split labels.",
-    gate=False,
 )
 def p11_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split assignment is medvedi_spark.functions.hashing.token_hash
@@ -2516,7 +2474,6 @@ def p11_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "match proves the fold, not just replays it. Registered after "
         "the r7 gate window froze: proven by the local oracle harness "
         "(CORRECTNESS_local_r7) + unit tests; gates next rotation.",
-    gate=False,
 )
 def d18_exact_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.llm.exact_substring_removal (duplicate_span_rows +

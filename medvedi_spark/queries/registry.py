@@ -28,17 +28,17 @@ __all__ = ["QUERIES", "Query", "register", "queries", "oracle_sql"]
 
 # The driver's correctness gate checks the FIRST ``GATE_WINDOW`` entries of
 # ``queries()``. Every operator family must keep a verified entry inside the
-# window, so ``queries()`` orders gate=True queries first. gate=False marks a
-# deliberate duplicate whose operator is already proven by an in-window query
-# (recorded in its ``doc``); such extras still run in bench and local
-# check_oracle, they just don't spend gate budget.
+# window, so ``queries()`` orders gated queries (``Query.gate``) first. The
+# rest are deliberate duplicates whose operator is already proven by an
+# in-window query; they still run in bench and local check_oracle, they just
+# don't spend gate budget.
 GATE_WINDOW = 50
 
 # The gate rotation: the queries the driver's window checks this round.
 # Each operator family keeps a member, and queries whose code changed
-# are re-proven through the driver. Membership OVERRIDES the
-# per-registration ``gate=`` flag, which records only the round-1 layout.
-# Earlier rotations live in git history and in CORRECTNESS_rNN.json.
+# are re-proven through the driver. Membership alone sets ``Query.gate``
+# (see _ensure_loaded). Earlier rotations live in git history and in
+# CORRECTNESS_rNN.json.
 GATE_ROTATION = frozenset(
     {
         # verdict-directed: r10-touched-but-ungated
@@ -89,13 +89,12 @@ def register(
     oracle: str | None = None,
     doc: str = "",
     tags: tuple[str, ...] = (),
-    gate: bool = True,
 ):
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         QUERIES[name] = Query(
-            name=name, builder=fn, oracle=oracle, doc=doc or fn.__doc__ or "", tags=tags, gate=gate
+            name=name, builder=fn, oracle=oracle, doc=doc or fn.__doc__ or "", tags=tags
         )
         return fn
 

@@ -85,7 +85,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("join", "topk"),
     doc="Gate duplicate: O5 limit/top-k proven in-window by q12 (sort+limit); J1 joins by q3.",
-    gate=False,
 )
 def q2_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -231,7 +230,6 @@ def q6_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("dedup", "groupby"),
     doc="Gate duplicate: G7/G10 duplicated-mask proven in-window by c5/c6.",
-    gate=False,
 )
 def q7_duplicated_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -462,7 +460,6 @@ def q13_window_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("rollup", "groupby"),
     doc="Gate duplicate: rollup kernel proven in-window by q31_grouping_multi.",
-    gate=False,
 )
 def q14_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -494,7 +491,6 @@ def q14_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("cube", "groupby", "distinct"),
     doc="Gate duplicate: cube kernel proven in-window by q31_grouping_multi.",
-    gate=False,
 )
 def q15_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -760,7 +756,6 @@ def q21_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("semijoin", "exists", "subquery"),
     doc="Gate duplicate: semi/anti join proven in-window by q8 (isin membership).",
-    gate=False,
 )
 def q22_exists_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").filter(
@@ -799,7 +794,6 @@ def q22_exists_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("outerjoin", "groupby"),
     doc="Gate duplicate: outer-join + two-level groupBy are in-window via q3/q31; "
     "budget freed for st1/st3 (round-2 gate failures that must be driver-proven).",
-    gate=False,
 )
 def q23_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
@@ -834,7 +828,6 @@ def q23_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("groupingsets", "groupby"),
     doc="Gate duplicate: rollup+cube+grouping-sets share the Expand kernel, proven in-window by the merged q31_grouping_multi.",
-    gate=False,
 )
 def q24_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -929,7 +922,6 @@ def q31_grouping_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "agg", "join"),
     doc="Gate duplicate: broadcast-dim join + decimal agg are in-window via q3/q1; "
     "budget freed for st1/st3 (round-2 gate failures that must be driver-proven).",
-    gate=False,
 )
 def q25_above_brand_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part")
@@ -1060,7 +1052,6 @@ def q27_sql_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("join", "star", "groupby"),
     doc="Gate duplicate: multi-join star agg proven in-window by q3/q27.",
-    gate=False,
 )
 def q28_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
@@ -1114,7 +1105,6 @@ def q28_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("join", "topk", "groupby"),
     doc="Gate duplicate: join+agg+topk proven in-window by q3/q12.",
-    gate=False,
 )
 def q29_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
@@ -1158,7 +1148,6 @@ def q29_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("join", "conditional-agg"),
     doc="Gate duplicate: join + conditional agg proven in-window by q1/q3.",
-    gate=False,
 )
 def q30_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -1203,7 +1192,6 @@ def q30_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: array/generator kernels proven in-window by q10 "
         "(explode) and q31 (grouping family); q32 adds the positional "
         "collect/sort/slice/posexplode surface, oracle-checked locally.",
-    gate=False,
 )
 def q32_array_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -1241,7 +1229,6 @@ def q32_array_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: timestamp kernels proven in-window by q17/q19/st*; "
         "q33 adds the truncation/extraction/arithmetic surface, "
         "oracle-checked locally.",
-    gate=False,
 )
 def q33_datetime_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
@@ -1287,7 +1274,6 @@ def q33_datetime_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: string kernels appear throughout the gated t*/d* "
         "queries; q34 adds the case/pad/replace/position/regex surface, "
         "oracle-checked locally.",
-    gate=False,
 )
 def q34_string_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part")
@@ -1338,7 +1324,6 @@ def q34_string_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "reshape"),
     doc="Gate duplicate: reshape family driver-gated by q18 (pivot); q36 adds "
         "the inverse melt/unpivot, proven by the same oracle harness locally.",
-    gate=False,
 )
 def q36_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 1000)
@@ -1386,7 +1371,6 @@ def q36_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: window family driver-gated by q13; q37 adds the "
         "ntile/percent_rank/cume_dist ranking surface, proven by the same "
         "oracle harness locally.",
-    gate=False,
 )
 def q37_ranking_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1438,7 +1422,6 @@ def q37_ranking_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "6h time bucket via st1; q38 composes them into the hypertable "
         "continuous-aggregate shape, proven by the same oracle harness "
         "locally.",
-    gate=False,
 )
 def q38_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -1544,7 +1527,6 @@ def q39_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(driver-gated via q3's join family); the salting transform "
         "itself proven by the same oracle harness locally plus the "
         "replication unit tests in test_scale_utils.py.",
-    gate=False,
 )
 def q40_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.operators.relational import salted_join

@@ -36,7 +36,6 @@ from medvedi_spark.streaming.ops import read_events_stream, run_to_memory
     """,
     tags=("streaming", "window"),
     doc="FAILED the round-2 driver gate (events ts load bug): kept in-window so the fix is driver-proven, not just local.",
-    gate=True,
 )
 def st1_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, sf_dir)
@@ -113,7 +112,6 @@ def st2_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "plain dropDuplicates keeps every key forever — correct for this "
         "oracle's GLOBAL-distinct contract, but unbounded state on an "
         "endless stream; st11 is the production watermarked variant.",
-    gate=False,
 )
 def st3_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, sf_dir)
@@ -357,7 +355,6 @@ def st7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: streaming family driver-gated by st2/st4-st7; st8 "
         "adds the stream-static broadcast enrichment join, proven by the "
         "same oracle harness locally.",
-    gate=False,
 )
 def st8_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.catalog import load
@@ -444,7 +441,6 @@ _ST9_COUNTS_SQL = ",\n             ".join(
         "how old the original); bounding it means sharding the hash space "
         "or a TTL policy chosen by the pipeline owner — st11 shows the "
         "watermarked form when recency-bounded dedup is acceptable.",
-    gate=False,
 )
 def st9_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read_documents_stream(spark, sf_dir)
@@ -630,7 +626,6 @@ def _stream_minhash_candidates(stream: DataFrame) -> DataFrame:
     doc="Gate duplicate: the MinHash-LSH kernel is driver-gated via d3 and "
         "streaming statefulness via st3/st6; st10 composes them into "
         "dedup-on-ingest, proven by the same oracle harness locally.",
-    gate=False,
 )
 def st10_stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.catalog import load
@@ -792,7 +787,6 @@ def _st13_oracle() -> str:
         "the s11 cell-partitioned parquet inverted lists via the "
         "exactly-once file sink, read back and oracle-matched against "
         "the batch assignment+code CTEs.",
-    gate=False,
 )
 def st13_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -880,7 +874,6 @@ def _st14_oracle() -> str:
         "flagged by a stateless per-row projection — zero joins, zero "
         "streaming state, append mode; oracle-matched against the batch "
         "d14 result (the availableNow drain ingests every row once).",
-    gate=False,
 )
 def st14_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.operators.llm import bloom_flag
@@ -929,7 +922,6 @@ def _st15_oracle() -> str:
         "every row once). Registered after the r7 gate window froze: "
         "proven by the local oracle harness (CORRECTNESS_local_r7) + "
         "the stream≡batch unit test; gates next rotation.",
-    gate=False,
 )
 def st15_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.queries.text_ops import gopher_rules_frame
@@ -975,27 +967,19 @@ def _st16_ingest_partitions() -> int:
     the env var after this module may already be imported."""
     return int(os.environ.get("SPARK_GRAFT_STREAM_INGEST_PARTITIONS", "0"))
 
-# session cache of the fitted span bitmap (model state; the d14/st14
-# _bloom_model discipline — fit once per frozen corpus generation)
-_SPAN_BLOOM_CACHE: dict[tuple, tuple[list[int], int]] = {}
-
 
 def _span_bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
-    import os
-
-    from medvedi_spark.catalog import load
+    """The fitted span bitmap (model state, like d14/st14's
+    ``_bloom_model``): fitted once per corpus generation."""
+    from medvedi_spark.catalog import load, model_state
     from medvedi_spark.operators import llm as ops
 
-    from medvedi_spark.catalog import dataset_fingerprint
+    def fit():
+        docs = load(spark, sf_dir, "documents")
+        return ops.span_bloom_fit(docs, "doc_id", "text", k_gram=_ST16_K, k_hashes=_ST16_H)
 
     p = os.path.join(sf_dir, "documents.parquet")
-    key = (dataset_fingerprint(p), _ST16_K, _ST16_H)
-    if key not in _SPAN_BLOOM_CACHE:
-        docs = load(spark, sf_dir, "documents")
-        _SPAN_BLOOM_CACHE[key] = ops.span_bloom_fit(
-            docs, "doc_id", "text", k_gram=_ST16_K, k_hashes=_ST16_H
-        )
-    return _SPAN_BLOOM_CACHE[key]
+    return model_state("span_bloom", p, (_ST16_K, _ST16_H), fit)
 
 
 @register(
@@ -1072,7 +1056,6 @@ def _span_bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]
         "64-bit word, ONE element_at fetch per position instead of k "
         "DRAM-random ones (oracle replays the blocked positions). "
         "Driver-proven r8; gates the r9 rotation (code changed).",
-    gate=False,
 )
 def st16_stream_span_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.operators import llm as ops
@@ -1310,7 +1293,6 @@ def st17_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "after the r9 gate window froze: proven by the local oracle "
         "harness (CORRECTNESS_local_r9) + the superset-of-d18 and "
         "st16-consistency unit tests; gates next rotation.",
-    gate=False,
 )
 def st18_stream_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.operators import llm as ops

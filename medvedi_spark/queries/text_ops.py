@@ -298,7 +298,6 @@ _WINNOW_P = 2_147_483_647  # same Mersenne prime as functions.hashing
     doc="Gate duplicate: t-family driver-gated by t1-t4; t5 is the rolling-hash "
         "(winnowing) variant of t4's token-set fingerprint, proven by the same "
         "oracle harness locally.",
-    gate=False,
 )
 def t5_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -372,7 +371,6 @@ _T6_TOP_W = 0.11  # top-word share threshold
     doc="Gate duplicate: text family driver-gated by t1-t4; t6 adds the "
         "Gopher-style repetition signals, proven by the same oracle harness "
         "locally.",
-    gate=False,
 )
 def t6_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -587,7 +585,6 @@ def m3_audio_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "pipeline", "dedup", "llm"),
     doc="Gate duplicate: composes t1+t2+d1 kernels, each individually "
         "driver-gated; proven end-to-end by the same oracle harness locally.",
-    gate=False,
 )
 def p1_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -657,7 +654,6 @@ _P2_BUCKET_SQL = "((" + sql_token_hash("CAST(doc_id AS VARCHAR)") + ") % 100)"
     doc="Gate duplicate: pipeline family locally proven alongside p1; "
         "deterministic hash-bucket stratified sampling (no RNG), proven by "
         "the same oracle harness locally.",
-    gate=False,
 )
 def p2_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.functions.hashing import token_hash
@@ -712,7 +708,6 @@ _P3_SHARDS = 4
     doc="Gate duplicate: pipeline family locally proven alongside p1/p2; "
         "next-fit sequence packing via applyInPandas, proven row-for-row "
         "against a recursive-CTE oracle locally.",
-    gate=False,
 )
 def p3_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.operators.llm import pack_sequences
@@ -772,7 +767,6 @@ _T7_TOPK = 3
     doc="Gate duplicate: text family driver-gated by t1-t4; t7 adds TF-IDF "
         "term weighting (rational IDF), proven by the same oracle harness "
         "locally.",
-    gate=False,
 )
 def t7_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -875,7 +869,6 @@ def t7_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: composes the d9+t6+p2+p3 kernels, each "
         "individually proven; this query proves the composition end-to-end "
         "by the same oracle harness locally.",
-    gate=False,
 )
 def p4_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stage order is a measured choice: the CHEAP per-doc filters
@@ -984,7 +977,6 @@ def p4_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: multimodal family driver-gated by m1-m3; m4 adds "
         "perceptual-hash (aHash) image dedup over the real BMP codec, proven "
         "by the same oracle harness locally.",
-    gate=False,
 )
 def m4_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.functions.multimodal import ahash_batches
@@ -1076,7 +1068,6 @@ def m4_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: the aHash kernel is locally proven via m4 and "
         "the block-LSH discipline driver-gated via d4; proven by the "
         "same oracle harness locally.",
-    gate=False,
 )
 def m7_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.functions.multimodal import ahash_batches
@@ -1183,7 +1174,6 @@ _T8_TOPK = 50
     doc="Gate duplicate: text family driver-gated by t1-t4; t8 adds "
         "lift-ranked collocation mining, proven by the same oracle harness "
         "locally.",
-    gate=False,
 )
 def t8_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -1268,7 +1258,6 @@ _T9_PHONE = r"\+1-555-0\d{3}"
     doc="Gate duplicate: the regex/string kernel family is driver-gated "
         "in-window via q34 (string surface) and t1-t4; proven by the same "
         "oracle harness locally.",
-    gate=False,
 )
 def t9_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -1338,7 +1327,6 @@ _T10_SQL_STOPS = ", ".join(f"'{w}'" for w in _ALL_STOPS)
     doc="Gate duplicate: array-lambda filtering is driver-gated in-window "
         "via t1/t2 and q32 (array surface); proven by the same oracle "
         "harness locally.",
-    gate=False,
 )
 def t10_boilerplate_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -1394,7 +1382,6 @@ _P5_SHARDS = 32
     doc="Gate duplicate: hash-bucket determinism is driver-gated in-window "
         "via d1/d3 (same md5 kernel); proven by the same oracle harness "
         "locally.",
-    gate=False,
 )
 def p5_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1441,7 +1428,6 @@ _P6_STRIDE = 24
     doc="Gate duplicate: sequence/slice/explode array kernels are "
         "driver-gated in-window via q10/q32; proven by the same oracle "
         "harness locally.",
-    gate=False,
 )
 def p6_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -1497,7 +1483,6 @@ def p6_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: the WAV codec batch loop is driver-gated "
         "in-window via m3 and the hash-dedup shuffle via d1; proven by "
         "the same oracle harness locally.",
-    gate=False,
 )
 def m5_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.functions.multimodal import audio_fingerprint_batches
@@ -1567,7 +1552,6 @@ def m5_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: the video codec batch loop is driver-gated "
         "in-window via m2; m6 adds the temporal (per-frame) analysis, "
         "proven by the same oracle harness locally.",
-    gate=False,
 )
 def m6_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.functions.multimodal import video_scene_cuts_batches
@@ -1620,7 +1604,6 @@ _P7_BUCKETS = 1_000_000
         "proven via p2 and the tiny-aggregate broadcast via q3; p7 "
         "derives the rates from the data (equal-token-share mixing), "
         "proven by the same oracle harness locally.",
-    gate=False,
 )
 def p7_domain_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.functions.hashing import token_hash
@@ -1831,7 +1814,6 @@ _P9_ORACLE = """WITH RECURSIVE wf AS (
         "driver-gated via c12/t7; p8 adds the BPE merge-learning loop "
         "over that model state, proven (all 3 iterations replayed by a "
         "recursive-CTE oracle) by the same oracle harness locally.",
-    gate=False,
 )
 def p8_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.operators.llm import bpe_learn
@@ -1850,7 +1832,6 @@ def p8_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gate duplicate: broadcast-vocabulary joins are driver-gated via "
         "q3/d9; p9 applies the p8 segmentation corpus-wide, proven by "
         "the same oracle harness locally.",
-    gate=False,
 )
 def p9_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.operators.llm import bpe_learn
@@ -1895,7 +1876,6 @@ def p9_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c15, filters via the q-suite; p10 composes them into the "
         "sharded training-export sink, proven by the same oracle "
         "harness locally plus the shard-size unit test.",
-    gate=False,
 )
 def p10_export_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.queries.compat_ops import _fmt_tmp
@@ -1992,7 +1972,6 @@ _T11_STOPS_SQL = ", ".join(f"'{w}'" for w in _T11_STOPS)
         "degree/frequency scoring; the window/join kernels are "
         "driver-gated across q13/q19/t-suite, the composition proven by "
         "the same oracle harness locally.",
-    gate=False,
 )
 def t11_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -2070,21 +2049,22 @@ def t11_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _T12_SCALE = 1_000_000
-# ~32 MB broadcast budget (the _mask_broadcast_cap convention) over a
-# (w1 string ~24 B, c1 long 8 B, ~32 B row overhead) context-count row.
-_T12_BC_CAP = (32 << 20) // 64
 
 
 def _vocab_routed(df: DataFrame, vocab_rows: int) -> DataFrame:
     """Size-routed broadcast for VOCABULARY-shaped tables (distinct-term
     aggregates): hint only when the known row count is under the shared
-    ~32 MB budget; above it — Heap's law puts the distinct-term table at
-    10⁷–10⁹ rows on 100 TB of web text — an unconditional hint OOMs the
-    driver, so return the frame unhinted and let the planner shuffle.
+    broadcast budget (``_persist.BROADCAST_BUDGET``); above it — Heap's
+    law puts the distinct-term table at 10⁷–10⁹ rows on 100 TB of web
+    text — an unconditional hint OOMs the driver, so return the frame
+    unhinted and let the planner shuffle.
     The t12 router (VERDICT r6 #2) extracted for every text op touching
     a vocabulary (VERDICT r7 #2: t7's document-frequency join, t8's
     unigram joins had reintroduced the hard hint)."""
-    return F.broadcast(df) if vocab_rows <= _T12_BC_CAP else df
+    from medvedi_spark.operators import _persist
+
+    # row footprint: w1 string ~24 B, c1 long 8 B, ~32 B row overhead
+    return F.broadcast(df) if vocab_rows <= _persist.BROADCAST_BUDGET // 64 else df
 
 
 def _bigram_structs_of(toks):
@@ -2226,7 +2206,6 @@ def t12_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Flesch-Kincaid readability grade: integer word/sentence/"
         "vowel-group-syllable counts plus a transcendental-free IEEE "
         "formula tree — bit-identical cross-engine, zero shuffles.",
-    gate=False,
 )
 def t13_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -2325,7 +2304,6 @@ T14_ORACLE = f"""
         "word-count/mean-word-length bounds, symbol and alphabetic "
         "ratios, required-stopword count — all gates exact-integer "
         "cross-multiplications, zero shuffles.",
-    gate=True,
 )
 def t14_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")

@@ -15,24 +15,23 @@ import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+from ..operators._persist import track_sink
 
 _SINK_IDS = itertools.count()
 
-# File-source streams need an explicit schema; inferring it is one batch
-# parquet-footer job per stream start. The footer is immutable for a
-# given (path, mtime, size), so cache the inference — 13 st queries ×
-# one job each is pure fixed overhead in a bench sweep (r6 directive #5).
-_SCHEMA_CACHE: dict[tuple[str, float, int], object] = {}
-
 
 def stream_source_schema(spark: SparkSession, path: str):
-    from ..catalog import dataset_fingerprint
+    """The schema of the parquet file-source stream at ``path``.
+    File-source streams need an explicit schema, and inferring it is one
+    batch parquet-footer job per stream start. The footer is immutable
+    per dataset generation, so the inference is cached model state
+    (catalog.model_state) — 13 st queries × one job each is pure fixed
+    overhead in a bench sweep (r6 directive #5)."""
+    from ..catalog import model_state
 
-    key = dataset_fingerprint(path)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[key]
+    return model_state("stream_schema", path, (), lambda: spark.read.parquet(path).schema)
 
 
 # Shuffle/state-store width for the availableNow drains. Stateful
@@ -45,7 +44,8 @@ def stream_source_schema(spark: SparkSession, path: str):
 # 8 → 2.9 s, 2 → 1.0 s (state machinery dominates small batches), but
 # st6's stateful counter degrades 1.15 → 2.04 s at 2 and the
 # stream-stream joins prefer ≥4. 4 is the measured suite optimum; a
-# production stream sizes this to throughput via the env override.
+# production stream sizes this to throughput via the env override,
+# the deployment setting for every drain below.
 _STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"))
 
 
@@ -67,40 +67,42 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(stream)
 
 
-def run_to_memory(
-    result: DataFrame, *, output_mode: str, state_partitions: int | None = None
-) -> DataFrame:
-    """Drain a streaming DataFrame into a memory sink, return its table.
+def _drain(result: DataFrame, writer: DataStreamWriter) -> None:
+    """Run ``writer`` (a sink configured on ``result.writeStream``) to
+    completion with an availableNow trigger.
 
     Stateful operators allocate one state store per shuffle partition at
     query START, and that count is frozen into the checkpoint. 32 stores
     for a single-file drain is pure constant overhead, so the drain runs
-    with ``state_partitions`` (default ``_STATE_PARTITIONS`` — see the
-    measured floor decomposition there); the batch session conf is
-    restored after. On a real cluster this knob is sized to stream
-    throughput (``SPARK_GRAFT_STREAM_STATE_PARTITIONS``), not to the
-    batch session's shuffle width — same code path.
-    """
-    if state_partitions is None:
-        state_partitions = _STATE_PARTITIONS
+    with ``_STATE_PARTITIONS`` (see the measured floor decomposition
+    there); the batch session conf is restored after. On a real cluster
+    this width is sized to stream throughput
+    (``SPARK_GRAFT_STREAM_STATE_PARTITIONS``), not to the batch session's
+    shuffle width — same code path."""
     spark = result.sparkSession
-    name = f"ms_sink_{next(_SINK_IDS)}_{os.getpid()}"
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        query = (
-            result.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
+        query = writer.trigger(availableNow=True).start()
         try:
             query.processAllAvailable()
         finally:
             query.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def run_to_memory(result: DataFrame, *, output_mode: str) -> DataFrame:
+    """Drain a streaming DataFrame into a memory sink, return its table.
+
+    The sink keeps every result row on the driver until its temp view is
+    dropped, so the view is tracked per session and
+    :func:`~medvedi_spark.operators._persist.release_persisted` drops it
+    with the operator persists."""
+    spark = result.sparkSession
+    name = f"ms_sink_{next(_SINK_IDS)}_{os.getpid()}"
+    track_sink(spark, name)
+    _drain(result, result.writeStream.outputMode(output_mode).format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -110,7 +112,6 @@ def run_to_parquet(
     *,
     partition_by: tuple[str, ...] = (),
     checkpoint: str | None = None,
-    state_partitions: int | None = None,
 ) -> None:
     """Drain a streaming DataFrame into append-mode partitioned parquet —
     the production sink shape for a 100 TB/day stream.
@@ -126,27 +127,14 @@ def run_to_parquet(
     The file sink REQUIRES a checkpoint (exactly-once via the sink's
     write-ahead manifest); one is derived next to ``path`` if not given.
     """
-    spark = result.sparkSession
-    if state_partitions is None:
-        state_partitions = _STATE_PARTITIONS
     if checkpoint is None:
         checkpoint = os.path.join(path, "_checkpoint")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        writer = (
-            result.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", path)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-        )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        query = writer.start()
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    writer = (
+        result.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+    )
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    _drain(result, writer)

@@ -187,9 +187,11 @@ def test_l2_normalize_embeddings(spark, sf_dir):
         assert abs(np.linalg.norm(r.embedding) - 1.0) < 1e-12
 
 
-@pytest.mark.parametrize("small_graph_edges", [5_000_000, 0])  # numpy-contract path / distributed path
-def test_connected_components_chain_and_islands(spark, small_graph_edges):
+@pytest.mark.parametrize("edge_cap", [5_000_000, 0])  # numpy-contract path / distributed path
+def test_connected_components_chain_and_islands(spark, edge_cap, monkeypatch):
     from medvedi_spark.operators.llm import connected_components
+
+    monkeypatch.setattr(llm, "_SMALL_GRAPH_EDGES", edge_cap)
 
     # chain 1-2-3-4 (one component), pair 10-11, isolated via self-loop 99-99
     edges = spark.createDataFrame(
@@ -197,7 +199,7 @@ def test_connected_components_chain_and_islands(spark, small_graph_edges):
     )
     out = {
         r.node: r.component
-        for r in connected_components(edges, small_graph_edges=small_graph_edges).collect()
+        for r in connected_components(edges).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 99: 99}
 

@@ -6,7 +6,7 @@ Covers (VERDICT r9 "Next round"):
    LITERAL at every size (the broadcast one-row-array arm shipped first
    was measured inlining the bitmap into every row at the
    interpreted-HOF boundary — 570 s vs ~90 s at the 150× probe — and
-   reverted; _bloom_bits_source pins the decision).
+   reverted).
 #4 ANN serve routing size-guard — bulk-probe path (shuffled cell-join)
    bit-equal to the collected/broadcast path; static partition pruning
    survives both modes.
@@ -147,45 +147,39 @@ def adc_index(spark, sf_dir, tmp_path_factory):
     return ai.ivfadc_load(spark, path)
 
 
-def test_ann_bulk_probe_equals_collected(spark, sf_dir, adc_index):
+def test_ann_bulk_probe_equals_collected(spark, sf_dir, adc_index, monkeypatch):
     """Past the ~32 MB routing budget the serve path keeps the routing
     payload distributed (shuffled cell-join); results must equal the
     collected/broadcast path bit-for-bit."""
     import medvedi_spark.operators.ann_index as ai
+    from medvedi_spark.operators import _persist
     from medvedi_spark.catalog import load
 
     queries = load(spark, sf_dir, "embeddings").filter("vec_id % 3 = 0").limit(25)
     small = ai.ivfadc_query_rerank(adc_index, queries, "vec_id", "embedding", k=5)
     small_rows = [r.asDict() for r in small.orderBy("query_id", "rank").collect()]
-    saved = ai._ROUTING_BROADCAST_BUDGET
-    try:
-        ai._ROUTING_BROADCAST_BUDGET = 0  # force the bulk path
-        bulk = ai.ivfadc_query_rerank(adc_index, queries, "vec_id", "embedding", k=5)
-        bulk_rows = [r.asDict() for r in bulk.orderBy("query_id", "rank").collect()]
-    finally:
-        ai._ROUTING_BROADCAST_BUDGET = saved
+    monkeypatch.setattr(_persist, "BROADCAST_BUDGET", 0)  # force the bulk path
+    bulk = ai.ivfadc_query_rerank(adc_index, queries, "vec_id", "embedding", k=5)
+    bulk_rows = [r.asDict() for r in bulk.orderBy("query_id", "rank").collect()]
     assert small_rows == bulk_rows and len(bulk_rows) > 0
 
 
-def test_ann_bulk_probe_partition_pruning_survives(spark, sf_dir, adc_index):
+def test_ann_bulk_probe_partition_pruning_survives(spark, sf_dir, adc_index, monkeypatch):
     """The probed cell set is bounded by the codebook, so the literal
     isin partition filter (static pruning) survives BULK mode: the codes
     FileScan must carry a PartitionFilters entry on cell."""
     import medvedi_spark.operators.ann_index as ai
+    from medvedi_spark.operators import _persist
     from medvedi_spark.catalog import load
 
     queries = load(spark, sf_dir, "embeddings").filter("vec_id % 3 = 0").limit(25)
-    saved = ai._ROUTING_BROADCAST_BUDGET
-    try:
-        ai._ROUTING_BROADCAST_BUDGET = 0
-        plan = (
-            ai.ivfadc_query(adc_index, queries, "vec_id", "embedding", k=5)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    finally:
-        ai._ROUTING_BROADCAST_BUDGET = saved
+    monkeypatch.setattr(_persist, "BROADCAST_BUDGET", 0)
+    plan = (
+        ai.ivfadc_query(adc_index, queries, "vec_id", "embedding", k=5)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l and "cell" in l]
     assert any("cell" in l and ("IN" in l or "in(" in l.lower()) for l in pf), pf
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from medvedi_spark.operators import _persist
 from medvedi_spark.operators import llm as ops
 from medvedi_spark.operators.ann_index import _parallel_writes
 
@@ -42,7 +43,7 @@ def test_fan_out_narrow_small_input_repartitions_preserving_rows(spark):
 def test_fan_out_narrow_identity_above_cap(spark, monkeypatch):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
     # force the size guard to classify the input as a genuine corpus
-    monkeypatch.setattr(ops, "PERSIST_INPUT_CAP", -1)
+    monkeypatch.setattr(_persist, "PERSIST_INPUT_CAP", -1)
     out = ops._fan_out_narrow(df)
     assert out is df  # no exchange inserted at scale
 

@@ -109,14 +109,15 @@ def _overlap_fixture(spark):
     return spark.createDataFrame(rows, "k string, g string")
 
 
-def test_cross_group_overlap_shapes_agree(spark):
-    """The self-join shape (forced via max_inrow_groups=1) emits the
+def test_cross_group_overlap_shapes_agree(spark, monkeypatch):
+    """The self-join shape (forced via an in-row cap of 1) emits the
     identical matrix to the in-row shape, and its plan IS a join while
     the in-row plan is join-free."""
     df = _overlap_fixture(spark)
     expect = {("a", "b"): 1, ("a", "c"): 1, ("b", "c"): 2}
     inrow = llm.cross_group_overlap(df, "g", "k")
-    joined = llm.cross_group_overlap(df, "g", "k", max_inrow_groups=1)
+    monkeypatch.setattr(llm, "_MAX_INROW_GROUPS", 1)
+    joined = llm.cross_group_overlap(df, "g", "k")
     assert {(r.group_a, r.group_b): r.shared_keys for r in inrow.collect()} == expect
     assert {(r.group_a, r.group_b): r.shared_keys for r in joined.collect()} == expect
     assert "Join" not in inrow._jdf.queryExecution().executedPlan().toString()
@@ -136,14 +137,16 @@ def test_cross_group_overlap_hot_key_routes_to_self_join(spark):
     assert out.count() == n * (n - 1) // 2
 
 
-def test_cross_group_overlap_router_threshold(spark):
+def test_cross_group_overlap_router_threshold(spark, monkeypatch):
     """Exactly at the bound the in-row shape is kept; one past it the
     self-join takes over (count_distinct(group) is the routing signal)."""
     df = spark.range(6).select(
         F.lit("k").alias("k"), F.col("id").cast("string").alias("g")
     )
-    at = llm.cross_group_overlap(df, "g", "k", max_inrow_groups=6)
-    over = llm.cross_group_overlap(df, "g", "k", max_inrow_groups=5)
+    monkeypatch.setattr(llm, "_MAX_INROW_GROUPS", 6)
+    at = llm.cross_group_overlap(df, "g", "k")
+    monkeypatch.setattr(llm, "_MAX_INROW_GROUPS", 5)
+    over = llm.cross_group_overlap(df, "g", "k")
     assert "Join" not in at._jdf.queryExecution().executedPlan().toString()
     assert "Join" in over._jdf.queryExecution().executedPlan().toString()
     assert at.count() == over.count() == 15

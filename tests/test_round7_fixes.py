@@ -96,39 +96,33 @@ def test_trained_residual_ivfadc_runs(spark, sf_dir):
 # ------------------------------------------------------------- t12 router
 
 
-def test_t12_router_shapes_agree(spark, sf_dir):
+def test_t12_router_shapes_agree(spark, sf_dir, monkeypatch):
+    from medvedi_spark.operators import _persist
     from medvedi_spark.queries import text_ops
 
     a = text_ops.t12_bigram_surprisal(spark, sf_dir).toPandas()
-    orig = text_ops._T12_BC_CAP
-    try:
-        text_ops._T12_BC_CAP = 0  # force the above-cap shuffle shape
-        b = text_ops.t12_bigram_surprisal(spark, sf_dir).toPandas()
-    finally:
-        text_ops._T12_BC_CAP = orig
+    monkeypatch.setattr(_persist, "BROADCAST_BUDGET", 0)  # force the above-cap shuffle shape
+    b = text_ops.t12_bigram_surprisal(spark, sf_dir).toPandas()
     a = a.sort_values("doc_id").reset_index(drop=True)
     b = b.sort_values("doc_id").reset_index(drop=True)
     assert a.equals(b)
 
 
-def test_t12_hint_present_under_cap_absent_above(spark, sf_dir):
+def test_t12_hint_present_under_cap_absent_above(spark, sf_dir, monkeypatch):
     """Above the cap the FORCED broadcast hint must be gone — the join
     strategy is then the planner's statistics-driven choice (which still
     auto-broadcasts at toy scale; at 100 TB the size estimate exceeds
     autoBroadcastJoinThreshold and it degrades to a shuffle join instead
     of OOMing the driver — the whole point of dropping the hint)."""
+    from medvedi_spark.operators import _persist
     from medvedi_spark.queries import text_ops
 
     def analyzed(df) -> str:
         return df._jdf.queryExecution().analyzed().toString()
 
     under = analyzed(text_ops.t12_bigram_surprisal(spark, sf_dir))
-    orig = text_ops._T12_BC_CAP
-    try:
-        text_ops._T12_BC_CAP = 0
-        over = analyzed(text_ops.t12_bigram_surprisal(spark, sf_dir))
-    finally:
-        text_ops._T12_BC_CAP = orig
+    monkeypatch.setattr(_persist, "BROADCAST_BUDGET", 0)
+    over = analyzed(text_ops.t12_bigram_surprisal(spark, sf_dir))
     assert "ResolvedHint" in under
     assert "ResolvedHint" not in over
 

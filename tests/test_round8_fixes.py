@@ -22,24 +22,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from medvedi_spark.catalog import dataset_fingerprint, load
-from medvedi_spark.operators import llm
+from medvedi_spark.operators import _persist, llm
 
 
 # ------------------------------------------------- t7/t8 vocabulary router
 
 
 @pytest.mark.parametrize("qname", ["t7_tfidf_topterms", "t8_collocations"])
-def test_t7_t8_router_shapes_agree(spark, sf_dir, qname):
-    from medvedi_spark.queries import text_ops
+def test_t7_t8_router_shapes_agree(spark, sf_dir, qname, monkeypatch):
     from medvedi_spark.queries.registry import QUERIES
 
     a = QUERIES[qname].builder(spark, sf_dir).toPandas()
-    orig = text_ops._T12_BC_CAP
-    try:
-        text_ops._T12_BC_CAP = 0  # force the above-cap shuffle shape
-        b = QUERIES[qname].builder(spark, sf_dir).toPandas()
-    finally:
-        text_ops._T12_BC_CAP = orig
+    monkeypatch.setattr(_persist, "BROADCAST_BUDGET", 0)  # force the above-cap shuffle shape
+    b = QUERIES[qname].builder(spark, sf_dir).toPandas()
     cols = list(a.columns)
     a = a.sort_values(cols).reset_index(drop=True)
     b = b.sort_values(cols).reset_index(drop=True)
@@ -47,24 +42,19 @@ def test_t7_t8_router_shapes_agree(spark, sf_dir, qname):
 
 
 @pytest.mark.parametrize("qname", ["t7_tfidf_topterms", "t8_collocations"])
-def test_t7_t8_hint_present_under_cap_absent_above(spark, sf_dir, qname):
+def test_t7_t8_hint_present_under_cap_absent_above(spark, sf_dir, qname, monkeypatch):
     """Above the cap the FORCED hint must be gone (the t12 rule): the
     planner's statistics-driven choice still auto-broadcasts at toy
     scale, but a 10⁹-row vocabulary at 100 TB degrades to a shuffle join
     instead of OOMing the driver."""
-    from medvedi_spark.queries import text_ops
     from medvedi_spark.queries.registry import QUERIES
 
     def analyzed(df) -> str:
         return df._jdf.queryExecution().analyzed().toString()
 
     under = analyzed(QUERIES[qname].builder(spark, sf_dir))
-    orig = text_ops._T12_BC_CAP
-    try:
-        text_ops._T12_BC_CAP = 0
-        over = analyzed(QUERIES[qname].builder(spark, sf_dir))
-    finally:
-        text_ops._T12_BC_CAP = orig
+    monkeypatch.setattr(_persist, "BROADCAST_BUDGET", 0)
+    over = analyzed(QUERIES[qname].builder(spark, sf_dir))
     assert "ResolvedHint" in under
     assert "ResolvedHint" not in over
 
@@ -72,17 +62,13 @@ def test_t7_t8_hint_present_under_cap_absent_above(spark, sf_dir, qname):
 # ------------------------------------------------- d11 join-back routing
 
 
-def test_d11_cross_routing_shapes_agree(spark, sf_dir):
+def test_d11_cross_routing_shapes_agree(spark, sf_dir, monkeypatch):
     """Broadcast-verdict (under cap) and shuffled-semi-join (corpus
     scale) shapes emit identical span rows."""
     docs = load(spark, sf_dir, "documents")
     a = llm.duplicate_spans(docs, "doc_id", "text", k=20).toPandas()
-    orig = llm.PERSIST_INPUT_CAP
-    try:
-        llm.PERSIST_INPUT_CAP = 0  # force the corpus-scale path
-        b = llm.duplicate_spans(docs, "doc_id", "text", k=20).toPandas()
-    finally:
-        llm.PERSIST_INPUT_CAP = orig
+    monkeypatch.setattr(_persist, "PERSIST_INPUT_CAP", 0)  # force the corpus-scale path
+    b = llm.duplicate_spans(docs, "doc_id", "text", k=20).toPandas()
     a = a.sort_values("doc_id").reset_index(drop=True)
     b = b.sort_values("doc_id").reset_index(drop=True)
     assert a.equals(b)
@@ -98,9 +84,25 @@ def test_d11_cross_broadcast_under_cap(spark, sf_dir):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    from medvedi_spark.operators._persist import release_persisted
+    _persist.release_persisted()
 
-    release_persisted()
+
+def test_d11_forced_corpus_scale_plan_persists_nothing(spark, sf_dir, monkeypatch):
+    """Patching the one input cap forces the real corpus-scale plan:
+    neither the anchor table nor the cross-doc verdict is persisted, so
+    the executed plan holds no in-memory scan."""
+    docs = load(spark, sf_dir, "documents")
+    _persist.release_persisted()  # no earlier cache may stand in for a subtree
+    monkeypatch.setattr(_persist, "PERSIST_INPUT_CAP", 0)
+    try:
+        plan = (
+            llm.duplicate_span_rows(docs, "doc_id", "text", k=20)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+    finally:
+        released = _persist.release_persisted()
+    assert "InMemoryTableScan" not in plan
+    assert released == 0
 
 
 # ----------------------------------------------------- st17 index serving

@@ -230,17 +230,10 @@ def test_multi_consumer_subplans_are_cached(spark, sf_dir):
     # table Catalyst-estimates above the cap the operator CORRECTLY
     # skips the cache — only assert where the guard admits it
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators._persist import PERSIST_INPUT_CAP
+    from medvedi_spark.operators._persist import under_persist_cap
 
-    est = int(
-        load(spark, sf_dir, "documents")
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .stats()
-        .sizeInBytes()
-    )
-    if est > PERSIST_INPUT_CAP:
-        pytest.skip(f"documents estimate {est} exceeds the persist cap — guard disables the cache")
+    if not under_persist_cap(load(spark, sf_dir, "documents")):
+        pytest.skip("documents estimate exceeds the persist cap — guard disables the cache")
     # Warm the session codebook caches FIRST: when s6/s8 train cold,
     # pq_train's own size-guarded training persist is still registered
     # while the plan string renders, so s6's plan would show the

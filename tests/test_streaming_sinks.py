@@ -220,3 +220,25 @@ def test_st13_stream_index_ingest_layout(spark, sf_dir):
     batch = {r["vec_id"]: list(r["codes"]) for r in codes.collect()}
     for r in rows:
         assert r.code == batch[r.vec_id][r.i - 1], (r.vec_id, r.i)
+
+
+def test_release_persisted_drops_memory_sinks(spark, sf_dir):
+    """Each run_to_memory drain registers a memory-sink temp view;
+    release_persisted drops it, so a session that releases after every
+    query holds no sinks however many streams it drains."""
+    from medvedi_spark.operators._persist import release_persisted
+    from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
+
+    _ensure_loaded()
+
+    def tables():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    release_persisted()  # sinks drained by earlier tests
+    before = tables()
+    released = 0
+    for _ in range(2):
+        assert QUERIES["st1_tumbling_window"].builder(spark, sf_dir).count() > 0
+        released += release_persisted()
+    assert tables() == before
+    assert released >= 2  # one sink per drain, counted

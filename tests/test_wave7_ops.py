@@ -318,11 +318,12 @@ class TestExactSubstringRemovalProperty:
 
 class TestBloomModelCache:
     def test_d14_and_st14_share_one_fit(self, spark, sf_dir):
+        from medvedi_spark import catalog
         from medvedi_spark.queries import llm_ops
 
-        llm_ops._BLOOM_CACHE.clear()
+        catalog._MODEL_STATE.clear()
         a = llm_ops._bloom_model(spark, sf_dir)
-        assert len(llm_ops._BLOOM_CACHE) == 1
+        assert len(catalog._MODEL_STATE) == 1
         b = llm_ops._bloom_model(spark, sf_dir)
         assert a is b  # second consumer reuses the fitted artifact
         words, m_bits = a
@@ -368,9 +369,10 @@ class TestStreamSpanFlag:
                 )
 
     def test_bloom_cache_reused(self, spark, sf_dir):
+        from medvedi_spark import catalog
         from medvedi_spark.queries import stream_ops
 
-        stream_ops._SPAN_BLOOM_CACHE.clear()
+        catalog._MODEL_STATE.clear()
         a = stream_ops._span_bloom_model(spark, sf_dir)
         b = stream_ops._span_bloom_model(spark, sf_dir)
-        assert a is b and len(stream_ops._SPAN_BLOOM_CACHE) == 1
+        assert a is b and len(catalog._MODEL_STATE) == 1
