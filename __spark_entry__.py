@@ -7,6 +7,7 @@ and (where SQL-expressible) a DuckDB oracle string.
 
 from __future__ import annotations
 
+import atexit
 import os
 import sys
 from collections.abc import Callable
@@ -25,6 +26,22 @@ os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 from medvedi_spark.queries import registry as _registry  # noqa: E402
 
 _SHIPPED: set[int] = set()
+#: the package zips this process wrote, removed at interpreter exit
+_ZIPS: set[str] = set()
+
+
+def _remove_zips() -> None:
+    """Delete this process's package zips; a forked child keeps them."""
+    for path in _ZIPS:
+        if path.endswith(f"_{os.getpid()}.zip"):
+            try:
+                os.remove(path)
+            except FileNotFoundError:
+                pass
+    _ZIPS.clear()
+
+
+atexit.register(_remove_zips)
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -40,11 +57,10 @@ def _ship_package(spark: SparkSession) -> None:
         import tempfile
         import zipfile
 
-        # Name the zip by a content hash of the package sources so (a) an
-        # edited package never ships stale bytes from a previous run and
-        # (b) the path can't collide with another user's pre-existing file
-        # (same hash ⇒ same content). Build into a mkstemp then atomically
-        # rename, so concurrent builders never observe a half-written zip.
+        # Name the zip by a content hash of the package sources, so an
+        # edited package never ships stale bytes, and by this process's
+        # pid, so no other process writes or removes it. Every session of
+        # the process ships the same file; _remove_zips deletes it at exit.
         pkg = os.path.join(_REPO, "medvedi_spark")
         sources = []
         for root, _dirs, files in os.walk(pkg):
@@ -58,15 +74,14 @@ def _ship_package(spark: SparkSession) -> None:
             with open(full, "rb") as fh:
                 digest.update(fh.read())
         zpath = os.path.join(
-            tempfile.gettempdir(), f"medvedi_spark_pkg_{digest.hexdigest()[:16]}.zip"
+            tempfile.gettempdir(),
+            f"medvedi_spark_pkg_{digest.hexdigest()[:16]}_{os.getpid()}.zip",
         )
-        if not os.path.exists(zpath):
-            fd, tmp = tempfile.mkstemp(suffix=".zip", dir=tempfile.gettempdir())
-            os.close(fd)
-            with zipfile.ZipFile(tmp, "w") as zf:
+        if zpath not in _ZIPS:
+            with zipfile.ZipFile(zpath, "w") as zf:
                 for full in sources:
                     zf.write(full, os.path.relpath(full, _REPO))
-            os.replace(tmp, zpath)
+            _ZIPS.add(zpath)
         spark.sparkContext.addPyFile(zpath)
     except Exception:  # noqa: BLE001 — best effort; PYTHONPATH usually suffices
         pass

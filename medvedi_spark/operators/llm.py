@@ -596,10 +596,10 @@ def gram_containment_pairs(
     # stages (r10 job trace). Size-guarded: a real multi-row-group
     # corpus never repartitions. A/B in D12_AB_r10.json.
     toks = _fan_out_narrow(df).select(
-        F.col(id_col).alias("doc_id"), F.filter(F.split(text_col, " "), lambda t: t != "").alias("l")
+        F.col(id_col).alias("doc_id"), F.expr(word_tokens(text_col)).alias("l")
     )
     grams = (
-        toks.select("doc_id", F.explode(word_ngrams_of(F.col("l"), n)).alias("g"))
+        toks.select("doc_id", F.explode(F.expr(word_ngrams_of("l", n))).alias("g"))
         .select("doc_id", token_hash(F.col("g")).alias("h"))
         .distinct()
     )
@@ -1099,29 +1099,41 @@ def ivf_ann(
     )
 
 
+def word_tokens(text_col: str) -> str:
+    """SQL text of the whitespace-split token array of ``text_col``, empty
+    tokens dropped. Materialize it in a select() BEFORE using it inside
+    any transform/filter lambda: Spark does not common-subexpression-
+    eliminate outer expressions captured inside a lambda (see
+    :func:`word_ngrams_of`). Catalyst's CollapseProject can still
+    re-inline it through an alias, so per-element work should use
+    capture-free builders (``text_ops._bigrams_of``)."""
+    return f"filter(split({_sql_ident(text_col)}, ' '), t -> t != '')"
+
+
 def word_ngrams(text_col: str, n: int) -> Column:
     """In-row array of word ``n``-grams (space-joined): whitespace-split,
     empty tokens dropped; documents shorter than ``n`` tokens yield an
     empty array. All inside whole-stage codegen — the gram arrays are
     built per row, so nothing explodes until the caller decides to."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    return word_ngrams_of(toks, n)
+    return F.expr(word_ngrams_of(word_tokens(text_col), n))
 
 
-def word_ngrams_of(toks: Column, n: int) -> Column:
-    """``word_ngrams`` over an existing token-array expression.
+def word_ngrams_of(toks: str, n: int) -> str:
+    """SQL text of ``word_ngrams`` over an existing token-array
+    expression ``toks`` (a SQL fragment; plain column names are quoted).
 
     PERF NOTE: pass a plain column REFERENCE (materialize the token
     array in a prior select), not a computed expression — Spark does not
     common-subexpression-eliminate outer expressions captured inside a
     lambda, so a computed ``toks`` here is re-evaluated once per GRAM
     (measured 2.7× on d9's corpus side)."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
+    toks = _sql_ident(toks)
     # sequence(1, k) DESCENDS when k < 1 — guard short docs explicitly.
-    return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
+    return (
+        f"CASE WHEN size({toks}) >= {n} "
+        f"THEN transform(sequence(1, size({toks}) - {n - 1}), i -> concat_ws(' ', slice({toks}, i, {n}))) "
+        f"ELSE cast(array() as array<string>) END"
+    )
 
 
 def decontaminate(
@@ -1144,14 +1156,14 @@ def decontaminate(
     and the only shuffle is the final per-doc aggregate, which carries
     matched docs only — a vanishing fraction of the corpus.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = F.expr(word_tokens(text_col))
     eg = (
         eval_df.select(F.col(id_col).alias("eval_id"), toks.alias("__toks__"))
-        .select("eval_id", F.explode(word_ngrams_of(F.col("__toks__"), n)).alias("g"))
+        .select("eval_id", F.explode(F.expr(word_ngrams_of("__toks__", n))).alias("g"))
         .distinct()
     )
     cg = corpus.select(F.col(id_col).alias("doc_id"), toks.alias("__toks__")).select(
-        "doc_id", F.explode(F.array_distinct(word_ngrams_of(F.col("__toks__"), n))).alias("g")
+        "doc_id", F.explode(F.array_distinct(F.expr(word_ngrams_of("__toks__", n)))).alias("g")
     )
     return (
         cg.join(F.broadcast(eg), "g")
@@ -1190,9 +1202,10 @@ def decontaminate(
 # --------------------------------------------------------------------------
 
 
-def _bloom_block_word(digest: Column, m_bits: int) -> Column:
-    """0-based word index of a key's block: hex chars 1-15 (60 bits) of
-    the md5 digest, mod ``m_bits / 64``.
+def _bloom_block_word(digest: str, m_bits: int) -> str:
+    """SQL text of the 0-based word index of a key's block: hex chars
+    1-15 (60 bits) of the md5 digest (the SQL fragment ``digest``), mod
+    ``m_bits / 64``.
 
     Mirrors the build-side guard (ADVICE r9): a membership probe whose
     ``m_bits`` is not a positive multiple of 64 would silently floor the
@@ -1203,16 +1216,16 @@ def _bloom_block_word(digest: Column, m_bits: int) -> Column:
         raise ValueError(
             f"blocked bloom m_bits must be a positive multiple of 64, got {m_bits}"
         )
-    return F.conv(F.substring(digest, 1, 15), 16, 10).cast("long") % (m_bits // 64)
+    return f"(cast(conv(substring({digest}, 1, 15), 16, 10) as bigint) % {m_bits // 64})"
 
 
-def _bloom_block_bit(digest: Column, i: int) -> Column:
-    """Bit-in-word ``i`` of a key: 5 hex chars (20 bits) at offset
+def _bloom_block_bit(digest: str, i: int) -> str:
+    """SQL text of bit-in-word ``i`` of a key: 5 hex chars (20 bits) at offset
     ``16 + 5*i`` — disjoint from the word slice and from every other
     bit slice. Supports k_hashes ≤ 3 (slice 2 ends at hex char 30)."""
     if i > 2:
         raise ValueError("blocked bloom bit slices support k_hashes <= 3")
-    return F.conv(F.substring(digest, 16 + 5 * i, 5), 16, 10).cast("long") % 64
+    return f"(cast(conv(substring({digest}, {16 + 5 * i}, 5), 16, 10) as bigint) % 64)"
 
 
 #: auto-size clamp for :func:`bloom_auto_m_bits` — floor keeps tiny eval
@@ -1294,16 +1307,15 @@ def bloom_build_bits(
     """
     if m_bits % 64:
         raise ValueError(f"m_bits must be a multiple of 64, got {m_bits}")
-    digest = F.md5(F.col(col))
+    digest = f"md5({_sql_ident(col)})"
     w = _bloom_block_word(digest, m_bits)
-    pos_cols = [(w * 64 + _bloom_block_bit(digest, i)) for i in range(k_hashes)]
-    pos = df.select(F.explode(F.array(*pos_cols)).alias("p"))
-    return _collect_bitmap_words(pos, m_bits)
+    pos = ", ".join(f"{w} * 64 + {_bloom_block_bit(digest, i)}" for i in range(k_hashes))
+    return _collect_bitmap_words(df.select(F.explode(F.expr(f"array({pos})")).alias("p")), m_bits)
 
 
-def bits_array_expr(words: list[int]) -> Column:
-    """The bitmap-words array as a CONSTANT-FOLDED column — built as ONE
-    string literal split+cast JVM-side, never ``F.lit(list)``.
+def bits_array_sql(words: list[int]) -> str:
+    """SQL text of the bitmap-words array as a CONSTANT-FOLDED value —
+    ONE string literal split+cast JVM-side, never ``F.lit(list)``.
 
     ``F.lit`` on a Python list marshals one py4j call per element and
     plants an ``array()`` node per word in every plan that uses it: at
@@ -1327,9 +1339,7 @@ def bits_array_expr(words: list[int]) -> Column:
     instance per task — its cost is fold + closure-serialization of the
     boxed array, ~1 s at 2^17 words and ~7-15 s at 2^21, linear in
     words, independent of rows (measured matrix in BASELINE r10)."""
-    return F.expr(
-        "cast(split('" + ",".join(map(str, words)) + "', ',') as array<bigint>)"
-    )
+    return "cast(split('" + ",".join(map(str, words)) + "', ',') as array<bigint>)"
 
 
 def _collect_bitmap_words(pos: DataFrame, m_bits: int) -> list[int]:
@@ -1357,33 +1367,49 @@ def _collect_bitmap_words(pos: DataFrame, m_bits: int) -> list[int]:
     return words
 
 
-def bloom_member_word(digest: Column, word: Column, k_hashes: int) -> Column:
-    """Blocked membership test given the key's md5 HEX DIGEST and its
-    ALREADY-FETCHED block word (``element_at(bits, word_index + 1)``,
-    done exactly once by the caller — typically staged through a
-    materialized ``struct(digest, word)`` array so interpreted HOF
-    lambdas can't re-fetch it): all ``k_hashes`` bit tests are cheap
-    substring/conv/bit arithmetic against the one local word — ZERO
-    additional bitmap fetches, zero additional hashing."""
-    cond = None
-    for i in range(k_hashes):
-        c = F.bit_get(word, _bloom_block_bit(digest, i).cast("int")) == 1
-        cond = c if cond is None else cond & c
-    return cond
+def bloom_member_word(digest: str, word: str, k_hashes: int) -> str:
+    """SQL text of the blocked membership test given the key's md5 HEX
+    DIGEST and its ALREADY-FETCHED block word (``element_at(bits,
+    word_index + 1)``, done exactly once by the caller — typically
+    staged through a materialized ``struct(digest, word)`` array so
+    interpreted HOF lambdas can't re-fetch it): all ``k_hashes`` bit
+    tests are cheap substring/conv/bit arithmetic against the one local
+    word — ZERO additional bitmap fetches, zero additional hashing. Both
+    arguments are SQL fragments."""
+    return " AND ".join(
+        f"(bit_get({word}, cast({_bloom_block_bit(digest, i)} as int)) = 1)"
+        for i in range(k_hashes)
+    )
 
 
-def bloom_member(value: Column, bits: Column, m_bits: int, k_hashes: int) -> Column:
-    """Convenience one-shot blocked membership test against a Bloom
-    bitmap column/literal: md5 once, fetch the block word, test the
+def _bloom_fetch_word(digest: str, bitmap_words: list[int], m_bits: int) -> str:
+    """SQL text of the one bitmap fetch of a key: its block word in the
+    bitmap literal (see :func:`bits_array_sql`)."""
+    index = _bloom_block_word(digest, m_bits)
+    return f"element_at({bits_array_sql(bitmap_words)}, cast({index} as int) + 1)"
+
+
+def _bloom_word_stage(bitmap_words: list[int], m_bits: int) -> str:
+    """SQL text of the word-fetch stage of the bloom kernels over the
+    staged digest array ``__dg__``: ``struct(digest, block word)`` per
+    element, ONE bitmap fetch each. The bitmap is attached as the
+    constant-folded plan literal (see :func:`bits_array_sql` —
+    attribute-bound arrays inline per row at the interpreted-HOF
+    boundary)."""
+    return f"transform(__dg__, d -> named_struct('d', d, 'w', {_bloom_fetch_word('d', bitmap_words, m_bits)}))"
+
+
+def bloom_member(value: str, bitmap_words: list[int], m_bits: int, k_hashes: int) -> Column:
+    """Convenience one-shot blocked membership test of column ``value``
+    against a Bloom bitmap: md5 once, fetch the block word, test the
     ``k_hashes`` bits — no join, no shuffle. For HOT paths (per-gram /
     per-char loops inside interpreted HOF lambdas, which re-evaluate
     every subexpression per reference) do NOT use this: stage the digest
     and the fetched word through materialized arrays and call
-    :func:`bloom_member_word` (the bloom_flag / bloom_span_flag shape).
-    ``bits`` should be an array LITERAL when the filter is model state."""
-    digest = F.md5(value)
-    word = F.element_at(bits, _bloom_block_word(digest, m_bits).cast("int") + 1)
-    return bloom_member_word(digest, word, k_hashes)
+    :func:`bloom_member_word` (the bloom_flag / bloom_span_flag shape)."""
+    digest = f"md5(`{value}`)"
+    word = _bloom_fetch_word(digest, bitmap_words, m_bits)
+    return F.expr(bloom_member_word(digest, word, k_hashes))
 
 
 def bloom_decontaminate(
@@ -1430,10 +1456,8 @@ def bloom_fit(
     and the bitmap ships as a literal to any consumer, including a
     streaming plan (st14)."""
     grams = (
-        eval_df.select(
-            F.filter(F.split(F.col(text_col), " "), lambda t: t != "").alias("__toks__")
-        )
-        .select(F.explode(F.array_distinct(word_ngrams_of(F.col("__toks__"), n))).alias("g"))
+        eval_df.select(F.expr(word_tokens(text_col)).alias("__toks__"))
+        .select(F.explode(F.array_distinct(F.expr(word_ngrams_of("__toks__", n)))).alias("g"))
         .distinct()
     )
     if m_bits is None:
@@ -1468,42 +1492,20 @@ def bloom_flag(
     ``element_at`` per gram — and the membership test against the
     staged struct is pure local bit arithmetic
     (:func:`bloom_member_word`)."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    grams = F.array_distinct(word_ngrams_of(F.col("__toks__"), n))
-    digests = F.transform(F.col("__g__"), lambda g: F.md5(g))
-    staged = (
-        corpus.select(F.col(id_col).alias("doc_id"), toks.alias("__toks__"))
-        .select("doc_id", grams.alias("__g__"))
-        .select("doc_id", digests.alias("__dg__"))
-    )
-    # bitmap attach (plan literal — see bits_array_expr) sits right
-    # before the word fetch, the bits column's only consumer
-    bits = bits_array_expr(bitmap_words)
-    word_of = F.transform(
-        F.col("__dg__"),
-        lambda d: F.struct(
-            d.alias("d"),
-            F.element_at(bits, _bloom_block_word(d, m_bits).cast("int") + 1).alias("w"),
-        ),
-    )
-    hits = F.size(
-        F.filter(
-            F.col("__dw__"),
-            lambda x: bloom_member_word(x["d"], x["w"], k_hashes),
-        )
-    )
+    member = bloom_member_word("x.d", "x.w", k_hashes)
     # explode-as-filter (see bloom_span_flag): a Filter here would be
     # predicate-pushed to the scan WITH the whole hits kernel inlined —
     # every gram membership-tested twice per doc.
     return (
-        staged.select("doc_id", word_of.alias("__dw__"))
-        .select("doc_id", hits.cast("long").alias("__hg__"))
-        .select(
+        corpus.selectExpr(f"{_sql_ident(id_col)} AS doc_id", f"{word_tokens(text_col)} AS __toks__")
+        .selectExpr("doc_id", f"array_distinct({word_ngrams_of('__toks__', n)}) AS __g__")
+        .selectExpr("doc_id", "transform(__g__, g -> md5(g)) AS __dg__")
+        .selectExpr("doc_id", f"{_bloom_word_stage(bitmap_words, m_bits)} AS __dw__")
+        .selectExpr("doc_id", f"cast(size(filter(__dw__, x -> {member})) as bigint) AS __hg__")
+        .selectExpr(
             "doc_id",
-            F.explode(
-                F.when(F.col("__hg__") > 0, F.array(F.col("__hg__")))
-                .otherwise(F.array().cast("array<bigint>"))
-            ).alias("hit_grams"),
+            "explode(CASE WHEN __hg__ > 0 THEN array(__hg__) "
+            "ELSE cast(array() as array<bigint>) END) AS hit_grams",
         )
     )
 
@@ -2939,6 +2941,16 @@ def span_bloom_fit(
     return bloom_build_bits(cross, "gram", m_bits, k_hashes), m_bits
 
 
+def _bloom_hit_positions(k_hashes: int) -> str:
+    """SQL text of the span kernels' hit stage over the staged
+    ``struct(digest, block word)`` array ``__dw__`` (see
+    :func:`_bloom_word_stage`): the 1-based position of each hit, or -1."""
+    return (
+        f"transform(__dw__, (x, i) -> CASE WHEN {bloom_member_word('x.d', 'x.w', k_hashes)} "
+        "THEN cast(i + 1 as bigint) ELSE cast(-1 as bigint) END)"
+    )
+
+
 def bloom_span_flag(
     df: DataFrame,
     id_col: str,
@@ -2988,25 +3000,8 @@ def bloom_span_flag(
         .select("doc_id", grams.alias("__g__"))
         .select("doc_id", digests.alias("__dg__"))
     )
-    # bitmap attach: always the constant-folded plan literal (see
-    # bits_array_expr — attribute-bound arrays inline per row at the
-    # interpreted-HOF boundary)
-    bits = bits_array_expr(bitmap_words)
-    word_of = F.transform(
-        F.col("__dg__"),
-        lambda d: F.struct(
-            d.alias("d"),
-            F.element_at(bits, _bloom_block_word(d, m_bits).cast("int") + 1).alias("w"),
-        ),
-    )
-    neg1 = F.lit(-1).cast("bigint")
-    pos_or_neg = F.transform(
-        F.col("__dw__"),
-        lambda x, i: F.when(
-            bloom_member_word(x["d"], x["w"], k_hashes),
-            (i + 1).cast("bigint"),
-        ).otherwise(neg1),
-    )
+    word_of = F.expr(_bloom_word_stage(bitmap_words, m_bits))
+    pos_or_neg = F.expr(_bloom_hit_positions(k_hashes))
     hit_positions = F.filter(F.col("__pn__"), lambda p: p > 0)
     empty_spans = F.array().cast("array<struct<s:bigint,e:bigint>>")
     neg = F.lit(-1).cast("bigint")
@@ -3121,23 +3116,8 @@ def bloom_span_remove(
         .select("doc_id", "__t__", grams.alias("__g__"))
         .select("doc_id", "__t__", digests.alias("__dg__"))
     )
-    # bitmap attach (plan literal — see bits_array_expr)
-    bits = bits_array_expr(bitmap_words)
-    word_of = F.transform(
-        F.col("__dg__"),
-        lambda d: F.struct(
-            d.alias("d"),
-            F.element_at(bits, _bloom_block_word(d, m_bits).cast("int") + 1).alias("w"),
-        ),
-    )
-    neg1 = F.lit(-1).cast("bigint")
-    pos_or_neg = F.transform(
-        F.col("__dw__"),
-        lambda x, i: F.when(
-            bloom_member_word(x["d"], x["w"], k_hashes),
-            (i + 1).cast("bigint"),
-        ).otherwise(neg1),
-    )
+    word_of = F.expr(_bloom_word_stage(bitmap_words, m_bits))
+    pos_or_neg = F.expr(_bloom_hit_positions(k_hashes))
     hit_positions = F.filter(F.col("__pn__"), lambda p: p > 0)
     empty_spans = F.array().cast("array<struct<s:bigint,e:bigint>>")
     neg = F.lit(-1).cast("bigint")

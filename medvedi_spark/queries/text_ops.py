@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from medvedi_spark.catalog import load
 from medvedi_spark.functions.hashing import sql_token_hash
+from medvedi_spark.operators.llm import word_tokens
 from medvedi_spark.queries.registry import register
 
 # Stopword lists for the n-gram language-ID heuristic. Tiny by design:
@@ -31,15 +32,6 @@ _STOPWORDS = {
 
 def _tok(col: str = "text"):
     return F.split(F.col(col), " ")
-
-
-def _toks_col(col: str = "text"):
-    """Empty-dropped token array — materialize this in a select() BEFORE
-    using it inside any transform/filter lambda (no CSE across lambda
-    captures; see t6/d9 perf notes). NOTE Catalyst's CollapseProject can
-    re-inline this through an alias — prefer the capture-free builders
-    below (``_bigrams_of``/``_top_token_count_of``) for per-element work."""
-    return F.filter(F.split(F.col(col), " "), lambda t: t != "")
 
 
 def _bigrams_of(toks):
@@ -378,7 +370,7 @@ def t6_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transform/filter lambda are re-evaluated per ELEMENT (no CSE), so
     # building bigrams/counts straight off filter(split(text)) costs
     # O(n_grams) extra splits per row (same lesson as d9's gram build).
-    base = docs.select("doc_id", _toks_col().alias("toks"))
+    base = docs.select("doc_id", F.expr(word_tokens("text")).alias("toks"))
     toks = F.col("toks")
     m = base.select(
         "doc_id",
@@ -892,7 +884,7 @@ def p4_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Capture-free repetition metrics (see _bigrams_of/_top_token_count_of
     # notes: projection collapse re-inlines lambda-captured columns).
-    sampled_base = sampled_docs.select("doc_id", "lang", "text", _toks_col().alias("toks"))
+    sampled_base = sampled_docs.select("doc_id", "lang", "text", F.expr(word_tokens("text")).alias("toks"))
     toks = F.col("toks")
     metrics = sampled_base.select(
         "doc_id", "lang", "text",
@@ -2116,7 +2108,7 @@ def t12_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.operators._persist import size_guarded_persist
 
     docs = load(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _toks_col().alias("l"))
+    base = docs.select("doc_id", F.expr(word_tokens("text")).alias("l"))
     # the occurrence stream feeds THREE consumers (bigram counts, context
     # counts, the score join) — persist it once, size-guarded, instead of
     # re-running the tokenize+explode pipeline per consumer
@@ -2209,7 +2201,7 @@ def t12_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t13_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = _toks_col()
+    toks = F.expr(word_tokens("text"))
     m = docs.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_words"),
@@ -2220,7 +2212,7 @@ def t13_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(
             F.aggregate(
                 F.transform(
-                    _toks_col(),
+                    F.expr(word_tokens("text")),
                     lambda w: F.greatest(
                         F.size(F.regexp_extract_all(F.lower(w), F.lit("[aeiou]+"), F.lit(0))),
                         F.lit(1),
@@ -2314,56 +2306,38 @@ def gopher_rules_frame(docs: DataFrame) -> DataFrame:
     """The t14 expression tree over any ``(doc_id, text)`` frame — a pure
     map-side projection, so it applies unchanged to a document STREAM
     (st15: stateless quality gating at ingest)."""
-    zero = F.lit(0).cast("bigint")
-    # materialize the token array ONCE (the file-header _toks_col
-    # directive): inline _toks_col() per metric leaves 5 split(text)
+    ratio = "CASE WHEN n_words > 0 THEN cast({} AS double) / n_words ELSE 0.0D END AS {}"
+    # materialize the token array ONCE (the word_tokens directive):
+    # inline word_tokens() per metric leaves 5 split(text)
     # copies in the physical plan vs 1 here (verified on the executed
     # plan — CollapseProject does NOT re-inline this alias). Interleaved
     # A/B at sf0.1 measured ~parity (0.33 vs 0.25 s; 54-word docs, fixed
     # overhead dominates) — kept for the 5×→1× tokenization plan fact,
     # which is what matters on real document lengths at corpus scale.
-    base = docs.select("doc_id", _toks_col().alias("l"))
-    toks = F.col("l")
-    m = base.select(
-        "doc_id",
-        F.size(toks).cast("bigint").alias("n_words"),
-        F.coalesce(
-            F.aggregate(
-                F.transform(toks, lambda w: F.length(w).cast("bigint")),
-                zero,
-                lambda acc, x: acc + x,
-            ),
-            zero,
-        ).alias("sum_len"),
-        # [A-Za-z] not [a-z]: Gopher Table A1's rule is "at least one
-        # ALPHABETIC character" — all-caps words (acronyms, shouting)
-        # count as alphabetic (ADVICE r7); engine and oracle in lockstep
-        F.size(F.filter(toks, lambda w: w.rlike("[A-Za-z]")))
-        .cast("bigint").alias("n_alpha"),
-        F.size(
-            F.filter(toks, lambda w: w.contains("#") | w.contains("..."))
-        ).cast("bigint").alias("n_symbol"),
-        F.size(
-            F.array_intersect(
-                toks, F.array(*[F.lit(s) for s in _T14_STOPS])
-            )
-        ).cast("bigint").alias("stop_hits"),
-    )
-    ratio = lambda num: F.when(  # noqa: E731
-        F.col("n_words") > 0, F.col(num).cast("double") / F.col("n_words")
-    ).otherwise(F.lit(0.0))
-    keep = (
-        F.col("n_words").between(50, 100000)
-        & F.col("sum_len").between(3 * F.col("n_words"), 10 * F.col("n_words"))
-        & (10 * F.col("n_symbol") <= F.col("n_words"))
-        & (5 * F.col("n_alpha") >= 4 * F.col("n_words"))
-        & (F.col("stop_hits") >= 2)
-    )
-    return m.select(
-        "doc_id", "n_words",
-        ratio("sum_len").alias("mean_word_len"),
-        ratio("n_alpha").alias("alpha_frac"),
-        ratio("n_symbol").alias("symbol_frac"),
-        "stop_hits",
-        keep.alias("keep"),
+    return (
+        docs.selectExpr("doc_id", f"{word_tokens('text')} AS l")
+        .selectExpr(
+            "doc_id",
+            "cast(size(l) AS bigint) AS n_words",
+            "coalesce(aggregate(transform(l, w -> cast(length(w) AS bigint)), cast(0 AS bigint), "
+            "(acc, x) -> acc + x), cast(0 AS bigint)) AS sum_len",
+            # [A-Za-z] not [a-z]: Gopher Table A1's rule is "at least one
+            # ALPHABETIC character" — all-caps words (acronyms, shouting)
+            # count as alphabetic (ADVICE r7); engine and oracle in lockstep
+            "cast(size(filter(l, w -> w RLIKE '[A-Za-z]')) AS bigint) AS n_alpha",
+            "cast(size(filter(l, w -> contains(w, '#') OR contains(w, '...'))) AS bigint) AS n_symbol",
+            f"cast(size(array_intersect(l, array({_T14_STOPS_SQL}))) AS bigint) AS stop_hits",
+        )
+        .selectExpr(
+            "doc_id", "n_words",
+            ratio.format("sum_len", "mean_word_len"),
+            ratio.format("n_alpha", "alpha_frac"),
+            ratio.format("n_symbol", "symbol_frac"),
+            "stop_hits",
+            "n_words BETWEEN 50 AND 100000"
+            " AND sum_len BETWEEN 3 * n_words AND 10 * n_words"
+            " AND 10 * n_symbol <= n_words"
+            " AND 5 * n_alpha >= 4 * n_words"
+            " AND stop_hits >= 2 AS keep",
+        )
     )

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import itertools
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
@@ -45,7 +46,12 @@ def stream_source_schema(spark: SparkSession, path: str):
 # st6's stateful counter degrades 1.15 → 2.04 s at 2 and the
 # stream-stream joins prefer ≥4. 4 is the measured suite optimum; a
 # production stream sizes this to throughput via the env override,
-# the deployment setting for every drain below.
+# the deployment setting for every drain below. Part of that per-store
+# cost was child processes, not state work: without libhadoop the JVM
+# starts a `chmod` per checkpoint file it creates and, under Spark's
+# default checkpoint manager, a `readlink` per file it renames. A warm
+# st1 drain at 4 stores started 152 of them (112 `readlink`, 40
+# `chmod`); with _FS_CHECKPOINT_MANAGER it starts 40, all `chmod`.
 _STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"))
 
 
@@ -67,29 +73,73 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(stream)
 
 
-def _drain(result: DataFrame, writer: DataStreamWriter) -> None:
-    """Run ``writer`` (a sink configured on ``result.writeStream``) to
-    completion with an availableNow trigger.
+#: Spark's checkpoint manager over the Hadoop ``FileSystem`` API, used for
+#: drains whose checkpoint is on the local filesystem. Spark's default,
+#: the ``FileContext`` manager, asks for the link status of every file it
+#: renames; without libhadoop (the "Unable to load native-hadoop library"
+#: startup warning) Hadoop answers that, and every ``setPermission``, by
+#: starting a ``readlink`` or ``chmod`` child process from the JVM. On a
+#: 4-core host that child CPU was 0.31-0.38 s of each warm st1 or st3
+#: request. The ``FileSystem`` manager renames without the link lookup:
+#: 0.09-0.14 s per st1 or st3 request, for the ``chmod`` on file create
+#: that stays. A local rename replaces its target atomically, so the
+#: default manager's atomic-overwrite rename buys nothing there; an HDFS
+#: or S3 checkpoint keeps the default. The state store's checksum
+#: manager (``spark.sql.streaming.checkpoint.fileChecksum.enabled``)
+#: wraps whichever manager this picks.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _local_checkpoint(spark: SparkSession, location: str | None) -> bool:
+    """Whether a checkpoint at ``location`` is on the local filesystem. A
+    path without a scheme resolves against ``fs.defaultFS``, as Spark
+    resolves it; so does ``None``, the temp directory Spark makes for a
+    memory sink when no checkpoint location is set."""
+    scheme = urlparse(location).scheme if location else ""
+    if not scheme:
+        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+        scheme = urlparse(default_fs).scheme
+    return scheme == "file"
+
+
+def _drain(result: DataFrame, writer: DataStreamWriter, checkpoint: str | None = None) -> None:
+    """Run ``writer`` (a sink configured on ``result.writeStream``, with
+    its checkpoint at ``checkpoint``, or at the session's default when
+    ``None``) to completion with an availableNow trigger.
 
     Stateful operators allocate one state store per shuffle partition at
     query START, and that count is frozen into the checkpoint. 32 stores
     for a single-file drain is pure constant overhead, so the drain runs
     with ``_STATE_PARTITIONS`` (see the measured floor decomposition
-    there); the batch session conf is restored after. On a real cluster
-    this width is sized to stream throughput
-    (``SPARK_GRAFT_STREAM_STATE_PARTITIONS``), not to the batch session's
-    shuffle width — same code path."""
+    there). A local checkpoint is written through
+    ``_FS_CHECKPOINT_MANAGER``. The session confs are restored after, also
+    when ``start()`` raises. On a real cluster the width is sized to
+    stream throughput (``SPARK_GRAFT_STREAM_STATE_PARTITIONS``), not to
+    the batch session's shuffle width — same code path."""
     spark = result.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+    if checkpoint is None:
+        checkpoint = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    confs = {"spark.sql.shuffle.partitions": str(_STATE_PARTITIONS)}
+    if _local_checkpoint(spark, checkpoint):
+        confs[_MANAGER_CONF] = _FS_CHECKPOINT_MANAGER
+    old = {key: spark.conf.get(key, None) for key in confs}
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
+        for key, value in confs.items():
+            spark.conf.set(key, value)
         query = writer.trigger(availableNow=True).start()
         try:
             query.processAllAvailable()
         finally:
             query.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def run_to_memory(result: DataFrame, *, output_mode: str) -> DataFrame:
@@ -137,4 +187,4 @@ def run_to_parquet(
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    _drain(result, writer)
+    _drain(result, writer, checkpoint)

@@ -131,3 +131,24 @@ def test_every_registered_query_has_a_bench_row():
         f"registered without a bench row (run `python bench.py` on an idle "
         f"machine and commit the ledger): {unbenched}"
     )
+
+
+def test_package_zip_one_per_process_removed_at_exit(tmp_path, monkeypatch):
+    """Two sessions of one process ship one zip, named by content hash
+    and pid, and the exit hook removes it."""
+    import os
+    import tempfile
+    from types import SimpleNamespace
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(entry_mod, "_SHIPPED", set())
+    monkeypatch.setattr(entry_mod, "_ZIPS", set())
+    shipped: list[str] = []
+    sessions = [SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append)) for _ in range(2)]
+    for session in (*sessions, sessions[0]):
+        entry_mod._ship_package(session)
+    zips = [f for f in os.listdir(tmp_path) if f.startswith("medvedi_spark_pkg_")]
+    assert len(zips) == 1 and zips[0].endswith(f"_{os.getpid()}.zip")
+    assert shipped == [str(tmp_path / zips[0])] * 2
+    entry_mod._remove_zips()
+    assert not os.listdir(tmp_path)

@@ -357,7 +357,7 @@ def test_bloom_member_matches_position_set(spark):
     got = {
         r.v: r.m
         for r in df.select(
-            "v", llm.bloom_member(F.col("v"), F.lit(bits), m_bits, k).alias("m")
+            "v", llm.bloom_member("v", bits, m_bits, k).alias("m")
         ).collect()
     }
     for v in vals:
@@ -512,3 +512,39 @@ def test_gram_containment_detects_subset_doc(spark):
     rows = {(r.doc_a, r.doc_b): r.containment for r in
             llm.gram_containment_pairs(df, "doc_id", "text", n=3, threshold=0.8).collect()}
     assert rows == {(1, 2): 1.0}  # contained→container only, not reversed
+
+
+def _gopher_plan(docs):
+    from medvedi_spark.queries.text_ops import gopher_rules_frame
+
+    return gopher_rules_frame(docs)
+
+
+def _bloom_plan(docs):
+    return llm.bloom_flag(docs, "doc_id", "text", [0, -1, 5, 1 << 62], 256, n=4, k_hashes=3)
+
+
+@pytest.mark.parametrize("build", [_gopher_plan, _bloom_plan], ids=["gopher_rules_frame", "bloom_flag"])
+def test_text_kernel_build_py4j_budget(spark, monkeypatch, build):
+    """Building the t14/st15 and d14/st14 kernels over a document frame
+    stays within a fixed number of py4j round-trips: the kernels are SQL
+    text, parsed JVM-side, not Column trees sent one node at a time
+    (more than 1,000 calls each when they were). Reference releases of
+    dead Java objects are not counted: when they are sent depends on
+    Python's garbage collector, not on the kernel."""
+    import py4j.clientserver
+    import py4j.protocol
+
+    docs = spark.createDataFrame([(1, "the cat sat on the mat")], "doc_id long, text string")
+    calls = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith(py4j.protocol.MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    build(docs)
+    monkeypatch.undo()
+    assert len(calls) <= 60, len(calls)

@@ -57,7 +57,7 @@ def test_bloom_auto_size_fpr_at_10x_eval(spark):
     bits = llm.bloom_build_bits(members, "v", m_bits=m_bits, k_hashes=3)
     probes = spark.range(20_000).select(F.concat(F.lit("out:"), F.col("id")).alias("v"))
     fp = (
-        probes.select(llm.bloom_member(F.col("v"), F.lit(bits), m_bits, 3).alias("m"))
+        probes.select(llm.bloom_member("v", bits, m_bits, 3).alias("m"))
         .agg(F.sum(F.col("m").cast("int")).alias("fp"))
         .collect()[0]["fp"]
     )
@@ -67,7 +67,7 @@ def test_bloom_auto_size_fpr_at_10x_eval(spark):
     assert fpr < 0.15, f"auto-sized FPR degraded: {fpr:.3f}"
     # and recall stays perfect by construction (no false negatives)
     tp = (
-        members.select(llm.bloom_member(F.col("v"), F.lit(bits), m_bits, 3).alias("m"))
+        members.select(llm.bloom_member("v", bits, m_bits, 3).alias("m"))
         .agg(F.sum(F.col("m").cast("int")).alias("tp"))
         .collect()[0]["tp"]
     )

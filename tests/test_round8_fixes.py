@@ -10,7 +10,7 @@
    emit identical spans.
 7. st17: streaming dedup-on-ingest served from the persisted d17 index
    equals the batch band-join against the same loaded signatures.
-A. dataset_fingerprint (cache keys), bits_array_expr (plan literal),
+A. dataset_fingerprint (cache keys), bits_array_sql (plan literal),
    t14's [A-Za-z] alphabetic rule.
 """
 
@@ -160,7 +160,7 @@ def test_st17_stream_equals_batch_serving(spark, sf_dir):
 def test_bits_array_expr_equals_lit(spark):
     words = [0, -1, 5, 1 << 62, -(1 << 63), 42]
     df = spark.range(1)
-    got = df.select(llm.bits_array_expr(words).alias("a")).first().a
+    got = df.select(F.expr(llm.bits_array_sql(words)).alias("a")).first().a
     assert list(got) == words
 
 
@@ -173,15 +173,15 @@ def test_blocked_bloom_fit_and_member_agree(spark):
     df = spark.createDataFrame(vals, "g string")
     m_bits = 65536
     words = llm.bloom_build_bits(df, "g", m_bits, 3)
-    bits = llm.bits_array_expr(words)
+    bits = llm.bits_array_sql(words)
     out = df.select(
-        "g", llm.bloom_member(F.col("g"), bits, m_bits, 3).alias("hit")
+        "g", llm.bloom_member("g", words, m_bits, 3).alias("hit")
     ).collect()
     assert all(r.hit for r in out)
-    digest = F.md5(F.col("g"))
-    word = F.element_at(bits, llm._bloom_block_word(digest, m_bits).cast("int") + 1)
+    digest = "md5(g)"
+    word = f"element_at({bits}, cast({llm._bloom_block_word(digest, m_bits)} as int) + 1)"
     staged = df.select(
-        "g", llm.bloom_member_word(digest, word, 3).alias("hit")
+        "g", F.expr(llm.bloom_member_word(digest, word, 3)).alias("hit")
     ).collect()
     assert all(r.hit for r in staged)
 

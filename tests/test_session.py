@@ -1,0 +1,41 @@
+"""The tuned session factory: settings a long-lived session relies on."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+import sys
+
+from pyspark.sql import functions as F
+
+from medvedi_spark.operators._persist import release_persisted
+from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
+
+_WORKLOADS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "workloads.py")
+
+
+def _serve_small() -> tuple[str, ...]:
+    spec = importlib.util.spec_from_file_location("perfbench_workloads", _WORKLOADS)
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = mod  # dataclasses resolve annotations through it
+    spec.loader.exec_module(mod)
+    return mod.SERVE_SMALL.queries
+
+
+def test_warm_pass_compiles_nothing(spark, sf_dir):
+    """The generated-code cache holds a serving loop's working set: a
+    second pass over the benchmark's ``serve_small`` queries, each built
+    and fully checksummed, compiles no new class."""
+    _ensure_loaded()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        before = compiles.getCount()
+        for name in _serve_small():
+            df = QUERIES[name].builder(spark, sf_dir)
+            df.select(F.count(F.lit(1)), F.sum(F.xxhash64(*[F.col(c) for c in df.columns]))).collect()
+            release_persisted()
+        return compiles.getCount() - before
+
+    one_pass()  # cold: fills the cache
+    assert one_pass() == 0

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from medvedi_spark.catalog import load
@@ -242,3 +243,86 @@ def test_release_persisted_drops_memory_sinks(spark, sf_dir):
         released += release_persisted()
     assert tables() == before
     assert released >= 2  # one sink per drain, counted
+
+
+_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def _spy_start(monkeypatch, spark, fail: bool = False) -> list[dict]:
+    """Record the manager and shuffle-width confs each stream starts with;
+    with ``fail``, ``start()`` raises instead of starting."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    seen: list[dict] = []
+    start = DataStreamWriter.start
+
+    def spy(self, *args, **kwargs):
+        seen.append({k: spark.conf.get(k, None) for k in (_MANAGER, _PARTITIONS)})
+        if fail:
+            raise RuntimeError("start failed")
+        return start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", spy)
+    return seen
+
+
+def test_local_drain_starts_with_filesystem_manager(spark, sf_dir, tmp_path, monkeypatch):
+    """A drain whose checkpoint is local, a memory sink's temp one or a
+    file sink's, starts with Spark's FileSystem checkpoint manager."""
+    from medvedi_spark.streaming.ops import _FS_CHECKPOINT_MANAGER, run_to_memory
+
+    seen = _spy_start(monkeypatch, spark)
+    events = read_events_stream(spark, sf_dir).select("user_id", "event_type")
+    assert run_to_memory(events, output_mode="append").count() > 0
+    run_to_parquet(events, str(tmp_path / "out"), checkpoint=f"file://{tmp_path}/ck")
+    assert spark.read.parquet(str(tmp_path / "out")).count() > 0
+    assert [s[_MANAGER] for s in seen] == [_FS_CHECKPOINT_MANAGER] * 2
+
+
+def test_drain_restores_session_confs(spark, sf_dir, tmp_path, monkeypatch):
+    """The manager and the shuffle width are back at their prior values
+    after a drain, unset or set, and also when ``start()`` raises."""
+    from medvedi_spark.streaming.ops import run_to_memory
+
+    events = read_events_stream(spark, sf_dir).select("user_id")
+    width = spark.conf.get(_PARTITIONS)
+    assert spark.conf.get(_MANAGER, None) is None
+    run_to_memory(events, output_mode="append")
+    assert spark.conf.get(_MANAGER, None) is None
+    assert spark.conf.get(_PARTITIONS) == width
+
+    prior = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    spark.conf.set(_MANAGER, prior)
+    try:
+        run_to_memory(events, output_mode="append")
+        assert spark.conf.get(_MANAGER) == prior
+        _spy_start(monkeypatch, spark, fail=True)
+        with pytest.raises(RuntimeError, match="start failed"):
+            run_to_parquet(events, str(tmp_path / "out"))
+        assert spark.conf.get(_MANAGER) == prior
+        assert spark.conf.get(_PARTITIONS) == width
+    finally:
+        spark.conf.unset(_MANAGER)
+
+
+def test_remote_checkpoint_keeps_default_manager(spark, sf_dir, monkeypatch):
+    """A checkpoint whose URI scheme is not ``file`` (a file sink's own,
+    or the session's default for a memory sink) leaves the manager conf
+    untouched, so HDFS and S3 keep Spark's default manager."""
+    from medvedi_spark.streaming.ops import _STATE_PARTITIONS, _local_checkpoint, run_to_memory
+
+    assert not _local_checkpoint(spark, "s3a://bucket/ck")
+    assert _local_checkpoint(spark, "/tmp/ck") and _local_checkpoint(spark, "file:///tmp/ck")
+    seen = _spy_start(monkeypatch, spark, fail=True)
+    events = read_events_stream(spark, sf_dir).select("user_id")
+    with pytest.raises(RuntimeError):
+        run_to_parquet(events, "hdfs://namenode:8020/out", checkpoint="hdfs://namenode:8020/ck")
+    spark.conf.set("spark.sql.streaming.checkpointLocation", "s3a://bucket/ck")
+    try:
+        with pytest.raises(RuntimeError):
+            run_to_memory(events, output_mode="append")
+    finally:
+        spark.conf.unset("spark.sql.streaming.checkpointLocation")
+    assert [s[_MANAGER] for s in seen] == [None, None]
+    assert seen[0][_PARTITIONS] == str(_STATE_PARTITIONS)
