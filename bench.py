@@ -54,7 +54,7 @@ def main() -> None:
     spark = get_spark("medvedi-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from medvedi_spark.operators.llm import release_persisted
+    from medvedi_spark.operators._persist import release_persisted
 
     # Untimed session warm-up: the first queries of a fresh session
     # otherwise absorb JVM/codegen/Arrow/python-worker spin-up into
@@ -107,14 +107,13 @@ def main() -> None:
     # tools/ledger.py --compare normalizes st* rows against it.
     stream_control_sec = None
     try:
-        from medvedi_spark.queries.stream_ops import _read_documents_stream
-        from medvedi_spark.streaming.ops import run_to_memory
+        from medvedi_spark.streaming.ops import read_table_stream, run_to_memory
 
         scs = []
         for _ in range(3):
             t0 = time.perf_counter()
             run_to_memory(
-                _read_documents_stream(spark, sf_dir).select("doc_id"),
+                read_table_stream(spark, sf_dir, "documents").select("doc_id"),
                 output_mode="append",
             ).count()
             scs.append(time.perf_counter() - t0)

@@ -9,13 +9,20 @@ every router.
 Tracked state: Spark has no "plan was materialized" callback, so an
 operator that persists an intermediate (the adaptive-Jaccard gram table,
 the global as-of join's range-partitioned stream) cannot self-unpersist,
-and a stream drain cannot drop the memory sink it hands back; long-lived
-sessions (bench, notebooks) call :func:`release_persisted` between
-queries — otherwise cache blocks and sink rows linger until context
-shutdown (round-4 ADVICE).
+a stream drain cannot drop the memory sink it hands back, and a query
+that writes a scratch directory (:func:`scratch_dir`) cannot remove it
+while its returned plan still reads it; long-lived sessions (bench,
+notebooks) call :func:`release_persisted` between queries — otherwise
+cache blocks, sink rows and scratch files linger until context shutdown
+(round-4 ADVICE).
 """
 
 from __future__ import annotations
+
+import atexit
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,6 +36,11 @@ _PERSISTED: dict[int, list[DataFrame]] = {}
 # keyed the same way. A memory sink keeps every result row on the driver
 # until its view is dropped.
 _SINKS: dict[int, list[tuple[SparkSession, str]]] = {}
+
+
+# Scratch directories handed out by scratch_dir(), keyed the same way.
+# Each holds files a query wrote and its returned plan reads back.
+_TMP_DIRS: dict[int, set[str]] = {}
 
 
 def _session_key(df: DataFrame) -> int:
@@ -49,6 +61,31 @@ def persist_tracked(df: DataFrame) -> DataFrame:
 def track_sink(spark: SparkSession, view: str) -> None:
     """Register the memory-sink temp view ``view`` for release."""
     _SINKS.setdefault(id(spark), []).append((spark, view))
+
+
+def scratch_dir(sf_dir: str, tag: str) -> str:
+    """Path of the scratch directory ``tag`` for the tables in ``sf_dir``
+    (format round trips, exported shards, saved indexes), registered for
+    removal by :func:`release_persisted` under the active session and at
+    interpreter exit. The caller creates and overwrites it."""
+    # pid-scoped: two concurrent harness runs over the same table must
+    # not race on the overwrite-then-read-back cycle (one run's delete
+    # landing mid-read in the other produced spurious failures).
+    path = os.path.join(
+        tempfile.gettempdir(),
+        f"medvedi_spark_{tag}_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
+    )
+    spark = SparkSession.getActiveSession()
+    _TMP_DIRS.setdefault(id(spark) if spark is not None else 0, set()).add(path)
+    return path
+
+
+def _remove_dirs(paths) -> None:
+    for path in paths:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+atexit.register(lambda: _remove_dirs({p for ps in _TMP_DIRS.values() for p in ps}))
 
 
 #: Input-size ceiling of the corpus-proportional plans. A router whose
@@ -100,16 +137,18 @@ def size_guarded_persist(source: DataFrame, df: DataFrame) -> DataFrame:
 
 
 def release_persisted(spark: SparkSession | None = None) -> int:
-    """Unpersist the operator-persisted DataFrames of ``spark`` and drop
-    its memory-sink views (default: the active session, falling back to
-    ALL sessions when none is active — process teardown); returns the
-    count. Safe once earlier plans are no longer needed — blocks drop,
-    plans stay valid (they recompute if re-executed). Scoped per session
-    so one consumer's cleanup cannot evict caches a concurrent session
-    still reads."""
+    """Unpersist the operator-persisted DataFrames of ``spark``, drop
+    its memory-sink views and remove its scratch directories (default:
+    the active session, falling back to ALL sessions when none is active
+    — process teardown); returns the count of frames and views. Safe
+    once earlier plans are no longer needed — blocks drop, plans over
+    persisted frames stay valid (they recompute if re-executed), while a
+    plan that reads a removed scratch directory needs its query rebuilt.
+    Scoped per session so one consumer's cleanup cannot evict caches a
+    concurrent session still reads."""
     if spark is None:
         spark = SparkSession.getActiveSession()
-    keys = [id(spark), 0] if spark is not None else list(_PERSISTED.keys() | _SINKS.keys())
+    keys = [id(spark), 0] if spark is not None else list(_PERSISTED.keys() | _SINKS.keys() | _TMP_DIRS.keys())
     n = 0
     for key in keys:
         for df in reversed(_PERSISTED.pop(key, [])):
@@ -126,4 +165,5 @@ def release_persisted(spark: SparkSession | None = None) -> int:
                 n += bool(owner.catalog.dropTempView(view))
             except Exception:
                 pass  # session already stopped — nothing to release
+        _remove_dirs(_TMP_DIRS.pop(key, ()))
     return n

@@ -18,7 +18,7 @@ artifacts as parquet laid out for serving:
 - ``centroids/`` — the coarse codebook, n_cells rows.
 
 The loaded query path reuses the EXACT inline kernels
-(:func:`~medvedi_spark.operators.llm._coarse_route` routing,
+(:func:`~medvedi_spark.operators.quantized._coarse_route` routing,
 ``_sq8_code`` affine codes, int64 ``_sq8_d2`` scoring), so
 ``build → save → load → query`` is bit-identical to
 ``build → query`` — oracle-checked by the s11 registered query against
@@ -44,17 +44,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from medvedi_spark.operators import _persist
-from medvedi_spark.operators.llm import (
+from medvedi_spark.operators.kernels import _sq8_code, _sq8_d2, sqdist_dec
+from medvedi_spark.operators.quantized import (
     _coarse_route,
     _pq_lut,
     _sq8_check_stats,
-    _sq8_code,
-    _sq8_d2,
     _sq8_range_literals,
     _sq8_rank,
     _sq8_train,
     pq_encode,
-    sqdist_dec,
 )
 
 __all__ = [
@@ -290,7 +288,7 @@ def ivf_sq8_query(
     serving never collects batch-proportional state to the driver).
     Scoring and ranking are
     the inline kernels, so results equal :func:`~medvedi_spark.operators.
-    llm.ivf_sq8_topk` exactly when the corpus/queries match (the s11
+    quantized.ivf_sq8_topk` exactly when the corpus/queries match (the s11
     oracle is s10's SQL verbatim).
 
     Query vectors need not come from the indexed corpus; values outside
@@ -299,7 +297,7 @@ def ivf_sq8_query(
     integer-exact and merely over-weights the escaping dimension.
     """
     spark = index.codes.sparkSession
-    # driver-side sort of the dims-row stats (see llm._sq8_train)
+    # driver-side sort of the dims-row stats (see quantized._sq8_train)
     stats = sorted(index.ranges.collect(), key=lambda r: r["dim"])
     _sq8_check_stats(stats)
     vmin_vals, vmax_vals = _sq8_range_literals(stats)
@@ -519,7 +517,7 @@ def ivfadc_query(
     vectors, and the cell-partitioned codes scan partition-prunes to the
     probed cells. Same no-training-stages / collected-once-routed-twice
     shape as :func:`ivf_sq8_query`; results equal the inline
-    :func:`~medvedi_spark.operators.llm.ivfadc_topk` bit-for-bit (the
+    :func:`~medvedi_spark.operators.quantized.ivfadc_topk` bit-for-bit (the
     s12 oracle is s6's SQL verbatim)."""
     scored, _ = _ivfadc_scored(index, queries, id_col, vec_col, nprobe)
     w = Window.partitionBy("query_id").orderBy(F.asc("d2_approx"), F.asc("neighbor_id"))
@@ -543,7 +541,7 @@ def ivfadc_query_rerank(
     loaded-index ADC shortlist + exact full-precision re-rank — FAISS's
     ``IndexRefineFlat`` over ``IndexIVFPQ`` — so a user following the
     index lifecycle serves the high-recall two-stage shape
-    (:func:`~medvedi_spark.operators.llm.ivfadc_rerank_topk`, s7's 0.90
+    (:func:`~medvedi_spark.operators.quantized.ivfadc_rerank_topk`, s7's 0.90
     recall band) instead of raw ADC's PQ-budget-bound quality (s12's
     documented 0.44 at 10×).
 

@@ -47,7 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from medvedi_spark.functions.hashing import MINHASH_COEFFS
-from medvedi_spark.operators.llm import connected_components, minhash_band_index
+from medvedi_spark.operators.graph import connected_components
+from medvedi_spark.operators.llm import minhash_band_index
 
 __all__ = [
     "MinhashDedupIndex",

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from medvedi_spark.frame import MDF, ROW_ID
+from medvedi_spark.operators._persist import scratch_dir
 from medvedi_spark.queries.registry import register
 
 
@@ -492,18 +493,6 @@ def c13_mdf_fillna_astype(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _fmt_tmp(sf_dir: str, tag: str) -> str:
-    import tempfile
-
-    # pid-scoped: two concurrent harness runs over the same table must
-    # not race on the overwrite-then-read-back cycle (one run's delete
-    # landing mid-read in the other produced spurious failures).
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"medvedi_spark_{tag}_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-
-
 @register(
     "c14_csv_roundtrip",
     oracle="SELECT c_custkey, c_mktsegment, c_acctbal FROM customer",
@@ -517,7 +506,7 @@ def c14_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mdf = MDF.read_parquet(_tbl(sf_dir, "customer"), spark=spark)
     sub = MDF.from_spark(mdf.df.select("c_custkey", "c_mktsegment", "c_acctbal", ROW_ID))
-    path = _fmt_tmp(sf_dir, "c14csv")
+    path = scratch_dir(sf_dir, "c14csv")
     readers.write_csv(sub, path)
     back = readers.read_csv(
         path, spark=spark, header=True,
@@ -538,7 +527,7 @@ def c15_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mdf = MDF.read_parquet(_tbl(sf_dir, "supplier"), spark=spark)
     sub = MDF.from_spark(mdf.df.select("s_suppkey", "s_name", "s_acctbal", ROW_ID))
-    path = _fmt_tmp(sf_dir, "c15json")
+    path = scratch_dir(sf_dir, "c15json")
     readers.write_json(sub, path)
     back = readers.read_json(
         path, spark=spark, schema="s_suppkey bigint, s_name string, s_acctbal double"
@@ -558,7 +547,7 @@ def c16_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mdf = MDF.read_parquet(_tbl(sf_dir, "orders"), spark=spark)
     sub = MDF.from_spark(mdf.df.select("o_orderkey", "o_orderdate", "o_totalprice", ROW_ID))
-    path = _fmt_tmp(sf_dir, "c16orc")
+    path = scratch_dir(sf_dir, "c16orc")
     readers.write_orc(sub, path)
     back = readers.read_orc(path, spark=spark)
     return back.df.drop(ROW_ID)
@@ -661,11 +650,11 @@ def _c18_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     _parallel_writes(
         lambda: readers.write_bucketed(
             li_sub, tli, ["l_orderkey"], n_buckets=8, sort_cols=["l_orderkey"],
-            path=_fmt_tmp(sf_dir, "c18li"),
+            path=scratch_dir(sf_dir, "c18li"),
         ),
         lambda: readers.write_bucketed(
             od_sub, tod, ["o_orderkey"], n_buckets=8, sort_cols=["o_orderkey"],
-            path=_fmt_tmp(sf_dir, "c18od"),
+            path=scratch_dir(sf_dir, "c18od"),
         ),
     )
     return tli, tod
@@ -706,7 +695,7 @@ def c18_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _c19_path(spark: SparkSession, sf_dir: str) -> str:
-    path = _fmt_tmp(sf_dir, "c19part")
+    path = scratch_dir(sf_dir, "c19part")
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     (
         docs.select("doc_id", "text", "source", "n_chars", "lang")
@@ -751,7 +740,7 @@ def c19_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _c20_path(spark: SparkSession, sf_dir: str) -> str:
-    path = _fmt_tmp(sf_dir, "c20evo")
+    path = scratch_dir(sf_dir, "c20evo")
     od = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     gen1 = od.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     gen2 = od.filter(F.col("o_orderkey") % 2 == 1).select(

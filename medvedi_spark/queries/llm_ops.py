@@ -11,7 +11,7 @@ materialization, no row-at-a-time UDFs) so the same plan scales from the
 - SimHash: 32 conditional sums in one aggregate → byte-block LSH
   (pigeonhole-exact for hamming ≤ 3) → popcount verify.
 - cosine top-k: brute-force with a broadcast probe side (the baseline;
-  the IVF scale path is s2/operators.llm.ivf_ann).
+  the IVF scale path is s2/operators.vector.ivf_ann).
 
 DuckDB oracles are generated from the same hash constants
 (medvedi_spark/functions/hashing.py), so both engines compute the same
@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from medvedi_spark.catalog import load, model_state
-from medvedi_spark.operators import llm as ops
+from medvedi_spark.operators import bloom, graph, jaccard, llm, quantized, vector
 from medvedi_spark.functions.hashing import (
     minhash_agg_cols,
     sql_minhash_aggs,
@@ -52,7 +52,7 @@ from medvedi_spark.queries.registry import register
     tags=("dedup", "llm"),
 )
 def d1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ops.exact_dedup(load(spark, sf_dir, "documents"), "text", "doc_id")
+    return llm.exact_dedup(load(spark, sf_dir, "documents"), "text", "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -85,9 +85,9 @@ def d1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "similarity", "llm"),
 )
 def d2_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See operators.llm.token_jaccard_pairs (adaptive bitset vs
+    """See operators.jaccard.token_jaccard_pairs (adaptive bitset vs
     prefix-filter plan selection; both exact)."""
-    return ops.token_jaccard_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.95)
+    return jaccard.token_jaccard_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.95)
 
 
 # --------------------------------------------------------------------------
@@ -154,7 +154,7 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # shared shingle→hash→signature→band pipeline (also the st10 corpus
     # index) — see operators.llm.minhash_band_index for the plan notes
-    sigs, bands = ops.minhash_band_index(docs, "doc_id", "text")
+    sigs, bands = llm.minhash_band_index(docs, "doc_id", "text")
     ba, bb = bands.alias("ba"), bands.alias("bb")
     candidates = (
         ba.join(
@@ -213,7 +213,7 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "simhash", "llm"),
 )
 def d4_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ops.simhash_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=3, n_blocks=4)
+    return llm.simhash_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=3, n_blocks=4)
 
 
 # --------------------------------------------------------------------------
@@ -226,7 +226,7 @@ def d4_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COS_K = 10
 
 # Exact-decimal dot-product accumulation in DuckDB SQL (pairs of parallel
-# unnest columns xa/xb); mirrors operators.llm.dot_dec bit-for-bit.
+# unnest columns xa/xb); mirrors operators.kernels.dot_dec bit-for-bit.
 _SQL_DEC_DOT = (
     "CAST(CAST(SUM(CAST(CAST(xa AS DOUBLE) * CAST(xb AS DOUBLE) AS DECIMAL(28,10)))"
     " AS VARCHAR) AS DOUBLE)"
@@ -272,7 +272,7 @@ _SQL_NORMS = """
 )
 def s1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    return ops.cosine_topk(emb, "vec_id", "embedding", probe=F.col("vec_id") < 10, k=_COS_K)
+    return vector.cosine_topk(emb, "vec_id", "embedding", probe=F.col("vec_id") < 10, k=_COS_K)
 
 
 # --------------------------------------------------------------------------
@@ -338,7 +338,7 @@ def _d5_band_val_sql(k: int) -> str:
     tags=("dedup", "similarity", "embedding", "lsh", "llm"),
 )
 def d5_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ops.embedding_neardup(
+    return vector.embedding_neardup(
         load(spark, sf_dir, "embeddings"), "vec_id", "embedding",
         threshold=_D5_THRESHOLD, n_bands=_D5_BANDS, bits_per_band=_D5_BITS,
     )
@@ -413,7 +413,7 @@ _S2_NCENT = 16
     tags=("similarity", "ann", "ivf", "llm"),
 )
 def s2_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ops.ivf_ann(
+    return vector.ivf_ann(
         load(spark, sf_dir, "embeddings"), "vec_id", "embedding",
         probe=F.col("vec_id") < 10,
         centroid_filter=F.col("vec_id") < _S2_NCENT,
@@ -468,8 +468,8 @@ def s2_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "clustering", "iterative", "llm"),
 )
 def d6_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = ops.token_jaccard_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.95)
-    comps = ops.connected_components(pairs, "doc_a", "doc_b")
+    pairs = jaccard.token_jaccard_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.95)
+    comps = graph.connected_components(pairs, "doc_a", "doc_b")
     return comps.select(F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
 
 
@@ -506,9 +506,9 @@ def d6_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "similarity", "ngram", "llm"),
 )
 def d7_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See operators.llm.ngram_jaccard_pairs (adaptive single-long /
+    """See operators.jaccard.ngram_jaccard_pairs (adaptive single-long /
     wide-bitset / prefix-filter plan selection; all exact)."""
-    return ops.ngram_jaccard_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.9)
+    return jaccard.ngram_jaccard_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.9)
 
 
 # --------------------------------------------------------------------------
@@ -541,7 +541,7 @@ def d7_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d8_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.llm.edit_distance_pairs (prefix-blocked, length-banded,
     threshold-early-exit DP)."""
-    return ops.edit_distance_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", max_dist=5)
+    return llm.edit_distance_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", max_dist=5)
 
 
 # --------------------------------------------------------------------------
@@ -584,12 +584,12 @@ _D9_N = 4
         "same oracle harness locally.",
 )
 def d9_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See operators.llm.decontaminate (broadcast eval grams, map-side
+    """See operators.bloom.decontaminate (broadcast eval grams, map-side
     corpus pipeline, one matched-docs-only aggregate shuffle)."""
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
     eval_df = docs.filter(F.col("doc_id") % 50 == 0)
-    return ops.decontaminate(corpus, eval_df, "doc_id", "text", n=_D9_N)
+    return bloom.decontaminate(corpus, eval_df, "doc_id", "text", n=_D9_N)
 
 
 # --------------------------------------------------------------------------
@@ -670,7 +670,7 @@ def _bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
     def fit():
         docs = load(spark, sf_dir, "documents")
         eval_df = docs.filter(F.col("doc_id") % 50 == 0)
-        return ops.bloom_fit(eval_df, "text", n=_D9_N, m_bits=None, k_hashes=_D14_K)
+        return bloom.bloom_fit(eval_df, "text", n=_D9_N, m_bits=None, k_hashes=_D14_K)
 
     p = os.path.join(sf_dir, "documents.parquet")
     return model_state("bloom", p, (_D9_N, _D14_K), fit)
@@ -689,14 +689,14 @@ def _bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
         "frozen eval suite, like the PQ codebooks).",
 )
 def d14_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See operators.llm.bloom_fit/bloom_flag (bloom_build_bits
+    """See operators.bloom.bloom_fit/bloom_flag (bloom_build_bits
     model-state bitmap + bloom_member pure-projection membership;
     m_bits=None → bloom_auto_m_bits from the eval-side distinct-gram
     count); the fit is session-cached via _bloom_model."""
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
     words, m_bits = _bloom_model(spark, sf_dir)
-    return ops.bloom_flag(
+    return bloom.bloom_flag(
         corpus, "doc_id", "text", words, m_bits, n=_D9_N, k_hashes=_D14_K
     )
 
@@ -744,7 +744,7 @@ def d15_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks))))
     return (
-        ops.cross_group_overlap(docs.select(fp.alias("fp"), "source"), "source", "fp")
+        llm.cross_group_overlap(docs.select(fp.alias("fp"), "source"), "source", "fp")
         .select(
             F.col("group_a").alias("source_a"),
             F.col("group_b").alias("source_b"),
@@ -760,7 +760,7 @@ def d15_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at any corpus scale; the scan side streams map-side). Centroids here
 # are the 8 smallest vec_ids, so the oracle can replay the identical
 # assignment in SQL; the full iterative Lloyd loop is
-# operators.llm.kmeans_lloyd (driver-collected model state per round,
+# operators.vector.kmeans_lloyd (driver-collected model state per round,
 # exact-decimal mean updates — unit-tested against numpy).
 # --------------------------------------------------------------------------
 
@@ -800,7 +800,7 @@ def s3_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < _S3_K).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
-    return ops.kmeans_assign(emb, cent, "vec_id", "embedding")
+    return vector.kmeans_assign(emb, cent, "vec_id", "embedding")
 
 
 # --------------------------------------------------------------------------
@@ -865,7 +865,7 @@ def s4_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < _S4_K).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
-    return ops.pq_encode(emb, cent, "vec_id", "embedding", n_subspaces=_S4_SUBS)
+    return quantized.pq_encode(emb, cent, "vec_id", "embedding", n_subspaces=_S4_SUBS)
 
 
 # --------------------------------------------------------------------------
@@ -903,7 +903,7 @@ _PQ_ITER = 3
 
 
 def _pq_train_ctes(sv: str, k: int, n_iter: int, prefix: str) -> str:
-    """CTE text replaying :func:`operators.llm.pq_train`'s deterministic
+    """CTE text replaying :func:`operators.quantized.pq_train`'s deterministic
     per-subspace Lloyd rounds over a long-form element CTE
     ``{sv}(vec_id, s, p, x)`` (s = subspace, p = 1-based global dim, x =
     double element). Defines ``{prefix}cent(cent_id, c)`` — the trained
@@ -981,7 +981,7 @@ def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def fit():
         emb = load(spark, sf_dir, "embeddings")
-        cent = ops.pq_train(
+        cent = quantized.pq_train(
             emb, "vec_id", "embedding", n_subspaces=_PQ_SUBS, k=_PQ_K, n_iter=_PQ_ITER
         )
         return [(int(r.cent_id), [float(x) for x in r.c_emb]) for r in cent.collect()]
@@ -1038,7 +1038,7 @@ def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s5_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cent = _trained_codebook(spark, sf_dir)
-    return ops.pq_adc_topk(
+    return quantized.pq_adc_topk(
         emb, cent, "vec_id", "embedding",
         probe=F.col("vec_id") < _S5_PROBES, k=_S5_K, n_subspaces=_PQ_SUBS,
         n_codes=_PQ_K,  # known codebook size — skips the per-query count job
@@ -1163,7 +1163,7 @@ def s6_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
     cent = _trained_codebook(spark, sf_dir)
-    return ops.ivfadc_topk(
+    return quantized.ivfadc_topk(
         emb, coarse, cent, "vec_id", "embedding",
         probe=F.col("vec_id") < _S5_PROBES,
         k=_S5_K, nprobe=_S6_NPROBE, n_subspaces=_PQ_SUBS,
@@ -1233,7 +1233,7 @@ def s7_ivfadc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
     cent = _trained_codebook(spark, sf_dir)
-    return ops.ivfadc_rerank_topk(
+    return quantized.ivfadc_rerank_topk(
         emb, coarse, cent, "vec_id", "embedding",
         probe=F.col("vec_id") < _S5_PROBES,
         k=_S5_K, shortlist=_S7_SHORTLIST, nprobe=_S6_NPROBE, n_subspaces=_PQ_SUBS,
@@ -1292,8 +1292,8 @@ def _trained_residual_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         coarse = emb.filter(F.col("vec_id") < _S6_COARSE).select(
             F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
         )
-        res = ops.coarse_residuals(emb, coarse, "vec_id", "embedding")
-        cent = ops.pq_train(
+        res = quantized.coarse_residuals(emb, coarse, "vec_id", "embedding")
+        cent = quantized.pq_train(
             res, "vec_id", "residual", n_subspaces=_S8_SUBS, k=_S8_K, n_iter=_PQ_ITER
         )
         return [(int(r.cent_id), [float(x) for x in r.c_emb]) for r in cent.collect()]
@@ -1376,7 +1376,7 @@ def s8_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the oracle's rsv subtraction + Lloyd replay covers the
     # identical IEEE arithmetic
     cent = _trained_residual_codebook(spark, sf_dir)
-    return ops.ivfadc_residual_topk(
+    return quantized.ivfadc_residual_topk(
         emb, coarse, cent, "vec_id", "embedding",
         probe=F.col("vec_id") < _S5_PROBES,
         k=_S5_K, nprobe=_S6_NPROBE, n_subspaces=_S8_SUBS,
@@ -1430,10 +1430,10 @@ def s8_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         "to PQ (compose with IVF routing at scale exactly like s6).",
 )
 def s9_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See operators.llm.sq8_topk (sq8_minmax model-state range +
+    """See operators.quantized.sq8_topk (sq8_minmax model-state range +
     _sq8_code affine projection + integer-exact scoring)."""
     emb = load(spark, sf_dir, "embeddings")
-    return ops.sq8_topk(emb, "vec_id", "embedding", probe=F.col("vec_id") < _S5_PROBES, k=_S5_K)
+    return quantized.sq8_topk(emb, "vec_id", "embedding", probe=F.col("vec_id") < _S5_PROBES, k=_S5_K)
 
 
 # --------------------------------------------------------------------------
@@ -1499,13 +1499,13 @@ _IVF_SQ8_ORACLE = f"""
         "check_oracle row.",
 )
 def s10_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See operators.llm.ivf_sq8_topk (_coarse_route shared routing +
+    """See operators.quantized.ivf_sq8_topk (_coarse_route shared routing +
     _sq8_fit_encode codes + int64 scoring over the probed cells)."""
     emb = load(spark, sf_dir, "embeddings")
     coarse = emb.filter(F.col("vec_id") < _S6_COARSE).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
-    return ops.ivf_sq8_topk(
+    return quantized.ivf_sq8_topk(
         emb, coarse, "vec_id", "embedding",
         probe=F.col("vec_id") < _S5_PROBES, k=_S5_K, nprobe=_S6_NPROBE,
     )
@@ -1539,13 +1539,13 @@ def s11_ivf_sq8_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing table + SQ8 ranges + cell-partitioned codes; serving reuses
     _coarse_route/_sq8_code/_sq8_d2 so results equal ivf_sq8_topk)."""
     from medvedi_spark.operators import ann_index
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators._persist import scratch_dir
 
     emb = load(spark, sf_dir, "embeddings")
     coarse = emb.filter(F.col("vec_id") < _S6_COARSE).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
-    path = _fmt_tmp(sf_dir, "s11idx")
+    path = scratch_dir(sf_dir, "s11idx")
     ann_index.ivf_sq8_save(emb, coarse, "vec_id", "embedding", path)
     idx = ann_index.ivf_sq8_load(spark, path)
     return ann_index.ivf_sq8_query(
@@ -1579,14 +1579,14 @@ def s12_ivfadc_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ codes + codebooks; serving reuses _coarse_route/_pq_lut so results
     equal ivfadc_topk)."""
     from medvedi_spark.operators import ann_index
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators._persist import scratch_dir
 
     emb = load(spark, sf_dir, "embeddings")
     coarse = emb.filter(F.col("vec_id") < _S6_COARSE).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
     cent = _trained_codebook(spark, sf_dir)
-    path = _fmt_tmp(sf_dir, "s12idx")
+    path = scratch_dir(sf_dir, "s12idx")
     ann_index.ivfadc_save(
         emb, coarse, cent, "vec_id", "embedding", path,
         n_subspaces=_PQ_SUBS, n_codes=_PQ_K,
@@ -1636,14 +1636,14 @@ def s15_ivfadc_index_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ivfadc_scored + sqdist_dec refine over the persisted vectors,
     restricted to the probed cells)."""
     from medvedi_spark.operators import ann_index
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators._persist import scratch_dir
 
     emb = load(spark, sf_dir, "embeddings")
     coarse = emb.filter(F.col("vec_id") < _S6_COARSE).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
     cent = _trained_codebook(spark, sf_dir)
-    path = _fmt_tmp(sf_dir, "s15idx")
+    path = scratch_dir(sf_dir, "s15idx")
     ann_index.ivfadc_save(
         emb, coarse, cent, "vec_id", "embedding", path,
         n_subspaces=_PQ_SUBS, n_codes=_PQ_K, store_vectors=True,
@@ -1696,14 +1696,14 @@ def s16_ivfadc_batched_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection of the disjoint id ranges, never a join key, so the plan
     is exactly s15's serve shape at 3× the query rows."""
     from medvedi_spark.operators import ann_index
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators._persist import scratch_dir
 
     emb = load(spark, sf_dir, "embeddings")
     coarse = emb.filter(F.col("vec_id") < _S6_COARSE).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
     cent = _trained_codebook(spark, sf_dir)
-    path = _fmt_tmp(sf_dir, "s16idx")
+    path = scratch_dir(sf_dir, "s16idx")
     ann_index.ivfadc_save(
         emb, coarse, cent, "vec_id", "embedding", path,
         n_subspaces=_PQ_SUBS, n_codes=_PQ_K, store_vectors=True,
@@ -1795,7 +1795,7 @@ def d10_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < _D10_K).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
-    return ops.semantic_dedup(emb, cent, "vec_id", "embedding", threshold=_D10_TAU)
+    return vector.semantic_dedup(emb, cent, "vec_id", "embedding", threshold=_D10_TAU)
 
 
 # --------------------------------------------------------------------------
@@ -1856,7 +1856,7 @@ _D11_K = 20
 )
 def d11_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return ops.duplicate_spans(docs, "doc_id", "text", k=_D11_K)
+    return bloom.duplicate_spans(docs, "doc_id", "text", k=_D11_K)
 
 
 # --------------------------------------------------------------------------
@@ -1904,7 +1904,7 @@ _D12_T = 0.8
 )
 def d12_gram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return ops.gram_containment_pairs(docs, "doc_id", "text", n=_D12_N, threshold=_D12_T)
+    return jaccard.gram_containment_pairs(docs, "doc_id", "text", n=_D12_N, threshold=_D12_T)
 
 
 # --------------------------------------------------------------------------
@@ -1956,7 +1956,7 @@ _D13_B = 4
 )
 def d13_repeated_block_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return ops.repeated_block_filter(docs, "doc_id", "text", block_words=_D13_B)
+    return bloom.repeated_block_filter(docs, "doc_id", "text", block_words=_D13_B)
 
 
 # --------------------------------------------------------------------------
@@ -2050,7 +2050,7 @@ def d16_fuzzy_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.llm.fuzzy_dedup_survivors (minhash_lsh_pairs →
     connected_components → left_anti drop-list join)."""
     docs = load(spark, sf_dir, "documents")
-    return ops.fuzzy_dedup_survivors(
+    return llm.fuzzy_dedup_survivors(
         docs, "doc_id", "text", threshold=_D16_THRESHOLD
     ).select("doc_id", "source", "n_chars")
 
@@ -2085,12 +2085,12 @@ def d17_fuzzy_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from medvedi_spark.operators import dedup_index
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators._persist import scratch_dir
 
     docs = load(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 3 != 0)
     new = docs.filter(F.col("doc_id") % 3 == 0)
-    path = _fmt_tmp(sf_dir, "d17idx")
+    path = scratch_dir(sf_dir, "d17idx")
     shutil.rmtree(path, ignore_errors=True)
     dedup_index.minhash_index_save(old, "doc_id", "text", path, threshold=_D16_THRESHOLD)
     idx = dedup_index.minhash_index_load(spark, path)
@@ -2125,7 +2125,7 @@ _S13_NQ = 8
 _S13_C = 200
 _S13_K = 10
 
-_S13_SIGNS = ops.jl_sign_matrix(_S13_DIM, _S13_OUT)
+_S13_SIGNS = vector.jl_sign_matrix(_S13_DIM, _S13_OUT)
 _S13_SGNROWS = " UNION ALL ".join(
     f"SELECT {j} AS j, {row} AS sl" for j, row in enumerate(_S13_SIGNS)
 )
@@ -2194,10 +2194,10 @@ _S13_SGNROWS = " UNION ALL ".join(
         "replays the identical sign literals and both ranking stages.",
 )
 def s13_jl_projection_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See operators.llm.jl_topk (jl_sign_matrix + jl_project +
+    """See operators.vector.jl_topk (jl_sign_matrix + jl_project +
     salted two-phase candidate cut + exact rerank)."""
     emb = load(spark, sf_dir, "embeddings")
-    return ops.jl_topk(
+    return vector.jl_topk(
         emb, "vec_id", "embedding",
         probe=F.col("vec_id") < _S13_NQ,
         dim=_S13_DIM, out_dim=_S13_OUT,
@@ -2278,7 +2278,7 @@ _S14_FLIP = 5  # probe = corpus vector with the first 5 dims sign-flipped
         "oracle brute-forces all pairs, proving the prefilter lossless.",
 )
 def s14_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See operators.llm.hamming_topk (srp_signature + multi-index block
+    """See operators.vector.hamming_topk (srp_signature + multi-index block
     prefilter + exact Hamming rank)."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _S14_NQ).select(
@@ -2288,7 +2288,7 @@ def s14_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x, i: F.when(i < _S14_FLIP, -x).otherwise(x),
         ).alias("embedding"),
     )
-    out = ops.hamming_topk(
+    out = vector.hamming_topk(
         emb, queries, "vec_id", "embedding",
         k=_S14_K, radius=_S14_RADIUS, n_bits=_S14_BITS, n_blocks=6,
     )
@@ -2386,7 +2386,7 @@ def p11_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("val"),
         ).otherwise(F.lit("train")).alias("split"),
     )
-    pairs = ops.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.8)
+    pairs = llm.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.8)
     sa = split.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
     sb = split.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b"))
     return (
@@ -2476,7 +2476,7 @@ def p11_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(CORRECTNESS_local_r7) + unit tests; gates next rotation.",
 )
 def d18_exact_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See operators.llm.exact_substring_removal (duplicate_span_rows +
+    """See operators.bloom.exact_substring_removal (duplicate_span_rows +
     sorted-span gap-fold rewrite)."""
     docs = load(spark, sf_dir, "documents")
-    return ops.exact_substring_removal(docs, "doc_id", "text", k=_D11_K)
+    return bloom.exact_substring_removal(docs, "doc_id", "text", k=_D11_K)

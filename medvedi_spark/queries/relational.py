@@ -643,17 +643,10 @@ def q18_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("session", "window"),
 )
 def q19_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from medvedi_spark.operators.relational import sessionize
+
     events = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    w_cum = Window.partitionBy("user_id").orderBy("ts").rowsBetween(Window.unboundedPreceding, 0)
-    flagged = events.withColumn(
-        "is_new",
-        F.when(
-            F.col("ts").cast("long") - F.lag(F.col("ts")).over(w).cast("long") > 1800,
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    sessions = flagged.withColumn("session_id", F.sum("is_new").over(w_cum))
+    sessions = sessionize(events, "ts", 1800, ["user_id"], order_tiebreak=["event_id"])
     return sessions.groupBy("user_id").agg(
         F.countDistinct("session_id").alias("n_sessions"),
         F.count(F.lit(1)).alias("n_events"),

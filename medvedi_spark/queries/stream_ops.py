@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from medvedi_spark.queries._det import DEC
 from medvedi_spark.queries.registry import register
-from medvedi_spark.streaming.ops import read_events_stream, run_to_memory
+from medvedi_spark.streaming.ops import read_events_stream, read_table_stream, run_to_memory
 
 # --------------------------------------------------------------------------
 # st1 — tumbling-window aggregation (6h windows, epoch-aligned like
@@ -386,20 +386,6 @@ def st8_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from medvedi_spark.streaming.ops import stream_source_schema
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = stream_source_schema(spark, path)
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
-
 _ST9_MIN_TOKENS = 20
 _ST9_STOPS = {
     "en": ("the", "a", "of", "and"),
@@ -443,7 +429,7 @@ _ST9_COUNTS_SQL = ",\n             ".join(
         "watermarked form when recency-bounded dedup is acceptable.",
 )
 def st9_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read_documents_stream(spark, sf_dir)
+    docs = read_table_stream(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     counted = docs.select(
         "text",
@@ -493,7 +479,7 @@ def _st10_row_minhash_bands(harr: str) -> Column:
     row-wise equivalent of `minhash_agg_cols` + d3's band assembly. One
     ``F.expr`` string (the nested-lambda fold composed through the
     functions API is several hundred py4j round-trips per plan build;
-    see the kernel note in operators/llm.py)."""
+    see the kernel note in operators/kernels.py)."""
     from medvedi_spark.functions.hashing import MINHASH_COEFFS, MINHASH_PRIME, _ident
 
     n_bands = len(MINHASH_COEFFS) // 2  # two-min bands, same as minhash_band_index
@@ -640,7 +626,7 @@ def st10_stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_toks = csigs.select(F.col("doc_id").alias("dup_of"), F.col("toks").alias("toks_c"))
 
     # ---- arriving documents: row-wise shingle -> hash -> minhash bands
-    stream = _read_documents_stream(spark, sf_dir).filter(F.col("doc_id") % 10 == 0)
+    stream = read_table_stream(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
     cand = _stream_minhash_candidates(stream)
     # stream-static band join (stateless) + static verify join; exact
     # hash-set Jaccard decides, bands only propose
@@ -749,20 +735,6 @@ def st12_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from medvedi_spark.streaming.ops import stream_source_schema
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    schema = stream_source_schema(spark, path)
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def _st13_oracle() -> str:
     from medvedi_spark.queries.llm_ops import _COARSE_CTES, _SQ8_CODE_CTES
 
@@ -793,13 +765,9 @@ def st13_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators.llm import (
-        _argmin_cell,
-        _sq8_code,
-        _sq8_range_literals,
-        _sq8_train,
-    )
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators.kernels import _argmin_cell, _sq8_code
+    from medvedi_spark.operators.quantized import _sq8_range_literals, _sq8_train
+    from medvedi_spark.operators._persist import scratch_dir
     from medvedi_spark.queries.llm_ops import _S6_COARSE
     from medvedi_spark.streaming.ops import run_to_parquet
 
@@ -817,7 +785,7 @@ def st13_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ordering on (d2, cent_id) — the same ranking _coarse_route's window
     # uses, expressed without a window so it is streaming-legal (one F.expr
     # string in _argmin_cell)
-    enc = _read_embeddings_stream(spark, sf_dir).select(
+    enc = read_table_stream(spark, sf_dir, "embeddings").select(
         F.col("vec_id"),
         _argmin_cell("embedding", cents).alias("cell"),
         _sq8_code("embedding", vmin_vals, vmax_vals).alias("codes"),
@@ -825,7 +793,7 @@ def st13_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fresh sink per invocation: the file sink is append-only by design,
     # so a rerun against a stale checkpoint would no-op and a stale dir
     # without the checkpoint would double-ingest
-    path = _fmt_tmp(sf_dir, "st13idx")
+    path = scratch_dir(sf_dir, "st13idx")
     shutil.rmtree(path, ignore_errors=True)
     run_to_parquet(enc, path, partition_by=("cell",))
     back = spark.read.parquet(path)
@@ -876,7 +844,7 @@ def _st14_oracle() -> str:
         "d14 result (the availableNow drain ingests every row once).",
 )
 def st14_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from medvedi_spark.operators.llm import bloom_flag
+    from medvedi_spark.operators.bloom import bloom_flag
     from medvedi_spark.queries.llm_ops import _D9_N, _D14_K, _bloom_model
 
     # fit batch-side ONCE per frozen eval suite: the session-cached model
@@ -884,7 +852,7 @@ def st14_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # literal n/k here would silently desync membership tests from the
     # bitmap if the d9/d14 constants ever move (no-false-negative break).
     words, m_bits = _bloom_model(spark, sf_dir)
-    stream = _read_documents_stream(spark, sf_dir).filter(F.col("doc_id") % 50 != 0)
+    stream = read_table_stream(spark, sf_dir, "documents").filter(F.col("doc_id") % 50 != 0)
     flagged = bloom_flag(
         stream, "doc_id", "text", words, m_bits, n=_D9_N, k_hashes=_D14_K
     )
@@ -926,7 +894,7 @@ def _st15_oracle() -> str:
 def st15_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.queries.text_ops import gopher_rules_frame
 
-    stream = _read_documents_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "documents")
     return run_to_memory(gopher_rules_frame(stream), output_mode="append")
 
 
@@ -972,11 +940,11 @@ def _span_bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]
     """The fitted span bitmap (model state, like d14/st14's
     ``_bloom_model``): fitted once per corpus generation."""
     from medvedi_spark.catalog import load, model_state
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import bloom
 
     def fit():
         docs = load(spark, sf_dir, "documents")
-        return ops.span_bloom_fit(docs, "doc_id", "text", k_gram=_ST16_K, k_hashes=_ST16_H)
+        return bloom.span_bloom_fit(docs, "doc_id", "text", k_gram=_ST16_K, k_hashes=_ST16_H)
 
     p = os.path.join(sf_dir, "documents.parquet")
     return model_state("span_bloom", p, (_ST16_K, _ST16_H), fit)
@@ -1058,14 +1026,14 @@ def _span_bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]
         "Driver-proven r8; gates the r9 rotation (code changed).",
 )
 def st16_stream_span_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import bloom
 
     words, m_bits = _span_bloom_model(spark, sf_dir)
-    stream = _read_documents_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "documents")
     ingest_parts = _st16_ingest_partitions()
     if ingest_parts > 0:
         stream = stream.repartition(ingest_parts)
-    flagged = ops.bloom_span_flag(
+    flagged = bloom.bloom_span_flag(
         stream, "doc_id", "text", words, m_bits, k_gram=_ST16_K, k_hashes=_ST16_H
     )
     return run_to_memory(flagged, output_mode="append")
@@ -1153,14 +1121,14 @@ def st17_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from medvedi_spark.catalog import load
     from medvedi_spark.operators import dedup_index
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators._persist import scratch_dir
 
     docs = load(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 3 != 0)
     # index lifecycle: build+save is part of the registered query (the
     # s11/s12/d17 convention — the serve half is what the scale story
     # rests on; the build cost is the query's recorded price)
-    path = _fmt_tmp(sf_dir, "st17idx")
+    path = scratch_dir(sf_dir, "st17idx")
     shutil.rmtree(path, ignore_errors=True)
     dedup_index.minhash_index_save(
         old, "doc_id", "text", path, threshold=_D16_THRESHOLD
@@ -1171,7 +1139,7 @@ def st17_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("dup_of"), F.col("toks").alias("toks_c")
     )
 
-    stream = _read_documents_stream(spark, sf_dir).filter(F.col("doc_id") % 3 == 0)
+    stream = read_table_stream(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
     cand = _stream_minhash_candidates(stream)
     shared = F.size(F.array_intersect("toks", "toks_c"))
     union = F.size("toks") + F.size("toks_c") - shared
@@ -1295,14 +1263,14 @@ def st17_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "st16-consistency unit tests; gates next rotation.",
 )
 def st18_stream_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import bloom
 
     words, m_bits = _span_bloom_model(spark, sf_dir)
-    stream = _read_documents_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "documents")
     ingest_parts = _st16_ingest_partitions()
     if ingest_parts > 0:
         stream = stream.repartition(ingest_parts)
-    cleaned = ops.bloom_span_remove(
+    cleaned = bloom.bloom_span_remove(
         stream, "doc_id", "text", words, m_bits, k_gram=_ST16_K, k_hashes=_ST16_H
     )
     return run_to_memory(cleaned, output_mode="append")

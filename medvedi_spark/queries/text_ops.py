@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from medvedi_spark.catalog import load
 from medvedi_spark.functions.hashing import sql_token_hash
-from medvedi_spark.operators.llm import word_tokens
+from medvedi_spark.operators.kernels import word_tokens
 from medvedi_spark.queries.registry import register
 
 # Stopword lists for the n-gram language-ID heuristic. Tiny by design:
@@ -873,7 +873,8 @@ def p4_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the d8 ruling): sf0.1 measured 10.5 s naive-order -> 6.0 s
     # reordered -> 5.5 s with the barrier, identical output.
     from medvedi_spark.functions.hashing import token_hash
-    from medvedi_spark.operators.llm import decontaminate, pack_sequences
+    from medvedi_spark.operators.bloom import decontaminate
+    from medvedi_spark.operators.llm import pack_sequences
 
     docs = load(spark, sf_dir, "documents")
     eval_df = docs.filter(F.col("doc_id") % 50 == 0)
@@ -1870,9 +1871,9 @@ def p9_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "harness locally plus the shard-size unit test.",
 )
 def p10_export_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators._persist import scratch_dir
 
-    path = _fmt_tmp(sf_dir, "p10")
+    path = scratch_dir(sf_dir, "p10")
     docs = load(spark, sf_dir, "documents").filter(F.col("n_chars") >= 10)
     (
         docs.select("doc_id", "text", "n_chars", "lang")

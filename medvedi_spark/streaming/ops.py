@@ -55,22 +55,21 @@ def stream_source_schema(spark: SparkSession, path: str):
 _STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"))
 
 
+def read_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream of the parquet table ``table`` in ``sf_dir``."""
+    schema = stream_source_schema(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    # The file source requires a directory; glob-filter to the one table.
+    return spark.readStream.schema(schema).option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table (ts normalized like catalog.load)."""
     from ..catalog import ensure_session_confs, normalize_event_ts
 
     ensure_session_confs(spark)  # nanosAsLong etc. — portable to any session
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = stream_source_schema(spark, path)
-    # The file source requires a directory; glob-filter to the one table.
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
     # Schema-adaptive ns→µs / ntz→tz normalization shared with the batch
     # loader — the on-disk encoding has changed between data generations.
-    return normalize_event_ts(stream)
+    return normalize_event_ts(read_table_stream(spark, sf_dir, "events"))
 
 
 #: Spark's checkpoint manager over the Hadoop ``FileSystem`` API, used for

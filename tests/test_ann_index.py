@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from medvedi_spark.catalog import load
-from medvedi_spark.operators import ann_index, llm
+from medvedi_spark.operators import ann_index, quantized
 from tests.test_plans import _collect_plan_nodes
 
 N_CELLS = 8
@@ -44,7 +44,7 @@ def test_roundtrip_equals_inline(spark, sf_dir, idx_path):
     loaded = ann_index.ivf_sq8_query(
         idx, emb.filter(F.col("vec_id") < 5), "vec_id", "embedding", k=K, nprobe=NPROBE
     )
-    inline = llm.ivf_sq8_topk(
+    inline = quantized.ivf_sq8_topk(
         emb, _coarse(emb), "vec_id", "embedding",
         probe=F.col("vec_id") < 5, k=K, nprobe=NPROBE,
     )
@@ -137,7 +137,7 @@ def test_ivfadc_roundtrip_equals_inline(spark, sf_dir, idx_path):
     loaded = ann_index.ivfadc_query(
         idx, emb.filter(F.col("vec_id") < 5), "vec_id", "embedding", k=K, nprobe=NPROBE
     )
-    inline = llm.ivfadc_topk(
+    inline = quantized.ivfadc_topk(
         emb, _coarse(emb), pq_cents, "vec_id", "embedding",
         probe=F.col("vec_id") < 5, k=K, nprobe=NPROBE, n_subspaces=8, n_codes=16,
         vectorized_encode=True,
@@ -170,7 +170,7 @@ def test_ivfadc_rerank_roundtrip_equals_inline(spark, sf_dir, idx_path):
         idx, emb.filter(F.col("vec_id") < 5), "vec_id", "embedding",
         k=K, shortlist=15, nprobe=NPROBE,
     )
-    inline = llm.ivfadc_rerank_topk(
+    inline = quantized.ivfadc_rerank_topk(
         emb, _coarse(emb), pq_cents, "vec_id", "embedding",
         probe=F.col("vec_id") < 5, k=K, shortlist=15, nprobe=NPROBE,
         n_subspaces=8, n_codes=16, vectorized_encode=True,

@@ -7,10 +7,10 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-import medvedi_spark.operators.llm as llm
 from medvedi_spark.catalog import load
 from medvedi_spark.functions.hashing import minhash_agg_cols
-from medvedi_spark.operators.llm import _jaccard_bitset, _jaccard_prefix_filter
+from medvedi_spark.operators import kernels, quantized
+from medvedi_spark.operators.jaccard import _jaccard_bitset, _jaccard_prefix_filter
 
 
 @pytest.fixture(autouse=True)
@@ -89,7 +89,7 @@ def test_d7_wide_bitset_agrees_with_prefix_filter(spark, sf_dir):
     """The wide-bitset (array<bigint> mask) path and the prefix-filter
     path are the same exact function on character trigrams — identical
     pair sets and bit-identical jaccard values."""
-    from medvedi_spark.operators.llm import _jaccard_bitset_wide, char_ngrams_distinct
+    from medvedi_spark.operators.jaccard import _jaccard_bitset_wide, char_ngrams_distinct
 
     grams = char_ngrams_distinct(load(spark, sf_dir, "documents"), "doc_id", "text", 3)
     vocab = grams.select("t").distinct()
@@ -108,7 +108,7 @@ def test_d7_shuffled_tier_agrees_with_broadcast_tier(spark, sf_dir):
     fallback) is the same exact function as the broadcast wide-bitset
     tier — identical pair sets, bit-identical jaccard — and its plan
     contains no broadcast of the mask table and no cartesian node."""
-    from medvedi_spark.operators.llm import (
+    from medvedi_spark.operators.jaccard import (
         _jaccard_bitset_wide,
         _jaccard_bitset_wide_shuffled,
         char_ngrams_distinct,
@@ -131,17 +131,17 @@ def test_d7_shuffled_tier_agrees_with_broadcast_tier(spark, sf_dir):
 def test_router_picks_shuffled_tier_past_broadcast_cap(spark, monkeypatch):
     """Force a tiny broadcast cap: the adaptive router must route to the
     shuffled tier and still produce the exact pair set."""
-    import medvedi_spark.operators.llm as llm
+    from medvedi_spark.operators import jaccard
 
     docs = spark.createDataFrame(
         [(1, "aa ab ba bb"), (2, "aa ab ba bb"), (3, "aa ab ba zz"), (4, "qq rr ss tt")],
         ["id", "body"],
     )
     expect = [(1, 2, 1.0), (1, 3, 0.6), (2, 3, 0.6)]
-    normal = llm.token_jaccard_pairs(docs, "id", "body", threshold=0.5)
+    normal = jaccard.token_jaccard_pairs(docs, "id", "body", threshold=0.5)
     assert sorted((r.doc_a, r.doc_b, round(r.jaccard, 3)) for r in normal.collect()) == expect
-    monkeypatch.setattr(llm, "_mask_broadcast_cap", lambda nwords: 1)
-    forced = llm.token_jaccard_pairs(docs, "id", "body", threshold=0.5)
+    monkeypatch.setattr(jaccard, "_mask_broadcast_cap", lambda nwords: 1)
+    forced = jaccard.token_jaccard_pairs(docs, "id", "body", threshold=0.5)
     assert sorted((r.doc_a, r.doc_b, round(r.jaccard, 3)) for r in forced.collect()) == expect
 
 
@@ -180,7 +180,7 @@ def test_repeated_block_filter_semantics(spark):
     order, all-boilerplate docs collapse to '' but keep their row."""
     import pandas as pd
 
-    from medvedi_spark.operators.llm import repeated_block_filter
+    from medvedi_spark.operators.bloom import repeated_block_filter
 
     dup = "dup1 dup2 dup3 dup4"
     docs = pd.DataFrame(
@@ -211,7 +211,7 @@ def test_repeated_block_filter_plan_skew_safe(spark, sf_dir):
     block-keyed window (a corpus-wide boilerplate block would land on
     one task), and nothing row-at-a-time Python."""
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators.llm import repeated_block_filter
+    from medvedi_spark.operators.bloom import repeated_block_filter
 
     docs = load(spark, sf_dir, "documents")
     plan = repeated_block_filter(docs, "doc_id", "text")._jdf.queryExecution().executedPlan().toString()
@@ -230,7 +230,7 @@ def test_repeated_block_filter_property_vs_bruteforce(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from medvedi_spark.operators.llm import repeated_block_filter
+    from medvedi_spark.operators.bloom import repeated_block_filter
 
     B = 2
     word = st.sampled_from(["a", "b", "c"])
@@ -300,10 +300,10 @@ def test_argmin_cell_matches_coarse_route_ranking(emb_df):
     inrow = {
         r["vec_id"]: r["cell"]
         for r in emb_df.select(
-            "vec_id", llm._argmin_cell("embedding", cents).alias("cell")
+            "vec_id", kernels._argmin_cell("embedding", cents).alias("cell")
         ).collect()
     }
-    assign, _ = llm._coarse_route(
+    assign, _ = quantized._coarse_route(
         emb_df.select("vec_id", "embedding"), cents_df, F.lit(False), 1
     )
     windowed = {r["vec_id"]: r["cell"] for r in assign.collect()}
@@ -318,6 +318,6 @@ def test_non_finite_model_state_is_rejected(kernel, bad):
     instead of building a plan."""
     with pytest.raises(ValueError, match=f"literal for {bad!r}:"):
         if kernel == "argmin_cell":
-            llm._argmin_cell("embedding", [{"cent_id": 0, "c_emb": [1.0, bad, 0.5]}])
+            kernels._argmin_cell("embedding", [{"cent_id": 0, "c_emb": [1.0, bad, 0.5]}])
         else:
-            llm._sq8_code("embedding", [0.0, bad], [1.0, 2.0])
+            kernels._sq8_code("embedding", [0.0, bad], [1.0, 2.0])

@@ -8,7 +8,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from medvedi_spark.operators import llm, relational
+from medvedi_spark.operators import bloom, jaccard, llm, quantized, relational, vector
 
 
 def _ts(h, m=0):
@@ -142,8 +142,8 @@ def test_token_jaccard_custom_threshold(spark):
         "id long, body string",
     )
     # J(1,2) = 3/5 = 0.6 — visible at 0.5, gone at 0.7
-    lo = llm.token_jaccard_pairs(docs, "id", "body", threshold=0.5)
-    hi = llm.token_jaccard_pairs(docs, "id", "body", threshold=0.7)
+    lo = jaccard.token_jaccard_pairs(docs, "id", "body", threshold=0.5)
+    hi = jaccard.token_jaccard_pairs(docs, "id", "body", threshold=0.7)
     assert [(r.doc_a, r.doc_b, round(r.jaccard, 3)) for r in lo.collect()] == [(1, 2, 0.6)]
     assert hi.count() == 0
 
@@ -163,35 +163,12 @@ def test_simhash_identical_docs_hamming_zero(spark):
     assert [(r.doc_a, r.doc_b, r.hamming) for r in rows] == [(1, 2, 0)]
 
 
-def test_map_numpy_arrow_batches(spark):
-    from medvedi_spark.operators.arrow_ops import map_numpy
-
-    df = spark.range(0, 1000).selectExpr("id", "CAST(id * 2 AS DOUBLE) AS v")
-    out = map_numpy(
-        df, lambda cols: {"id": cols["id"], "v3": cols["v"] * 3.0}, schema="id long, v3 double"
-    )
-    rows = {r.id: r.v3 for r in out.collect()}
-    assert len(rows) == 1000 and rows[7] == 42.0
-
-
-def test_l2_normalize_embeddings(spark, sf_dir):
-    import numpy as np
-
-    from medvedi_spark.catalog import load
-    from medvedi_spark.operators.arrow_ops import l2_normalize
-
-    emb = load(spark, sf_dir, "embeddings")
-    out = l2_normalize(emb, "vec_id", "embedding").collect()
-    assert len(out) == emb.count()
-    for r in out[:20]:
-        assert abs(np.linalg.norm(r.embedding) - 1.0) < 1e-12
-
-
 @pytest.mark.parametrize("edge_cap", [5_000_000, 0])  # numpy-contract path / distributed path
 def test_connected_components_chain_and_islands(spark, edge_cap, monkeypatch):
-    from medvedi_spark.operators.llm import connected_components
+    from medvedi_spark.operators import graph
+    from medvedi_spark.operators.graph import connected_components
 
-    monkeypatch.setattr(llm, "_SMALL_GRAPH_EDGES", edge_cap)
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_EDGES", edge_cap)
 
     # chain 1-2-3-4 (one component), pair 10-11, isolated via self-loop 99-99
     edges = spark.createDataFrame(
@@ -299,13 +276,13 @@ def test_decontaminate_span_semantics(spark):
         "doc_id bigint, text string",
     )
     eval_df = spark.createDataFrame([(100, "b c d e f")], "doc_id bigint, text string")
-    out = llm.decontaminate(corpus, eval_df, "doc_id", "text", n=3)
+    out = bloom.decontaminate(corpus, eval_df, "doc_id", "text", n=3)
     got = {r.doc_id: (r.n_shared_grams, r.n_eval_docs) for r in out.collect()}
     # doc 1 shares "b c d"/"c d e"; doc 3 shares "c d e"/"d e f"; doc 2 clean
     assert got[1] == (2, 1) and got[3] == (2, 1) and 2 not in got
     # docs shorter than n produce no grams -> never flagged
     short = spark.createDataFrame([(9, "b c")], "doc_id bigint, text string")
-    assert llm.decontaminate(short, eval_df, "doc_id", "text", n=3).count() == 0
+    assert bloom.decontaminate(short, eval_df, "doc_id", "text", n=3).count() == 0
 
 
 def test_bloom_decontaminate_no_false_negatives(spark, sf_dir):
@@ -317,19 +294,18 @@ def test_bloom_decontaminate_no_false_negatives(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
     eval_df = docs.filter(F.col("doc_id") % 50 == 0)
-    exact = {r.doc_id for r in llm.decontaminate(corpus, eval_df, "doc_id", "text", n=4).collect()}
+    exact = {r.doc_id for r in bloom.decontaminate(corpus, eval_df, "doc_id", "text", n=4).collect()}
     for m_bits in (256, 65536):
-        bloom = {
+        words, m = bloom.bloom_fit(eval_df, "text", n=4, m_bits=m_bits, k_hashes=3)
+        flagged = {
             r.doc_id: r.hit_grams
-            for r in llm.bloom_decontaminate(
-                corpus, eval_df, "doc_id", "text", n=4, m_bits=m_bits, k_hashes=3
-            ).collect()
+            for r in bloom.bloom_flag(corpus, "doc_id", "text", words, m, n=4, k_hashes=3).collect()
         }
-        assert exact <= set(bloom), f"false negatives at m_bits={m_bits}"
+        assert exact <= set(flagged), f"false negatives at m_bits={m_bits}"
     # At a deliberately-saturated 256-bit filter the deterministic
     # false-positive tail must appear (that's the prefilter contract:
     # recall 1.0, precision < 1.0, resolved by the exact pass downstream).
-    assert len(bloom := set(bloom)) >= len(exact)
+    assert len(flagged := set(flagged)) >= len(exact)
 
 
 def test_bloom_member_matches_position_set(spark):
@@ -343,7 +319,7 @@ def test_bloom_member_matches_position_set(spark):
     vals = [f"tok{i}" for i in range(64)]
     df = spark.createDataFrame([(v,) for v in vals], "v string")
     m_bits, k = 512, 3
-    bits = llm.bloom_build_bits(df.limit(20), "v", m_bits=m_bits, k_hashes=k)
+    bits = bloom.bloom_build_bits(df.limit(20), "v", m_bits=m_bits, k_hashes=k)
 
     def positions(v: str) -> list[int]:
         d = hashlib.md5(v.encode()).hexdigest()
@@ -357,7 +333,7 @@ def test_bloom_member_matches_position_set(spark):
     got = {
         r.v: r.m
         for r in df.select(
-            "v", llm.bloom_member("v", bits, m_bits, k).alias("m")
+            "v", bloom.bloom_member("v", bits, m_bits, k).alias("m")
         ).collect()
     }
     for v in vals:
@@ -371,13 +347,8 @@ def test_bloom_decontaminate_plan_is_joinless(spark, sf_dir):
     from medvedi_spark.catalog import load
 
     docs = load(spark, sf_dir, "documents")
-    out = llm.bloom_decontaminate(
-        docs.filter(F.col("doc_id") % 50 != 0),
-        docs.filter(F.col("doc_id") % 50 == 0),
-        "doc_id",
-        "text",
-        n=4,
-    )
+    words, m_bits = bloom.bloom_fit(docs.filter(F.col("doc_id") % 50 == 0), "text", n=4)
+    out = bloom.bloom_flag(docs.filter(F.col("doc_id") % 50 != 0), "doc_id", "text", words, m_bits, n=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan and "Exchange" not in plan
 
@@ -421,7 +392,7 @@ def test_kmeans_lloyd_matches_numpy(spark, sf_dir):
     from medvedi_spark.catalog import load
 
     emb = load(spark, sf_dir, "embeddings")
-    assign, cents = llm.kmeans_lloyd(emb, "vec_id", "embedding", k=4, n_iter=2)
+    assign, cents = vector.kmeans_lloyd(emb, "vec_id", "embedding", k=4, n_iter=2)
 
     rows = sorted(emb.select("vec_id", "embedding").collect(), key=lambda r: r.vec_id)
     ids = np.array([r.vec_id for r in rows])
@@ -447,7 +418,7 @@ def test_pq_encode_matches_numpy(spark, sf_dir):
     cent = emb.filter(F.col("vec_id") < 16).selectExpr(
         "vec_id AS cent_id", "embedding AS c_emb"
     )
-    out = llm.pq_encode(emb, cent, "vec_id", "embedding", n_subspaces=8)
+    out = quantized.pq_encode(emb, cent, "vec_id", "embedding", n_subspaces=8)
 
     rows = sorted(emb.select("vec_id", "embedding").collect(), key=lambda r: r.vec_id)
     X = np.array([[float(x) for x in r.embedding] for r in rows])
@@ -467,7 +438,7 @@ def test_sq8_topk_matches_numpy(spark, sf_dir):
     from medvedi_spark.catalog import load
 
     emb = load(spark, sf_dir, "embeddings")
-    out = llm.sq8_topk(emb, "vec_id", "embedding", probe=F.col("vec_id") < 3, k=5)
+    out = quantized.sq8_topk(emb, "vec_id", "embedding", probe=F.col("vec_id") < 3, k=5)
     rows = sorted(emb.select("vec_id", "embedding").collect(), key=lambda r: r.vec_id)
     X = np.array([[float(x) for x in r.embedding] for r in rows])
     vmin, vmax = X.min(axis=0), X.max(axis=0)
@@ -491,9 +462,9 @@ def test_sq8_codes_range_and_constant_dim(spark):
         [(0, [0.0, 7.5]), (1, [1.0, 7.5]), (2, [0.25, 7.5])],
         "vec_id int, embedding array<double>",
     )
-    stats = {r.dim: (r.vmin, r.vmax) for r in llm.sq8_minmax(emb, "embedding").collect()}
+    stats = {r.dim: (r.vmin, r.vmax) for r in quantized.sq8_minmax(emb, "embedding").collect()}
     assert stats == {1: (0.0, 1.0), 2: (7.5, 7.5)}
-    out = llm.sq8_topk(emb, "vec_id", "embedding", probe=F.col("vec_id") == 0, k=2)
+    out = quantized.sq8_topk(emb, "vec_id", "embedding", probe=F.col("vec_id") == 0, k=2)
     rows = {r.neighbor_id: r.d2 for r in out.collect()}
     # neighbor 2 is 0.25 of the dim-1 range away = code 64; neighbor 1 = 255
     assert rows == {2: 64 * 64, 1: 255 * 255}
@@ -510,7 +481,7 @@ def test_gram_containment_detects_subset_doc(spark):
         "doc_id int, text string",
     )
     rows = {(r.doc_a, r.doc_b): r.containment for r in
-            llm.gram_containment_pairs(df, "doc_id", "text", n=3, threshold=0.8).collect()}
+            jaccard.gram_containment_pairs(df, "doc_id", "text", n=3, threshold=0.8).collect()}
     assert rows == {(1, 2): 1.0}  # contained→container only, not reversed
 
 
@@ -521,7 +492,7 @@ def _gopher_plan(docs):
 
 
 def _bloom_plan(docs):
-    return llm.bloom_flag(docs, "doc_id", "text", [0, -1, 5, 1 << 62], 256, n=4, k_hashes=3)
+    return bloom.bloom_flag(docs, "doc_id", "text", [0, -1, 5, 1 << 62], 256, n=4, k_hashes=3)
 
 
 @pytest.mark.parametrize("build", [_gopher_plan, _bloom_plan], ids=["gopher_rules_frame", "bloom_flag"])

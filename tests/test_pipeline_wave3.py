@@ -10,7 +10,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from medvedi_spark.catalog import load
-from medvedi_spark.operators.llm import semantic_dedup
+from medvedi_spark.operators.vector import semantic_dedup
 from medvedi_spark.queries.text_ops import (
     _P6_SIZE,
     _P6_STRIDE,

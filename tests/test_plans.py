@@ -242,7 +242,7 @@ def test_s6_ivfadc_cell_bounded(spark, sf_dir, qmap):
     from pyspark.sql import functions as F
 
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import quantized
 
     emb = load(spark, sf_dir, "embeddings")
     n_corpus = emb.count()
@@ -253,7 +253,7 @@ def test_s6_ivfadc_cell_bounded(spark, sf_dir, qmap):
     cent = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
-    all_scored = ops.ivfadc_topk(
+    all_scored = quantized.ivfadc_topk(
         emb, coarse, cent, "vec_id", "embedding",
         probe=F.col("vec_id") < n_queries, k=n_corpus, nprobe=2, n_subspaces=8,
     ).count()
@@ -277,7 +277,7 @@ def test_s10_ivf_sq8_cell_bounded(spark, sf_dir, qmap):
     from pyspark.sql import functions as F
 
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import quantized
 
     emb = load(spark, sf_dir, "embeddings")
     n_corpus = emb.count()
@@ -285,7 +285,7 @@ def test_s10_ivf_sq8_cell_bounded(spark, sf_dir, qmap):
     coarse = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
-    all_scored = ops.ivf_sq8_topk(
+    all_scored = quantized.ivf_sq8_topk(
         emb, coarse, "vec_id", "embedding",
         probe=F.col("vec_id") < n_queries, k=n_corpus, nprobe=2,
     ).count()
@@ -334,9 +334,9 @@ def test_c19_scan_is_partition_pruned(spark, sf_dir, qmap):
     ]
     assert scans, "no parquet scan node found"
     num_files = int(scans[0].metrics().apply("numFiles").value())
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators._persist import scratch_dir
 
-    root = _fmt_tmp(sf_dir, "c19part")
+    root = scratch_dir(sf_dir, "c19part")
     en_files = len(glob.glob(os.path.join(root, "lang=en", "*.parquet")))
     all_files = len(glob.glob(os.path.join(root, "lang=*", "*.parquet")))
     assert num_files == en_files, (num_files, en_files)

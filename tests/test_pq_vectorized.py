@@ -1,6 +1,6 @@
 """Vectorized (Arrow/numpy) PQ encode vs the default decimal path.
 
-`operators.llm._pq_encode_vectorized` promises BIT-IDENTICAL codes to the
+`operators.quantized._pq_encode_vectorized` promises BIT-IDENTICAL codes to the
 decimal path (and therefore to the DuckDB oracle): certified float64
 argmin inside one zero-shuffle `mapInPandas`, with a Python-`decimal`
 replica of `sqdist_dec` re-judging any candidate the float64 error bound
@@ -18,7 +18,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from medvedi_spark.operators.llm import pq_encode
+from medvedi_spark.operators.quantized import pq_encode
 
 
 def _symdiff(a, b) -> int:

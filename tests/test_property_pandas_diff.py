@@ -201,7 +201,7 @@ def _brute_duplicate_spans(docs, k):
 def test_duplicate_spans_matches_bruteforce(spark, texts):
     """The aggregate+semi-join shape must produce exactly the brute-force
     cross-doc duplicate spans on adversarial tiny-alphabet corpora."""
-    from medvedi_spark.operators.llm import duplicate_spans
+    from medvedi_spark.operators.bloom import duplicate_spans
 
     k = 4
     docs = list(enumerate(texts))
@@ -247,7 +247,7 @@ def test_gram_containment_matches_bruteforce(spark, texts, t):
     off-by-one in the m - ceil(t*m) + 1 prefix size silently drops
     candidates) — brute-force containment over tiny-alphabet corpora is
     the ground truth."""
-    from medvedi_spark.operators.llm import gram_containment_pairs
+    from medvedi_spark.operators.jaccard import gram_containment_pairs
 
     n = 2
     docs = list(enumerate(texts))

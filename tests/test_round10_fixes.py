@@ -23,7 +23,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from medvedi_spark.operators import llm as ops
+from medvedi_spark.operators import bloom, jaccard
 
 
 def _docs(spark, n=40):
@@ -50,8 +50,8 @@ def test_bloom_flag_large_m_literal_and_joinless(spark):
     per-row bitmap inlining was the 150×-probe regression)."""
     docs = _docs(spark)
     ev = docs.filter("doc_id % 10 = 0")
-    words, _ = ops.bloom_fit(ev, "text", n=4, m_bits=_BIG_M)
-    out = ops.bloom_flag(docs, "doc_id", "text", words, _BIG_M, n=4)
+    words, _ = bloom.bloom_fit(ev, "text", n=4, m_bits=_BIG_M)
+    out = bloom.bloom_flag(docs, "doc_id", "text", words, _BIG_M, n=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan[:2000]
     rows = out.orderBy("doc_id").collect()
@@ -67,26 +67,26 @@ def test_bloom_span_flag_large_m_streaming_legal(spark, sf_dir):
     readStream frame at large m and matching the batch run
     row-for-row."""
     from medvedi_spark.catalog import load
-    from medvedi_spark.queries.stream_ops import _read_documents_stream, run_to_memory
+    from medvedi_spark.streaming.ops import read_table_stream, run_to_memory
 
     docs = load(spark, sf_dir, "documents")
-    words, m = ops.span_bloom_fit(docs, "doc_id", "text", k_gram=20, m_bits=_BIG_M)
+    words, m = bloom.span_bloom_fit(docs, "doc_id", "text", k_gram=20, m_bits=_BIG_M)
     assert m == _BIG_M
-    stream = _read_documents_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "documents")
     got = run_to_memory(
-        ops.bloom_span_flag(stream, "doc_id", "text", words, m, k_gram=20),
+        bloom.bloom_span_flag(stream, "doc_id", "text", words, m, k_gram=20),
         output_mode="append",
     )
-    batch = ops.bloom_span_flag(docs, "doc_id", "text", words, m, k_gram=20)
+    batch = bloom.bloom_span_flag(docs, "doc_id", "text", words, m, k_gram=20)
     s = {tuple(r) for r in got.collect()}
     b = {tuple(r) for r in batch.collect()}
     assert s == b and len(b) > 0
     # removal path too (st18's kernel)
     rem = run_to_memory(
-        ops.bloom_span_remove(stream, "doc_id", "text", words, m, k_gram=20),
+        bloom.bloom_span_remove(stream, "doc_id", "text", words, m, k_gram=20),
         output_mode="append",
     )
-    rb = ops.bloom_span_remove(docs, "doc_id", "text", words, m, k_gram=20)
+    rb = bloom.bloom_span_remove(docs, "doc_id", "text", words, m, k_gram=20)
     assert {tuple(r) for r in rem.collect()} == {tuple(r) for r in rb.collect()}
 
 
@@ -95,7 +95,7 @@ def test_bloom_auto_m_cap_is_2_28():
     cost that measurement attributed elsewhere). The oracle msize CTEs in
     llm_ops/stream_ops carry the same constant — grep-pinned here so the
     two can't drift apart."""
-    assert ops._BLOOM_M_CAP == 1 << 28
+    assert bloom._BLOOM_M_CAP == 1 << 28
     import inspect
 
     import medvedi_spark.queries.llm_ops as llm_ops
@@ -107,21 +107,19 @@ def test_bloom_auto_m_cap_is_2_28():
         assert "268435456" in src, f"{mod.__name__} missing the 2^28 clamp"
     # auto-size respects the new cap and warns past it
     with pytest.warns(UserWarning, match="cap"):
-        assert ops.bloom_auto_m_bits(10**9, 3) == 1 << 28
+        assert bloom.bloom_auto_m_bits(10**9, 3) == 1 << 28
 
 
 def test_bloom_member_m_bits_guard():
     """ADVICE r9: the membership side mirrors the build-side guard —
     m_bits not a positive multiple of 64 raises instead of silently
     flooring (scheme mismatch) or dividing by zero."""
-    col = F.lit("x")
-    bits = F.expr("array(0L)")
     for bad in (0, 63, 100, -64):
         with pytest.raises(ValueError, match="multiple of 64"):
-            ops.bloom_member(col, bits, bad, 3)
+            bloom.bloom_member("x", [0], bad, 3)
     # build side already guarded (regression pin)
     with pytest.raises(ValueError):
-        ops.bloom_build_bits(None, "c", m_bits=100)
+        bloom.bloom_build_bits(None, "c", m_bits=100)
 
 
 # --------------------------------------------------------------------------
@@ -268,19 +266,19 @@ def test_jaccard_prefix_pin_output_invariant(spark):
     """The pin only moves exchange placement — pinned and unpinned
     prefix plans must emit identical pair sets."""
     docs = _prefix_corpus(spark)
-    saved = ops._VERIFY_PIN_MIN_PAIRS
+    saved = jaccard._VERIFY_PIN_MIN_PAIRS
 
     def _pairs():
-        res = ops.token_jaccard_pairs(docs, "doc_id", "text", threshold=0.95)
+        res = jaccard.token_jaccard_pairs(docs, "doc_id", "text", threshold=0.95)
         return sorted(map(tuple, res.collect()))
 
     try:
-        ops._VERIFY_PIN_MIN_PAIRS = 0  # force the pin
+        jaccard._VERIFY_PIN_MIN_PAIRS = 0  # force the pin
         pinned = _pairs()
-        ops._VERIFY_PIN_MIN_PAIRS = float("inf")  # r9 plan
+        jaccard._VERIFY_PIN_MIN_PAIRS = float("inf")  # r9 plan
         unpinned = _pairs()
     finally:
-        ops._VERIFY_PIN_MIN_PAIRS = saved
+        jaccard._VERIFY_PIN_MIN_PAIRS = saved
     assert pinned == unpinned and len(pinned) >= 6
 
 
@@ -288,19 +286,19 @@ def test_jaccard_prefix_pin_plan_shape(spark):
     """Pinned: the expansion/verify exchanges are user REPARTITION_BY_NUM
     (AQE-coalesce-exempt). Unpinned: no such exchange in the plan."""
     docs = _prefix_corpus(spark)
-    saved = ops._VERIFY_PIN_MIN_PAIRS
+    saved = jaccard._VERIFY_PIN_MIN_PAIRS
 
     def _plan():
-        df = ops.token_jaccard_pairs(docs, "doc_id", "text", threshold=0.95)
+        df = jaccard.token_jaccard_pairs(docs, "doc_id", "text", threshold=0.95)
         return df._jdf.queryExecution().executedPlan().toString()
 
     try:
-        ops._VERIFY_PIN_MIN_PAIRS = 0
+        jaccard._VERIFY_PIN_MIN_PAIRS = 0
         assert "REPARTITION_BY_NUM" in _plan()
-        ops._VERIFY_PIN_MIN_PAIRS = float("inf")
+        jaccard._VERIFY_PIN_MIN_PAIRS = float("inf")
         assert "REPARTITION_BY_NUM" not in _plan()
     finally:
-        ops._VERIFY_PIN_MIN_PAIRS = saved
+        jaccard._VERIFY_PIN_MIN_PAIRS = saved
 
 
 # --------------------------------------------------------------------------

@@ -20,7 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from medvedi_spark.operators import _persist
-from medvedi_spark.operators import llm as ops
+from medvedi_spark.operators import bloom, graph, quantized
 from medvedi_spark.operators.ann_index import _parallel_writes
 
 
@@ -33,7 +33,7 @@ def test_fan_out_narrow_small_input_repartitions_preserving_rows(spark):
     df = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(100)], "doc_id long, text string"
     )
-    out = ops._fan_out_narrow(df)
+    out = bloom._fan_out_narrow(df)
     target = spark.sparkContext.defaultParallelism
     assert out.rdd.getNumPartitions() == target
     # round-robin only — the rows themselves are untouched
@@ -44,7 +44,7 @@ def test_fan_out_narrow_identity_above_cap(spark, monkeypatch):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
     # force the size guard to classify the input as a genuine corpus
     monkeypatch.setattr(_persist, "PERSIST_INPUT_CAP", -1)
-    out = ops._fan_out_narrow(df)
+    out = bloom._fan_out_narrow(df)
     assert out is df  # no exchange inserted at scale
 
 
@@ -96,7 +96,7 @@ def test_connected_components_directed_edges_symmetrized(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (2, 3), (5, 5), (7, 6)], "doc_a long, doc_b long"
     )
-    got = _components(ops.connected_components(edges, "doc_a", "doc_b"))
+    got = _components(graph.connected_components(edges, "doc_a", "doc_b"))
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 6, 7: 6}
 
 
@@ -105,7 +105,7 @@ def test_connected_components_reverse_only_orientation(spark):
     edges = spark.createDataFrame(
         [(2, 1), (3, 2), (6, 7)], "doc_a long, doc_b long"
     )
-    got = _components(ops.connected_components(edges, "doc_a", "doc_b"))
+    got = _components(graph.connected_components(edges, "doc_a", "doc_b"))
     assert got == {1: 1, 2: 1, 3: 1, 6: 6, 7: 6}
 
 
@@ -119,7 +119,7 @@ def test_sq8_train_driver_sort_matches_plan_orderby(spark):
         [(i, [float(i), float(10 - i), 0.5 * i]) for i in range(8)],
         "vec_id long, embedding array<double>",
     )
-    stats = ops._sq8_train(emb, "embedding")
-    reference = ops.sq8_minmax(emb, "embedding").orderBy("dim").collect()
+    stats = quantized._sq8_train(emb, "embedding")
+    reference = quantized.sq8_minmax(emb, "embedding").orderBy("dim").collect()
     assert [tuple(r) for r in stats] == [tuple(r) for r in reference]
     assert [r["dim"] for r in stats] == sorted(r["dim"] for r in stats)

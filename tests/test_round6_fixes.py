@@ -13,7 +13,7 @@ import warnings
 import pytest
 from pyspark.sql import functions as F
 
-from medvedi_spark.operators import llm
+from medvedi_spark.operators import bloom, llm, quantized
 
 
 # ---------------------------------------------------------------- d14 bloom
@@ -27,21 +27,21 @@ def test_bloom_auto_m_bits_formula():
     The cap moved 2^26 → 2^28 in round 10 (literal-attach cost matrix
     in BLOOM150_r10.json); the formula below the cap is unchanged."""
     # floor: tiny eval sets stay on the historical 8 KB default
-    assert llm.bloom_auto_m_bits(0) == 1 << 16
-    assert llm.bloom_auto_m_bits(1000) == 1 << 16
-    assert llm.bloom_auto_m_bits(9000) == 1 << 16
+    assert bloom.bloom_auto_m_bits(0) == 1 << 16
+    assert bloom.bloom_auto_m_bits(1000) == 1 << 16
+    assert bloom.bloom_auto_m_bits(9000) == 1 << 16
     # growth: 100k grams at k=3 want ~433k bits -> 2^19
-    assert llm.bloom_auto_m_bits(100_000) == 1 << 19
-    assert llm.bloom_auto_m_bits(1_000_000) == 1 << 23
+    assert bloom.bloom_auto_m_bits(100_000) == 1 << 19
+    assert bloom.bloom_auto_m_bits(1_000_000) == 1 << 23
     # cap, with a warning (saturation = silent pass-everything prefilter)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        assert llm.bloom_auto_m_bits(10**9) == llm._BLOOM_M_CAP
+        assert bloom.bloom_auto_m_bits(10**9) == bloom._BLOOM_M_CAP
     assert any("cap" in str(x.message) for x in w)
     # no warning under the cap
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        llm.bloom_auto_m_bits(100_000)
+        bloom.bloom_auto_m_bits(100_000)
     assert not w
 
 
@@ -51,13 +51,13 @@ def test_bloom_auto_size_fpr_at_10x_eval(spark):
     auto-sized filter keeps the false-positive rate in the designed
     ~ (1-e^(-kn/m))^k band instead of degrading toward 1.0."""
     n_keys = 90_000
-    m_bits = llm.bloom_auto_m_bits(n_keys, k_hashes=3)
+    m_bits = bloom.bloom_auto_m_bits(n_keys, k_hashes=3)
     assert m_bits >= 1 << 19  # auto-size actually grew past the old default
     members = spark.range(n_keys).select(F.concat(F.lit("in:"), F.col("id")).alias("v"))
-    bits = llm.bloom_build_bits(members, "v", m_bits=m_bits, k_hashes=3)
+    bits = bloom.bloom_build_bits(members, "v", m_bits=m_bits, k_hashes=3)
     probes = spark.range(20_000).select(F.concat(F.lit("out:"), F.col("id")).alias("v"))
     fp = (
-        probes.select(llm.bloom_member("v", bits, m_bits, 3).alias("m"))
+        probes.select(bloom.bloom_member("v", bits, m_bits, 3).alias("m"))
         .agg(F.sum(F.col("m").cast("int")).alias("fp"))
         .collect()[0]["fp"]
     )
@@ -67,7 +67,7 @@ def test_bloom_auto_size_fpr_at_10x_eval(spark):
     assert fpr < 0.15, f"auto-sized FPR degraded: {fpr:.3f}"
     # and recall stays perfect by construction (no false negatives)
     tp = (
-        members.select(llm.bloom_member("v", bits, m_bits, 3).alias("m"))
+        members.select(bloom.bloom_member("v", bits, m_bits, 3).alias("m"))
         .agg(F.sum(F.col("m").cast("int")).alias("tp"))
         .collect()[0]["tp"]
     )
@@ -83,15 +83,15 @@ def test_bloom_decontaminate_auto_sizes_by_default(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
     eval_df = docs.filter(F.col("doc_id") % 50 == 0)
+    words, m_bits = bloom.bloom_fit(eval_df, "text", n=4)
     auto = {
         (r.doc_id, r.hit_grams)
-        for r in llm.bloom_decontaminate(corpus, eval_df, "doc_id", "text", n=4).collect()
+        for r in bloom.bloom_flag(corpus, "doc_id", "text", words, m_bits, n=4).collect()
     }
+    words, m_bits = bloom.bloom_fit(eval_df, "text", n=4, m_bits=65536)
     fixed = {
         (r.doc_id, r.hit_grams)
-        for r in llm.bloom_decontaminate(
-            corpus, eval_df, "doc_id", "text", n=4, m_bits=65536
-        ).collect()
+        for r in bloom.bloom_flag(corpus, "doc_id", "text", words, m_bits, n=4).collect()
     }
     assert auto == fixed
 
@@ -164,7 +164,7 @@ def test_sq8_raises_on_ragged_embeddings(spark):
         "vec_id bigint, embedding array<double>",
     )
     with pytest.raises(ValueError, match="uniform-dimension"):
-        llm.sq8_topk(ragged, "vec_id", "embedding", probe=F.col("vec_id") == 1, k=2)
+        quantized.sq8_topk(ragged, "vec_id", "embedding", probe=F.col("vec_id") == 1, k=2)
 
 
 def test_sq8_uniform_still_works(spark):
@@ -172,7 +172,7 @@ def test_sq8_uniform_still_works(spark):
         [(i, [float(i), float(i * 2)]) for i in range(6)],
         "vec_id bigint, embedding array<double>",
     )
-    out = llm.sq8_topk(uniform, "vec_id", "embedding", probe=F.col("vec_id") == 0, k=3)
+    out = quantized.sq8_topk(uniform, "vec_id", "embedding", probe=F.col("vec_id") == 0, k=3)
     rows = out.collect()
     assert [r.neighbor_id for r in rows] == [1, 2, 3]
 
@@ -188,7 +188,7 @@ def test_pq_vectorized_assert_unique_ids(spark):
         [(7, [0.1, 0.1]), (7, [0.9, 0.9])], "vec_id bigint, embedding array<double>"
     )
     with pytest.raises(ValueError, match="duplicate"):
-        llm.pq_encode(
+        quantized.pq_encode(
             dup, cents, "vec_id", "embedding", n_subspaces=2,
             vectorized=True, assert_unique_ids=True,
         ).collect()
@@ -198,7 +198,7 @@ def test_pq_vectorized_assert_unique_ids(spark):
     )
     got = {
         r.vec_id: (r.code0, r.code1)
-        for r in llm.pq_encode(
+        for r in quantized.pq_encode(
             uniq, cents, "vec_id", "embedding", n_subspaces=2,
             vectorized=True, assert_unique_ids=True,
         ).collect()

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from medvedi_spark.catalog import load
-from medvedi_spark.operators import llm
+from medvedi_spark.operators import llm, quantized
 
 
 # ---------------------------------------------------------------- pq_train
@@ -48,7 +48,7 @@ def test_pq_train_matches_numpy(spark, sf_dir):
     E = np.stack(
         [np.array(r.embedding, dtype=np.float64) for r in emb.orderBy("vec_id").collect()]
     )
-    got = llm.pq_train(emb, "vec_id", "embedding", n_subspaces=8, k=8, n_iter=2)
+    got = quantized.pq_train(emb, "vec_id", "embedding", n_subspaces=8, k=8, n_iter=2)
     rows = {r.cent_id: np.array(r.c_emb) for r in got.collect()}
     want = _numpy_pq_train(E, n_subspaces=8, k=8, n_iter=2)
     assert sorted(rows) == list(range(8))
@@ -58,8 +58,8 @@ def test_pq_train_matches_numpy(spark, sf_dir):
 
 def test_pq_train_codebook_drops_into_pq_encode(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 60)
-    cent = llm.pq_train(emb, "vec_id", "embedding", n_subspaces=4, k=6, n_iter=1)
-    codes = llm.pq_encode(emb, cent, "vec_id", "embedding", n_subspaces=4, dense=True)
+    cent = quantized.pq_train(emb, "vec_id", "embedding", n_subspaces=4, k=6, n_iter=1)
+    codes = quantized.pq_encode(emb, cent, "vec_id", "embedding", n_subspaces=4, dense=True)
     pdf = codes.toPandas()
     assert len(pdf) == 60
     for s in range(4):
@@ -73,7 +73,7 @@ def test_pq_train_empty_cell_keeps_previous_centroid(spark):
     rows = [(0, [0.0, 0.0]), (1, [10.0, 10.0]), (2, [99.0, 99.0])]
     rows += [(i, [0.1, 0.1]) for i in range(3, 30)]
     emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    cent = llm.pq_train(emb, "vec_id", "embedding", n_subspaces=2, k=3, n_iter=2)
+    cent = quantized.pq_train(emb, "vec_id", "embedding", n_subspaces=2, k=3, n_iter=2)
     got = {r.cent_id: list(r.c_emb) for r in cent.collect()}
     assert got[2] == [99.0, 99.0]
 
@@ -83,7 +83,7 @@ def test_trained_residual_ivfadc_runs(spark, sf_dir):
     coarse = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
-    out = llm.ivfadc_residual_topk(
+    out = quantized.ivfadc_residual_topk(
         emb, coarse, None, "vec_id", "embedding",
         probe=F.col("vec_id") < 3, k=5, nprobe=2, n_subspaces=8,
         pq_train_k=8, pq_train_iters=1,

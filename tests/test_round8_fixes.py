@@ -22,7 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from medvedi_spark.catalog import dataset_fingerprint, load
-from medvedi_spark.operators import _persist, llm
+from medvedi_spark.operators import _persist, bloom
 
 
 # ------------------------------------------------- t7/t8 vocabulary router
@@ -30,8 +30,9 @@ from medvedi_spark.operators import _persist, llm
 
 @pytest.mark.parametrize("qname", ["t7_tfidf_topterms", "t8_collocations"])
 def test_t7_t8_router_shapes_agree(spark, sf_dir, qname, monkeypatch):
-    from medvedi_spark.queries.registry import QUERIES
+    from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
 
+    _ensure_loaded()
     a = QUERIES[qname].builder(spark, sf_dir).toPandas()
     monkeypatch.setattr(_persist, "BROADCAST_BUDGET", 0)  # force the above-cap shuffle shape
     b = QUERIES[qname].builder(spark, sf_dir).toPandas()
@@ -47,7 +48,9 @@ def test_t7_t8_hint_present_under_cap_absent_above(spark, sf_dir, qname, monkeyp
     planner's statistics-driven choice still auto-broadcasts at toy
     scale, but a 10⁹-row vocabulary at 100 TB degrades to a shuffle join
     instead of OOMing the driver."""
-    from medvedi_spark.queries.registry import QUERIES
+    from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
+
+    _ensure_loaded()
 
     def analyzed(df) -> str:
         return df._jdf.queryExecution().analyzed().toString()
@@ -66,9 +69,9 @@ def test_d11_cross_routing_shapes_agree(spark, sf_dir, monkeypatch):
     """Broadcast-verdict (under cap) and shuffled-semi-join (corpus
     scale) shapes emit identical span rows."""
     docs = load(spark, sf_dir, "documents")
-    a = llm.duplicate_spans(docs, "doc_id", "text", k=20).toPandas()
+    a = bloom.duplicate_spans(docs, "doc_id", "text", k=20).toPandas()
     monkeypatch.setattr(_persist, "PERSIST_INPUT_CAP", 0)  # force the corpus-scale path
-    b = llm.duplicate_spans(docs, "doc_id", "text", k=20).toPandas()
+    b = bloom.duplicate_spans(docs, "doc_id", "text", k=20).toPandas()
     a = a.sort_values("doc_id").reset_index(drop=True)
     b = b.sort_values("doc_id").reset_index(drop=True)
     assert a.equals(b)
@@ -80,7 +83,7 @@ def test_d11_cross_broadcast_under_cap(spark, sf_dir):
     cross table."""
     docs = load(spark, sf_dir, "documents")
     plan = (
-        llm.duplicate_span_rows(docs, "doc_id", "text", k=20)
+        bloom.duplicate_span_rows(docs, "doc_id", "text", k=20)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
@@ -96,7 +99,7 @@ def test_d11_forced_corpus_scale_plan_persists_nothing(spark, sf_dir, monkeypatc
     monkeypatch.setattr(_persist, "PERSIST_INPUT_CAP", 0)
     try:
         plan = (
-            llm.duplicate_span_rows(docs, "doc_id", "text", k=20)
+            bloom.duplicate_span_rows(docs, "doc_id", "text", k=20)
             ._jdf.queryExecution().executedPlan().toString()
         )
     finally:
@@ -117,7 +120,7 @@ def test_st17_stream_equals_batch_serving(spark, sf_dir):
 
     from medvedi_spark.operators import dedup_index
     from medvedi_spark.operators.llm import minhash_band_index
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators._persist import scratch_dir
     from medvedi_spark.queries.llm_ops import _D16_THRESHOLD
     from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
 
@@ -129,7 +132,7 @@ def test_st17_stream_equals_batch_serving(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 3 != 0)
     new = docs.filter(F.col("doc_id") % 3 == 0)
-    path = _fmt_tmp(sf_dir, "st17idx_test")
+    path = scratch_dir(sf_dir, "st17idx_test")
     shutil.rmtree(path, ignore_errors=True)
     dedup_index.minhash_index_save(old, "doc_id", "text", path, threshold=_D16_THRESHOLD)
     idx = dedup_index.minhash_index_load(spark, path)
@@ -160,7 +163,7 @@ def test_st17_stream_equals_batch_serving(spark, sf_dir):
 def test_bits_array_expr_equals_lit(spark):
     words = [0, -1, 5, 1 << 62, -(1 << 63), 42]
     df = spark.range(1)
-    got = df.select(F.expr(llm.bits_array_sql(words)).alias("a")).first().a
+    got = df.select(F.expr(bloom.bits_array_sql(words)).alias("a")).first().a
     assert list(got) == words
 
 
@@ -172,16 +175,16 @@ def test_blocked_bloom_fit_and_member_agree(spark):
     vals = [("alpha",), ("bravo",), ("charlie",), ("delta",)]
     df = spark.createDataFrame(vals, "g string")
     m_bits = 65536
-    words = llm.bloom_build_bits(df, "g", m_bits, 3)
-    bits = llm.bits_array_sql(words)
+    words = bloom.bloom_build_bits(df, "g", m_bits, 3)
+    bits = bloom.bits_array_sql(words)
     out = df.select(
-        "g", llm.bloom_member("g", words, m_bits, 3).alias("hit")
+        "g", bloom.bloom_member("g", words, m_bits, 3).alias("hit")
     ).collect()
     assert all(r.hit for r in out)
     digest = "md5(g)"
-    word = f"element_at({bits}, cast({llm._bloom_block_word(digest, m_bits)} as int) + 1)"
+    word = f"element_at({bits}, cast({bloom._bloom_block_word(digest, m_bits)} as int) + 1)"
     staged = df.select(
-        "g", F.expr(llm.bloom_member_word(digest, word, 3)).alias("hit")
+        "g", F.expr(bloom.bloom_member_word(digest, word, 3)).alias("hit")
     ).collect()
     assert all(r.hit for r in staged)
 

@@ -34,15 +34,16 @@ def test_st16_ingest_partitions_default_off(monkeypatch):
 def test_st16_plan_has_no_exchange_by_default(spark, sf_dir, monkeypatch):
     """With the knob unset, the st16 streaming frame must NOT carry a
     repartition — the production plan is exchange-free per-row work."""
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import bloom
     from medvedi_spark.queries import stream_ops
+    from medvedi_spark.streaming.ops import read_table_stream
 
     monkeypatch.delenv("SPARK_GRAFT_STREAM_INGEST_PARTITIONS", raising=False)
     words, m_bits = stream_ops._span_bloom_model(spark, sf_dir)
-    stream = stream_ops._read_documents_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "documents")
     parts = stream_ops._st16_ingest_partitions()
     assert parts == 0
-    flagged = ops.bloom_span_flag(
+    flagged = bloom.bloom_span_flag(
         stream, "doc_id", "text",
         words, m_bits, k_gram=stream_ops._ST16_K, k_hashes=stream_ops._ST16_H,
     )
@@ -109,16 +110,16 @@ def test_router_fat_postings_take_wide_tier(spark):
     route to prefix filtering: rare-token pruning cannot prune when
     every token sits in ≥64 docs (measured 2-3.7× regression on the
     probe corpus — D2_DECOMP_r9.json)."""
-    from medvedi_spark.operators import llm
+    from medvedi_spark.operators import jaccard
 
     # density 15/100 = 0.15 < 0.25 (not dense); avg_df = 600*15/100 = 90
     fat = _tok_frame(spark, 600, 100, 15)
-    out = llm.token_jaccard_pairs(fat, "doc_id", "text", threshold=0.95)
+    out = jaccard.token_jaccard_pairs(fat, "doc_id", "text", threshold=0.95)
     assert not _routes_to_prefix(out)
 
     # same density, thin postings: avg_df = 100*15/100 = 15 < 64 → prefix
     thin = _tok_frame(spark, 100, 100, 15)
-    out2 = llm.token_jaccard_pairs(thin, "doc_id", "text", threshold=0.95)
+    out2 = jaccard.token_jaccard_pairs(thin, "doc_id", "text", threshold=0.95)
     assert _routes_to_prefix(out2)
 
 
@@ -126,25 +127,25 @@ def test_router_fat_arm_capped_at_16_words(spark):
     """The fat-posting arm must not extend past 1024-token vocabularies
     (the 10× probe shape, vocab ~2k / 32-word masks, measured WORSE on
     the wide tier): fat postings over a >1024 vocab still route prefix."""
-    from medvedi_spark.operators import llm
+    from medvedi_spark.operators import jaccard
 
     big = _tok_frame(spark, 12_000, 1100, 12)  # avg_df ≈ 131, vocab 1100
-    out = llm.token_jaccard_pairs(big, "doc_id", "text", threshold=0.95)
+    out = jaccard.token_jaccard_pairs(big, "doc_id", "text", threshold=0.95)
     assert _routes_to_prefix(out)
 
 
 def test_router_fat_arm_output_equals_prefix(spark):
     """Tier choice must never change the answer: the fat-routed corpus
     produces identical pairs under the forced prefix plan."""
-    from medvedi_spark.operators import llm
+    from medvedi_spark.operators import _persist, jaccard
 
     fat = _tok_frame(spark, 120, 40, 10)  # avg_df = 30 < 64? -> adjust
     # avg_df = 120*10/40 = 30; force fat by lowering the gate instead
-    tok = llm._persist_tracked(llm.tokenize_distinct(fat, "doc_id", "text"))
-    wide = llm._jaccard_bitset_wide_shuffled(
+    tok = _persist.persist_tracked(jaccard.tokenize_distinct(fat, "doc_id", "text"))
+    wide = jaccard._jaccard_bitset_wide_shuffled(
         tok, tok.select("t").distinct(), 40, 0.9
     ).collect()
-    prefix = llm._jaccard_prefix_filter(tok, 0.9).collect()
+    prefix = jaccard._jaccard_prefix_filter(tok, 0.9).collect()
     key = lambda r: (r.doc_a, r.doc_b)  # noqa: E731
     assert sorted(map(key, wide)) == sorted(map(key, prefix))
     wj = {key(r): r.jaccard for r in wide}
@@ -161,23 +162,23 @@ def test_st18_removes_superset_of_d18(spark, sf_dir):
     removed by the bloom-driven st18 rewrite too (bloom spans contain
     every true duplicate span; the FP tail removes slightly more)."""
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import bloom
     from medvedi_spark.queries.stream_ops import _ST16_H, _ST16_K, _span_bloom_model
 
     docs = load(spark, sf_dir, "documents")
     words, m_bits = _span_bloom_model(spark, sf_dir)
-    bloom = {
+    approx = {
         r.doc_id: r.removed_chars
-        for r in ops.bloom_span_remove(
+        for r in bloom.bloom_span_remove(
             docs, "doc_id", "text", words, m_bits, _ST16_K, _ST16_H
         ).collect()
     }
     exact = {
         r.doc_id: r.removed_chars
-        for r in ops.exact_substring_removal(docs, "doc_id", "text", k=_ST16_K).collect()
+        for r in bloom.exact_substring_removal(docs, "doc_id", "text", k=_ST16_K).collect()
     }
-    assert set(bloom) == set(exact)
-    assert all(bloom[d] >= exact[d] for d in exact)
+    assert set(approx) == set(exact)
+    assert all(approx[d] >= exact[d] for d in exact)
     assert any(v > 0 for v in exact.values())  # fixture has real dups
 
 
@@ -185,20 +186,20 @@ def test_st18_removed_equals_st16_dup_chars(spark, sf_dir):
     """The rewrite excises exactly the spans st16 flags: removed_chars
     equals st16's dup_chars for flagged docs and 0 for the rest."""
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import bloom
     from medvedi_spark.queries.stream_ops import _ST16_H, _ST16_K, _span_bloom_model
 
     docs = load(spark, sf_dir, "documents")
     words, m_bits = _span_bloom_model(spark, sf_dir)
     removed = {
         r.doc_id: r.removed_chars
-        for r in ops.bloom_span_remove(
+        for r in bloom.bloom_span_remove(
             docs, "doc_id", "text", words, m_bits, _ST16_K, _ST16_H
         ).collect()
     }
     flagged = {
         r.doc_id: r.dup_chars
-        for r in ops.bloom_span_flag(
+        for r in bloom.bloom_span_flag(
             docs, "doc_id", "text", words, m_bits, _ST16_K, _ST16_H
         ).collect()
     }
@@ -218,7 +219,7 @@ def test_hamming_guard_scales_by_block_fanout(spark):
     hint decision must survive ~n_blocks× the raw estimate: a probe set
     whose raw bytes fit the 32 MB budget but whose ×6 fan-out does not
     must NOT be hinted."""
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import vector
 
     vec = [float(i % 7) for i in range(8)]
     # range-backed frames carry a real Catalyst size estimate (a
@@ -229,7 +230,7 @@ def test_hamming_guard_scales_by_block_fanout(spark):
     corpus = spark.createDataFrame(
         [(100 + i, vec) for i in range(8)], "vec_id long, embedding array<double>"
     )
-    hinted = ops.hamming_topk(corpus, small, "vec_id", "embedding", k=2, radius=5)
+    hinted = vector.hamming_topk(corpus, small, "vec_id", "embedding", k=2, radius=5)
     assert "ResolvedHint" in _analyzed(hinted)
 
     # A probe frame whose RAW estimate sits between cap/n_blocks and cap
@@ -243,5 +244,5 @@ def test_hamming_guard_scales_by_block_fanout(spark):
     est = int(big._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     assert est <= (32 << 20), "fixture raw estimate must be under the cap"
     assert est * 6 > (32 << 20), "fixture must exceed the scaled cap"
-    unhinted = ops.hamming_topk(corpus, big, "vec_id", "embedding", k=2, radius=5)
+    unhinted = vector.hamming_topk(corpus, big, "vec_id", "embedding", k=2, radius=5)
     assert "ResolvedHint" not in _analyzed(unhinted)

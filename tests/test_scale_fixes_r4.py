@@ -17,7 +17,9 @@ import re
 
 from pyspark.sql import functions as F
 
-from medvedi_spark.operators.llm import bpe_learn, duplicate_spans, pq_adc_topk, pq_encode
+from medvedi_spark.operators.bloom import duplicate_spans
+from medvedi_spark.operators.llm import bpe_learn
+from medvedi_spark.operators.quantized import pq_adc_topk, pq_encode
 
 
 # --------------------------------------------------------------- bpe_learn

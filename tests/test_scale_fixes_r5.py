@@ -29,21 +29,21 @@ def test_jaccard_persist_released_after_queries(spark, sf_dir):
     """d2 + d7 back-to-back persist their gram tables; release_persisted
     must drop every tracked block, leaving the session's persistent-RDD
     set exactly as it was."""
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import _persist
     from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
 
     _ensure_loaded()
-    ops.release_persisted()  # clear anything earlier tests left tracked
+    _persist.release_persisted()  # clear anything earlier tests left tracked
     before = _persistent_rdd_count(spark)
     for name in ("d2_token_jaccard", "d7_ngram_jaccard"):
         QUERIES[name].builder(spark, sf_dir).count()
     # _PERSISTED is keyed by owning session since the round-5 ADVICE fix —
     # count tracked frames, not sessions
-    tracked = sum(len(v) for v in ops._PERSISTED.values())
+    tracked = sum(len(v) for v in _persist._PERSISTED.values())
     assert tracked >= 2, "both gram tables must be tracked"
-    released = ops.release_persisted()
+    released = _persist.release_persisted()
     assert released >= 2
-    assert not any(ops._PERSISTED.values())
+    assert not any(_persist._PERSISTED.values())
     # <=, not ==: the ContextCleaner asynchronously drops persistent-RDD
     # entries whose DataFrames earlier tests left to the garbage
     # collector, so the registry can legitimately SHRINK mid-test; a
@@ -160,7 +160,7 @@ def test_ivfadc_with_all_cells_equals_flat_adc(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import quantized
 
     emb = load(spark, sf_dir, "embeddings")
     n_cells = 4
@@ -173,11 +173,11 @@ def test_ivfadc_with_all_cells_equals_flat_adc(spark, sf_dir):
     probe = F.col("vec_id") < 3
     flat = {
         (r.query_id, r.rank): (r.neighbor_id, r.d2_approx)
-        for r in ops.pq_adc_topk(emb, cent, "vec_id", "embedding", probe, k=5).collect()
+        for r in quantized.pq_adc_topk(emb, cent, "vec_id", "embedding", probe, k=5).collect()
     }
     routed = {
         (r.query_id, r.rank): (r.neighbor_id, r.d2_approx)
-        for r in ops.ivfadc_topk(
+        for r in quantized.ivfadc_topk(
             emb, coarse, cent, "vec_id", "embedding", probe, k=5, nprobe=n_cells
         ).collect()
     }
@@ -191,7 +191,7 @@ def test_ivf_sq8_with_all_cells_equals_flat_sq8(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import quantized
 
     emb = load(spark, sf_dir, "embeddings")
     n_cells = 4
@@ -201,11 +201,11 @@ def test_ivf_sq8_with_all_cells_equals_flat_sq8(spark, sf_dir):
     probe = F.col("vec_id") < 3
     flat = {
         (r.query_id, r.rank): (r.neighbor_id, r.d2)
-        for r in ops.sq8_topk(emb, "vec_id", "embedding", probe, k=5).collect()
+        for r in quantized.sq8_topk(emb, "vec_id", "embedding", probe, k=5).collect()
     }
     routed = {
         (r.query_id, r.rank): (r.neighbor_id, r.d2)
-        for r in ops.ivf_sq8_topk(
+        for r in quantized.ivf_sq8_topk(
             emb, coarse, "vec_id", "embedding", probe, k=5, nprobe=n_cells
         ).collect()
     }

@@ -39,3 +39,22 @@ def test_warm_pass_compiles_nothing(spark, sf_dir):
 
     one_pass()  # cold: fills the cache
     assert one_pass() == 0
+
+
+def test_release_removes_query_scratch_dirs(spark, sf_dir):
+    """A long-lived session keeps no query scratch files: c14's csv round
+    trip and st13's streamed index ingest write directories under the
+    temp dir, and release_persisted removes both."""
+    import tempfile
+
+    _ensure_loaded()
+    table = os.path.basename(sf_dir.rstrip("/"))
+    dirs = [
+        os.path.join(tempfile.gettempdir(), f"medvedi_spark_{tag}_{table}_{os.getpid()}")
+        for tag in ("c14csv", "st13idx")
+    ]
+    for name in ("c14_csv_roundtrip", "st13_stream_index_ingest"):
+        QUERIES[name].builder(spark, sf_dir).select(F.count(F.lit(1))).collect()
+    assert all(os.path.isdir(d) for d in dirs), dirs
+    release_persisted()
+    assert not any(os.path.exists(d) for d in dirs), dirs

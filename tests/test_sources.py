@@ -97,11 +97,11 @@ def test_p10_export_shard_size_bound(spark, sf_dir):
 
     from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
 
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators._persist import scratch_dir
 
     _ensure_loaded()
     QUERIES["p10_export_jsonl"].builder(spark, sf_dir).count()
-    path = _fmt_tmp(sf_dir, "p10")
+    path = scratch_dir(sf_dir, "p10")
     shards = glob.glob(os.path.join(path, "lang=*", "*.json.gz"))
     assert shards, f"no gzip jsonl shards under {path}"
     for s in shards:

@@ -194,8 +194,8 @@ def test_st13_stream_index_ingest_layout(spark, sf_dir):
     import os
 
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators.llm import _sq8_fit_encode
-    from medvedi_spark.queries.compat_ops import _fmt_tmp
+    from medvedi_spark.operators.quantized import _sq8_fit_encode
+    from medvedi_spark.operators._persist import scratch_dir
     from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
     from pyspark.sql import functions as F
 
@@ -210,7 +210,7 @@ def test_st13_stream_index_ingest_layout(spark, sf_dir):
     assert len(rows) == n * dim, "every vector ingested exactly once, one row per dim"
     assert len({r.vec_id for r in rows}) == n
     # directory layout: one partition dir per routed cell
-    root = _fmt_tmp(sf_dir, "st13idx")
+    root = scratch_dir(sf_dir, "st13idx")
     cells_on_disk = {
         int(os.path.basename(p).split("=", 1)[1])
         for p in glob.glob(os.path.join(root, "cell=*"))

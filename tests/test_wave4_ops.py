@@ -75,7 +75,7 @@ def test_duplicate_spans_are_genuinely_duplicated(spark, sf_dir):
     """Every reported span of length >= k contains a k-substring that
     occurs in at least one OTHER document (soundness); spans are merged
     maximally (no two spans of a doc overlap or touch within k)."""
-    from medvedi_spark.operators.llm import duplicate_spans
+    from medvedi_spark.operators.bloom import duplicate_spans
 
     docs = {r.doc_id: r.text for r in load(spark, sf_dir, "documents").collect()}
     res = duplicate_spans(load(spark, sf_dir, "documents"), "doc_id", "text", k=20).collect()

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from medvedi_spark.catalog import load
-from medvedi_spark.operators import llm as ops
+from medvedi_spark.operators import bloom, graph, kernels, llm, vector
 from tests.conftest import SF_DIR
 
 
@@ -18,9 +18,9 @@ def test_fuzzy_dedup_partitions_corpus(spark):
     """survivors ∪ drops == corpus, and exactly the cluster minima survive
     among clustered docs."""
     docs = load(spark, SF_DIR, "documents")
-    survivors = ops.fuzzy_dedup_survivors(docs, "doc_id", "text", threshold=0.8)
-    pairs = ops.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.8)
-    comps = ops.connected_components(pairs, "doc_a", "doc_b")
+    survivors = llm.fuzzy_dedup_survivors(docs, "doc_id", "text", threshold=0.8)
+    pairs = llm.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.8)
+    comps = graph.connected_components(pairs, "doc_a", "doc_b")
 
     total = docs.count()
     surv_ids = {r.doc_id for r in survivors.select("doc_id").collect()}
@@ -45,7 +45,7 @@ def test_fuzzy_dedup_removes_known_near_dups(spark):
         (9, "one two three four five six seven eight nine ten"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = ops.fuzzy_dedup_survivors(df, "doc_id", "text", threshold=0.8)
+    out = llm.fuzzy_dedup_survivors(df, "doc_id", "text", threshold=0.8)
     assert {r.doc_id for r in out.collect()} == {1, 9}
 
 
@@ -53,8 +53,8 @@ def test_fuzzy_dedup_removes_known_near_dups(spark):
 
 
 def test_jl_sign_matrix_deterministic_pm1():
-    m1 = ops.jl_sign_matrix(64, 8)
-    m2 = ops.jl_sign_matrix(64, 8)
+    m1 = vector.jl_sign_matrix(64, 8)
+    m2 = vector.jl_sign_matrix(64, 8)
     assert m1 == m2
     assert all(v in (1, -1) for row in m1 for v in row)
     # not degenerate: both signs occur in every output row
@@ -65,7 +65,7 @@ def test_jl_topk_shape_and_rerank_exactness(spark):
     """The reported d2 of every returned neighbor equals the exact
     decimal distance (rerank is exact), and ranks are 1..k per query."""
     emb = load(spark, SF_DIR, "embeddings")
-    out = ops.jl_topk(
+    out = vector.jl_topk(
         emb, "vec_id", "embedding", probe=F.col("vec_id") < 4,
         dim=64, out_dim=8, n_candidates=25, k=10,
     ).collect()
@@ -85,7 +85,7 @@ def test_jl_topk_recall_vs_exact(spark):
     """Measured recall@10 of the JL candidate cut vs brute-force exact
     top-10 (document the number; assert a sane floor)."""
     emb = load(spark, SF_DIR, "embeddings")
-    approx = ops.jl_topk(
+    approx = vector.jl_topk(
         emb, "vec_id", "embedding", probe=F.col("vec_id") < 8,
         dim=64, out_dim=16, n_candidates=200, k=10,
     ).collect()
@@ -100,7 +100,7 @@ def test_jl_topk_recall_vs_exact(spark):
     exact = (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("d2", ops.sqdist_dec("q_emb", "embedding"))
+        .withColumn("d2", kernels.sqdist_dec("q_emb", "embedding"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 10)
         .collect()
@@ -203,14 +203,14 @@ def test_bloom_fit_flag_split_no_false_negatives(spark):
     docs = load(spark, SF_DIR, "documents")
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
     eval_df = docs.filter(F.col("doc_id") % 50 == 0)
-    words, m_bits = ops.bloom_fit(eval_df, "text", n=4, m_bits=None, k_hashes=3)
+    words, m_bits = bloom.bloom_fit(eval_df, "text", n=4, m_bits=None, k_hashes=3)
     flagged = {
         r.doc_id
-        for r in ops.bloom_flag(corpus, "doc_id", "text", words, m_bits, n=4, k_hashes=3).collect()
+        for r in bloom.bloom_flag(corpus, "doc_id", "text", words, m_bits, n=4, k_hashes=3).collect()
     }
     exact = {
         r.doc_id
-        for r in ops.decontaminate(corpus, eval_df, "doc_id", "text", n=4).collect()
+        for r in bloom.decontaminate(corpus, eval_df, "doc_id", "text", n=4).collect()
     }
     assert exact <= flagged
 
@@ -296,7 +296,7 @@ def test_fuzzy_dedup_properties(spark, texts):
     are a subset of the corpus with all columns intact."""
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    surv = {r.doc_id for r in ops.fuzzy_dedup_survivors(df, "doc_id", "text", 0.8).collect()}
+    surv = {r.doc_id for r in llm.fuzzy_dedup_survivors(df, "doc_id", "text", 0.8).collect()}
     assert surv <= set(range(len(texts)))
     # (a) component labels are min-reachable ids, so id 0 can never drop
     assert 0 in surv

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from medvedi_spark.operators import llm as ops
+from medvedi_spark.operators import bloom, kernels, llm, vector
 from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
 
 _ensure_loaded()
@@ -64,7 +64,7 @@ class TestHammingTopk:
         cdf, qdf = self._frames(spark, corpus, queries)
         got = sorted(
             tuple(r)
-            for r in ops.hamming_topk(
+            for r in vector.hamming_topk(
                 cdf, qdf, "vec_id", "embedding", k=10, radius=5
             ).collect()
         )
@@ -79,7 +79,7 @@ class TestHammingTopk:
         queries = [(0, base)]
         cdf, qdf = self._frames(spark, corpus, queries)
         rows = (
-            ops.hamming_topk(cdf, qdf, "vec_id", "embedding", k=3, radius=5)
+            vector.hamming_topk(cdf, qdf, "vec_id", "embedding", k=3, radius=5)
             .orderBy("rnk")
             .collect()
         )
@@ -89,16 +89,16 @@ class TestHammingTopk:
     def test_pigeonhole_guard_raises(self, spark):
         cdf, qdf = self._frames(spark, [(0, 1)], [(1, 1)])
         with pytest.raises(ValueError, match="pigeonhole"):
-            ops.hamming_topk(cdf, qdf, "vec_id", "embedding", radius=6, n_blocks=6)
+            vector.hamming_topk(cdf, qdf, "vec_id", "embedding", radius=6, n_blocks=6)
         with pytest.raises(ValueError, match="split evenly"):
-            ops.hamming_topk(cdf, qdf, "vec_id", "embedding", n_bits=60, n_blocks=7)
+            vector.hamming_topk(cdf, qdf, "vec_id", "embedding", n_bits=60, n_blocks=7)
 
     def test_srp_signature_packs_sign_bits(self, spark):
         sig_val = 0b1011_0001
         df = spark.createDataFrame(
             [(1, _vec_for_sig(sig_val))], "vec_id long, embedding array<float>"
         )
-        [row] = ops.srp_signature(df, "vec_id", "embedding").collect()
+        [row] = kernels.srp_signature(df, "vec_id", "embedding").collect()
         assert row.sig == sig_val
 
 
@@ -143,7 +143,7 @@ class TestSplitLeakage:
         # completeness: every near-dup pair with differing split labels
         # appears — recompute pairs + splits independently
         docs = load(spark, sf_dir, "documents")
-        pairs = ops.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.8)
+        pairs = llm.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.8)
         split = docs.select(
             "doc_id",
             (token_hash(F.col("doc_id").cast("string")) % 10 == 0).alias("is_val"),
@@ -174,7 +174,7 @@ class TestExactSubstringRemoval:
         )
         out = {
             r.doc_id: r
-            for r in ops.exact_substring_removal(docs, "doc_id", "text", k=20).collect()
+            for r in bloom.exact_substring_removal(docs, "doc_id", "text", k=20).collect()
         }
         # clean doc passes through verbatim
         assert out[3].clean_text == c and out[3].removed_chars == 0
@@ -196,7 +196,7 @@ class TestExactSubstringRemoval:
             (r.doc_id): []
             for r in docs.collect()
         }
-        for r in ops.duplicate_span_rows(docs, "doc_id", "text", k=20).collect():
+        for r in bloom.duplicate_span_rows(docs, "doc_id", "text", k=20).collect():
             spans[r.doc_id].append((r.s, r.e))
         texts = {1: a, 2: b}
         expected = {}
@@ -209,14 +209,14 @@ class TestExactSubstringRemoval:
             )
         got = {
             r.doc_id: r.clean_text
-            for r in ops.exact_substring_removal(docs, "doc_id", "text", k=20).collect()
+            for r in bloom.exact_substring_removal(docs, "doc_id", "text", k=20).collect()
         }
         assert got == expected
 
     def test_fully_duplicated_doc_empties(self, spark):
         t = self.BOILER  # the whole doc is the shared block
         docs = spark.createDataFrame([(1, t), (2, t)], "doc_id long, text string")
-        out = ops.exact_substring_removal(docs, "doc_id", "text", k=20).collect()
+        out = bloom.exact_substring_removal(docs, "doc_id", "text", k=20).collect()
         assert all(r.clean_text == "" for r in out)
         assert all(r.removed_chars == len(t) for r in out)
 
@@ -273,7 +273,7 @@ class TestHammingTopkProperty:
         )
         got = sorted(
             tuple(r)
-            for r in ops.hamming_topk(
+            for r in vector.hamming_topk(
                 cdf, qdf, "vec_id", "embedding", k=5, radius=5
             ).collect()
         )
@@ -298,7 +298,7 @@ class TestExactSubstringRemovalProperty:
         rows = [(i, t) for i, t in enumerate(texts)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         spans: dict[int, list[tuple[int, int]]] = {i: [] for i, _ in rows}
-        for r in ops.duplicate_span_rows(docs, "doc_id", "text", k=20).collect():
+        for r in bloom.duplicate_span_rows(docs, "doc_id", "text", k=20).collect():
             spans[r.doc_id].append((r.s, r.e))
         expected = {}
         for did, t in rows:
@@ -311,7 +311,7 @@ class TestExactSubstringRemovalProperty:
             )
         got = {
             r.doc_id: (r.clean_text, r.removed_chars)
-            for r in ops.exact_substring_removal(docs, "doc_id", "text", k=20).collect()
+            for r in bloom.exact_substring_removal(docs, "doc_id", "text", k=20).collect()
         }
         assert got == expected
 
@@ -343,7 +343,7 @@ class TestStreamSpanFlag:
         words, m_bits = _span_bloom_model(spark, sf_dir)
         batch = {
             r.doc_id: r
-            for r in ops.bloom_span_flag(
+            for r in bloom.bloom_span_flag(
                 docs, "doc_id", "text", words, m_bits, _ST16_K, _ST16_H
             ).collect()
         }
@@ -360,7 +360,7 @@ class TestStreamSpanFlag:
         def parse(s):
             return [tuple(map(int, x.split("-"))) for x in s.split(";")] if s else []
 
-        d11 = ops.duplicate_spans(docs, "doc_id", "text", k=_ST16_K).collect()
+        d11 = bloom.duplicate_spans(docs, "doc_id", "text", k=_ST16_K).collect()
         for row in d11:
             flagged = parse(batch[row.doc_id].spans) if row.doc_id in batch else []
             for s, e in parse(row.spans):

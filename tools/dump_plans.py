@@ -57,7 +57,7 @@ def main() -> None:
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} bytes)")
-        from medvedi_spark.operators.llm import release_persisted
+        from medvedi_spark.operators._persist import release_persisted
         release_persisted()
 
 

@@ -55,7 +55,7 @@ def exact_sets(spark, sf_dir: str, metric: str, nq: int) -> dict[int, set[int]]:
     from pyspark.sql.window import Window
 
     from medvedi_spark.catalog import load
-    from medvedi_spark.operators import llm as ops
+    from medvedi_spark.operators import kernels, vector
 
     emb = load(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", "embedding")
@@ -64,17 +64,17 @@ def exact_sets(spark, sf_dir: str, metric: str, nq: int) -> dict[int, set[int]]:
     )
     pairs = e.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
     if metric == "l2":
-        scored = pairs.withColumn("score", ops.sqdist_dec("q_emb", "embedding"))
+        scored = pairs.withColumn("score", kernels.sqdist_dec("q_emb", "embedding"))
         w = Window.partitionBy("query_id").orderBy(F.asc("score"), F.asc("vec_id"))
     else:  # cosine
-        norms = ops.vector_norms(e, "vec_id", "embedding")
+        norms = vector.vector_norms(e, "vec_id", "embedding")
         qn = norms.withColumnRenamed("vec_id", "query_id").withColumnRenamed("nrm", "q_nrm")
         scored = (
             pairs.join(F.broadcast(qn), "query_id")
             .join(norms, "vec_id")
             .withColumn(
                 "score",
-                ops.dot_dec("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm")),
+                kernels.dot_dec("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm")),
             )
         )
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
