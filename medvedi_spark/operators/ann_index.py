@@ -356,18 +356,15 @@ def ivfadc_build(
     n_subspaces: int = 8,
     n_codes: int | None = None,
 ) -> IvfPqIndex:
-    """Train + encode the IVFADC index as DataFrames. PQ encoding uses
-    the vectorized Arrow path (bit-identical to the decimal path by the
-    certified near-tie contract — both codebooks here are base plans, so
-    the model-state collect is cheap); the coarse assignment is the
-    shared ``_coarse_route`` ranking at nprobe=1."""
+    """Train + encode the IVFADC index as DataFrames. PQ encoding is
+    :func:`pq_encode`'s Arrow pass, which collects the PQ codebook as
+    model state (cheap when it is a base plan, as both codebooks here
+    are); the coarse assignment is the shared ``_coarse_route`` ranking
+    at nprobe=1."""
     if n_codes is None:
         n_codes = pq_centroids.count()
     e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    codes = pq_encode(
-        emb, pq_centroids, id_col, vec_col,
-        n_subspaces=n_subspaces, dense=True, vectorized=True,
-    )
+    codes = pq_encode(emb, pq_centroids, id_col, vec_col, n_subspaces=n_subspaces, dense=True)
     assign, _ = _coarse_route(e, coarse_centroids, F.lit(False), 1)
     return IvfPqIndex(
         codes=codes.join(assign, "vec_id"),

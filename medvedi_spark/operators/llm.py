@@ -51,7 +51,7 @@ def minhash_band_index(df: DataFrame, id_col: str, text_col: str) -> tuple[DataF
     (st10) so shingling rules, the hash family, and band assembly can
     never drift apart.
     """
-    from medvedi_spark.functions.hashing import MINHASH_COEFFS, minhash_agg_cols, token_hash
+    from medvedi_spark.functions.hashing import minhash_agg_cols, token_hash
 
     # not fanned out (_fan_out_narrow): sf0.1 A/B measured neutral for
     # d3/d16/st10 (BASELINE.md r8 rejection note) and the 26.7x r7 100x

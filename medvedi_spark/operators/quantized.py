@@ -104,7 +104,7 @@ def _sq8_train(emb: DataFrame, vec_col: str):
     state: dims rows of ``(dim, vmin, vmax, n)``, ordered)."""
     # collected unordered, sorted driver-side: .orderBy on the dims-row
     # aggregate adds a range-partition sample job + full exchange before
-    # the collect (same ruling as the vectorized-encode codebook sort)
+    # the collect (same ruling as pq_encode's codebook sort)
     stats = sorted(sq8_minmax(emb, vec_col).collect(), key=lambda r: r["dim"])
     _sq8_check_stats(stats)
     return stats
@@ -226,12 +226,12 @@ def pq_train(
     same iterations produces bit-identical centroids.
 
     Scale shape: centroids are MODEL state (k × dim doubles) collected
-    per round and re-broadcast; each round's E-step is the CERTIFIED
-    vectorized encode (:func:`_pq_encode_vectorized` — one zero-shuffle
-    Arrow pass, bit-identical to the decimal plan; measured 3× the
-    decimal crossJoin's speed at k=64 × S=16), and the M-step is ONE
-    vec_id-keyed join + ONE (cell, dim)-keyed exact-decimal aggregate
-    whose output is k × dim rows. At 100 TB, train on a sample (pass
+    per round and re-broadcast; each round's E-step is :func:`pq_encode`
+    (one zero-shuffle Arrow pass, bit-identical to the decimal reference
+    :func:`_pq_encode_decimal`; measured 3× the decimal crossJoin's
+    speed at k=64 × S=16), and the M-step is ONE vec_id-keyed join + ONE
+    (cell, dim)-keyed exact-decimal aggregate whose output is k × dim
+    rows. At 100 TB, train on a sample (pass
     ``emb.sample(...)``) — the standard PQ practice — and encode the
     full corpus with the returned model-state codebook.
     """
@@ -255,10 +255,7 @@ def pq_train(
         cent_df = spark.createDataFrame(
             list(enumerate(cents)), "cent_id int, c_emb array<double>"
         )
-        codes = _pq_encode_vectorized(
-            e, cent_df, "vec_id", "embedding", n_subspaces,
-            "cent_id", "c_emb", dense=False,
-        )
+        codes = pq_encode(e, cent_df, "vec_id", "embedding", n_subspaces)
         assigned = codes.join(e, "vec_id")
         cells = F.array(*[F.col(f"code{s}") for s in range(n_subspaces)])
         longf = assigned.select(
@@ -311,32 +308,31 @@ def _pq_encode_vectorized(
     id_col: str,
     vec_col: str,
     n_subspaces: int,
-    cent_id_col: str,
-    cent_vec_col: str,
     dense: bool,
     force_exact: bool = False,
     assert_unique_ids: bool = False,
 ) -> DataFrame:
-    """Arrow-vectorized PQ encoding: numpy float64 argmin per subspace
+    """The body of :func:`pq_encode`: numpy float64 argmin per subspace
     with a certified error bound; candidates the bound can't separate
     from the winner are re-judged by an exact Python replica, so the
-    emitted codes are BIT-IDENTICAL to the default decimal path (and the
-    DuckDB oracle) while the hot loop is one einsum-shaped batch op
-    instead of ~corpus × k interpreted decimal folds (measured at sf0.1:
-    consuming all 8 code columns cost 2.9 s decimal vs ~0.4 s here).
+    emitted codes are BIT-IDENTICAL to the decimal reference
+    :func:`_pq_encode_decimal` (and the DuckDB oracle) while the hot loop
+    is one einsum-shaped batch op instead of ~corpus × k interpreted
+    decimal folds (measured at sf0.1: consuming all 8 code columns cost
+    2.9 s decimal vs ~0.4 s here).
 
     Scale shape: the codebook is MODEL STATE (k × dim, same ruling as
     kmeans_lloyd's centroid collect) — collected once, shipped in the
     closure; the corpus pass is ONE ``mapInPandas`` projection with ZERO
-    shuffle (the decimal path pays a vec_id-keyed aggregate exchange).
-    Degenerate rows (null / non-finite / short slices) reproduce the
-    decimal path's observed all-null tie-break: lowest ``cent_id`` wins.
-    Codebook preconditions are enforced here, loudly: unique ids, finite
-    values, uniform dims. ``vec_id`` uniqueness is ASSUMED by default
-    (the decimal path folds duplicate ids into one groupBy row; this path
-    emits one row per input row, so duplicates would silently diverge) —
-    pass ``assert_unique_ids=True`` to spend one count-distinct job
-    verifying it before encoding.
+    shuffle (the decimal reference pays a vec_id-keyed aggregate
+    exchange). Degenerate rows (null / non-finite / short slices)
+    reproduce the reference's observed all-null tie-break: lowest
+    ``cent_id`` wins. Codebook preconditions are enforced here, loudly:
+    unique ids, finite values, uniform dims. ``vec_id`` uniqueness is
+    ASSUMED by default (the reference folds duplicate ids into one
+    groupBy row; this pass emits one row per input row, so duplicates
+    would silently diverge) — pass ``assert_unique_ids=True`` to spend
+    one count-distinct job verifying it before encoding.
 
     ``force_exact=True`` routes EVERY (row, subspace) through the
     Python-decimal replica — the equivalence-test hook proving the
@@ -352,15 +348,13 @@ def _pq_encode_vectorized(
     # collected rows is plan-free and identical for the unique ids this
     # function enforces (na_position='first' mirrors ASC NULLS FIRST).
     cb = (
-        centroids.select(F.col(cent_id_col).alias("cent_id"), F.col(cent_vec_col).alias("c_emb"))
+        centroids.select("cent_id", "c_emb")
         .toPandas()
         .sort_values("cent_id", na_position="first", kind="mergesort")
         .reset_index(drop=True)
     )
     id_type = emb.select(F.col(id_col).alias("vec_id")).schema["vec_id"].dataType.simpleString()
-    cid_type = (
-        centroids.select(F.col(cent_id_col).alias("cent_id")).schema["cent_id"].dataType.simpleString()
-    )
+    cid_type = centroids.schema["cent_id"].dataType.simpleString()
     code_type = "int" if dense else cid_type
     schema = ", ".join([f"vec_id {id_type}"] + [f"code{s} {code_type}" for s in range(n_subspaces)])
     e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
@@ -368,21 +362,21 @@ def _pq_encode_vectorized(
         dup = e.groupBy("vec_id").count().where(F.col("count") > 1).limit(1).count()
         if dup:
             raise ValueError(
-                "vectorized pq_encode emits one row per input row; duplicate "
-                f"{id_col} values would diverge from the decimal path's groupBy fold"
+                f"duplicate {id_col} values: pq_encode emits one code row per "
+                "input row, so every vector needs a unique id"
             )
     if len(cb) == 0:
-        # decimal path: crossJoin against an empty codebook -> no rows
+        # the reference crossJoins against an empty codebook -> no rows
         return spark.createDataFrame([], schema)
     cent_ids = cb["cent_id"].to_numpy()
     if len(np.unique(cent_ids)) != len(cent_ids):
-        raise ValueError("vectorized pq_encode requires unique centroid ids")
+        raise ValueError("PQ codebook has duplicate cent_id values")
     try:
         cmat = np.stack([np.asarray(v, dtype=np.float64) for v in cb["c_emb"]])
     except ValueError as exc:
-        raise ValueError("vectorized pq_encode requires a uniform-dim codebook") from exc
+        raise ValueError("PQ codebook vectors differ in dimension") from exc
     if not np.isfinite(cmat).all():
-        raise ValueError("vectorized pq_encode requires finite centroids; use the default path")
+        raise ValueError("PQ codebook has non-finite values (NaN or inf)")
     cb_dim = cmat.shape[1]
     subs = n_subspaces
     # Bind everything the worker closure needs as LOCALS: cloudpickle
@@ -421,7 +415,7 @@ def _pq_encode_vectorized(
             n = len(pdf)
             if n == 0:
                 continue
-            # default cidx 0 = lowest cent_id — the decimal path's
+            # default cidx 0 = lowest cent_id — the decimal reference's
             # all-null-d2 tie-break for every degenerate case
             codes = np.zeros((subs, n), dtype=np.int64)
             lens = np.fromiter(
@@ -467,50 +461,53 @@ def pq_encode(
     id_col: str,
     vec_col: str,
     n_subspaces: int = 8,
-    cent_id_col: str = "cent_id",
-    cent_vec_col: str = "c_emb",
     dense: bool = False,
-    vectorized: bool = False,
-    _force_exact: bool = False,
     assert_unique_ids: bool = False,
 ) -> DataFrame:
     """Product-quantization encoding: split each vector into
     ``n_subspaces`` contiguous subvectors and replace each with the id of
     its nearest sub-codebook centroid — the compression step that turns a
     100 TB float corpus into bytes-per-vector codes for ADC-style ANN
-    (Jégou et al., TPAMI 2011). Returns ``(vec_id, code0..code{S-1})``.
+    (Jégou et al., TPAMI 2011). ``centroids`` is ``(cent_id, c_emb)``.
+    Returns ``(vec_id, code0..code{S-1})``.
 
-    Scale shape: the codebook is MODEL state (k × dim doubles) and
-    broadcasts; all ``n_subspaces`` argmins share ONE broadcast
-    nested-loop pass and ONE aggregate shuffle keyed on the vector id
-    (8 × min_by in a single groupBy — not 8 joins). Ties break on
-    centroid id, and subspace distances accumulate in exact decimal, so
-    codes are bit-reproducible across partitionings and engines.
+    Scale shape: the codebook is MODEL state (k × dim doubles), collected
+    once at build time, and the corpus is ONE zero-shuffle Arrow pass
+    (:func:`_pq_encode_vectorized`). Codes are bit-identical to the
+    exact-decimal reference :func:`_pq_encode_decimal`, ties broken on
+    centroid id, so they reproduce across partitionings and engines.
+    Pass a cheap codebook plan (a base-table filter or a local frame):
+    collecting a derived plan runs its whole upstream pipeline as a
+    build-time job. ``vec_id`` must be unique (one code row per input
+    row); ``assert_unique_ids=True`` spends one count job verifying it.
 
     ``dense=True`` emits DENSE POSITIONAL codes (0..k-1, the rank of the
     winning centroid id) instead of raw centroid ids — the form ADC
     scoring wants, so downstream lookups are pure ``element_at``
-    arithmetic with no id→position translation. The position column is a
-    ``row_number`` over the k-row codebook (model state; the
-    single-partition window sorts k rows, not corpus rows).
-
-    ``vectorized=True`` switches to :func:`_pq_encode_vectorized` — the
-    same codes bit-for-bit, but computed as one zero-shuffle Arrow batch
-    pass with the codebook collected as model state. Opt in when the
-    codebook is a CHEAP base plan (collecting a derived plan executes
-    its whole upstream pipeline at build time — the s8 residual-codebook
-    trap); the decimal path stays the default and the oracle's shape.
-    The vectorized path ASSUMES unique ``vec_id`` (the decimal path folds
-    duplicates into one groupBy row; vectorized emits one row per input
-    row) — ``assert_unique_ids=True`` spends one count job verifying.
+    arithmetic with no id→position translation.
     """
-    if vectorized:
-        return _pq_encode_vectorized(
-            emb, centroids, id_col, vec_col, n_subspaces, cent_id_col, cent_vec_col, dense,
-            force_exact=_force_exact, assert_unique_ids=assert_unique_ids,
-        )
+    return _pq_encode_vectorized(
+        emb, centroids, id_col, vec_col, n_subspaces, dense, assert_unique_ids=assert_unique_ids
+    )
+
+
+def _pq_encode_decimal(
+    emb: DataFrame,
+    centroids: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_subspaces: int = 8,
+    dense: bool = False,
+) -> DataFrame:
+    """Reference PQ encode in the oracle's shape, which the tests hold
+    :func:`pq_encode` to code for code: all ``n_subspaces`` argmins share
+    ONE broadcast nested-loop pass over the codebook and ONE aggregate
+    shuffle keyed on the vector id (S × min_by in a single groupBy);
+    subspace distances accumulate in exact decimal and ties break on
+    centroid id. With ``dense=True`` the position column is a
+    ``row_number`` over the k-row codebook."""
     e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    c = centroids.select(F.col(cent_id_col).alias("cent_id"), F.col(cent_vec_col).alias("c_emb"))
+    c = centroids.select("cent_id", "c_emb")
     if dense:
         c = c.withColumn("cidx", F.row_number().over(Window.partitionBy(F.lit(0)).orderBy("cent_id")) - 1)
     cand = e.crossJoin(F.broadcast(c))
@@ -596,7 +593,6 @@ def pq_adc_topk(
     k: int = 10,
     n_subspaces: int = 8,
     n_codes: int | None = None,
-    vectorized_encode: bool = False,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k search over PQ codes: queries stay
     full-precision, the corpus is its PQ codes, and each candidate's
@@ -615,17 +611,14 @@ def pq_adc_topk(
     and the LUT rows carry the same ``row_number``-derived position, so
     every lookup is pure positional arithmetic — no id→index translation
     anywhere (an earlier O(k) chained CASE WHEN per code column was a
-    codegen blow-up at k=256: ~2k stacked whens per expression). The only
-    driver-side model state is the codebook SIZE (one count).
-    Decimal addition is exact (associative), so the fixed-order fold is
+    codegen blow-up at k=256: ~2k stacked whens per expression).
+    Driver-side model state is the codebook ``pq_encode`` collects and,
+    unless ``n_codes`` is passed, its SIZE (one count). Decimal addition is exact (associative), so the fixed-order fold is
     bit-identical to the order-free SQL SUM the oracle runs.
     Returns ``(query_id, neighbor_id, rank, d2_approx)``.
     """
     e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    codes = pq_encode(
-        emb, centroids, id_col, vec_col, n_subspaces=n_subspaces, dense=True,
-        vectorized=vectorized_encode,
-    )
+    codes = pq_encode(emb, centroids, id_col, vec_col, n_subspaces=n_subspaces, dense=True)
     queries = e.filter(probe).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     lut_arr, d2_approx = _pq_lut(queries, centroids, n_subspaces, n_codes=n_codes)
     scored = (
@@ -702,7 +695,6 @@ def ivfadc_topk(
     nprobe: int = 2,
     n_subspaces: int = 8,
     n_codes: int | None = None,
-    vectorized_encode: bool = False,
 ) -> DataFrame:
     """IVFADC: inverted-file routing composed with ADC scoring (Jégou et
     al., TPAMI 2011 — the billion-scale ANN serving architecture). Fixes
@@ -717,10 +709,9 @@ def ivfadc_topk(
     ``vec_id`` (vec_id-keyed shuffle, corpus-linear); the (query, cell)
     routing table × per-query LUT is model state and BROADCASTS, so
     candidate generation is a broadcast HASH join on ``cell`` — no
-    corpus × queries cross join anywhere (with ``vectorized_encode``
-    the codes side never joins at all: the PQ codebook is collected
-    model state and encoding is one zero-shuffle Arrow pass; otherwise
-    its only crossJoin is against the k-row codebook). Scoring reuses
+    corpus × queries cross join anywhere (the codes side never joins
+    at all: the PQ codebook is collected model state and encoding is
+    one zero-shuffle Arrow pass). Scoring reuses
     the dense positional ``element_at`` LUT fold from ``pq_adc_topk``
     (exact decimal, order-free, oracle-replayable).
 
@@ -742,10 +733,7 @@ def ivfadc_topk(
     """
     e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
     assign, probe_cells = _coarse_route(e, coarse_centroids, probe, nprobe)
-    codes = pq_encode(
-        emb, pq_centroids, id_col, vec_col, n_subspaces=n_subspaces, dense=True,
-        vectorized=vectorized_encode,
-    )
+    codes = pq_encode(emb, pq_centroids, id_col, vec_col, n_subspaces=n_subspaces, dense=True)
     corpus = codes.withColumnRenamed("vec_id", "neighbor_id").join(
         assign.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
     )
@@ -779,7 +767,6 @@ def ivfadc_rerank_topk(
     nprobe: int = 2,
     n_subspaces: int = 8,
     n_codes: int | None = None,
-    vectorized_encode: bool = False,
 ) -> DataFrame:
     """Two-stage IVFADC search: ADC shortlists ``shortlist`` candidates
     per query (cell-bounded, compressed-domain — :func:`ivfadc_topk`),
@@ -801,7 +788,6 @@ def ivfadc_rerank_topk(
     cand = ivfadc_topk(
         emb, coarse_centroids, pq_centroids, id_col, vec_col, probe,
         k=shortlist, nprobe=nprobe, n_subspaces=n_subspaces, n_codes=n_codes,
-        vectorized_encode=vectorized_encode,
     ).select("query_id", "neighbor_id")
     q = e.filter(probe).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     n = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("n_emb"))
@@ -840,18 +826,14 @@ def coarse_residuals(
 def ivfadc_residual_topk(
     emb: DataFrame,
     coarse_centroids: DataFrame,
-    pq_centroids: DataFrame | None,
+    pq_centroids: DataFrame,
     id_col: str,
     vec_col: str,
     probe,
     k: int = 10,
     nprobe: int = 2,
     n_subspaces: int = 8,
-    pq_centroid_filter=None,
-    pq_train_k: int | None = None,
-    pq_train_iters: int | None = None,
     n_codes: int | None = None,
-    vectorized_encode: bool = False,
 ) -> DataFrame:
     """RESIDUAL IVFADC — the faithful published form (Jégou et al., TPAMI
     2011 §IV): PQ encodes the residual ``x − coarse_centroid(x)`` rather
@@ -861,14 +843,22 @@ def ivfadc_residual_topk(
     query's LUT differs PER PROBED CELL: the LUT table is keyed
     ``(query_id, cell)`` — still model state, ``queries × nprobe`` rows.
 
+    ``pq_centroids`` must live in the RESIDUAL domain (residuals cluster
+    near zero — raw-vector codewords throw the bits away): train it with
+    :func:`pq_train` over :func:`coarse_residuals` of the same coarse
+    codebook, as s8 does. Measured recall@10 at sf0.01: 0.12 raw-domain
+    codebook, 0.28 untrained residual stand-in, 0.72 trained (S=32,
+    k=64, 3 iters).
+
     Plan shape: one coarse-routing pass shared with :func:`ivfadc_topk`
     (broadcast codebook, double prefilter + lossless decimal refine);
     corpus residuals come from a broadcast join of the assignment back
-    to the coarse codebook (map-side, zero shuffle beyond pq_encode's
-    one aggregate); scoring is the same broadcast hash join on ``cell``
-    with positional ``element_at`` lookups. All residual arithmetic is
-    plain IEEE double subtraction (bit-identical across engines) with
-    exact-decimal accumulation, so the oracle replays it exactly.
+    to the coarse codebook (map-side), encoded by :func:`pq_encode`'s
+    zero-shuffle Arrow pass; scoring is the same broadcast hash join on
+    ``cell`` with positional ``element_at`` lookups. All residual
+    arithmetic is plain IEEE double subtraction (bit-identical across
+    engines) with exact-decimal accumulation, so the oracle replays it
+    exactly.
 
     Returns ``(query_id, neighbor_id, rank, d2_approx)``.
     """
@@ -883,43 +873,8 @@ def ivfadc_residual_topk(
         .join(F.broadcast(cc), "cell")
         .select("vec_id", "cell", residual.alias("residual"))
     )
-    if pq_centroids is None and pq_train_k is not None:
-        # The sub-codebook must live in the RESIDUAL domain (residuals
-        # cluster near zero — quantizing them against raw-vector
-        # codewords throws the bits away) AND be TRAINED there: run the
-        # deterministic per-subspace Lloyd rounds over the residual
-        # frame. pq_train's init collect / per-round passes execute the
-        # residual plan, whose coarse routing is persisted above, so the
-        # repeated upstream cost is one narrow cached-table scan per
-        # round. Measured recall@10 at sf0.01: 0.28 untrained residual
-        # stand-in → 0.72 trained (S=32, k=64, 3 iters).
-        pq_centroids = pq_train(
-            res, "vec_id", "residual",
-            n_subspaces=n_subspaces, k=pq_train_k, n_iter=pq_train_iters or 3,
-        )
-        n_codes = pq_train_k
-    elif pq_centroids is None:
-        # The untrained stand-in: the filtered vectors' own residuals as
-        # codewords (measured recall@10 at sf0.01: 0.12 raw-domain
-        # codebook vs 0.28 residual-domain), kept for the closed-form
-        # oracle replay and A/B baselines.
-        if pq_centroid_filter is None:
-            raise ValueError("pass pq_centroids=, pq_centroid_filter= or pq_train_k=")
-        pq_centroids = res.filter(pq_centroid_filter).select(
-            F.col("vec_id").alias("cent_id"), F.col("residual").alias("c_emb")
-        )
-        # size the LUT from the CHEAP base filter, not the derived
-        # residual plan — counting the latter would execute the whole
-        # coarse-routing pipeline as an extra build-time job
-        n_codes = e.filter(pq_centroid_filter).count()
-    # vectorized_encode: opt in ONLY when pq_centroids is a cheap/local
-    # plan (collecting a derived codebook executes its upstream pipeline
-    # — the same trap as pq_adc_topk's note); residual vec_ids are
-    # unique by construction (one row per corpus vector)
-    codes = pq_encode(
-        res, pq_centroids, "vec_id", "residual", n_subspaces=n_subspaces, dense=True,
-        vectorized=vectorized_encode,
-    )
+    # residual vec_ids are unique by construction (one row per vector)
+    codes = pq_encode(res, pq_centroids, "vec_id", "residual", n_subspaces=n_subspaces, dense=True)
     corpus = codes.withColumnRenamed("vec_id", "neighbor_id").join(
         assign.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
     )

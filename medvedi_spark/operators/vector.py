@@ -146,26 +146,19 @@ def ivf_ann(
     id_col: str,
     vec_col: str,
     probe: Column,
-    centroids: DataFrame | None = None,
-    centroid_filter: Column | None = None,
+    centroids: DataFrame,
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
     """IVF-bucketed approximate nearest neighbor (the scale path).
 
-    ``centroids`` is the coarse codebook — at 100 TB it comes from an
-    offline k-means and broadcasts, exactly as here; for the bench a
-    fixed subset of vectors (``centroid_filter``) stands in. Every vector
-    is assigned to its argmax-inner-product cell in ONE broadcast-join
+    ``centroids`` is the coarse codebook ``(cent_id, c_emb)`` — at 100 TB
+    it comes from an offline k-means and broadcasts, exactly as here; s2
+    passes a fixed subset of vectors as a stand-in. Every vector is
+    assigned to its argmax-inner-product cell in ONE broadcast-join
     pass; a probe searches only its top-``nprobe`` cells.
     """
     e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    if centroids is None:
-        if centroid_filter is None:
-            raise ValueError("pass centroids= or centroid_filter=")
-        centroids = e.filter(centroid_filter).select(
-            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
-        )
     # cell scoring in fast double, exact decimal only for the ~nprobe
     # surviving cells per vector (lossless — see _refine_topk)
     fast_cells = e.crossJoin(F.broadcast(centroids)).withColumn(
@@ -211,8 +204,6 @@ def kmeans_assign(
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
-    cent_id_col: str = "cent_id",
-    cent_vec_col: str = "c_emb",
 ) -> DataFrame:
     """Nearest-centroid assignment: each vector → argmin squared-L2 cell
     (ties break on centroid id). The centroid table is model state
@@ -221,7 +212,7 @@ def kmeans_assign(
     Returns ``(vec_id, cell, d2)``.
     """
     e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    c = centroids.select(F.col(cent_id_col).alias("cent_id"), F.col(cent_vec_col).alias("c_emb"))
+    c = centroids.select("cent_id", "c_emb")
     w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cent_id"))
     return (
         e.crossJoin(F.broadcast(c))
@@ -285,8 +276,6 @@ def semantic_dedup(
     id_col: str,
     vec_col: str,
     threshold: float = 0.3,
-    cent_id_col: str = "cent_id",
-    cent_vec_col: str = "c_emb",
 ) -> DataFrame:
     """Semantic deduplication (SemDeDup, Abbas et al. 2023,
     arXiv:2303.09540): assign every vector to its nearest centroid, then
@@ -303,9 +292,7 @@ def semantic_dedup(
     decide. Returns one row per vector: ``(vec_id, cell, is_dup,
     n_dup_of)``.
     """
-    assign = kmeans_assign(emb, centroids, id_col, vec_col, cent_id_col, cent_vec_col).select(
-        "vec_id", "cell"
-    )
+    assign = kmeans_assign(emb, centroids, id_col, vec_col).select("vec_id", "cell")
     e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
     norms = vector_norms(e, "vec_id", "embedding")
     side = assign.join(e, "vec_id").join(norms, "vec_id")

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from medvedi_spark.catalog import load, model_state
 from medvedi_spark.operators import bloom, graph, jaccard, llm, quantized, vector
 from medvedi_spark.functions.hashing import (
-    minhash_agg_cols,
     sql_minhash_aggs,
     sql_simhash,
     sql_token_hash,
@@ -413,10 +412,12 @@ _S2_NCENT = 16
     tags=("similarity", "ann", "ivf", "llm"),
 )
 def s2_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load(spark, sf_dir, "embeddings")
+    cent = emb.filter(F.col("vec_id") < _S2_NCENT).select(
+        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
+    )
     return vector.ivf_ann(
-        load(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-        probe=F.col("vec_id") < 10,
-        centroid_filter=F.col("vec_id") < _S2_NCENT,
+        emb, "vec_id", "embedding", probe=F.col("vec_id") < 10, centroids=cent,
         k=_S2_K, nprobe=_S2_NPROBE,
     )
 
@@ -809,10 +810,10 @@ def s3_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 64-dim vector splits into 8 contiguous subvectors; each subvector is
 # replaced by the id of its nearest sub-codebook centroid (here the
 # first 16 vectors, so the oracle can replay the identical assignment).
-# The engine computes ALL 8 subspace argmins in ONE broadcast
-# nested-loop pass + ONE aggregate shuffle (8 min_bys in a single
-# groupBy) — not 8 joins; distances accumulate in exact decimal with
-# centroid-id tiebreaks, so the codes are bit-reproducible.
+# The engine collects the 16-row codebook as model state and computes
+# ALL 8 subspace argmins in ONE zero-shuffle Arrow pass; a float screen
+# with an exact-decimal replica on near ties and centroid-id tiebreaks
+# keeps the codes bit-identical to the oracle's decimal replay.
 # --------------------------------------------------------------------------
 
 _S4_SUBS = 8
@@ -1042,9 +1043,6 @@ def s5_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, cent, "vec_id", "embedding",
         probe=F.col("vec_id") < _S5_PROBES, k=_S5_K, n_subspaces=_PQ_SUBS,
         n_codes=_PQ_K,  # known codebook size — skips the per-query count job
-        # trained codebook is already driver-side model state; encode
-        # becomes one zero-shuffle Arrow pass, codes bit-identical
-        vectorized_encode=True,
     )
 
 
@@ -1168,7 +1166,6 @@ def s6_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe=F.col("vec_id") < _S5_PROBES,
         k=_S5_K, nprobe=_S6_NPROBE, n_subspaces=_PQ_SUBS,
         n_codes=_PQ_K,  # known codebook size — skips the per-query count job
-        vectorized_encode=True,  # trained codebook is model state: see s5
     )
 
 
@@ -1238,7 +1235,6 @@ def s7_ivfadc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe=F.col("vec_id") < _S5_PROBES,
         k=_S5_K, shortlist=_S7_SHORTLIST, nprobe=_S6_NPROBE, n_subspaces=_PQ_SUBS,
         n_codes=_PQ_K,  # known codebook size — skips the per-query count job
-        vectorized_encode=True,  # trained codebook is model state: see s5
     )
 
 
@@ -1371,17 +1367,15 @@ def s8_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
     # codebook trained in the RESIDUAL domain (init = residuals of the k
-    # smallest ids, coarse_residuals → pq_train — the operator's own
-    # pq_train_k= path, hoisted through the session model-state cache)
-    # so the oracle's rsv subtraction + Lloyd replay covers the
-    # identical IEEE arithmetic
+    # smallest ids, coarse_residuals → pq_train, held in the session
+    # model-state cache) so the oracle's rsv subtraction + Lloyd replay
+    # covers the identical IEEE arithmetic
     cent = _trained_residual_codebook(spark, sf_dir)
     return quantized.ivfadc_residual_topk(
         emb, coarse, cent, "vec_id", "embedding",
         probe=F.col("vec_id") < _S5_PROBES,
         k=_S5_K, nprobe=_S6_NPROBE, n_subspaces=_S8_SUBS,
         n_codes=_S8_K,
-        vectorized_encode=True,  # cached local codebook: see s5
     )
 
 

@@ -761,7 +761,6 @@ def _st13_oracle() -> str:
         "the batch assignment+code CTEs.",
 )
 def st13_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     from medvedi_spark.catalog import load

@@ -140,7 +140,6 @@ def test_ivfadc_roundtrip_equals_inline(spark, sf_dir, idx_path):
     inline = quantized.ivfadc_topk(
         emb, _coarse(emb), pq_cents, "vec_id", "embedding",
         probe=F.col("vec_id") < 5, k=K, nprobe=NPROBE, n_subspaces=8, n_codes=16,
-        vectorized_encode=True,
     )
     got = {(r.query_id, r.rank): (r.neighbor_id, r.d2_approx) for r in loaded.collect()}
     want = {(r.query_id, r.rank): (r.neighbor_id, r.d2_approx) for r in inline.collect()}
@@ -173,7 +172,7 @@ def test_ivfadc_rerank_roundtrip_equals_inline(spark, sf_dir, idx_path):
     inline = quantized.ivfadc_rerank_topk(
         emb, _coarse(emb), pq_cents, "vec_id", "embedding",
         probe=F.col("vec_id") < 5, k=K, shortlist=15, nprobe=NPROBE,
-        n_subspaces=8, n_codes=16, vectorized_encode=True,
+        n_subspaces=8, n_codes=16,
     )
     got = {(r.query_id, r.rank): (r.neighbor_id, r.d2) for r in loaded.collect()}
     want = {(r.query_id, r.rank): (r.neighbor_id, r.d2) for r in inline.collect()}

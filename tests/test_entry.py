@@ -99,7 +99,7 @@ def test_gate_window_composition():
 
 def test_gated_queries_all_have_oracles():
     """Inside the window, only justified non-SQL ops may omit an oracle."""
-    from medvedi_spark.queries.registry import GATE_WINDOW, QUERIES
+    from medvedi_spark.queries.registry import GATE_WINDOW
 
     names = list(entry_mod.queries())[:GATE_WINDOW]
     oracles = entry_mod.oracle_sql()

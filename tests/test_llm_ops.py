@@ -148,8 +148,6 @@ def test_router_picks_shuffled_tier_past_broadcast_cap(spark, monkeypatch):
 def test_edit_distance_pairs_semantics(spark, tmp_path):
     """Bounded-Levenshtein pairs: exact dups at dist 0, near edits
     counted, above-threshold and cross-block pairs excluded."""
-    import os
-
     import pandas as pd
 
     from medvedi_spark.operators.llm import edit_distance_pairs

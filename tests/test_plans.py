@@ -164,12 +164,18 @@ def test_s3_centroids_broadcast(spark, sf_dir, qmap):
 
 
 def test_s4_s5_codebook_broadcast(spark, sf_dir, qmap):
-    """PQ encode/search: the codebook (and s5's LUT) must broadcast;
-    the corpus side must never shuffle-join."""
-    for name in ("s4_pq_encode", "s5_pq_adc_topk"):
-        facts = plan_facts(qmap[name](spark, sf_dir))
-        assert facts["bnlj"] + facts["bhj"] >= 1, f"{name}: model state must broadcast"
-        assert facts["smj"] + facts["shj"] == 0, f"{name}: corpus must not shuffle-join"
+    """PQ encode/search: s4's encode is ONE zero-shuffle Arrow pass with
+    the codebook collected as model state; s5's codebook and LUT must
+    broadcast. The corpus side must never shuffle-join."""
+    df = qmap["s4_pq_encode"](spark, sf_dir)
+    facts = plan_facts(df)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan, "s4: PQ encode must be the Arrow pass"
+    assert facts["exch"] == 0, "s4: PQ encode must not shuffle"
+    assert facts["smj"] + facts["shj"] == 0, "s4: corpus must not shuffle-join"
+    facts = plan_facts(qmap["s5_pq_adc_topk"](spark, sf_dir))
+    assert facts["bnlj"] + facts["bhj"] >= 1, "s5_pq_adc_topk: model state must broadcast"
+    assert facts["smj"] + facts["shj"] == 0, "s5_pq_adc_topk: corpus must not shuffle-join"
 
 
 def test_m4_single_shuffle_arrow(spark, sf_dir, qmap):
@@ -216,7 +222,7 @@ def test_s5_adc_no_corpus_by_query_shuffle(spark, sf_dir, qmap):
     df = qmap["s5_pq_adc_topk"](spark, sf_dir)
     facts = plan_facts(df)
     assert facts["bnlj"] >= 2, "codebook + LUT must both broadcast"
-    # exchanges: pq_encode agg, LUT agg, window partitionBy — never a
+    # exchanges: LUT agg, window partitionBy — never a
     # groupBy over (query, neighbor) pairs
     assert facts["exch"] <= 3
 
@@ -229,13 +235,13 @@ def test_s6_ivfadc_cell_bounded(spark, sf_dir, qmap):
     df = qmap["s6_ivfadc_topk"](spark, sf_dir)
     facts = plan_facts(df)
     # BNLJs are codebook-sized only: coarse assign + LUT build. The PQ
-    # codebook no longer broadcasts at all — pq_encode(vectorized=True)
-    # collects it as model state and encodes in one zero-shuffle Arrow
-    # pass (MapInPandas), so the corpus side of encoding never joins.
+    # codebook does not broadcast at all — pq_encode collects it as
+    # model state and encodes in one zero-shuffle Arrow pass
+    # (MapInPandas), so the corpus side of encoding never joins.
     assert facts["bnlj"] >= 2, "coarse codebook + LUT must broadcast"
     assert facts["bhj"] >= 1, "candidate generation must be a hash join on cell"
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan, "PQ encode must be the vectorized Arrow pass"
+    assert "MapInPandas" in plan, "PQ encode must be the Arrow pass"
 
     # numeric cell-bounding: rank over ALL scored rows (k=corpus) must
     # cover < n_queries * (corpus - 1) pairs — the flat scan's count

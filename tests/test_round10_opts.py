@@ -17,7 +17,6 @@ after the directive batch (OPTIMIZATION_r10.md changes 1, 3, 4, 5, 7, 8):
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from medvedi_spark.operators import _persist
 from medvedi_spark.operators import bloom, graph, quantized

@@ -189,8 +189,7 @@ def test_pq_vectorized_assert_unique_ids(spark):
     )
     with pytest.raises(ValueError, match="duplicate"):
         quantized.pq_encode(
-            dup, cents, "vec_id", "embedding", n_subspaces=2,
-            vectorized=True, assert_unique_ids=True,
+            dup, cents, "vec_id", "embedding", n_subspaces=2, assert_unique_ids=True,
         ).collect()
     # unique ids pass the guard and encode normally
     uniq = spark.createDataFrame(
@@ -199,8 +198,7 @@ def test_pq_vectorized_assert_unique_ids(spark):
     got = {
         r.vec_id: (r.code0, r.code1)
         for r in quantized.pq_encode(
-            uniq, cents, "vec_id", "embedding", n_subspaces=2,
-            vectorized=True, assert_unique_ids=True,
+            uniq, cents, "vec_id", "embedding", n_subspaces=2, assert_unique_ids=True,
         ).collect()
     }
     assert got == {7: (0, 0), 8: (1, 1)}

@@ -83,10 +83,12 @@ def test_trained_residual_ivfadc_runs(spark, sf_dir):
     coarse = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
     )
+    # residual-domain codebook trained the way s8 trains its own
+    res = quantized.coarse_residuals(emb, coarse, "vec_id", "embedding")
+    cent = quantized.pq_train(res, "vec_id", "residual", n_subspaces=8, k=8, n_iter=1)
     out = quantized.ivfadc_residual_topk(
-        emb, coarse, None, "vec_id", "embedding",
-        probe=F.col("vec_id") < 3, k=5, nprobe=2, n_subspaces=8,
-        pq_train_k=8, pq_train_iters=1,
+        emb, coarse, cent, "vec_id", "embedding",
+        probe=F.col("vec_id") < 3, k=5, nprobe=2, n_subspaces=8, n_codes=8,
     )
     pdf = out.toPandas()
     assert set(pdf.columns) == {"query_id", "neighbor_id", "rank", "d2_approx"}

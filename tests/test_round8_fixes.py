@@ -16,8 +16,6 @@ A. dataset_fingerprint (cache keys), bits_array_sql (plan literal),
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 

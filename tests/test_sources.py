@@ -93,7 +93,6 @@ def test_p10_export_shard_size_bound(spark, sf_dir):
     import gzip
     import json
     import os
-    import tempfile
 
     from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
 

@@ -228,9 +228,6 @@ def test_readability_hand_computed(spark):
     # "analysis" -> a,a,y? no — y is not in [aeiou] -> a,a,i = 3,
     # "here" -> e,e = 2  => doc1 total 8
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    import medvedi_spark.queries.text_ops  # noqa: F401  (registration)
-    from medvedi_spark.queries.registry import QUERIES
-
     # run the same projection inline on the local frame
     import pyspark.sql.functions as F2
 
