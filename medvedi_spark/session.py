@@ -30,6 +30,19 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: generated code differs from run to run. 4,096 holds a whole sweep.
 CODEGEN_CACHE_ENTRIES = 4096
 
+#: Initial heap of the driver JVM (``-Xms``, passed through
+#: ``spark.driver.defaultJavaOptions`` so a user's
+#: ``spark.driver.extraJavaOptions`` still applies after it). Started at
+#: the JVM's ergonomic 252 MB, G1 grows the heap only when its pauses take
+#: too long; its concurrent marking, which a humongous allocation starts
+#: whenever occupancy is past the initiating threshold, does not count.
+#: On a 4-core host, about one run of the benchmark's ``ingest_write`` in
+#: five kept a 540-670 MB heap and ran about 80 marking cycles. Its G1
+#: threads used 9-19 CPU s per run against 2-5 s, and it cost 900-1,200
+#: CPU ms per request against 600-800. The other runs grew to 1.8-2.2 GB
+#: and ran 6-25 cycles. Started at 2 GB, eight runs in a row ran 5 each.
+INITIAL_HEAP = "2g"
+
 
 def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -80,5 +93,6 @@ def get_spark(
         # either on-disk encoding.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.driver.defaultJavaOptions", f"-Xms{INITIAL_HEAP}")
     )
     return builder.getOrCreate()
