@@ -1,10 +1,14 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and prints ONE JSON line with per-query
-median wall-clock seconds over warm runs.
+"""Benchmark harness: runs every registered query over the tables at
+``session.DEFAULT_SF_DIR`` ($SPARK_GRAFT_SF_DIR) and records the median
+and the min CPU seconds of $SPARK_GRAFT_BENCH_RUNS warm reps (default 3)
+per query.
 
-Headline set = every registered query tagged for bench (falls back to all
-registered queries). Each query is executed to completion via a count on
-the result (no driver-side collect of payload data).
+A rep builds the query and collects ``testing.checksum`` of its output
+(row count and ``sum(xxhash64(*cols))``), the action ``perfbench`` times,
+so Catalyst cannot prune the work away. Its cost is the CPU time of this
+process, the JVM and its Python workers, exited workers included
+(``cpu_clock.TreeClock``), which leaves out the time the host gives to
+other guests.
 """
 
 from __future__ import annotations
@@ -12,37 +16,22 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from medvedi_spark.cpu_clock import TreeClock
 from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
-from medvedi_spark.session import get_spark
+from medvedi_spark.session import DEFAULT_SF_DIR, get_spark
+from medvedi_spark.testing import checksum
 
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-
-# Burst resilience (VERDICT r10 directive #1): the r10 host showed
-# multi-second scheduler/hypervisor stalls landing on DIFFERENT rows each
-# sweep (per-query dispersion p10 0.52x / p90 1.68x between same-code
-# sweeps), so a median-of-3 headline loses to a single stall on a heavy
-# row. Rows whose first RUNS samples show high dispersion earn up to
-# EXTRA_RUNS more reps before the median is taken — same queries, same
-# sf, same timed action, same statistic (median); only the sample count
-# for demonstrably noisy rows grows. Cheap rows can never trigger it
-# (absolute spread gate), so the added bench wall is bounded by the few
-# heavy lifecycle/streaming rows that need it.
-EXTRA_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_EXTRA_RUNS", "2"))
-_DISPERSION_RATIO = 1.5   # max/min above this = bursty
-_DISPERSION_ABS_SEC = 0.75  # and the spread must be worth re-sampling
+#: the timed action and clock; ``tools/ledger.py --compare`` refuses
+#: ledgers taken any other way
+ACTION = "checksum_cpu"
 
 
 def main() -> None:
-    # Bench-harness opt-in for the streaming ingest fan-out (ADVICE r8):
-    # the production default is 0 (no exchange — a real source supplies
-    # its own partitions), but the sf fixtures are single-row-group
-    # parquet files whose micro-batches land on ONE task without it.
-    os.environ.setdefault("SPARK_GRAFT_STREAM_INGEST_PARTITIONS", "32")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     if not os.path.isdir(sf_dir):
         raise SystemExit(f"bench: SPARK_GRAFT_SF_DIR={sf_dir!r} is not a directory")
     base = os.path.basename(sf_dir.rstrip("/"))
@@ -65,131 +54,54 @@ def main() -> None:
         wq = QUERIES.get(wname)
         if wq is not None and "nobench" not in wq.tags:
             try:
-                wq.builder(spark, sf_dir).count()
+                checksum(wq.builder(spark, sf_dir)).collect()
             except Exception:  # noqa: BLE001 — warm-up must never fail the bench
                 pass
     release_persisted()
 
-    # Drift anchor (r5 VERDICT stretch directive #8): the machine itself
-    # drifts 40-50% between sessions (BASELINE.md round-5 control
-    # experiment), so every bench records a fixed 3-query control sum
-    # measured warm in the SAME session. Round-over-round readers divide
-    # the headline by the control ratio instead of trusting prose
-    # controls. The controls are the warm-up trio — code-stable since r1,
-    # spanning Arrow interchange, window exprs, and hash aggregation.
-    control: dict[str, float] = {}
-    for cname in ("c1_arrow_roundtrip", "q13_window_funcs", "d1_exact_dedup"):
-        cq = QUERIES.get(cname)
-        if cq is None:
-            continue
-        cs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            try:
-                cq.builder(spark, sf_dir).count()
-            except Exception:  # noqa: BLE001
-                break
-            cs.append(time.perf_counter() - t0)
-        if cs:
-            control[cname] = round(sorted(cs)[len(cs) // 2], 4)
-    release_persisted()
-    control_sec = round(sum(control.values()), 4) if control else None
-
-    # Streaming drift anchor (VERDICT r8 "What's wrong" #1): the batch
-    # control cannot separate availableNow/micro-batch machinery drift
-    # from a streaming regression (st7 went 2.17→8.31 s across driver
-    # rounds with ZERO code change and the batch anchor blind to it).
-    # One fixed trivial drain — stream-read documents, project one
-    # column, drain to a memory sink — prices the whole streaming floor
-    # (source listing, checkpoint, state-store spin-up, sink writes)
-    # with near-zero per-row work. Recorded SEPARATELY from control_sec
-    # so the batch anchor stays comparable with pre-r9 ledgers;
-    # tools/ledger.py --compare normalizes st* rows against it.
-    stream_control_sec = None
-    try:
-        from medvedi_spark.streaming.ops import read_table_stream, run_to_memory
-
-        scs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run_to_memory(
-                read_table_stream(spark, sf_dir, "documents").select("doc_id"),
-                output_mode="append",
-            ).count()
-            scs.append(time.perf_counter() - t0)
-        stream_control_sec = round(sorted(scs)[len(scs) // 2], 4)
-    except Exception:  # noqa: BLE001 — anchor must never fail the bench
-        pass
-
     timings: dict[str, float] = {}
     timings_min: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name, q in QUERIES.items():
-        if "nobench" in q.tags:
-            continue
-        samples = []
-        for i in range(max(1, RUNS)):
-            # Label the jobs so the UI/event-log trace attributes every
-            # job to its query and rep (guide §1.3); thread-local, no
-            # effect on the timed work itself.
-            spark.sparkContext.setJobDescription(f"bench:{name}:run{i}")
-            t0 = time.perf_counter()
-            # Per-query isolation: one broken query must cost one ledger
-            # row, never the whole bench (round-2 lost ALL numbers to a
-            # single load error).
-            try:
-                q.builder(spark, sf_dir).count()
-            except Exception as exc:  # noqa: BLE001
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            samples.append(time.perf_counter() - t0)
-        # Burst resilience: re-sample demonstrably noisy heavy rows so one
-        # host stall cannot own the row's median (see EXTRA_RUNS note).
-        if (
-            len(samples) == max(1, RUNS)
-            and name not in errors
-            and max(samples) > min(samples) * _DISPERSION_RATIO
-            and max(samples) - min(samples) > _DISPERSION_ABS_SEC
-        ):
-            for j in range(EXTRA_RUNS):
-                spark.sparkContext.setJobDescription(f"bench:{name}:extra{j}")
-                t0 = time.perf_counter()
+    with TreeClock() as clock:
+        for name, q in QUERIES.items():
+            if "nobench" in q.tags:
+                continue
+            samples = []
+            for i in range(max(1, RUNS)):
+                # Label the jobs so the UI/event-log trace attributes every
+                # job to its query and rep (guide §1.3); thread-local, no
+                # effect on the timed work itself.
+                spark.sparkContext.setJobDescription(f"bench:{name}:run{i}")
+                t0 = clock.seconds()
+                # Per-query isolation: one broken query must cost one ledger
+                # row, never the whole bench (round-2 lost ALL numbers to a
+                # single load error).
                 try:
-                    q.builder(spark, sf_dir).count()
-                except Exception:  # noqa: BLE001
-                    # the query already met the RUNS contract green — a
-                    # transient failure in an OPTIONAL re-sample must not
-                    # convert a healthy row into an apparent query error
-                    # (per-query isolation contract); keep the samples we
-                    # have and move on
+                    checksum(q.builder(spark, sf_dir)).collect()
+                except Exception as exc:  # noqa: BLE001
+                    errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                     break
-                samples.append(time.perf_counter() - t0)
-        # operator-persisted inputs (adaptive-Jaccard gram tables etc.)
-        # are released between queries so a 100+-query session doesn't
-        # accumulate stale cache blocks (round-4 ADVICE)
-        spark.sparkContext.setJobDescription(f"bench:{name}:release")
-        release_persisted()
-        if samples:
-            samples.sort()
-            # median = the headline (steady-state); min = the error bar's
-            # floor — JIT/session variance is ~15%, so round-over-round
-            # deltas below that are noise unless the mins moved too
-            # (round-4 VERDICT directive #4)
-            timings[name] = round(samples[len(samples) // 2], 4)
-            timings_min[name] = round(samples[0], 4)
+                samples.append(clock.seconds() - t0)
+            # operator-persisted inputs (adaptive-Jaccard gram tables etc.)
+            # are released between queries so a 100+-query session doesn't
+            # accumulate stale cache blocks (round-4 ADVICE)
+            spark.sparkContext.setJobDescription(f"bench:{name}:release")
+            release_persisted()
+            if samples:
+                samples.sort()
+                timings[name] = round(samples[len(samples) // 2], 4)
+                timings_min[name] = round(samples[0], 4)
 
     total = round(sum(timings.values()), 4)
     total_min = round(sum(timings_min.values()), 4)
     out = {
-        "metric": "bench_total_wall",
+        "metric": "bench_total_cpu",
         "value": total,
         "value_min": total_min,
-        "unit": "sec",
+        "unit": "cpu_sec",
+        "action": ACTION,
         "queries": timings,
         "queries_min": timings_min,
-        "control": control,
-        "control_sec": control_sec,
-        "stream_control_sec": stream_control_sec,
         "sf": sf,
     }
     if errors:
@@ -217,8 +129,8 @@ def main() -> None:
     # ~15 queries each, sorted ASCENDING by median so the chunks nearest
     # the tail (the retained ones) carry the slowest, most informative
     # rows. Each line parses on its own; the compact contract line stays
-    # last and unchanged. The full map is always in the BENCH_local.json
-    # ledger (committed) and in the full-ledger line above.
+    # last. The full map is always in the BENCH_local.json ledger
+    # (committed) and in the full-ledger line above.
     by_time = sorted(timings.items(), key=lambda kv: (kv[1], kv[0]))
     chunk_n = max(1, (len(by_time) + 14) // 15)
     for part in range(chunk_n):
@@ -230,12 +142,11 @@ def main() -> None:
             "queries": {k: round(v, 3) for k, v in chunk.items()},
         }))
     compact = {
-        "metric": "bench_total_wall",
+        "metric": "bench_total_cpu",
         "value": total,
         "value_min": total_min,
-        "control_sec": control_sec,
-        "stream_control_sec": stream_control_sec,
-        "unit": "sec",
+        "unit": "cpu_sec",
+        "action": ACTION,
         "sf": sf,
         "n_queries": len(timings),
         "n_errors": len(errors),

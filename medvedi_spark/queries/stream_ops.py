@@ -509,19 +509,8 @@ def _stream_minhash_candidates(stream: DataFrame) -> DataFrame:
     document stream: ``(doc_id, toks, band_idx, band_val)``, stateless,
     band-compatible with the batch ``minhash_band_index`` (so the stream
     side can probe either an inline corpus index — st10 — or the
-    persisted d17 signature index — st17 — without drift).
-
-    Honors the same opt-in ingest fan-out as the st16/st18 span kernels
-    (``SPARK_GRAFT_STREAM_INGEST_PARTITIONS``, default 0 = no exchange —
-    the production scan supplies its own parallelism): the row-wise
-    shingle/hash/minhash chain is interpreted-HOF-heavy, and a
-    single-row-group fixture batch otherwise runs it in ONE task
-    (measured 1.8 s of a 6.7 s st17 warm run in the r10 job trace)."""
+    persisted d17 signature index — st17 — without drift)."""
     from medvedi_spark.functions.hashing import token_hash
-
-    ingest_parts = _st16_ingest_partitions()
-    if ingest_parts > 0:
-        stream = stream.repartition(ingest_parts)
 
     sl = F.split(F.col("text"), " ")
     sbigrams = F.zip_with(
@@ -915,26 +904,6 @@ def st15_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ST16_K = 20  # char gram width — d11's
 _ST16_H = 3   # bloom hashes — d14's
 
-# Ingest parallelism for the per-char flag projection. The kernel is
-# embarrassingly parallel per document, but a micro-batch's parallelism
-# is its SOURCE's: the sf0.1 fixture is one single-row-group parquet
-# file → one partition → the whole flag pass on one core (the dominant
-# term in the r7 41 s measurement). One round-robin exchange of the raw
-# docs (~1.5 MB at sf0.1) fans the kernel out to the session's cores.
-# DEFAULT 0 = no exchange (ADVICE r8): at production scale the source
-# supplies thousands of partitions per micro-batch, and shuffling raw
-# text at 100 TB to "parallelize" an already-parallel scan is the
-# anti-pattern — the safe default must be the production one. The
-# bench/test harness OPTS IN (bench.py exports 32) because degenerate
-# single-row-group fixture batches are real at bench time; a streaming
-# frame has no Catalyst size estimate, so the batch path's
-# _fan_out_narrow self-guard cannot be reused here.
-def _st16_ingest_partitions() -> int:
-    """Read the knob per call, not at import — the bench harness sets
-    the env var after this module may already be imported."""
-    return int(os.environ.get("SPARK_GRAFT_STREAM_INGEST_PARTITIONS", "0"))
-
-
 def _span_bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
     """The fitted span bitmap (model state, like d14/st14's
     ``_bloom_model``): fitted once per corpus generation."""
@@ -1029,9 +998,6 @@ def st16_stream_span_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     words, m_bits = _span_bloom_model(spark, sf_dir)
     stream = read_table_stream(spark, sf_dir, "documents")
-    ingest_parts = _st16_ingest_partitions()
-    if ingest_parts > 0:
-        stream = stream.repartition(ingest_parts)
     flagged = bloom.bloom_span_flag(
         stream, "doc_id", "text", words, m_bits, k_gram=_ST16_K, k_hashes=_ST16_H
     )
@@ -1266,9 +1232,6 @@ def st18_stream_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame
 
     words, m_bits = _span_bloom_model(spark, sf_dir)
     stream = read_table_stream(spark, sf_dir, "documents")
-    ingest_parts = _st16_ingest_partitions()
-    if ingest_parts > 0:
-        stream = stream.repartition(ingest_parts)
     cleaned = bloom.bloom_span_remove(
         stream, "doc_id", "text", words, m_bits, k_gram=_ST16_K, k_hashes=_ST16_H
     )

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from medvedi_spark.catalog import _REQUIRED_CONFS
+
 __all__ = ["get_spark", "DEFAULT_SF_DIR"]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -71,7 +73,8 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
+        # UTC, ANSI off, nanosAsLong: pinned again by every table load
+        .config(map=_REQUIRED_CONFS)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -86,12 +89,6 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", str(ui).lower())  # probes read stage facts from the UI REST API
-        .config("spark.sql.ansi.enabled", "false")
-        # Earlier testdata generations stored events.ts as TIMESTAMP(NANOS),
-        # which Spark's parquet reader rejects; keep the long fallback so the
-        # schema-adaptive catalog load (catalog.normalize_event_ts) handles
-        # either on-disk encoding.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.defaultJavaOptions", f"-Xms{INITIAL_HEAP}")
     )

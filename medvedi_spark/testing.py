@@ -1,5 +1,6 @@
 """Public testing helpers — the user-facing equality assertions the
-reference ships as ``medvedi.testing`` (`/root/reference/medvedi/testing.py:9-37`).
+reference ships as ``medvedi.testing``, and the checksum action the
+benchmarks time.
 
 Semantics mirrored, not code: index names must match, column-name sets
 must match, and every column compares element-wise with descent into
@@ -15,10 +16,21 @@ from __future__ import annotations
 from typing import Hashable
 
 import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from medvedi_spark.frame import MDF, Index
 
-__all__ = ["assert_frame_equal", "assert_index_equal"]
+__all__ = ["assert_frame_equal", "assert_index_equal", "checksum"]
+
+
+def checksum(df: DataFrame) -> DataFrame:
+    """One-row frame of the row count and the hash sum of every column.
+
+    Collecting it evaluates every column of every row. A bare ``count()``
+    lets Catalyst prune columns, and with them joins that cannot change
+    the row count (d18's left joins plan none under count)."""
+    return df.select(F.count(F.lit(1)), F.sum(F.xxhash64(*[F.col(c) for c in df.columns])))
 
 
 def assert_frame_equal(df1: MDF, df2: MDF) -> None:

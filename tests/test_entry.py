@@ -125,6 +125,10 @@ def test_every_registered_query_has_a_bench_row():
         f"BENCH_local.json is an sf={ledger.get('sf')} ledger — restore the "
         "sf0.1 one (git checkout -- BENCH_local.json) and re-bench"
     )
+    assert ledger.get("action") == "checksum_cpu", (
+        f"BENCH_local.json was taken with action={ledger.get('action')!r}; "
+        "re-bench with the current bench.py"
+    )
     benched = set(ledger.get("queries", {}))
     unbenched = sorted(set(entry_mod.queries()) - benched)
     assert unbenched == [], (

@@ -1,8 +1,6 @@
 """Round-9 directive fixes (VERDICT r8 "Next round" + ADVICE):
 
-7. st16's ingest fan-out knob defaults OFF (production-safe): the bench
-   harness opts in via env; the streaming plan has no repartition unless
-   asked.
+7. st16's streaming plan has no repartition (production-safe).
 A. dataset_fingerprint recurses into partitioned datasets (key=value
    subdirectories) and treats a raced-away file as a cache miss, not an
    OSError.
@@ -19,30 +17,18 @@ from pyspark.sql import functions as F
 from medvedi_spark.catalog import dataset_fingerprint
 
 
-# ----------------------------------------------- st16 ingest knob default
+# ------------------------------------------------ st16 ingest plan
 
 
-def test_st16_ingest_partitions_default_off(monkeypatch):
-    from medvedi_spark.queries import stream_ops
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_INGEST_PARTITIONS", raising=False)
-    assert stream_ops._st16_ingest_partitions() == 0
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_INGEST_PARTITIONS", "32")
-    assert stream_ops._st16_ingest_partitions() == 32
-
-
-def test_st16_plan_has_no_exchange_by_default(spark, sf_dir, monkeypatch):
-    """With the knob unset, the st16 streaming frame must NOT carry a
-    repartition — the production plan is exchange-free per-row work."""
+def test_st16_plan_has_no_exchange_by_default(spark, sf_dir):
+    """The st16 streaming frame carries no repartition: the production
+    plan is exchange-free per-row work."""
     from medvedi_spark.operators import bloom
     from medvedi_spark.queries import stream_ops
     from medvedi_spark.streaming.ops import read_table_stream
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_INGEST_PARTITIONS", raising=False)
     words, m_bits = stream_ops._span_bloom_model(spark, sf_dir)
     stream = read_table_stream(spark, sf_dir, "documents")
-    parts = stream_ops._st16_ingest_partitions()
-    assert parts == 0
     flagged = bloom.bloom_span_flag(
         stream, "doc_id", "text",
         words, m_bits, k_gram=stream_ops._ST16_K, k_hashes=stream_ops._ST16_H,

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from medvedi_spark.operators._persist import release_persisted
 from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
+from medvedi_spark.testing import checksum
 
 _WORKLOADS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "workloads.py")
 
@@ -32,8 +33,7 @@ def test_warm_pass_compiles_nothing(spark, sf_dir):
     def one_pass() -> int:
         before = compiles.getCount()
         for name in _serve_small():
-            df = QUERIES[name].builder(spark, sf_dir)
-            df.select(F.count(F.lit(1)), F.sum(F.xxhash64(*[F.col(c) for c in df.columns]))).collect()
+            checksum(QUERIES[name].builder(spark, sf_dir)).collect()
             release_persisted()
         return compiles.getCount() - before
 

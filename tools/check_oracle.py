@@ -23,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from medvedi_spark.catalog import TABLES
 from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
+from medvedi_spark.session import _cpus
 
 
 def vanilla_spark():
@@ -35,7 +36,7 @@ def vanilla_spark():
 
     return (
         SparkSession.builder.appName("oracle-check-vanilla")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count() or 4)}]")
+        .master(f"local[{_cpus()}]")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

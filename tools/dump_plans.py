@@ -1,12 +1,12 @@
 """Dump ``explain("formatted")`` for registered queries to files.
 
-Usage: python tools/dump_plans.py OUTDIR SUFFIX [query ...]
+Usage: python tools/dump_plans.py OUTDIR SUFFIX query [query ...]
 
-Writes OUTDIR/<query>_<SUFFIX>.txt for each query (default: a fixed
-round-10 list). Streaming queries (memory-sink results) are skipped —
-their result frame is a LocalTableScan over the drained sink, so the
-formatted plan carries no information; their evidence lives in the
-probe harnesses instead.
+Reads the tables at ``session.DEFAULT_SF_DIR`` ($SPARK_GRAFT_SF_DIR) and
+writes OUTDIR/<query>_<SUFFIX>.txt for each named query. Streaming
+queries (memory-sink results) are skipped — their result frame is a
+LocalTableScan over the drained sink, so the formatted plan carries no
+information; their evidence lives in the probe harnesses instead.
 """
 
 from __future__ import annotations
@@ -16,30 +16,18 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-DEFAULT = [
-    "d2_token_jaccard",
-    "d7_ngram_jaccard",
-    "d14_bloom_decontaminate",
-    "s11_ivf_sq8_index",
-    "s12_ivfadc_index",
-    "s15_ivfadc_index_rerank",
-    "s16_ivfadc_batched_serve",
-    "d17_fuzzy_dedup_ingest",
-]
-
 
 def main() -> None:
-    outdir, suffix = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:] or DEFAULT
+    if len(sys.argv) < 4:
+        raise SystemExit(__doc__)
+    outdir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     os.makedirs(outdir, exist_ok=True)
 
     from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
-    from medvedi_spark.session import get_spark
+    from medvedi_spark.session import DEFAULT_SF_DIR, get_spark
 
     _ensure_loaded()
-    spark = get_spark("r10-plan-dump")
+    spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         q = QUERIES.get(name)
@@ -49,7 +37,7 @@ def main() -> None:
         if name.startswith("st"):
             print(f"skip {name}: streaming (memory-sink result plan is empty)")
             continue
-        df = q.builder(spark, SF)
+        df = q.builder(spark, DEFAULT_SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

@@ -1,16 +1,18 @@
-"""Emit a BASELINE.md ledger table: engine medians (from BENCH_local.json)
-beside a fresh single-sweep DuckDB-oracle timing of the same queries.
+"""Read the per-query CPU ledgers that ``bench.py`` writes.
 
 Usage:
-  python tools/ledger.py [sf_dir]                 # markdown to stdout
-  python tools/ledger.py --compare OLD_BENCH.json # round-over-round totals
+  python tools/ledger.py [sf_dir]                 # markdown table to stdout
+  python tools/ledger.py --compare OLD_BENCH.json # BENCH_local.json vs OLD
 
-``--compare`` is the drift gate (VERDICT r6 directive #8): both bench
-jsons carry ``control_sec`` — the fixed 3-query anchor — and the tool
-REFUSES to print a raw-only comparison when the control ratio drifts
-past 1.3× in either direction; past that it prints anchor-NORMALIZED
-totals alongside raw so BASELINE.md entries can't accidentally compare
-across drifted sessions (the round-5 saga this anchor was built for).
+The table puts each query's engine median and min (BENCH_local.json)
+beside its DuckDB oracle, timed as the median of the same number of reps
+on ``time.process_time()``. DuckDB runs in this process, so that clock
+counts its threads, and both columns are CPU seconds.
+
+``--compare`` prints the total and per-query CPU ratios of two ledgers. It
+refuses a ledger taken with any other action than bench.py's: a count
+ledger times plans Catalyst has pruned, and a wall-clock one follows the
+host's load.
 """
 
 from __future__ import annotations
@@ -20,143 +22,83 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-import duckdb
-
-from medvedi_spark.catalog import TABLES
+from bench import ACTION, RUNS
 from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
+from medvedi_spark.session import DEFAULT_SF_DIR
+from tools.check_oracle import duck_connect
+
+LEDGER = os.path.join(ROOT, "BENCH_local.json")
 
 
-DRIFT_GATE = 1.3  # control ratio beyond this demands normalized columns
+def load(path: str) -> dict:
+    """A bench ledger, refused unless it was taken with ``ACTION``."""
+    with open(path) as fh:
+        ledger = json.load(fh)
+    if ledger.get("action") != ACTION:
+        raise SystemExit(
+            f"{path} was not taken with the {ACTION} action "
+            f"(action={ledger.get('action')!r}); re-run bench.py"
+        )
+    return ledger
 
 
 def compare(cur_path: str, old_path: str) -> None:
-    """Round-over-round totals, drift-gated by the control anchor."""
-    def _load(p: str) -> dict:
-        d = json.load(open(p))
-        # driver-recorded BENCH_r*.json wraps the emitted line in
-        # 'parsed' (summary fields only) plus a front-truncated 'tail'
-        # of the raw line; recover the per-query rows from the tail so
-        # the streaming table below works against driver ledgers too.
-        out = d.get("parsed", d)
-        if "queries" not in out and isinstance(d.get("tail"), str):
-            import re
+    """Total and per-query CPU ratios of two ledgers, current over old."""
+    cur, old = load(cur_path)["queries"], load(old_path)["queries"]
+    shared = sorted(set(cur) & set(old))
+    print(f"total CPU: {sum(cur.values()):.1f} s over {len(cur)} vs "
+          f"{sum(old.values()):.1f} s over {len(old)}")
+    if not shared:
+        return
+    print(f"shared-rows CPU ratio: "
+          f"{sum(cur[k] for k in shared) / sum(old[k] for k in shared):.3f} "
+          f"over {len(shared)}")
+    print("\n| query | cur s | old s | ratio |")
+    print("|---|---|---|---|")
+    for k in shared:
+        r = f"{cur[k] / old[k]:.2f}" if old[k] else "—"
+        print(f"| {k} | {cur[k]:.3f} | {old[k]:.3f} | {r} |")
 
-            _ensure_loaded()
-            pairs = re.findall(r'"([a-z][a-z0-9_]+)":\s*([0-9.]+)', d["tail"])
-            q = {k: float(v) for k, v in pairs if k in QUERIES}
-            if q:
-                out = dict(out, queries=q)
-        return out
 
-    cur, old = _load(cur_path), _load(old_path)
-    for label, b, p in (("current", cur, cur_path), ("baseline", old, old_path)):
-        if "control_sec" not in b:
-            raise SystemExit(
-                f"{label} bench {p} has no control_sec anchor (pre-round-6?) — "
-                "raw cross-session comparison refused; re-run bench.py"
-            )
-    def _nq(b: dict) -> int:
-        return b.get("n_queries") or len(b.get("queries", ())) or 1
-
-    ctl = cur["control_sec"] / old["control_sec"]
-    raw = cur["value"] / old["value"]
-    per_q = (cur["value"] / _nq(cur)) / (old["value"] / _nq(old))
-    print(f"control ratio (session drift): {ctl:.3f}")
-    print(f"raw total ratio: {raw:.3f}  ({cur['value']:.1f}s/{_nq(cur)}q "
-          f"vs {old['value']:.1f}s/{_nq(old)}q)")
-    print(f"raw per-query ratio: {per_q:.3f}")
-    print(f"anchor-normalized total ratio: {raw / ctl:.3f}")
-    print(f"anchor-normalized per-query ratio: {per_q / ctl:.3f}")
-
-    # Streaming family normalization (VERDICT r8 "What's wrong" #1): the
-    # st* rows ride availableNow/micro-batch machinery whose session
-    # drift is INDEPENDENT of the batch anchor's (r7→r8: streaming rows
-    # +15% while batch fell 12%, unattributable at the time). When both
-    # ledgers carry the trivial-drain anchor, compare the streaming
-    # family against IT, not the batch control.
-    s_cur, s_old = cur.get("stream_control_sec"), old.get("stream_control_sec")
-    st_cur = {k: v for k, v in cur.get("queries", {}).items() if k.startswith("st")}
-    st_old = {k: v for k, v in old.get("queries", {}).items() if k.startswith("st")}
-    if s_cur and s_old and st_cur and st_old:
-        sctl = s_cur / s_old
-        st_raw = sum(st_cur.values()) / sum(st_old.values())
-        shared = sorted(set(st_cur) & set(st_old))
-        st_pq = (sum(st_cur[k] for k in shared) / sum(st_old[k] for k in shared)) if shared else None
-        print(f"stream control ratio (drain-machinery drift): {sctl:.3f}")
-        print(f"streaming family raw ratio: {st_raw:.3f}  "
-              f"({sum(st_cur.values()):.1f}s/{len(st_cur)}q vs "
-              f"{sum(st_old.values()):.1f}s/{len(st_old)}q)")
-        if st_pq is not None:
-            print(f"streaming shared-rows ratio: {st_pq:.3f}; "
-                  f"stream-anchor-normalized: {st_pq / sctl:.3f}")
-        # Per-query streaming table (VERDICT r9 directive #8): every
-        # shared st* row with its raw and stream-anchor-normalized
-        # ratio, so round verdicts can quote code-attributable streaming
-        # movers directly instead of re-deriving them from the tails.
-        if shared:
-            print("\n| query | cur s | old s | raw | stream-norm |")
-            print("|---|---|---|---|---|")
-            for k in shared:
-                r = st_cur[k] / st_old[k] if st_old[k] else float("inf")
-                print(f"| {k} | {st_cur[k]:.2f} | {st_old[k]:.2f} "
-                      f"| {r:.2f} | {r / sctl:.2f} |")
-    elif st_cur:
-        print("(no stream_control_sec in one ledger — streaming rows can only "
-              "be batch-anchor-normalized; re-bench both sides to attribute "
-              "streaming drift)")
-    if ctl > DRIFT_GATE or ctl < 1.0 / DRIFT_GATE:
-        print(
-            f"\nDRIFT GATE: control ratio {ctl:.2f} exceeds {DRIFT_GATE}× — the "
-            "sessions are not comparable raw; ONLY the anchor-normalized "
-            "ratios above may be recorded in BASELINE.md."
-        )
-        sys.exit(2)
+def oracle_cpu(sf_dir: str, names) -> dict[str, float]:
+    """Median CPU seconds of ``RUNS`` runs of each query's DuckDB oracle."""
+    con = duck_connect(sf_dir)
+    out: dict[str, float] = {}
+    for name in names:
+        samples = []
+        try:
+            for _ in range(max(1, RUNS)):
+                t0 = time.process_time()
+                con.execute(QUERIES[name].oracle).fetchall()
+                samples.append(time.process_time() - t0)
+        except Exception as e:  # noqa: BLE001
+            print(f"<!-- oracle error {name}: {e} -->", file=sys.stderr)
+            continue
+        out[name] = sorted(samples)[len(samples) // 2]
+    return out
 
 
 def main() -> None:
     if len(sys.argv) > 2 and sys.argv[1] == "--compare":
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        compare(os.path.join(root, "BENCH_local.json"), sys.argv[2])
+        compare(LEDGER, sys.argv[2])
         return
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    bench = json.load(open(os.path.join(root, "BENCH_local.json")))
-    engine = bench["queries"]
-    engine_min = bench.get("queries_min")
-    if not engine_min:
-        raise SystemExit(
-            "BENCH_local.json has no queries_min (pre-round-5 ledger?) — "
-            "re-run bench.py first; refusing to print a zeroed min column"
-        )
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
+    bench = load(LEDGER)
+    engine, engine_min = bench["queries"], bench["queries_min"]
     _ensure_loaded()
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(sf_dir, name)}.parquet')"
-        )
-    duck: dict[str, float] = {}
-    for name, q in QUERIES.items():
-        if q.oracle is None or name not in engine:
-            continue
-        t0 = time.time()
-        try:
-            con.execute(q.oracle).fetchall()
-            duck[name] = round(time.time() - t0, 3)
-        except Exception as e:  # noqa: BLE001
-            print(f"<!-- oracle error {name}: {e} -->", file=sys.stderr)
-    print("| query | engine s | engine min s | duckdb s |")
+    duck = oracle_cpu(sf_dir, [n for n in engine if n in QUERIES and QUERIES[n].oracle])
+    print("| query | engine CPU s | engine min CPU s | duckdb CPU s |")
     print("|---|---|---|---|")
     for name in engine:
         d = f"{duck[name]:.3f}" if name in duck else "—"
-        m = f"{engine_min[name]:.3f}" if name in engine_min else "—"
-        print(f"| {name} | {engine[name]:.3f} | {m} | {d} |")
+        print(f"| {name} | {engine[name]:.3f} | {engine_min[name]:.3f} | {d} |")
     print(
-        f"\nengine total {sum(engine.values()):.1f} s "
-        f"(min-sum {sum(engine_min.values()):.1f} s) over {len(engine)}; "
-        f"duckdb oracle total {sum(duck.values()):.1f} s over {len(duck)}"
+        f"\nengine total {sum(engine.values()):.1f} CPU s "
+        f"(min-sum {sum(engine_min.values()):.1f}) over {len(engine)}; "
+        f"duckdb oracle total {sum(duck.values()):.1f} CPU s over {len(duck)}"
     )
 
 

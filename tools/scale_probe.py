@@ -23,8 +23,8 @@ round-5 control experiment) and asserts:
     the ~100× a quadratic (all-pairs) shape would show. The default gate
     is 30× (near-linear plus constant overhead amortization).
 
-Timing action: a CHECKSUM over every output column
-(sum(xxhash64(*cols))), NOT ``count()`` — found via d18, whose
+Timing action: ``testing.checksum``, the row count and a hash sum over
+every output column, NOT ``count()`` — found via d18, whose
 row-preserving left-join rewrite Catalyst prunes entirely under a bare
 count (0.97 s counted vs 3.39 s evaluated at sf0.01): a count-based
 probe would grade passthrough-shaped operators on a plan that never
@@ -220,18 +220,6 @@ def _facts(df) -> dict[str, int]:
     }
 
 
-def _force_eval(df) -> None:
-    """Evaluate EVERY column of every row: sum of xxhash64 over all
-    columns. ``count()`` lets Catalyst prune row-preserving work (a
-    left-join rewrite keeps the row count, so the join and the rewrite
-    expressions are dropped from a count plan — d18 measured 0.97 s
-    counted vs 3.39 s evaluated); the checksum closes that hole for
-    every current and future passthrough-shaped op."""
-    from pyspark.sql import functions as F
-
-    df.select(F.sum(F.xxhash64(*[F.col(c) for c in df.columns]))).collect()
-
-
 def probe(
     factor: int = 10,
     runs: int = 2,
@@ -241,6 +229,7 @@ def probe(
     from medvedi_spark.operators._persist import release_persisted
     from medvedi_spark.queries.registry import QUERIES, _ensure_loaded
     from medvedi_spark.session import get_spark
+    from medvedi_spark.testing import checksum
 
     _ensure_loaded()
     spark = get_spark("scale-probe")
@@ -258,7 +247,7 @@ def probe(
     }
 
     # untimed warm-up (JVM/codegen spin-up otherwise lands on the first op)
-    _force_eval(QUERIES["d1_exact_dedup"].builder(spark, dirs[1]))
+    checksum(QUERIES["d1_exact_dedup"].builder(spark, dirs[1])).collect()
     release_persisted()
 
     report: dict = {
@@ -279,7 +268,7 @@ def probe(
                 release_persisted()
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
-                _force_eval(q.builder(spark, sf_dir))
+                checksum(q.builder(spark, sf_dir)).collect()
                 samples.append(time.perf_counter() - t0)
             entry[f"x{size}"] = {"facts": facts, "sec": round(min(samples), 3)}
         f1, fN = entry["x1"]["facts"], entry[f"x{factor}"]["facts"]
