@@ -590,9 +590,13 @@ class MDF:
 
     @classmethod
     def read_parquet(cls, path: str, *, spark: SparkSession | None = None, index: Sequence[str] = ()) -> "MDF":
-        """S5-replacement: parquet is the serialization format (SURVEY §3.3)."""
+        """S5-replacement: parquet is the serialization format (SURVEY §3.3).
+        The read schema is :func:`catalog.parquet_schema`'s, so a repeated
+        read runs no schema-inference job."""
+        from .catalog import parquet_schema
+
         spark = spark or SparkSession.getActiveSession()
-        return cls._from_spark(spark.read.parquet(path), tuple(index))
+        return cls._from_spark(spark.read.schema(parquet_schema(spark, path)).parquet(path), tuple(index))
 
     # -- basic protocol ------------------------------------------------------
 

@@ -683,15 +683,15 @@ def _bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
     tags=("dedup", "decontamination", "bloom", "llm"),
     doc="Bloom-bitmap decontamination prefilter: eval grams folded into an "
         "auto-sized filter (model state; bloom_auto_m_bits replayed "
-        "bit-for-bit by the oracle's msize CTE), corpus flagged in a "
-        "zero-join map-side projection; no false negatives, deterministic "
+        "bit-for-bit by the oracle's msize CTE), corpus flagged in one "
+        "zero-join map-side Arrow batch pass; no false negatives, deterministic "
         "FP tail replayed exactly by the oracle. The fitted bitmap is "
         "session-cached model state shared with st14 (fit once per "
         "frozen eval suite, like the PQ codebooks).",
 )
 def d14_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See operators.bloom.bloom_fit/bloom_flag (bloom_build_bits
-    model-state bitmap + bloom_member pure-projection membership;
+    model-state bitmap + one mapInArrow pass testing each distinct gram;
     m_bits=None → bloom_auto_m_bits from the eval-side distinct-gram
     count); the fit is session-cached via _bloom_model."""
     docs = load(spark, sf_dir, "documents")

@@ -804,12 +804,13 @@ def st13_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # st14 — STREAMING DECONTAMINATION: d14's Bloom prefilter on an arriving
 # document stream. The filter is fit ONCE batch-side over the eval suite
 # (bounded model state — an auto-sized bitmap of longs, like frozen
-# quantizer state in st13) and ships to the stream as a literal; each
-# arriving document is flagged by a PURE per-row projection (k md5s + a
-# bit test per distinct 4-gram) — no join, no watermark, NO STREAMING
-# STATE AT ALL, so a 100 TB/day ingest decontaminates embarrassingly
-# parallel at wire speed. This is the shape production ingest actually
-# wants: evals are frozen rarely, documents arrive forever. Oracle:
+# quantizer state in st13) and ships to the stream in the closure of
+# d14's Arrow batch pass; each arriving document is flagged by that
+# stateless map (one md5 and k bit tests per distinct 4-gram) — no
+# join, no watermark, NO STREAMING STATE AT ALL, so a 100 TB/day ingest
+# decontaminates embarrassingly parallel at wire speed. This is the shape
+# production ingest actually wants: evals are frozen rarely, documents
+# arrive forever. Oracle:
 # d14's — the availableNow drain sees every corpus row exactly once, so
 # the streaming result IS the batch result.
 # --------------------------------------------------------------------------
@@ -827,7 +828,7 @@ def _st14_oracle() -> str:
     tags=("streaming", "decontamination", "bloom", "llm"),
     doc="Streaming Bloom decontamination: the d14 bitmap fit batch-side "
         "over the frozen eval suite (bounded model state), arriving docs "
-        "flagged by a stateless per-row projection — zero joins, zero "
+        "flagged by d14's stateless Arrow batch pass — zero joins, zero "
         "streaming state, append mode; oracle-matched against the batch "
         "d14 result (the availableNow drain ingests every row once).",
 )

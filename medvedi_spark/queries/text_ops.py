@@ -1883,13 +1883,9 @@ def p10_export_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("lang")
         .json(path)
     )
-    out = spark.read.json(path)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "lang",
-        "text",
-        F.col("n_chars").cast("long").alias("n_chars"),
-    )
+    # an explicit read schema: inferring one is a job over every shard
+    out = spark.read.schema("doc_id bigint, text string, n_chars bigint, lang string").json(path)
+    return out.select("doc_id", "lang", "text", "n_chars")
 
 
 # --------------------------------------------------------------------------

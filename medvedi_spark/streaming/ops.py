@@ -23,18 +23,6 @@ from ..operators._persist import track_sink
 _SINK_IDS = itertools.count()
 
 
-def stream_source_schema(spark: SparkSession, path: str):
-    """The schema of the parquet file-source stream at ``path``.
-    File-source streams need an explicit schema, and inferring it is one
-    batch parquet-footer job per stream start. The footer is immutable
-    per dataset generation, so the inference is cached model state
-    (catalog.model_state) — 13 st queries × one job each is pure fixed
-    overhead in a bench sweep (r6 directive #5)."""
-    from ..catalog import model_state
-
-    return model_state("stream_schema", path, (), lambda: spark.read.parquet(path).schema)
-
-
 # Shuffle/state-store width for the availableNow drains. Stateful
 # operators allocate one state store per shuffle partition at query
 # START and freeze the count into the checkpoint; each store costs
@@ -57,7 +45,10 @@ _STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4
 
 def read_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """File-source stream of the parquet table ``table`` in ``sf_dir``."""
-    schema = stream_source_schema(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    from ..catalog import parquet_schema
+
+    # A file-source stream needs an explicit schema.
+    schema = parquet_schema(spark, os.path.join(sf_dir, f"{table}.parquet"))
     # The file source requires a directory; glob-filter to the one table.
     return spark.readStream.schema(schema).option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
 

@@ -88,3 +88,23 @@ def test_register_views_tolerates_broken_table(spark, sf_dir, tmp_path):
     assert set(failures) == {"orders"}
     # Untouched tables still work through SQL.
     assert spark.sql("SELECT count(*) AS n FROM region").collect()[0].n > 0
+
+
+def test_parquet_schema_follows_the_dataset(spark, tmp_path):
+    """The cached read schema of ``MDF.read_parquet`` is re-inferred when
+    the dataset is rewritten, and a path that is not a local file or
+    directory (a glob, a missing path) still reads or fails the way
+    Spark does."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from medvedi_spark.frame import MDF
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    assert MDF.read_parquet(path, spark=spark).columns == ("id",)
+    spark.range(3).withColumn("b", F.lit("x")).write.mode("overwrite").parquet(path)
+    assert MDF.read_parquet(path, spark=spark).columns == ("id", "b")
+    assert len(MDF.read_parquet(path + "/*.parquet", spark=spark)) == 3
+    with pytest.raises(AnalysisException):
+        MDF.read_parquet(str(tmp_path / "missing.parquet"), spark=spark)

@@ -9,7 +9,8 @@ For each registered query, prints one line of plan facts:
 - ``prune=a/b`` columns read vs columns in the widest scanned table
 - ``pyudf=N``   row-at-a-time Python UDF operators (BatchEvalPython) — the
                 slow path; Arrow variants (ArrowEvalPython,
-                FlatMapGroupsInPandas*) are reported as ``arrow=N``
+                FlatMapGroupsInPandas*, MapInPandas, MapInArrow) are
+                reported as ``arrow=N``
 - ``wscg=N``    whole-stage-codegen spans
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
@@ -83,7 +84,7 @@ def plan_facts(df) -> dict:
         "smj": len(re.findall(r"\bSortMergeJoin", plan)),
         "shj": len(re.findall(r"\bShuffledHashJoin", plan)),
         "pyudf": len(re.findall(r"\bBatchEvalPython", plan)),
-        "arrow": len(re.findall(r"\bArrowEvalPython|\bFlatMapGroupsInPandas|\bMapInPandas", plan)),
+        "arrow": len(re.findall(r"\bArrowEvalPython|\bFlatMapGroupsInPandas|\bMapIn(?:Pandas|Arrow)", plan)),
         "wscg": len(set(re.findall(r"\*\((\d+)\)", plan))),
     }
     # Scan facts need BOTH renderings: the formatted explain prints full
