@@ -2,16 +2,18 @@
 span operators.
 
 The Bloom filter is auto-sized from the eval-side distinct-gram count
-(:func:`bloom_auto_m_bits`); the span operators fan a narrow,
-under-partitioned doc frame out to the session's parallelism first
-(:func:`_fan_out_narrow`).
+(:func:`bloom_auto_m_bits`), and its consumers (:func:`bloom_flag`,
+:func:`bloom_span_flag`, :func:`bloom_span_remove`) are Arrow batch
+passes sharing one numpy membership probe (:func:`_bloom_probe`); the
+exact span operators fan a narrow, under-partitioned doc frame out to the
+session's parallelism first (:func:`_fan_out_narrow`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from medvedi_spark.functions.hashing import _ident
@@ -64,15 +66,14 @@ def decontaminate(
 # split-block Bloom filter (Putze/Sanders/Singler 2007, "Cache-,
 # hash- and space-efficient bloom filters"; parquet-format's
 # split-block filter is the same idea at 256-bit blocks). A membership
-# probe costs ONE random fetch into the bitmap (element_at of the key's
-# word) instead of k DRAM-random fetches — at st16's 2^26-bit (8 MiB)
-# filter probed once per CHARACTER of the corpus inside interpreted
-# HOF lambdas, the k-fetch pattern was the residual super-linearity of
-# the r8 100× curve. Cost: bit clumping raises the false-positive rate
-# ~1.3-2× over the ideal independent-hash filter at the same m (the
-# literature's measured penalty) — acceptable because every consumer
-# treats the FP tail as deterministic contract replayed exactly by its
-# oracle, and an exact pass downstream resolves flags.
+# probe costs ONE random fetch into the bitmap (the key's block word)
+# instead of k: the span passes (st16, st18) probe once per character
+# of the text, against a bitmap of up to 2^28 bits. Cost: bit clumping
+# raises the false-positive rate ~1.3-2× over the ideal independent-hash
+# filter at the same m (the literature's measured penalty) — acceptable
+# because every consumer treats the FP tail as deterministic contract
+# replayed exactly by its oracle, and an exact pass downstream resolves
+# flags.
 #
 # Derivation (ONE md5 per key, non-overlapping hex slices — the r8
 # ADVICE's correlated-slice issue is structurally gone):
@@ -117,23 +118,9 @@ def _bloom_block_bit(digest: str, i: int) -> str:
 
 #: auto-size clamp for :func:`bloom_auto_m_bits` — floor keeps tiny eval
 #: sets on the historical 8 KB default; the cap (2^28 bits = 32 MiB of
-#: longs) bounds the bitmap model state a session holds and ships. The
-#: cap was 2^26 through r9 on the belief that the split-string plan
-#: literal's SQL text was the binder past that; round-10 MEASURED the
-#: alternatives (BLOOM150_r10.json + the litbench matrix in BASELINE):
-#: the literal's real per-action cost is fold + JavaSerializer boxing of
-#: the folded GenericArrayData into the task closure — ~1 s at 2^17
-#: words, ~7-15 s at 2^21, LINEAR in words and INDEPENDENT of rows —
-#: while every attribute-bound alternative (broadcast one-row array
-#: join, scalar subquery materialized to a column) inlines the full
-#: bitmap into EVERY row at the interpreted-HOF boundary (measured 570 s
-#: vs ~90 s expected at the 150× probe; scalar subqueries are outright
-#: illegal inside higher-order functions). The literal is therefore the
-#: right plan at every size: corpora large enough to want 2^21+ words
-#: run kernels that dwarf the fixed per-action cost. Cap raised to 2^28
-#: = 2^22 words ≈ 30 s/action worst-case — acceptable against the
-#: corpus scans such a filter implies, and the FP warning path stays for
-#: anything larger.
+#: longs) bounds the bitmap model state a session holds and ships to the
+#: Python workers of the Arrow passes, in each pass's function closure.
+#: Anything larger takes the FP warning path.
 _BLOOM_M_FLOOR = 1 << 16
 _BLOOM_M_CAP = 1 << 28
 
@@ -202,31 +189,13 @@ def bloom_build_bits(
 
 def bits_array_sql(words: list[int]) -> str:
     """SQL text of the bitmap-words array as a CONSTANT-FOLDED value —
-    ONE string literal split+cast JVM-side, never ``F.lit(list)``.
-
-    ``F.lit`` on a Python list marshals one py4j call per element and
-    plants an ``array()`` node per word in every plan that uses it: at
-    st16's 16K-word bitmap that was measured at **7.3 s of driver time
-    per query build** plus ~0.3 s of re-folding per analysis — the
-    dominant term of VERDICT r7 #1's 41 s, hiding OUTSIDE the executor
-    timeline. One ``split('w0,w1,…')`` string costs 0.04 s to build and
-    Catalyst constant-folds it to the identical array literal.
-
-    The span kernels (:func:`bloom_span_flag`, :func:`bloom_span_remove`)
-    attach their bitmap this way at every size up to the 2^28 cap. A
-    broadcast one-row-array join for bitmaps past 2^17 words measured
-    570 s at the 150× probe where the literal
-    extrapolates to ~90 s: an attribute-bound array column is INLINED
-    into every row's UnsafeRow at the interpreted-HOF boundary (the span
-    kernels are CodegenFallback lambdas, so the stage materializes rows;
-    750k docs × 16 MB of copies = the whole wall). A scalar subquery
-    avoids the join but is illegal inside higher-order functions
-    (UNSUPPORTED_SUBQUERY_EXPRESSION_CATEGORY.HIGHER_ORDER_FUNCTION),
-    and materializing it to a column re-creates the same per-row copy.
-    A folded Literal is the ONLY attachment whose value is one shared
-    instance per task — its cost is fold + closure-serialization of the
-    boxed array, ~1 s at 2^17 words and ~7-15 s at 2^21, linear in
-    words, independent of rows (measured matrix in BASELINE r10)."""
+    ONE string literal split+cast JVM-side, never ``F.lit(list)``, which
+    marshals one py4j call per element and plants an ``array()`` node per
+    word in the plan (7.3 s of driver time per build at a 16K-word
+    bitmap, against 0.04 s for the one string). The SQL membership test
+    (:func:`bloom_member`) attaches its bitmap this way; the Arrow passes
+    (:func:`bloom_flag`, :func:`bloom_span_flag`,
+    :func:`bloom_span_remove`) ship theirs in the function closure."""
     return "cast(split('" + ",".join(map(str, words)) + "', ',') as array<bigint>)"
 
 
@@ -257,13 +226,9 @@ def _collect_bitmap_words(pos: DataFrame, m_bits: int) -> list[int]:
 
 def bloom_member_word(digest: str, word: str, k_hashes: int) -> str:
     """SQL text of the blocked membership test given the key's md5 HEX
-    DIGEST and its ALREADY-FETCHED block word (``element_at(bits,
-    word_index + 1)``, done exactly once by the caller — typically
-    staged through a materialized ``struct(digest, word)`` array so
-    interpreted HOF lambdas can't re-fetch it): all ``k_hashes`` bit
-    tests are cheap substring/conv/bit arithmetic against the one local
-    word — ZERO additional bitmap fetches, zero additional hashing. Both
-    arguments are SQL fragments."""
+    DIGEST and its already-fetched block word: all ``k_hashes`` bit tests
+    are substring/conv/bit arithmetic against the one word — no further
+    bitmap fetch, no further hashing. Both arguments are SQL fragments."""
     return " AND ".join(
         f"(bit_get({word}, cast({_bloom_block_bit(digest, i)} as int)) = 1)"
         for i in range(k_hashes)
@@ -277,25 +242,11 @@ def _bloom_fetch_word(digest: str, bitmap_words: list[int], m_bits: int) -> str:
     return f"element_at({bits_array_sql(bitmap_words)}, cast({index} as int) + 1)"
 
 
-def _bloom_word_stage(bitmap_words: list[int], m_bits: int) -> str:
-    """SQL text of the word-fetch stage of the span kernels
-    (:func:`bloom_span_flag`, :func:`bloom_span_remove`) over the staged
-    digest array ``__dg__``: ``struct(digest, block word)`` per
-    element, ONE bitmap fetch each. The bitmap is attached as the
-    constant-folded plan literal (see :func:`bits_array_sql` —
-    attribute-bound arrays inline per row at the interpreted-HOF
-    boundary)."""
-    return f"transform(__dg__, d -> named_struct('d', d, 'w', {_bloom_fetch_word('d', bitmap_words, m_bits)}))"
-
-
 def bloom_member(value: str, bitmap_words: list[int], m_bits: int, k_hashes: int) -> Column:
-    """Convenience one-shot blocked membership test of column ``value``
-    against a Bloom bitmap: md5 once, fetch the block word, test the
-    ``k_hashes`` bits — no join, no shuffle. For HOT paths (per-gram /
-    per-char loops inside interpreted HOF lambdas, which re-evaluate
-    every subexpression per reference) do NOT use this: stage the digest
-    and the fetched word through materialized arrays and call
-    :func:`bloom_member_word` (the bloom_span_flag shape)."""
+    """One-shot blocked membership test of column ``value`` against a
+    Bloom bitmap, in SQL: md5 once, fetch the block word, test the
+    ``k_hashes`` bits — no join, no shuffle. It is the reference that the
+    tests hold the Arrow passes' numpy probe (:func:`_bloom_probe`) to."""
     digest = f"md5(`{value}`)"
     word = _bloom_fetch_word(digest, bitmap_words, m_bits)
     return F.expr(bloom_member_word(digest, word, k_hashes))
@@ -328,6 +279,75 @@ def bloom_fit(
     return bloom_build_bits(grams, "g", m_bits, k_hashes), m_bits
 
 
+def _bloom_probe(bitmap_words: list[int], m_bits: int, k_hashes: int):
+    """Check a blocked filter and return its membership probe for the
+    Arrow passes: a function from a list of 16-byte md5 digests to a numpy
+    bool array, true where the filter holds the key. numpy takes block
+    word ``hex[0:15] % (m_bits/64)`` and bit ``i`` ``hex[15+5i:20+5i] %
+    64`` of every digest at once — exactly the SQL scheme of
+    :func:`bloom_member_word`. The guards run on the driver, before any
+    plan is built: ``m_bits`` (:func:`_check_m_bits`), ``1 <= k_hashes
+    <= 3``, and a bitmap of ``m_bits / 64`` words (the probe would index
+    past a shorter one)."""
+    n_words = _check_m_bits(m_bits)
+    if not 1 <= k_hashes <= 3:
+        raise ValueError(f"blocked bloom bit slices support 1 <= k_hashes <= 3, got {k_hashes}")
+    if len(bitmap_words) != n_words:
+        raise ValueError(f"a {m_bits}-bit blocked bloom filter has {n_words} words, got {len(bitmap_words)}")
+    import numpy as np
+
+    # Everything the worker needs is a local: cloudpickle ships closure
+    # cells by value, while module-level names pickle as references to a
+    # package the worker may not be able to import.
+    words = np.asarray(bitmap_words, dtype=np.int64).view(np.uint64)
+    # bit slice i is hex chars 15+5i..19+5i of the digest, i.e. bits
+    # 48-20i and up of its low 64 bits; mod 64 keeps the 6 lowest
+    shifts = [np.uint64(48 - 20 * i) for i in range(k_hashes)]
+
+    def probe(digests):
+        import numpy as np
+
+        dg = np.frombuffer(b"".join(digests), dtype=">u8").astype(np.uint64).reshape(-1, 2)
+        word = words[(dg[:, 0] >> np.uint64(4)) % np.uint64(n_words)]
+        hit = np.ones(len(dg), dtype=bool)
+        for s in shifts:
+            hit &= ((word >> ((dg[:, 1] >> s) & np.uint64(63))) & np.uint64(1)).astype(bool)
+        return hit
+
+    return probe
+
+
+def _arrow_pass(docs: DataFrame, schema: StructType, per_batch) -> DataFrame:
+    """``docs.mapInArrow`` of ``per_batch``, a function from one Arrow
+    record batch to the output batch, or to None when it has no row."""
+
+    def run(batches):
+        import sys
+        import zipimport
+
+        # The pyspark worker calls importlib.invalidate_caches() before
+        # every task, and on Python 3.11 that makes every cached
+        # zipimporter re-read its archive's whole directory: pyspark.zip,
+        # once per package imported from it (16 times in a warm st14
+        # task, about 0.18 s of CPU under cProfile). Dropping them
+        # from the cache spares the worker's next task that; an import
+        # re-creates one from zipimport's own directory cache.
+        for path, finder in list(sys.path_importer_cache.items()):
+            if isinstance(finder, zipimport.zipimporter):
+                del sys.path_importer_cache[path]
+        for batch in batches:
+            out = per_batch(batch)
+            if out is not None:
+                yield out
+
+    return docs.mapInArrow(run, schema)
+
+
+def _doc_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(doc_id, text)``: the input of the Arrow passes, text as a string."""
+    return df.selectExpr(f"{_ident(id_col)} AS doc_id", f"CAST({_ident(text_col)} AS STRING) AS text")
+
+
 def bloom_flag(
     corpus: DataFrame,
     id_col: str,
@@ -347,80 +367,44 @@ def bloom_flag(
     document, one Python loop splits the text on single spaces (empty
     tokens dropped, as :func:`kernels.word_tokens`), builds the distinct
     word ``n``-grams and md5s each once; the batch's digests then go
-    through numpy together — block word ``hex[0:15] % (m_bits/64)``,
-    bit ``i`` ``hex[15+5i:20+5i] % 64``, exactly the SQL scheme of
-    :func:`bloom_member_word` — and a ``bincount`` per document gives
-    ``hit_grams``. The bitmap ships once, as an int64 array in the
-    function's closure.
+    through the numpy probe together (:func:`_bloom_probe`), and a
+    ``bincount`` per document gives ``hit_grams``. The bitmap ships once,
+    as an int64 array in the function's closure.
 
     Cost: the batch function takes about 1.8 µs of CPU per distinct
     4-gram (sf0.1 documents: 5,000 docs, 255,695 distinct grams, 0.44 s
-    on one core of a 4-core x86 host). It replaced five chained
-    higher-order-function stages that Spark evaluated row by row without
-    codegen; a warm d14 request at sf0.1 went from 3.0 to 1.5 CPU s of
-    the whole process tree on that host."""
-    n_words = _check_m_bits(m_bits)
-    if not 1 <= k_hashes <= 3:
-        raise ValueError(f"blocked bloom bit slices support 1 <= k_hashes <= 3, got {k_hashes}")
-    if len(bitmap_words) != n_words:
-        raise ValueError(f"a {m_bits}-bit blocked bloom filter has {n_words} words, got {len(bitmap_words)}")
-    import numpy as np
-
-    docs = corpus.selectExpr(f"{_ident(id_col)} AS doc_id", f"CAST({_ident(text_col)} AS STRING) AS text")
+    on one core of a 4-core x86 host); a warm d14 request at sf0.1 costs
+    about 1.5 CPU s of the whole process tree on that host."""
+    probe = _bloom_probe(bitmap_words, m_bits, k_hashes)
+    docs = _doc_frame(corpus, id_col, text_col)
     schema = StructType(
         [StructField("doc_id", docs.schema["doc_id"].dataType), StructField("hit_grams", LongType())]
     )
-    # Everything the worker needs is a local: cloudpickle ships closure
-    # cells by value, while module-level names pickle as references to a
-    # package the worker may not be able to import.
-    words = np.asarray(bitmap_words, dtype=np.int64).view(np.uint64)
-    # bit slice i is hex chars 15+5i..19+5i of the digest, i.e. bits
-    # 48-20i and up of its low 64 bits; mod 64 keeps the 6 lowest
-    shifts = [np.uint64(48 - 20 * i) for i in range(k_hashes)]
 
-    def flag(batches):
+    def flag(batch):
         import hashlib
-        import sys
-        import zipimport
 
         import numpy as np
         import pyarrow as pa
 
-        # The pyspark worker calls importlib.invalidate_caches() before
-        # every task, and on Python 3.11 that makes every cached
-        # zipimporter re-read its archive's whole directory: pyspark.zip,
-        # once per package imported from it (16 times in a warm st14
-        # task, about 0.18 s of CPU under cProfile). Dropping them
-        # from the cache spares the worker's next task that; an import
-        # re-creates one from zipimport's own directory cache.
-        for path, finder in list(sys.path_importer_cache.items()):
-            if isinstance(finder, zipimport.zipimporter):
-                del sys.path_importer_cache[path]
         md5 = hashlib.md5
-        for batch in batches:
-            counts, digests = [], []
-            for text in batch.column(1).to_pylist():
-                toks = [t for t in text.split(" ") if t] if text else []
-                grams = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-                counts.append(len(grams))
-                digests.extend(md5(g.encode()).digest() for g in grams)
-            if not digests:
-                continue
-            dg = np.frombuffer(b"".join(digests), dtype=">u8").astype(np.uint64).reshape(-1, 2)
-            word = words[(dg[:, 0] >> np.uint64(4)) % np.uint64(n_words)]
-            hit = np.ones(len(dg), dtype=bool)
-            for s in shifts:
-                hit &= ((word >> ((dg[:, 1] >> s) & np.uint64(63))) & np.uint64(1)).astype(bool)
-            doc = np.repeat(np.arange(len(counts)), counts)
-            hits = np.bincount(doc[hit], minlength=len(counts))
-            keep = np.flatnonzero(hits)
-            if len(keep):
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(0).take(keep), pa.array(hits[keep], pa.int64())],
-                    names=["doc_id", "hit_grams"],
-                )
+        counts, digests = [], []
+        for text in batch.column(1).to_pylist():
+            toks = [t for t in text.split(" ") if t] if text else []
+            grams = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+            counts.append(len(grams))
+            digests.extend(md5(g.encode()).digest() for g in grams)
+        doc = np.repeat(np.arange(len(counts)), counts)
+        hits = np.bincount(doc[probe(digests)], minlength=len(counts))
+        keep = np.flatnonzero(hits)
+        if len(keep):
+            return pa.RecordBatch.from_arrays(
+                [batch.column(0).take(keep), pa.array(hits[keep], pa.int64())],
+                names=["doc_id", "hit_grams"],
+            )
+        return None
 
-    return docs.mapInArrow(flag, schema)
+    return _arrow_pass(docs, schema, flag)
 
 
 def _fan_out_narrow(df: DataFrame) -> DataFrame:
@@ -499,14 +483,103 @@ def span_bloom_fit(
     return bloom_build_bits(cross, "gram", m_bits, k_hashes), m_bits
 
 
-def _bloom_hit_positions(k_hashes: int) -> str:
-    """SQL text of the span kernels' hit stage over the staged
-    ``struct(digest, block word)`` array ``__dw__`` (see
-    :func:`_bloom_word_stage`): the 1-based position of each hit, or -1."""
-    return (
-        f"transform(__dw__, (x, i) -> CASE WHEN {bloom_member_word('x.d', 'x.w', k_hashes)} "
-        "THEN cast(i + 1 as bigint) ELSE cast(-1 as bigint) END)"
+def _span_hits(probe, k: int):
+    """The gram test of the span pass, as a function from a list of texts
+    to two int arrays ``(doc, pos)``: the index of the text and the
+    1-based char position of every ``k``-char substring that ``probe``
+    (:func:`_bloom_probe`) accepts, in ascending order. Each gram is
+    md5'd once, and the whole batch is probed in one call; a null text or
+    one shorter than ``k`` has no grams."""
+
+    def hits(texts):
+        import hashlib
+
+        import numpy as np
+
+        md5 = hashlib.md5
+        counts, digests = [], []
+        for t in texts:
+            n_grams = max(len(t) - k + 1, 0) if t else 0
+            counts.append(n_grams)
+            digests.extend(md5(t[i : i + k].encode()).digest() for i in range(n_grams))
+        counts = np.asarray(counts, dtype=np.int64)
+        first_gram = np.cumsum(counts) - counts
+        idx = np.flatnonzero(probe(digests))
+        doc = np.repeat(np.arange(len(counts)), counts)[idx]
+        return doc, idx - first_gram[doc] + 1
+
+    return hits
+
+
+def _span_pass(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    bitmap_words: list[int],
+    m_bits: int,
+    k: int,
+    k_hashes: int,
+    rewrite: bool,
+) -> DataFrame:
+    """The one Arrow pass of :func:`bloom_span_flag` (``rewrite`` false)
+    and :func:`bloom_span_remove` (``rewrite`` true). Hits come from
+    :func:`_span_hits`; a hit opens a new span when it starts a document
+    or lies more than ``k`` chars after the previous hit (d11's merge
+    recurrence), and a span ends ``k - 1`` chars after its last hit."""
+    hits_of = _span_hits(_bloom_probe(bitmap_words, m_bits, k_hashes), k)
+    docs = _doc_frame(df, id_col, text_col)
+    if rewrite:
+        fields = [("clean_text", StringType()), ("removed_chars", LongType())]
+    else:
+        fields = [("n_spans", LongType()), ("dup_chars", LongType()), ("spans", StringType())]
+    schema = StructType(
+        [StructField("doc_id", docs.schema["doc_id"].dataType)]
+        + [StructField(name, dtype) for name, dtype in fields]
     )
+    names = schema.names
+
+    def spans(batch):
+        import numpy as np
+        import pyarrow as pa
+
+        texts = batch.column(1).to_pylist()
+        doc, pos = hits_of(texts)
+        brk = (np.diff(doc) != 0) | (np.diff(pos) > k)
+        any_hit = len(pos) > 0
+        first = np.flatnonzero(np.r_[any_hit, brk])
+        last = np.flatnonzero(np.r_[brk, any_hit])
+        per_doc = [[] for _ in texts]
+        for d, s, e in zip(doc[first].tolist(), pos[first].tolist(), (pos[last] + k - 1).tolist()):
+            per_doc[d].append((s, e))
+        if rewrite:
+            clean, removed = [], []
+            for t, sp in zip(texts, per_doc):
+                if t is None:
+                    clean.append(None)
+                    removed.append(None)
+                    continue
+                kept, at = [], 0
+                for s, e in sp:
+                    kept.append(t[at : s - 1])
+                    at = e
+                kept.append(t[at:])
+                clean.append("".join(kept))
+                removed.append(len(t) - len(clean[-1]))
+            cols = [batch.column(0), pa.array(clean, pa.string()), pa.array(removed, pa.int64())]
+            return pa.RecordBatch.from_arrays(cols, names=names)
+        keep = [j for j, sp in enumerate(per_doc) if sp]
+        if not keep:
+            return None
+        flagged = [per_doc[j] for j in keep]
+        cols = [
+            batch.column(0).take(keep),
+            pa.array([len(sp) for sp in flagged], pa.int64()),
+            pa.array([sum(e - s + 1 for s, e in sp) for sp in flagged], pa.int64()),
+            pa.array([";".join(f"{s}-{e}" for s, e in sp) for sp in flagged], pa.string()),
+        ]
+        return pa.RecordBatch.from_arrays(cols, names=names)
+
+    return _arrow_pass(docs, schema, spans)
 
 
 def bloom_span_flag(
@@ -520,112 +593,16 @@ def bloom_span_flag(
 ) -> DataFrame:
     """Flag per-document duplicate SPANS against a frozen span-Bloom
     bitmap (:func:`span_bloom_fit`): every char position whose
-    ``k_gram``-substring hits the filter is an anchor, and consecutive
-    anchors merge into maximal spans ENTIRELY IN-ROW (an ``aggregate``
-    fold over the ascending hit positions — no window, no join, no
-    shuffle, NO STREAMING STATE), so the identical plan runs on a batch
-    frame and a readStream frame at wire speed. Output matches d11's
-    ``(doc_id, n_spans, dup_chars, spans)`` for contaminated docs, up to
-    the filter's deterministic false-positive tail (no false negatives —
-    every true d11 span is contained in a flagged span).
-
-    Merge recurrence (d11's, in fold form): a hit at ``p`` extends the
-    open span iff ``p <= cur_e + 1`` (equivalent to d11's
-    ``pos <= prev + k`` since ``cur_e = prev + k - 1``), else the open
-    span is emitted and a new one starts at ``p``.
-
-    Kernel shape (VERDICT r7 #1, blocked layout r9 per VERDICT r8 #4):
-    Catalyst higher-order lambdas run interpreted and re-evaluate every
-    subexpression per use, so the hot path stages through MATERIALIZED
-    arrays — gram array (one substring per position), digest array (ONE
-    md5 per gram), then a ``struct(digest, block word)`` array with ONE
-    bitmap ``element_at`` per position (the blocked filter confines all
-    ``k_hashes`` bits to that word) — and the membership test
-    (:func:`bloom_member_word`) is pure local bit arithmetic. vs the r8
-    sliced scheme this removes 2 of the 3 DRAM-random fetches into the
-    up-to-8 MiB bitmap per character of corpus text."""
-    t = F.col("__t__")
-    k = k_gram
-    grams = F.when(
-        F.length(t) >= k,
-        F.expr(
-            f"transform(sequence(1, length(__t__) - {k - 1}), i -> substring(__t__, i, {k}))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    digests = F.transform(F.col("__g__"), lambda g: F.md5(g))
-    staged = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t__"))
-        .select("doc_id", grams.alias("__g__"))
-        .select("doc_id", digests.alias("__dg__"))
-    )
-    word_of = F.expr(_bloom_word_stage(bitmap_words, m_bits))
-    pos_or_neg = F.expr(_bloom_hit_positions(k_hashes))
-    hit_positions = F.filter(F.col("__pn__"), lambda p: p > 0)
-    empty_spans = F.array().cast("array<struct<s:bigint,e:bigint>>")
-    neg = F.lit(-1).cast("bigint")
-    folded = F.aggregate(
-        F.col("__hits__"),
-        F.struct(neg.alias("cs"), neg.alias("ce"), empty_spans.alias("sp")),
-        lambda acc, p: F.struct(
-            F.when((acc["cs"] >= 0) & (p <= acc["ce"] + 1), acc["cs"])
-            .otherwise(p).alias("cs"),
-            (p + F.lit(k - 1)).cast("bigint").alias("ce"),
-            F.when(
-                (acc["cs"] >= 0) & (p > acc["ce"] + 1),
-                F.concat(
-                    acc["sp"],
-                    F.array(F.struct(acc["cs"].alias("s"), acc["ce"].alias("e"))),
-                ),
-            ).otherwise(acc["sp"]).alias("sp"),
-        ),
-        lambda acc: F.when(
-            acc["cs"] >= 0,
-            F.concat(
-                acc["sp"],
-                F.array(F.struct(acc["cs"].alias("s"), acc["ce"].alias("e"))),
-            ),
-        ).otherwise(acc["sp"]),
-    )
-    spans_str = F.array_join(
-        F.transform(
-            F.col("__sp__"),
-            lambda x: F.concat_ws("-", x["s"].cast("string"), x["e"].cast("string")),
-        ),
-        ";",
-    )
-    dup_chars = F.aggregate(
-        F.col("__sp__"),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + (x["e"] - x["s"] + 1),
-    )
-    # The contaminated-docs-only cut is an EXPLODE of a 0/1-element
-    # array, NOT a Filter: PushDownPredicates substitutes a filter's
-    # aliases and pushes it through the Exchange to the scan, planting a
-    # SECOND full copy of the kernel in the (often single-task) scan
-    # stage — measured as the bulk of VERDICT r7 #1's 41 s. A Generate
-    # cannot be pushed or duplicated, so the kernel runs exactly once,
-    # post-exchange. (HOFs are CodegenFallback: no codegen CSE would
-    # have deduplicated the pushed copy.)
-    row = F.when(
-        F.size("__sp__") > 0,
-        F.array(
-            F.struct(
-                F.size("__sp__").cast("bigint").alias("n_spans"),
-                dup_chars.alias("dup_chars"),
-                spans_str.alias("spans"),
-            )
-        ),
-    ).otherwise(
-        F.array().cast("array<struct<n_spans:bigint,dup_chars:bigint,spans:string>>")
-    )
-    return (
-        staged.select("doc_id", word_of.alias("__dw__"))
-        .select("doc_id", pos_or_neg.alias("__pn__"))
-        .select("doc_id", hit_positions.alias("__hits__"))
-        .select("doc_id", folded.alias("__sp__"))
-        .select("doc_id", F.explode(row).alias("__r__"))
-        .select("doc_id", "__r__.n_spans", "__r__.dup_chars", "__r__.spans")
-    )
+    ``k_gram``-substring hits the filter is an anchor, and anchors at
+    most ``k_gram`` chars apart merge into maximal spans, all inside one
+    ``mapInArrow`` pass (:func:`_span_pass`) — no window, no join, no
+    shuffle, NO STREAMING STATE — so the identical plan runs on a batch
+    frame and a readStream frame. Output matches d11's ``(doc_id,
+    n_spans, dup_chars, spans)`` for contaminated docs (``doc_id`` keeps
+    the id column's type), up to the filter's deterministic
+    false-positive tail (no false negatives — every true d11 span is
+    contained in a flagged span)."""
+    return _span_pass(df, id_col, text_col, bitmap_words, m_bits, k_gram, k_hashes, rewrite=False)
 
 
 def bloom_span_remove(
@@ -638,103 +615,19 @@ def bloom_span_remove(
     k_hashes: int = 3,
 ) -> DataFrame:
     """Streaming-legal ExactSubstr REMOVAL against a frozen span-Bloom
-    bitmap: :func:`bloom_span_flag`'s in-row span detection (staged
-    gram/digest/block-word arrays, one bitmap fetch per position,
-    ascending-fold span merge) composed with
-    :func:`exact_substring_removal`'s gap-fold rewrite — every flagged
-    span is excised and the remaining text reassembled, ENTIRELY IN-ROW
-    (no join, no window, no shuffle, NO STREAMING STATE), so the
-    identical plan runs on a batch frame and a readStream frame at wire
-    speed. This is the ingest-time cleaner of the Lee et al. 2021
+    bitmap: :func:`bloom_span_flag`'s spans, excised from each document
+    and the remaining text reassembled in the same ``mapInArrow`` pass
+    (:func:`_span_pass`) — no join, no window, no shuffle, NO STREAMING
+    STATE. This is the ingest-time cleaner of the Lee et al. 2021
     pipeline: st16 flags, this rewrites.
 
     Output matches d18's ``(doc_id, clean_text, removed_chars)`` for
     EVERY input row (clean docs pass through verbatim with
-    ``removed_chars = 0``), up to the filter's deterministic
-    false-positive tail — no false negatives: every d18-removed char is
-    removed here too (every true duplicate span is contained in a
-    flagged span; unit-tested).
-
-    Unlike st16's contaminated-docs-only output there is NO filter
-    anywhere in this plan (every row is emitted), so the
-    explode-as-filter guard against predicate-pushdown kernel
-    duplication is unnecessary — the kernel appears exactly once.
-    """
-    t = F.col("__t__")
-    k = k_gram
-    grams = F.when(
-        F.length(t) >= k,
-        F.expr(
-            f"transform(sequence(1, length(__t__) - {k - 1}), i -> substring(__t__, i, {k}))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    digests = F.transform(F.col("__g__"), lambda g: F.md5(g))
-    staged = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t__"))
-        .select("doc_id", "__t__", grams.alias("__g__"))
-        .select("doc_id", "__t__", digests.alias("__dg__"))
-    )
-    word_of = F.expr(_bloom_word_stage(bitmap_words, m_bits))
-    pos_or_neg = F.expr(_bloom_hit_positions(k_hashes))
-    hit_positions = F.filter(F.col("__pn__"), lambda p: p > 0)
-    empty_spans = F.array().cast("array<struct<s:bigint,e:bigint>>")
-    neg = F.lit(-1).cast("bigint")
-    folded = F.aggregate(
-        F.col("__hits__"),
-        F.struct(neg.alias("cs"), neg.alias("ce"), empty_spans.alias("sp")),
-        lambda acc, p: F.struct(
-            F.when((acc["cs"] >= 0) & (p <= acc["ce"] + 1), acc["cs"])
-            .otherwise(p).alias("cs"),
-            (p + F.lit(k - 1)).cast("bigint").alias("ce"),
-            F.when(
-                (acc["cs"] >= 0) & (p > acc["ce"] + 1),
-                F.concat(
-                    acc["sp"],
-                    F.array(F.struct(acc["cs"].alias("s"), acc["ce"].alias("e"))),
-                ),
-            ).otherwise(acc["sp"]).alias("sp"),
-        ),
-        lambda acc: F.when(
-            acc["cs"] >= 0,
-            F.concat(
-                acc["sp"],
-                F.array(F.struct(acc["cs"].alias("s"), acc["ce"].alias("e"))),
-            ),
-        ).otherwise(acc["sp"]),
-    )
-    # d18's gap-fold rewrite over the (ascending by construction) span
-    # array: each span contributes the gap before it, the finisher
-    # appends the tail — O(spans + chars) per doc, no per-char explode.
-    clean = F.aggregate(
-        F.col("__sp__"),
-        F.struct(F.lit(1).cast("bigint").alias("pos"), F.lit("").alias("acc")),
-        lambda acc, x: F.struct(
-            (x["e"] + 1).alias("pos"),
-            F.concat(
-                acc["acc"],
-                t.substr(acc["pos"].cast("int"), (x["s"] - acc["pos"]).cast("int")),
-            ).alias("acc"),
-        ),
-        lambda acc: F.concat(
-            acc["acc"],
-            t.substr(acc["pos"].cast("int"), (F.length(t) - acc["pos"] + 1).cast("int")),
-        ),
-    )
-    return (
-        staged.select("doc_id", "__t__", word_of.alias("__dw__"))
-        .select("doc_id", "__t__", pos_or_neg.alias("__pn__"))
-        .select("doc_id", "__t__", hit_positions.alias("__hits__"))
-        .select("doc_id", "__t__", folded.alias("__sp__"))
-        # clean is staged before removed_chars references it: a single
-        # projection would evaluate the whole gap-fold twice per row
-        # (interpreted HOF, no CSE)
-        .select("doc_id", "__t__", clean.alias("clean_text"))
-        .select(
-            "doc_id",
-            "clean_text",
-            (F.length("__t__") - F.length("clean_text")).cast("bigint").alias("removed_chars"),
-        )
-    )
+    ``removed_chars = 0``; a null text gives nulls), up to the filter's
+    deterministic false-positive tail — no false negatives: every
+    d18-removed char is removed here too (every true duplicate span is
+    contained in a flagged span; unit-tested)."""
+    return _span_pass(df, id_col, text_col, bitmap_words, m_bits, k_gram, k_hashes, rewrite=True)
 
 
 def duplicate_span_rows(

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from medvedi_spark.functions.hashing import MINHASH_COEFFS
 from medvedi_spark.operators.graph import connected_components
-from medvedi_spark.operators.llm import minhash_band_index
+from medvedi_spark.operators.llm import minhash_band_index, minhash_candidates, minhash_verify
 
 __all__ = [
     "MinhashDedupIndex",
@@ -84,44 +84,16 @@ def bands_of_sigs(sigs: DataFrame) -> DataFrame:
     )
 
 
-def _verified_pairs(candidates: DataFrame, sigs: DataFrame, threshold: float) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs against the stored
-    hash sets — the verify tail of
-    :func:`~medvedi_spark.operators.llm.minhash_lsh_pairs` (doc-id-keyed
-    joins, no broadcast hints: the sig table is corpus-sized)."""
-    ta = sigs.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
-    tb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
-    shared = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size("toks_a") + F.size("toks_b") - shared
-    return (
-        candidates.join(ta, "doc_a").join(tb, "doc_b")
-        .withColumn("jaccard", shared.cast("double") / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
 def minhash_index_save(
     df: DataFrame, id_col: str, text_col: str, path: str, threshold: float = 0.8
 ) -> None:
     """Build and persist the dedup index of ``df``: signature table,
     verified internal near-dup pairs, and semantics metadata. The
-    candidate+verify chain is inlined (not delegated to
-    ``minhash_lsh_pairs``) so it reuses THIS sigs frame's size-guarded
-    persist for both the parquet write and the pair verification."""
+    candidate and verify steps run on THIS sigs frame (not through
+    ``minhash_lsh_pairs``), so its size-guarded persist serves both the
+    parquet write and the pair verification."""
     sigs, bands = minhash_band_index(df, id_col, text_col)
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    candidates = (
-        ba.join(
-            bb,
-            (F.col("ba.band_idx") == F.col("bb.band_idx"))
-            & (F.col("ba.band_val") == F.col("bb.band_val"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(F.col("ba.doc_id").alias("doc_a"), F.col("bb.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    pairs = _verified_pairs(candidates, sigs, threshold)
+    pairs = minhash_verify(minhash_candidates(bands), sigs, threshold)
     # The two artifact writes are independent jobs over the SAME
     # size-guard-persisted sigs frame — run them concurrently (guide
     # §2.6): the pairs job's band-join tail back-fills executors the
@@ -209,7 +181,7 @@ def fuzzy_dedup_ingest(
     all_sigs = index.sigs.select("doc_id", "toks").unionByName(
         new_sigs.select("doc_id", "toks")
     )
-    new_pairs = _verified_pairs(candidates, all_sigs, index.threshold)
+    new_pairs = minhash_verify(candidates, all_sigs, index.threshold)
     all_pairs = index.pairs.select("doc_a", "doc_b").unionByName(
         new_pairs.select("doc_a", "doc_b")
     )

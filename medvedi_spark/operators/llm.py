@@ -466,24 +466,13 @@ def bpe_learn(
 # -- end-to-end fuzzy dedup ---------------------------------------------------
 
 
-def minhash_lsh_pairs(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
-) -> DataFrame:
-    """Verified MinHash-LSH near-duplicate pairs (Broder 1997): the d3
-    candidate+verify glue as a reusable operator.
-
-    Candidates come from the banded signature self-join (shuffle keyed on
-    (band_idx, band_val) — never all-pairs); verification is exact Jaccard
-    over the per-doc md5-derived hash sets, two equi-joins on doc id with
-    an in-row ``array_intersect`` fold. Deliberately NO broadcast hint on
-    the verify side: the signature table carries the corpus's token sets,
-    which at 100 TB dwarfs any broadcast cap — these joins shuffle on doc
-    id, and AQE may still elect a broadcast at small SF from runtime
-    stats. Returns ``(doc_a, doc_b, jaccard)`` with ``doc_a < doc_b``.
-    """
-    sigs, bands = minhash_band_index(df, id_col, text_col)
+def minhash_candidates(bands: DataFrame) -> DataFrame:
+    """Candidate pairs of the banded signature self-join: every distinct
+    ``(doc_a, doc_b)`` with ``doc_a < doc_b`` that agree on at least one
+    band of :func:`minhash_band_index` — the shuffle is keyed on
+    ``(band_idx, band_val)``, never all-pairs."""
     ba, bb = bands.alias("ba"), bands.alias("bb")
-    candidates = (
+    return (
         ba.join(
             bb,
             (F.col("ba.band_idx") == F.col("bb.band_idx"))
@@ -493,6 +482,21 @@ def minhash_lsh_pairs(
         .select(F.col("ba.doc_id").alias("doc_a"), F.col("bb.doc_id").alias("doc_b"))
         .distinct()
     )
+
+
+def minhash_verify(candidates: DataFrame, sigs: DataFrame, threshold: float) -> DataFrame:
+    """Exact-Jaccard verification of candidate ``(doc_a, doc_b)`` pairs
+    against the per-doc HASHED shingle sets (``sigs.toks``, 8-byte longs,
+    not ~15-char strings): two equi-joins on doc id and a per-pair
+    ``array_intersect`` in codegen, instead of exploding the full (doc,
+    shingle) table into the candidate join twice. Jaccard over the
+    md5-derived hash sets is the operator's definition (standard MinHash
+    practice); the oracles compute the identical integer sets, so parity
+    is exact. Deliberately NO broadcast hint: the signature table carries
+    the corpus's token sets, which at 100 TB dwarf any broadcast cap —
+    these joins shuffle on doc id, and AQE may still elect a broadcast at
+    small SF from runtime stats. Returns ``(doc_a, doc_b, jaccard)`` for
+    the pairs at or above ``threshold``."""
     ta = sigs.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
     tb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
     shared = F.size(F.array_intersect("toks_a", "toks_b"))
@@ -503,6 +507,17 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
+
+
+def minhash_lsh_pairs(
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
+) -> DataFrame:
+    """Verified MinHash-LSH near-duplicate pairs (Broder 1997, d3):
+    :func:`minhash_candidates` over the bands of
+    :func:`minhash_band_index`, then :func:`minhash_verify`. Returns
+    ``(doc_a, doc_b, jaccard)`` with ``doc_a < doc_b``."""
+    sigs, bands = minhash_band_index(df, id_col, text_col)
+    return minhash_verify(minhash_candidates(bands), sigs, threshold)
 
 
 def fuzzy_dedup_survivors(

@@ -150,42 +150,9 @@ _D3_SHINGLES_SQL = """
     tags=("dedup", "minhash", "lsh", "llm"),
 )
 def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    # shared shingle→hash→signature→band pipeline (also the st10 corpus
-    # index) — see operators.llm.minhash_band_index for the plan notes
-    sigs, bands = llm.minhash_band_index(docs, "doc_id", "text")
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    candidates = (
-        ba.join(
-            bb,
-            (F.col("ba.band_idx") == F.col("bb.band_idx"))
-            & (F.col("ba.band_val") == F.col("bb.band_val"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(F.col("ba.doc_id").alias("doc_a"), F.col("bb.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # verify on collected per-doc HASHED shingle sets (8-byte longs, not
-    # ~15-char strings): two equi-joins on doc id + a per-pair
-    # array_intersect in codegen, instead of exploding the full
-    # (doc, shingle) table into the candidate join twice. Jaccard over the
-    # md5-derived hash sets is the operator's definition (standard MinHash
-    # practice); both engines compute the identical integer sets, so parity
-    # is exact. Deliberately NO broadcast hint: `sigs` carries the corpus's
-    # token sets, which at 100 TB dwarfs any broadcast limit — these joins
-    # shuffle on doc id (candidate pairs are a tiny fraction of the corpus,
-    # so the shuffle is cheap), and AQE may still pick a broadcast at small
-    # SF from runtime stats, which is the right adaptive behavior.
-    ta = sigs.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
-    tb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
-    shared = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size("toks_a") + F.size("toks_b") - shared
-    return (
-        candidates.join(ta, "doc_a").join(tb, "doc_b")
-        .withColumn("jaccard", shared.cast("double") / union)
-        .filter(F.col("jaccard") >= 0.8)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    # the shingle→hash→signature→band pipeline is shared with the st10
+    # corpus index; see operators.llm.minhash_lsh_pairs for the plan notes
+    return llm.minhash_lsh_pairs(load(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.8)
 
 
 # --------------------------------------------------------------------------

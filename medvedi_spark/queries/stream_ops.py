@@ -281,6 +281,32 @@ def st6_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(result, output_mode="update")
 
 
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Views joined ``how`` (``"inner"`` for st7, ``"leftOuter"`` for
+    st12) to the same user's purchases within the hour after the view,
+    both sides watermarked at one hour, drained to a memory table."""
+    views = (
+        read_events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "view")
+        .select("user_id", F.col("ts").alias("view_ts"))
+        .withWatermark("view_ts", "1 hour")
+    )
+    purchases = (
+        read_events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"))
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    joined = views.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("view_ts"))
+        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    ).select("user_id", "view_ts", "purchase_ts")
+    return run_to_memory(joined, output_mode="append")
+
+
 # --------------------------------------------------------------------------
 # st7 — stream-stream interval join: purchases matched to a preceding view
 # by the same user within 1 hour. Both sides carry watermarks so the join
@@ -306,26 +332,7 @@ def st6_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "interval"),
 )
 def st7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select("user_id", F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
-        "inner",
-    ).select("user_id", "view_ts", "purchase_ts")
-    return run_to_memory(joined, output_mode="append")
+    return _view_purchase_join(spark, sf_dir, "inner")
 
 
 # --------------------------------------------------------------------------
@@ -685,26 +692,7 @@ def st10_stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "by the same oracle harness locally + a boundary-row unit test.",
 )
 def st12_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select("user_id", F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    ).select("user_id", "view_ts", "purchase_ts")
-    return run_to_memory(joined, output_mode="append")
+    return _view_purchase_join(spark, sf_dir, "leftOuter")
 
 
 # --------------------------------------------------------------------------
@@ -893,9 +881,9 @@ def st15_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verdict, one gram-keyed hash aggregate) fold ONCE batch-side into an
 # auto-sized Bloom bitmap — bounded model state, exactly st14's recipe
 # applied to d11's gram world — and each arriving document then flags
-# and MERGES its duplicate spans entirely in-row (an aggregate fold
-# over the ascending bloom-hit positions): no join, no window, no
-# watermark, ZERO streaming state. No false negatives (every true d11
+# and MERGES its duplicate spans in one ``mapInArrow`` pass over the
+# ascending bloom-hit positions: no join, no window, no watermark, ZERO
+# streaming state. No false negatives (every true d11
 # span is contained in a flagged span — unit-tested); the deterministic
 # false-positive tail is replayed bit-for-bit by the oracle, which
 # recomputes the bitmap's position set in SQL (the d14 discipline) and
@@ -984,15 +972,13 @@ def _span_bloom_model(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]
     doc="Streaming duplicate-span flagging: d11's cross-doc gram verdict "
         "folded into an auto-sized Bloom bitmap batch-side (bounded "
         "model state), arriving docs flag+merge their spans in one "
-        "stateless in-row fold — zero joins, zero streaming state; no "
-        "false negatives, FP tail replayed exactly by the oracle. "
-        "Kernel rebuilt per VERDICT r7 #1 (staged gram/digest arrays, "
-        "ONE md5 per gram, explode-as-filter so predicate pushdown "
-        "can't duplicate the kernel, split-string bitmap literal); "
-        "BLOCKED bitmap layout per VERDICT r8 #4 — all k bits in one "
-        "64-bit word, ONE element_at fetch per position instead of k "
-        "DRAM-random ones (oracle replays the blocked positions). "
-        "Driver-proven r8; gates the r9 rotation (code changed).",
+        "stateless mapInArrow pass — zero joins, zero streaming state; "
+        "no false negatives, FP tail replayed exactly by the oracle. "
+        "Per Arrow batch: ONE md5 per char-position 20-gram, the "
+        "digests probed together in numpy against the BLOCKED bitmap "
+        "(all k bits in one 64-bit word, ONE word fetch per gram; the "
+        "oracle replays the blocked positions), hits more than k chars "
+        "apart starting a new span.",
 )
 def st16_stream_span_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medvedi_spark.operators import bloom
@@ -1124,17 +1110,17 @@ def st17_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # st18 — STREAMING EXACT-SUBSTRING REMOVAL: the REWRITE half of the
 # Lee et al. 2021 ExactSubstr pipeline at ingest time. st16 FLAGS a
 # document's duplicate spans against the frozen span-Bloom bitmap;
-# st18 composes the same in-row span detection with d18's gap-fold
-# rewrite, so arriving documents are CLEANED — every flagged span
-# excised, the remainder reassembled in order — in one stateless
-# projection: no join, no window, ZERO streaming state. Model state is
+# st18 runs the same span detection and then excises the spans, so
+# arriving documents are CLEANED — every flagged span excised, the
+# remainder reassembled in order — in the same stateless ``mapInArrow``
+# pass: no join, no window, ZERO streaming state. Model state is
 # st16's session-cached bitmap (one fit per frozen corpus generation,
 # shared). No false negatives: every char d18 removes is removed here
 # (every true duplicate span is contained in a flagged span); the
 # deterministic false-positive tail excises slightly more, replayed
 # bit-for-bit by the oracle, which rebuilds the bloom span set in SQL
 # (st16's CTEs) and reconstructs each document from its KEPT chars —
-# an independent construction, so the hash match proves the gap-fold,
+# an independent construction, so the hash match proves the excision,
 # not just replays it (the d18 discipline).
 # --------------------------------------------------------------------------
 
@@ -1219,10 +1205,9 @@ def st17_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("streaming", "dedup", "substring", "rewrite", "bloom", "llm"),
     doc="Streaming ExactSubstr removal at ingest: st16's blocked-Bloom "
-        "span detection composed with d18's gap-fold rewrite — arriving "
-        "docs are cleaned (flagged spans excised, remainder reassembled) "
-        "in one stateless in-row projection; zero joins, zero streaming "
-        "state; no false negatives vs d18, FP tail replayed exactly by "
+        "span detection and d18's excision in one stateless mapInArrow "
+        "pass — arriving docs are cleaned (flagged spans excised, "
+        "remainder reassembled); zero joins, zero streaming state; no false negatives vs d18, FP tail replayed exactly by "
         "the oracle's independent kept-chars reconstruction. Registered "
         "after the r9 gate window froze: proven by the local oracle "
         "harness (CORRECTNESS_local_r9) + the superset-of-d18 and "

@@ -1716,78 +1716,42 @@ _P8_ORACLE = """WITH RECURSIVE wf AS (
     )
 """
 
-_P9_ORACLE = """WITH RECURSIVE wf AS (
+
+def _p9_merge_step(n: int) -> str:
+    """CTEs of BPE merge step ``n`` over ``seg{n-1}``: the pair counts, the
+    top pair (``cnt DESC, x, y``), and ``seg{n}``. The merge is one
+    ``replace`` over the word's tokens, each wrapped in chr(1)…chr(2):
+    a match can only start at a token boundary and cover two whole
+    tokens, and left-to-right non-overlapping replacement is BPE's greedy
+    merge. With no pair left the word keeps its tokens."""
+    wrapped = "chr(1) || array_to_string(seg, chr(2) || chr(1)) || chr(2)"
+    pair = "chr(1) || x || chr(2) || chr(1) || y || chr(2)"
+    merged = f"coalesce(replace({wrapped}, {pair}, chr(1) || x || y || chr(2)), {wrapped})"
+    return f"""
+    pc{n} AS (
+      SELECT seg[i] AS x, seg[i+1] AS y, SUM(freq) AS cnt
+      FROM seg{n - 1}, LATERAL (SELECT unnest(generate_series(1, len(seg)-1)) AS i)
+      GROUP BY 1, 2
+    ),
+    top{n} AS (SELECT x, y, cnt FROM pc{n} ORDER BY cnt DESC, x, y LIMIT 1),
+    seg{n} AS (
+      SELECT word, freq, string_split(substr(w, 2, length(w) - 2), chr(2) || chr(1)) AS seg
+      FROM (SELECT word, freq, {merged} AS w FROM seg{n - 1} LEFT JOIN top{n} ON true)
+    ),"""
+
+
+_P9_ORACLE = f"""WITH wf AS (
       SELECT w AS word, COUNT(*) AS freq
-      FROM (SELECT unnest(list_filter(string_split(text,' '), t -> t <> '')) AS w FROM documents)
+      FROM (SELECT unnest(list_filter(string_split(text,' '), t -> t <> '')) AS w FROM documents
+            WHERE CASE WHEN strpos(text, chr(1)) > 0 OR strpos(text, chr(2)) > 0
+                       THEN error('p9 oracle: a document holds chr(1) or chr(2), the token delimiters')
+                       ELSE true END)
       GROUP BY w
     ),
     seg0 AS (
       SELECT word, freq, list_transform(range(1, length(word)+1), i -> substr(word, CAST(i AS INT), 1)) AS seg
       FROM wf
-    ),
-    pc1 AS (
-      SELECT seg[i] AS x, seg[i+1] AS y, SUM(freq) AS cnt
-      FROM seg0, LATERAL (SELECT unnest(generate_series(1, len(seg)-1)) AS i)
-      GROUP BY 1, 2
-    ),
-    top1 AS (SELECT x, y, cnt FROM pc1 ORDER BY cnt DESC, x, y LIMIT 1),
-    m1 AS (
-      SELECT word, freq, seg, CAST(1 AS BIGINT) AS i, CAST([] AS VARCHAR[]) AS out
-      FROM seg0
-      UNION ALL
-      SELECT word, freq, seg,
-             CASE WHEN i < len(seg) AND seg[i] = (SELECT x FROM top1) AND seg[i+1] = (SELECT y FROM top1)
-                  THEN i + 2 ELSE i + 1 END,
-             list_append(out,
-               CASE WHEN i < len(seg) AND seg[i] = (SELECT x FROM top1) AND seg[i+1] = (SELECT y FROM top1)
-                    THEN seg[i] || seg[i+1] ELSE seg[i] END)
-      FROM m1 WHERE i <= len(seg)
-    ),
-    seg1 AS (
-      SELECT word, freq, out AS seg FROM m1 WHERE i > len(seg)
-    ),
-    pc2 AS (
-      SELECT seg[i] AS x, seg[i+1] AS y, SUM(freq) AS cnt
-      FROM seg1, LATERAL (SELECT unnest(generate_series(1, len(seg)-1)) AS i)
-      GROUP BY 1, 2
-    ),
-    top2 AS (SELECT x, y, cnt FROM pc2 ORDER BY cnt DESC, x, y LIMIT 1),
-    m2 AS (
-      SELECT word, freq, seg, CAST(1 AS BIGINT) AS i, CAST([] AS VARCHAR[]) AS out
-      FROM seg1
-      UNION ALL
-      SELECT word, freq, seg,
-             CASE WHEN i < len(seg) AND seg[i] = (SELECT x FROM top2) AND seg[i+1] = (SELECT y FROM top2)
-                  THEN i + 2 ELSE i + 1 END,
-             list_append(out,
-               CASE WHEN i < len(seg) AND seg[i] = (SELECT x FROM top2) AND seg[i+1] = (SELECT y FROM top2)
-                    THEN seg[i] || seg[i+1] ELSE seg[i] END)
-      FROM m2 WHERE i <= len(seg)
-    ),
-    seg2 AS (
-      SELECT word, freq, out AS seg FROM m2 WHERE i > len(seg)
-    ),
-    pc3 AS (
-      SELECT seg[i] AS x, seg[i+1] AS y, SUM(freq) AS cnt
-      FROM seg2, LATERAL (SELECT unnest(generate_series(1, len(seg)-1)) AS i)
-      GROUP BY 1, 2
-    ),
-    top3 AS (SELECT x, y, cnt FROM pc3 ORDER BY cnt DESC, x, y LIMIT 1),
-    m3 AS (
-      SELECT word, freq, seg, CAST(1 AS BIGINT) AS i, CAST([] AS VARCHAR[]) AS out
-      FROM seg2
-      UNION ALL
-      SELECT word, freq, seg,
-             CASE WHEN i < len(seg) AND seg[i] = (SELECT x FROM top3) AND seg[i+1] = (SELECT y FROM top3)
-                  THEN i + 2 ELSE i + 1 END,
-             list_append(out,
-               CASE WHEN i < len(seg) AND seg[i] = (SELECT x FROM top3) AND seg[i+1] = (SELECT y FROM top3)
-                    THEN seg[i] || seg[i+1] ELSE seg[i] END)
-      FROM m3 WHERE i <= len(seg)
-    ),
-    seg3 AS (
-      SELECT word, freq, out AS seg FROM m3 WHERE i > len(seg)
-    ),
+    ),{_p9_merge_step(1)}{_p9_merge_step(2)}{_p9_merge_step(3)}
     wl AS (SELECT word, CAST(len(seg) AS BIGINT) AS n_sub FROM seg3)
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_words,

@@ -1,10 +1,11 @@
-"""The Arrow-batch Bloom flag kernel (``operators.bloom.bloom_flag``).
+"""The Arrow-batch Bloom passes: the flag kernel (``bloom_flag``) and the
+span kernels (``bloom_span_flag``, ``bloom_span_remove``).
 
-Its membership test replays the blocked scheme in numpy, so it is checked
-against the SQL membership test (``bloom_member``) gram by gram; its
-tokenizer and gram builder replay ``kernels.word_tokens`` and
-``word_ngrams_of``, so the edge documents are checked against the SQL
-pipeline built from those kernels."""
+Their shared membership probe replays the blocked scheme in numpy, so it
+is checked against the SQL membership test (``bloom_member``) gram by
+gram; the flag kernel's tokenizer and gram builder replay
+``kernels.word_tokens`` and ``word_ngrams_of``, so its edge documents are
+checked against the SQL pipeline built from those kernels."""
 
 from __future__ import annotations
 
@@ -106,3 +107,90 @@ def test_bad_scheme_raises_before_any_plan(m_bits, k_hashes, match):
     the scheme error, not an attribute error."""
     with pytest.raises(ValueError, match=match):
         bloom.bloom_flag(None, "doc_id", "text", [0], m_bits, n=4, k_hashes=k_hashes)
+
+
+# ------------------------------------------------------------ span kernels
+
+_SPAN_KERNELS = [bloom.bloom_span_flag, bloom.bloom_span_remove]
+
+
+@pytest.mark.parametrize("k_hashes", [1, 3])
+def test_span_hits_match_sql_bloom_member(spark, k_hashes):
+    """The span pass's hit positions are exactly the 1-based positions
+    whose k-char gram SQL ``bloom_member`` accepts, over random docs, in
+    ascending order."""
+    rng = random.Random(23 + k_hashes)
+    k, m_bits = 4, 64 * 37
+    words = _random_bitmap(rng, m_bits // 64)
+    alphabet = "ab cdé日"
+    docs = [(i, "".join(rng.choices(alphabet, k=rng.randint(0, 40)))) for i in range(300)]
+    docs += [(300, None)]
+    df = spark.createDataFrame(docs, "doc_id bigint, text string")
+    anchors = bloom._span_anchors(df, "doc_id", "text", k)
+    want = {
+        (r.doc_id, r.pos)
+        for r in anchors.where(bloom.bloom_member("gram", words, m_bits, k_hashes)).collect()
+    }
+    hits_of = bloom._span_hits(bloom._bloom_probe(words, m_bits, k_hashes), k)
+    doc, pos = hits_of([t for _, t in docs])
+    got = list(zip(doc.tolist(), pos.tolist()))
+    assert got == sorted(got)
+    assert {(docs[d][0], p) for d, p in got} == want
+    assert 0 < len(want) < anchors.count()
+
+
+def test_hits_k_apart_merge_and_k_plus_1_apart_do_not(spark):
+    """Two hits exactly k chars apart are one span (the second gram starts
+    right after the first ends); k + 1 apart leave a one-char gap and are
+    two spans."""
+    k = 4
+    one, two = "abcdefghijklmnop", "ABCDEFGHIJKLMNOP"
+    keys = [one[0:4], one[4:8], two[0:4], two[5:9]]  # hits at 1, 5 and at 1, 6
+    m_bits = 1 << 16
+    words = bloom.bloom_build_bits(spark.createDataFrame([(g,) for g in keys], "g string"), "g", m_bits, 3)
+    df = spark.createDataFrame([(1, one), (2, two)], "doc_id bigint, text string")
+    flag = bloom.bloom_span_flag(df, "doc_id", "text", words, m_bits, k_gram=k)
+    assert sorted(map(tuple, flag.collect())) == [(1, 1, 8, "1-8"), (2, 2, 8, "1-4;6-9")]
+    removed = bloom.bloom_span_remove(df, "doc_id", "text", words, m_bits, k_gram=k)
+    assert sorted(map(tuple, removed.collect())) == [(1, one[8:], 8), (2, two[4] + two[9:], 8)]
+
+
+_SPAN_EDGE_DOCS = [(1, None), (2, "abc"), (3, ""), (4, "abcdefgh"), (None, "abcd abcd"), (6, "abcd")]
+
+
+def test_span_edge_documents(spark):
+    """A null text, a text shorter than k and an empty text give the rows
+    the staged-lambda kernels gave (recorded from them): no flag row, and
+    a removal row of nulls for the null text and the text unchanged for
+    the others; the int id stays int."""
+    df = spark.createDataFrame(_SPAN_EDGE_DOCS, "doc_id int, text string")
+    saturated, empty = [-1, -1], [0, 0]
+    flag = bloom.bloom_span_flag(df, "doc_id", "text", saturated, 128, k_gram=4)
+    assert flag.dtypes == [("doc_id", "int"), ("n_spans", "bigint"), ("dup_chars", "bigint"), ("spans", "string")]
+    assert sorted(map(tuple, flag.collect()), key=repr) == [(4, 1, 8, "1-8"), (6, 1, 4, "1-4"), (None, 1, 9, "1-9")]
+    assert bloom.bloom_span_flag(df, "doc_id", "text", empty, 128, k_gram=4).collect() == []
+    removed = bloom.bloom_span_remove(df, "doc_id", "text", saturated, 128, k_gram=4)
+    assert removed.dtypes == [("doc_id", "int"), ("clean_text", "string"), ("removed_chars", "bigint")]
+    assert sorted(map(tuple, removed.collect()), key=repr) == [
+        (1, None, None), (2, "abc", 0), (3, "", 0), (4, "", 8), (6, "", 4), (None, "", 9)
+    ]
+    kept = bloom.bloom_span_remove(df, "doc_id", "text", empty, 128, k_gram=4)
+    assert sorted(map(tuple, kept.collect()), key=repr) == sorted(
+        [(i, t, None if t is None else 0) for i, t in _SPAN_EDGE_DOCS], key=repr
+    )
+
+
+@pytest.mark.parametrize("kernel", _SPAN_KERNELS, ids=lambda f: f.__name__)
+def test_span_kernel_is_one_arrow_pass(spark, kernel):
+    df = spark.createDataFrame([(1, "abcdefgh")], "doc_id bigint, text string")
+    plan = kernel(df, "doc_id", "text", [-1], 64, k_gram=4)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("Generate", "Join", "Exchange"):
+        assert node not in plan, plan
+
+
+@pytest.mark.parametrize("kernel", _SPAN_KERNELS, ids=lambda f: f.__name__)
+def test_span_kernel_guards_run_before_any_plan(kernel):
+    for m_bits, k_hashes, match in ((100, 3, "multiple of 64"), (64, 4, "k_hashes"), (128, 3, "words")):
+        with pytest.raises(ValueError, match=match):
+            kernel(None, "doc_id", "text", [0], m_bits, k_gram=4, k_hashes=k_hashes)

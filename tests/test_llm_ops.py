@@ -319,3 +319,39 @@ def test_non_finite_model_state_is_rejected(kernel, bad):
             kernels._argmin_cell("embedding", [{"cent_id": 0, "c_emb": [1.0, bad, 0.5]}])
         else:
             kernels._sq8_code("embedding", [0.0, bad], [1.0, 2.0])
+
+
+# ------------------------------------------------------------- p9 oracle
+
+
+def _p9_oracle_rows(docs: list[tuple[int, str]]) -> set:
+    import duckdb
+
+    from medvedi_spark.queries.text_ops import _P9_ORACLE
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
+    return set(con.execute(_P9_ORACLE).fetchall())
+
+
+def test_p9_oracle_segments_like_bpe_learn(spark):
+    """The oracle's replace-based merges give ``bpe_learn``'s greedy
+    left-to-right segmentation, also where a pair overlaps itself
+    (``aaa``, ``aaaaa``) and where a merged token is a prefix of another."""
+    from medvedi_spark.operators.llm import bpe_learn
+
+    docs = [(1, "aaaaa aaa abab ab"), (2, "aaaa  ba ab abab b"), (3, "b"), (4, "abc abcab cab")]
+    _merges, segs = bpe_learn(spark.createDataFrame(docs, "doc_id bigint, text string"), "text", n_merges=3)
+    want = set()
+    for doc_id, text in docs:
+        words = [w for w in text.split(" ") if w]
+        want.add((doc_id, len(words), sum(len(segs[w]) for w in words)))
+    assert _p9_oracle_rows(docs) == want
+
+
+def test_p9_oracle_refuses_its_token_delimiters():
+    import duckdb
+
+    with pytest.raises(duckdb.Error, match="chr"):
+        _p9_oracle_rows([(1, "ab ab"), (2, "a" + chr(2) + "b")])

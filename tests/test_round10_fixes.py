@@ -2,11 +2,8 @@
 
 Covers (VERDICT r9 "Next round"):
 #3 Bloom 2^26 cap lift — cap raised to 2^28 with the oracle msize CTEs
-   moved in lockstep; the bitmap attach stays a constant-folded plan
-   LITERAL at every size (the broadcast one-row-array arm shipped first
-   was measured inlining the bitmap into every row at the
-   interpreted-HOF boundary — 570 s vs ~90 s at the 150× probe — and
-   reverted).
+   moved in lockstep; the span passes stay streaming-legal with a
+   large bitmap.
 #4 ANN serve routing size-guard — bulk-probe path (shuffled cell-join)
    bit-equal to the collected/broadcast path; static partition pruning
    survives both modes.
@@ -63,8 +60,8 @@ def test_bloom_flag_large_m_literal_and_joinless(spark):
 
 
 def test_bloom_span_flag_large_m_streaming_legal(spark, sf_dir):
-    """The literal attach keeps the st16/st18 plans legal on a
-    readStream frame at large m and matching the batch run
+    """The st16/st18 span pass, with a large bitmap in its function
+    closure, is legal on a readStream frame and matches the batch run
     row-for-row."""
     from medvedi_spark.catalog import load
     from medvedi_spark.streaming.ops import read_table_stream, run_to_memory
